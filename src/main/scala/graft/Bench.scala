@@ -59,11 +59,6 @@ object Bench {
                                 reps: Int = 3,
                                 broadcastCtOverride: Option[Boolean] = None,
                                 membershipOverride: Option[Boolean] = None,
-                                csrKernel: Boolean =
-                                  // default = the tier Leiden.detect actually runs on dense
-                                  // passes (LeidenOptions.csrKernel=true); opt back into the
-                                  // Catalyst array tier with SPARK_GRAFT_SWEEP_KERNEL=array
-                                  !sys.env.get("SPARK_GRAFT_SWEEP_KERNEL").contains("array"),
                                 degOverride: Int = 0): (Double, Long, Double) = {
     // src-partitioned main cache, exactly as Leiden.detect builds it.
     // SPARK_GRAFT_BENCH_DEG sets the fixture's out-degree (default 8 ⇒
@@ -113,9 +108,10 @@ object Bench {
     val m = EdgeTable.totalWeight(edges) / 2
     val vtot = PlanUtils.checkpointTruncated(EdgeTable.vertexWeights(edges))
     var bestSecs = Double.MaxValue
-    if (csrKernel && bcMd && nVerts <= LocalMove.CtBroadcastMax) {
-      // packed-CSR fused kernel (CsrSweep scaladoc): ONE primitive-array
-      // pass per half-sweep, frontier folded in — the minimum-DRAM tier
+    if (bcMd && nVerts <= LocalMove.CtBroadcastMax) {
+      // the tier Leiden.detect runs on dense passes — packed-CSR fused
+      // kernel (CsrSweep scaladoc): ONE primitive-array pass per
+      // half-sweep, frontier folded in
       val n = nVerts.toInt
       val vt = new Array[Double](n)
       vtot.select("id", "vtot").collect()
@@ -138,31 +134,6 @@ object Bench {
       }
       st.close()
       csr.unpersist(blocking = false)
-    } else if (bcMd && nVerts <= LocalMove.CtBroadcastMax) {
-      // production tier for broadcast-sized dense passes (Leiden.detect's
-      // gate): driver-array state, two zero-shuffle jobs per half-sweep
-      // (ArraySweep scaladoc). Fixture ids are dense [0, nVerts).
-      val n = nVerts.toInt
-      val vt = new Array[Double](n)
-      vtot.select("id", "vtot").collect()
-        .foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
-      val st = graft.leiden.ArraySweep.singleton(edges, n, vt)
-      // warmup half-sweep primes codegen + the edge cache; its state is
-      // the FIXED starting point of every repetition
-      graft.leiden.ArraySweep.halfSweep(st, m, 1.0, 0)
-      val snap = st.snapshot()
-      for (_ <- 1 to reps) {
-        st.restore(snap)
-        val t0 = System.nanoTime()
-        var done = 0
-        while (done < iters) {
-          graft.leiden.ArraySweep.halfSweep(st, m, 1.0, 1)
-          graft.leiden.ArraySweep.halfSweep(st, m, 1.0, 0)
-          done += 1
-        }
-        bestSecs = math.min(bestSecs, (System.nanoTime() - t0) / 1e9)
-      }
-      st.close()
     } else {
     val init = vtot.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
     // frontier-bitmap tier on the membership-broadcast path: dense ids

@@ -29,8 +29,6 @@ object BenchAB {
       val (eps, _, secs) = toggle match {
         case "membership" => Bench.leidenSuperstepThroughput(
           spark, verts, iters, reps = 1, membershipOverride = Some(on))
-        case "csr" => Bench.leidenSuperstepThroughput(
-          spark, verts, iters, reps = 1, csrKernel = on)
         case _ => Bench.leidenSuperstepThroughput(
           spark, verts, iters, reps = 1, broadcastCtOverride = Some(on))
       }

@@ -18,13 +18,15 @@ import org.apache.spark.sql.functions._
   *     --sketch K         leiden: Misra-Gries slots (0 = exact scan)
   *     --sketch-agg 1     leiden: ALSO sketch the coarsening (reference
   *                        lowmem semantics; see LeidenOptions.sketchAggregation)
-  *     --csr 0            leiden: disable the packed-CSR fused kernel on
-  *                        dense-gated passes (LeidenOptions.csrKernel;
-  *                        default on)
+  *     --min-moved F      leiden: churn stop, a fraction of the pass's
+  *                        vertices (default 1e-3; 0 = reference termination)
   *     --mtx PATH         MatrixMarket input (interop with native readers)
-  *     --localfirst N     leiden: N partition-local CSR sweeps seed pass 0 (P4)
   *     --snapshot DIR     leiden: per-pass checkpoint dir (resume-aware)
+  *     --events PATH      stream-demo: events parquet (default: the sf0.001
+  *                        test data's events table)
   *     --out PATH         write result parquet (default: print summary only)
+  *
+  * Any other flag, or a flag without a value, fails before Spark starts.
   *
   * The fixture is a preferential-attachment-style graph built
   * deterministically per edge from hashes (no RNG state), so any two runs —
@@ -45,9 +47,23 @@ object Cli {
     EdgeTable.symmetrize(EdgeTable.dedup(e))
   }
 
+  /** Every flag some algo reads (usage above). */
+  val Flags: Set[String] = Set("--edges", "--fixture", "--mtx", "--sketch", "--sketch-agg",
+    "--min-moved", "--snapshot", "--events", "--mtxout", "--out")
+
+  /** `--flag value` pairs; an unknown flag or a dangling argument fails. */
+  def parseFlags(args: Seq[String]): Map[String, String] =
+    args.grouped(2).map {
+      case Seq(k, v) if Flags(k) => k -> v
+      case Seq(k, _) => throw new IllegalArgumentException(
+        s"unknown flag '$k' (known: ${Flags.toSeq.sorted.mkString(" ")})")
+      case last => throw new IllegalArgumentException(
+        s"dangling argument '${last.mkString}' (no value)")
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val algo = args.headOption.getOrElse("leiden")
-    val opts = args.drop(1).sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = parseFlags(args.toSeq.drop(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.configure(
       SparkSession.builder().master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")),
@@ -69,8 +85,6 @@ object Cli {
           sketchSlots = opts.getOrElse("--sketch", "0").toInt,
           // reference-semantics lossy aggregation (see LeidenOptions scaladoc)
           sketchAggregation = opts.getOrElse("--sketch-agg", "0").toInt > 0,
-          localFirstPassIters = opts.getOrElse("--localfirst", "0").toInt,
-          csrKernel = opts.getOrElse("--csr", "1").toInt > 0,
           // CLI opts into the churn stop (library default 0 = reference
           // termination semantics); --min-moved 0 restores the reference
           minMovedFraction = opts.getOrElse("--min-moved", "1e-3").toDouble,

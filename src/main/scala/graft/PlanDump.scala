@@ -173,7 +173,7 @@ object PlanDump {
       write(dir, "g_leiden_after.txt",
         ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes — the " +
           "membership joins are replaced by a broadcast array lookup projection " +
-          "(Aggregate.coarsenArray); the only exchange left is the aggregation " +
+          "(Aggregate.coarsenArrayCached); the only exchange left is the aggregation " +
           "itself") -> explainStr {
             val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
             edges.select(

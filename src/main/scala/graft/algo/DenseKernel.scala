@@ -3,6 +3,7 @@ package graft.algo
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.graph.Packed
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -64,25 +65,9 @@ object DenseKernel {
   /** Pack (src, dst) into per-partition int-pair blocks — one decode job,
     * cached by the caller; both kernels stream these at 8 B/edge.
     */
-  def pack(edges: DataFrame): RDD[(Array[Int], Array[Int])] = {
-    val rows = edges.select(col("src").cast("int"), col("dst").cast("int"))
-      .queryExecution.toRdd
-    rows.mapPartitions({ it =>
-      var cap = 1 << 16
-      var ss = new Array[Int](cap); var dd = new Array[Int](cap)
-      var m = 0
-      while (it.hasNext) {
-        val r = it.next()
-        if (m == cap) {
-          cap *= 2
-          ss = java.util.Arrays.copyOf(ss, cap)
-          dd = java.util.Arrays.copyOf(dd, cap)
-        }
-        ss(m) = r.getInt(0); dd(m) = r.getInt(1); m += 1
-      }
-      Iterator.single((java.util.Arrays.copyOf(ss, m), java.util.Arrays.copyOf(dd, m)))
-    }, preservesPartitioning = true)
-  }
+  def pack(edges: DataFrame): RDD[(Array[Int], Array[Int])] =
+    Packed.blocks(edges.select(col("src").cast("int"), col("dst").cast("int")))
+      .map(b => (b.ints(0), b.ints(1)))
 
   /** Pack (src, dst, w) into per-partition triple blocks hash-partitioned
     * by dst and sorted (dst, src): every dst's in-edges live in exactly one
@@ -92,31 +77,12 @@ object DenseKernel {
     * job; the caller caches the result and every iteration streams it at
     * 16 B/edge.
     */
-  def packByDst(edges: DataFrame, parts: Int): RDD[(Array[Int], Array[Int], Array[Double])] = {
-    val rows = edges
+  def packByDst(edges: DataFrame, parts: Int): RDD[(Array[Int], Array[Int], Array[Double])] =
+    Packed.blocks(edges
       .select(col("src").cast("int"), col("dst").cast("int"), col("w").cast("double"))
       .repartition(parts, col("dst"))
-      .sortWithinPartitions("dst", "src")
-      .queryExecution.toRdd
-    rows.mapPartitions({ it =>
-      var cap = 1 << 16
-      var ss = new Array[Int](cap); var dd = new Array[Int](cap)
-      var ww = new Array[Double](cap)
-      var m = 0
-      while (it.hasNext) {
-        val r = it.next()
-        if (m == cap) {
-          cap *= 2
-          ss = java.util.Arrays.copyOf(ss, cap)
-          dd = java.util.Arrays.copyOf(dd, cap)
-          ww = java.util.Arrays.copyOf(ww, cap)
-        }
-        ss(m) = r.getInt(0); dd(m) = r.getInt(1); ww(m) = r.getDouble(2); m += 1
-      }
-      Iterator.single((java.util.Arrays.copyOf(ss, m), java.util.Arrays.copyOf(dd, m),
-        java.util.Arrays.copyOf(ww, m)))
-    }, preservesPartitioning = true)
-  }
+      .sortWithinPartitions("dst", "src"))
+      .map(b => (b.ints(0), b.ints(1), b.doubles(2)))
 
   /** Power iteration on shared arrays — PageRank.run's dense local-master
     * tier. Semantics identical to PageRank.localSolve / sequential (the test

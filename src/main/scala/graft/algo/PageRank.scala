@@ -50,7 +50,7 @@ object PageRank {
           maxIters: Int = 100, localEdgeThreshold: Long = 2000000,
           denseKernel: Boolean = true): DataFrame = {
     val spark = edges.sparkSession
-    val isLocalMaster = spark.sparkContext.master.startsWith("local")
+    val isLocalMaster = spark.sparkContext.isLocal
     if (localEdgeThreshold > 0) {
       // on a local master, cache through the gate count so the collect below
       // does not re-derive the input plan (the bench feeds the bipartite

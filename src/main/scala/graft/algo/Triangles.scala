@@ -42,7 +42,7 @@ object Triangles {
     closed.select("a", "b", "c")
   }
 
-  /** Global triangle count. On a local[k] master with a dense-gated id
+  /** Global triangle count. On a local master with a dense-gated id
     * space the count runs in the shared-array kernel (`kernelCount`) — the
     * exact integer is identical to the Catalyst plan's by construction
     * (AlgoSpec pins it); non-local masters and huge/sparse graphs keep the
@@ -55,7 +55,7 @@ object Triangles {
     *        already-distinct set is the identity, so this is plan-only.
     */
   def globalCount(edges: DataFrame, simpleInput: Boolean = false): Long =
-    if (edges.sparkSession.sparkContext.master.startsWith("local"))
+    if (edges.sparkSession.sparkContext.isLocal)
       kernelCount(edges, simpleInput).getOrElse(triangles(edges).count())
     else triangles(edges).count()
 
@@ -98,28 +98,10 @@ object Triangles {
       if (minId < 0 || maxId + 1 > graft.leiden.LocalMove.CtBroadcastMax) return None
       val n = (maxId + 1).toInt
       val m = mEdges.toInt
-      // collect the pairs as packed int blocks (no Row objects)
-      val blocks = simple.queryExecution.toRdd.mapPartitions { it =>
-        var cap = 1 << 12
-        var a = new Array[Int](cap); var b = new Array[Int](cap)
-        var k = 0
-        while (it.hasNext) {
-          val r = it.next()
-          if (k == cap) {
-            cap *= 2
-            a = java.util.Arrays.copyOf(a, cap); b = java.util.Arrays.copyOf(b, cap)
-          }
-          a(k) = r.getLong(0).toInt; b(k) = r.getLong(1).toInt; k += 1
-        }
-        Iterator.single((java.util.Arrays.copyOf(a, k), java.util.Arrays.copyOf(b, k)))
-      }.collect()
-      val ss = new Array[Int](m); val dd = new Array[Int](m)
-      var off = 0
-      blocks.foreach { case (a, b) =>
-        System.arraycopy(a, 0, ss, off, a.length)
-        System.arraycopy(b, 0, dd, off, b.length)
-        off += a.length
-      }
+      // collect the pairs as packed int columns (no Row objects)
+      val pairs = graft.graph.Packed.collect(
+        simple.select(col("src").cast("int"), col("dst").cast("int")))
+      val ss = pairs.ints(0); val dd = pairs.ints(1)
       // out-degree in the simple directed graph — the orientation key
       val deg = new Array[Int](n)
       var i = 0

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst kernels for the hot text/vector scalar paths.
@@ -138,12 +139,15 @@ object Kernels {
     * HOF chain that was CodegenFallback and allocated a GenericArrayData
     * per outer element per row; emission order is identical to the HOF
     * (NativeSpec pins bit-parity), though consumers aggregate so order
-    * never matters.
+    * never matters. The pair count grows as n²: from 46,342 elements it
+    * passes Int, so it is counted in Long and must fit one array.
     */
   def orderedPairs(arr: ArrayData, sym: Boolean): ArrayData = {
     val n = arr.numElements()
-    val nPairs = n * (n - 1) / 2 * (if (sym) 2 else 1)
-    val out = new Array[Any](nPairs)
+    val nPairs = n.toLong * (n - 1) / 2 * (if (sym) 2 else 1)
+    require(nPairs <= ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH,
+      s"graft_ordered_pairs: $n elements give $nPairs pairs, more than one array holds")
+    val out = new Array[Any](nPairs.toInt)
     var k = 0
     var i = 0
     while (i < n) {

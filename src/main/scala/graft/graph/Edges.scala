@@ -82,45 +82,15 @@ object EdgeTable {
 
   /** Driver-side packed collect of (src, dst, w) as three primitive arrays
     * — the feed for the driver-local tail solvers (PageRank.localSolve,
-    * Leiden's LocalSolver). Reads the UnsafeRow iterator directly
-    * (queryExecution.toRdd), so no Row or tuple object is allocated per
-    * edge; rows arrive in the same partition-index order a Row collect
-    * returns them, so any order-sensitive float accumulation downstream is
-    * unchanged. Callers gate on an edge-count threshold first — this is
-    * the sub-threshold tail path, never the 100-TB path.
+    * Leiden's LocalSolver). Rows arrive in the order a Row collect returns
+    * them ([[Packed]]), so any order-sensitive float accumulation
+    * downstream is unchanged. Callers gate on an edge-count threshold
+    * first — this is the sub-threshold tail path, never the 100-TB path.
     */
   def collectPacked(edges: DataFrame): (Array[Long], Array[Long], Array[Double]) = {
-    val blocks = edges
-      .select(col(SRC).cast("long"), col(DST).cast("long"), col(W).cast("double"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        var cap = 1 << 12
-        var s = new Array[Long](cap); var d = new Array[Long](cap)
-        var w = new Array[Double](cap)
-        var k = 0
-        while (it.hasNext) {
-          val r = it.next()
-          if (k == cap) {
-            cap *= 2
-            s = java.util.Arrays.copyOf(s, cap)
-            d = java.util.Arrays.copyOf(d, cap)
-            w = java.util.Arrays.copyOf(w, cap)
-          }
-          s(k) = r.getLong(0); d(k) = r.getLong(1); w(k) = r.getDouble(2)
-          k += 1
-        }
-        Iterator.single((java.util.Arrays.copyOf(s, k), java.util.Arrays.copyOf(d, k),
-          java.util.Arrays.copyOf(w, k)))
-      }.collect()
-    val m = blocks.iterator.map(_._1.length).sum
-    val sA = new Array[Long](m); val dA = new Array[Long](m); val wA = new Array[Double](m)
-    var off = 0
-    blocks.foreach { case (s, d, w) =>
-      System.arraycopy(s, 0, sA, off, s.length)
-      System.arraycopy(d, 0, dA, off, d.length)
-      System.arraycopy(w, 0, wA, off, w.length)
-      off += s.length
-    }
-    (sA, dA, wA)
+    val p = Packed.collect(
+      edges.select(col(SRC).cast("long"), col(DST).cast("long"), col(W).cast("double")))
+    (p.longs(0), p.longs(1), p.doubles(2))
   }
 
   /** Per-vertex out-degree (`/root/reference/inc/properties.hxx:26-55`). */

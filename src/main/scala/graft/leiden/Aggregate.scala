@@ -65,38 +65,22 @@ object Aggregate {
   }
 
   /** Dense-tier twin of [[coarsen]]: when the pass membership lives in a
-    * driver array (CsrSweep/ArraySweep states), project src/dst through a
+    * driver array (the CsrSweep state; a LocalMove pass keeps a DataFrame
+    * membership and takes [[coarsen]]), project src/dst through a
     * broadcast array lookup instead of two membership joins — the result
     * (comm(src), comm(dst), sum w) is identical (the joins were total on
     * the pass's vertices), and the plan is scan → project → one hash
     * aggregation: zero join exchanges, zero broadcast-relation builds.
-    * Returns the result LOCALLY CHECKPOINTED (the lookup's broadcast is
-    * destroyed before returning, so the lazy plan must not outlive it).
-    */
-  def coarsenArray(edges: DataFrame, comm: Array[Long]): DataFrame = {
-    val spark = edges.sparkSession
-    val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
-    val out = org.apache.spark.sql.graft.PlanUtils.checkpointTruncated(
-      edges.select(
-        org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("src")).as("src"),
-        org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("dst")).as("dst"),
-        col("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w")))
-    bcRef.bc.destroy()
-    out
-  }
-
-  /** [[coarsenArray]] variant that materializes into a CACHE instead of a
-    * local checkpoint: the pass loop caches the coarse graph anyway (the
-    * next pass reads it repeatedly), so checkpoint-then-cache paid two
-    * materializations of the same rows. Returns the coarse edges cached
-    * AND materialized. Unlike the checkpoint variant, the cached plan
-    * still SERIALIZES the broadcast handle into every later task over the
-    * cache (the InMemoryTableScan keeps its child plan for recompute), so
-    * the broadcast is only UNPERSISTED here — executor copies drop, the
-    * handle stays valid (a recompute or late task re-fetches it from the
-    * driver), and the array is GC-eligible once detect() releases the
-    * cache at pass end.
+    *
+    * Returns the coarse edges cached AND materialized, not checkpointed:
+    * the pass loop caches the coarse graph anyway (the next pass reads it
+    * repeatedly), so checkpoint-then-cache paid two materializations of the
+    * same rows. The cached plan still SERIALIZES the broadcast handle into
+    * every later task over the cache (the InMemoryTableScan keeps its child
+    * plan for recompute), so the broadcast is only UNPERSISTED here —
+    * executor copies drop, the handle stays valid (a recompute or late task
+    * re-fetches it from the driver), and the array is GC-eligible once
+    * detect() releases the cache at pass end.
     */
   def coarsenArrayCached(edges: DataFrame, comm: Array[Long]): DataFrame = {
     val spark = edges.sparkSession

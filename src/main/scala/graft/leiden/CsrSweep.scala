@@ -1,5 +1,6 @@
 package graft.leiden
 
+import graft.graph.Packed
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -10,32 +11,44 @@ import org.apache.spark.sql.functions.col
   * north-star design names explicitly ("edges are repartitioned into
   * sorted CSR-like per-partition blocks").
   *
-  * Sits below [[ArraySweep]] on the same gate (dense ids within the
-  * broadcast cap, exact scans) and exists for one measured reason: the
-  * Catalyst array tier's half-sweep is two full passes over the cached
-  * edge table (gather-aggregate-argmax, then the frontier bit-OR), each
-  * paying the columnar-cache decode per row, and at 8 cores those passes
-  * already saturate one box's DRAM (BENCH.md roofline: 4x threads buy only
-  * ~1.5x bandwidth), capping the N->4N scaling criterion no matter how
-  * fast the plan is. This tier attacks the BYTES, not the plan: per
-  * half-sweep it reads each edge exactly once from a packed primitive
-  * array block (12 B/edge, no columnar decode, no hash-aggregation
-  * operator state), resolves membership via one 4-byte indexed load, and
-  * keeps every per-src scratch structure L1-resident. The frontier update
-  * costs zero extra passes — see the algebra below.
+  * The dense tier of [[Leiden.detect]]: it runs every pass whose ids fit
+  * the dense gate (within the broadcast cap); [[LocalMove]], the Catalyst
+  * DataFrame tier, runs the rest. It exists for one measured reason: a
+  * Catalyst half-sweep is full passes over the cached edge table
+  * (gather-aggregate-argmax, then the frontier bit-OR), each paying the
+  * columnar-cache decode per row, and at 8 cores those passes already
+  * saturate one box's DRAM (BENCH.md roofline: 4x threads buy only ~1.5x
+  * bandwidth), capping the N->4N scaling criterion no matter how fast the
+  * plan is. This tier attacks the BYTES, not the plan: per half-sweep it
+  * reads each edge exactly once from a packed primitive array block
+  * (12 B/edge, no columnar decode, no hash-aggregation operator state),
+  * resolves membership via one 4-byte indexed load, and keeps every
+  * per-src scratch structure L1-resident. The frontier update costs zero
+  * extra passes — see the algebra below.
   *
-  * Decision-for-decision parity with [[ArraySweep.halfSweep]] /
-  * [[LocalMove.sweep]] (same ΔQ expression evaluation order, the same
-  * singleton swap guard, smallest-community-id tie-break, mdq > 0
-  * acceptance, synchronous apply) is pinned by LeidenSpec; on
-  * integer-weight graphs the memberships are bit-identical across all
-  * tiers.
+  * Decision-for-decision parity with [[LocalMove.sweep]] / [[LocalMove.run]]
+  * (same ΔQ expression evaluation order, the same singleton swap guard,
+  * smallest-community-id tie-break, mdq > 0 acceptance, synchronous apply)
+  * is pinned by LeidenSpec; on integer-weight graphs the memberships are
+  * bit-identical across all tiers.
+  *
+  * == Non-dyadic weights ==
+  *
+  * The kernel sorts each adjacency by dst and range-partitions blocks by
+  * sampling, so the per-src fp accumulation ORDER differs from the
+  * DataFrame tier's. On integers and binary fractions (every web graph,
+  * every coarsened pass of one) addition is exact and the tiers are
+  * bit-identical. On weights like 0.1 the accumulated candidate weights
+  * can differ in the last ulp, which in principle can flip an exactly-tied
+  * argmax. Both outcomes are valid moves of the same objective, and
+  * LeidenSpec bounds the quality gap between the tiers on such weights;
+  * cross-tier bit-reproducibility is promised on dyadic weights only.
   *
   * == Frontier without a second pass ==
   *
   * The column/bitmap tiers materialize "neighbors of moved vertices" after
   * each MOVING half-sweep with an extra edge scan
-  * (`/root/reference/inc/leiden.hxx:427-429`, [[ArraySweep.halfSweep]]'s
+  * (the reference's `inc/leiden.hxx:427-429`, [[LocalMove.sweep]]'s
   * bitsetOr job), evolving a V-bit frontier as
   *
   *   moving sweep at parity p, moved set M:  bits' = nb(M) | (bits & ~mask(p))
@@ -126,8 +139,7 @@ object CsrSweep {
     * a handful of vertices). Var so the parity specs can force the parallel
     * path on toy fixtures.
     */
-  private[graft] var ParallelApplyMin: Int =
-    sys.env.getOrElse("SPARK_GRAFT_PARALLEL_APPLY_MIN", "8192").toInt
+  private[graft] var ParallelApplyMin: Int = 8192
 
   /** Cumulative per-component wall nanos of every [[halfSweep]] — the
     * sweep's serial driver sections are the Amdahl term of the N->4N
@@ -270,6 +282,11 @@ object CsrSweep {
     (packed, widths, bitOff)
   }
 
+  /** Gap-packed unit blocks (see [[packGaps]]); var so parity specs can
+    * flip it per run.
+    */
+  private[graft] var PackGaps: Boolean = true
+
   /** Pack the edge cache into per-partition CSR blocks — one job per
     * phase, cached deserialized by the caller. The per-block argmax is
     * per-src-complete, so all edges of a src MUST land in one partition.
@@ -287,137 +304,112 @@ object CsrSweep {
     * wave pays task launch + a cold restart of the adjacency stream, and
     * equal-EDGE range blocks already bound the tail that overdecomposition
     * would otherwise smooth (the 8-core legs differ <9% between 1x and 2x).
-    * SPARK_GRAFT_CSR_PARTS_MULT overrides for graphs whose skew outruns
-    * the sampler. Sampling boundaries vary run to run, but results don't
-    * depend on block composition (per-src accumulation is dst-sorted
-    * within one block, moves apply disjointly by src, dq sums in
-    * ascending-src order on the driver).
-    */
-  /** Gap-packed unit blocks (see [[packGaps]]); var so parity specs and the
-    * A/B bench can flip it per run. SPARK_GRAFT_CSR_PACK=0 opts out.
-    */
-  private[graft] var PackGaps: Boolean =
-    !sys.env.get("SPARK_GRAFT_CSR_PACK").contains("0")
-
-  /** @param srcComplete caller guarantees the input's EXISTING partitioning
+    * Sampling boundaries vary run to run, but moves don't depend on block
+    * composition: per-src accumulation is dst-sorted within one block, and
+    * moves apply disjointly by src.
+    *
+    * @param srcComplete caller guarantees the input's EXISTING partitioning
     *        already holds every edge of a src in one partition (e.g. a
     *        `repartition(P, col("src"))` cache) — the pack then reads the
     *        cached partitions directly, skipping the range shuffle AND its
     *        sampling pre-job (two jobs and an O(E) exchange per build).
-    *        Results are block-composition-independent by construction
-    *        (per-src adjacency is dst-sorted within its block; dq sums in
-    *        ascending-src order on the driver), so this is plan-only.
+    *        Moves are unchanged (above), but the half-sweep's dq sum is
+    *        not block-composition-independent: the driver folds the
+    *        per-block dq partials in block order, which is ascending src
+    *        under range blocks and partition order under these hash
+    *        blocks. On integral weights every dq term is exact, so the
+    *        order is moot; on other weights dq can differ in the last ulp,
+    *        and dq decides termination against the tolerance.
     *        Default false: the range-balanced path remains for hub-heavy
     *        graphs where equal-edge blocks bound the straggler tail.
     */
   def build(edges: DataFrame, n: Int, parts: Int = 0,
             srcComplete: Boolean = false): RDD[CsrBlock] = {
     val pack = PackGaps // driver-side read, captured by the closure
-    val p =
-      if (parts > 0) parts
-      else edges.sparkSession.sparkContext.defaultParallelism *
-        sys.env.getOrElse("SPARK_GRAFT_CSR_PARTS_MULT", "1").toInt
-    val projected = edges
-      .select(col("src").cast("int"), col("dst").cast("int"),
-        col("w").cast("double"))
-    val rows =
-      (if (srcComplete) projected
-       else edges.repartitionByRange(p, col("src"))
-         .select(col("src").cast("int"), col("dst").cast("int"),
-           col("w").cast("double")))
-        .queryExecution.toRdd
-    rows.mapPartitions({ it =>
-      var cap = 1 << 16
-      var ss = new Array[Int](cap); var dd = new Array[Int](cap); var ww = new Array[Double](cap)
-      var m = 0
-      while (it.hasNext) {
-        val r = it.next()
-        if (m == cap) {
-          cap *= 2
-          ss = java.util.Arrays.copyOf(ss, cap)
-          dd = java.util.Arrays.copyOf(dd, cap)
-          ww = java.util.Arrays.copyOf(ww, cap)
-        }
-        ss(m) = r.getInt(0); dd(m) = r.getInt(1); ww(m) = r.getDouble(2)
-        m += 1
+    val p = if (parts > 0) parts else edges.sparkSession.sparkContext.defaultParallelism
+    val input = if (srcComplete) edges else edges.repartitionByRange(p, col("src"))
+    Packed.blocks(input.select(col("src").cast("int"), col("dst").cast("int"),
+        col("w").cast("double")))
+      .flatMap(b => if (b.size == 0) Iterator.empty else Iterator.single(toBlock(b, pack)))
+  }
+
+  /** One partition's (src, dst, w) rows as a [[CsrBlock]]. */
+  private def toBlock(b: Packed, pack: Boolean): CsrBlock = {
+    val m = b.size
+    val ss = b.ints(0); val dd = b.ints(1); val ww = b.doubles(2)
+    // bucket by src via a src-span-sized degree array (build-time only;
+    // range partitioning makes the local span ~n/P, not n)
+    var lo = Int.MaxValue; var hi = Int.MinValue
+    var i = 0
+    while (i < m) { val s = ss(i); if (s < lo) lo = s; if (s > hi) hi = s; i += 1 }
+    val span = hi - lo + 1
+    val deg = new Array[Int](span)
+    i = 0
+    while (i < m) { deg(ss(i) - lo) += 1; i += 1 }
+    var nSrc = 0
+    i = 0
+    while (i < span) { if (deg(i) > 0) nSrc += 1; i += 1 }
+    val srcs = new Array[Int](nSrc)
+    val off = new Array[Int](nSrc + 1)
+    val start = new Array[Int](span) // running write cursor per src
+    var k = 0; var acc = 0
+    i = 0
+    while (i < span) {
+      if (deg(i) > 0) {
+        srcs(k) = i + lo; off(k) = acc; start(i) = acc
+        acc += deg(i); k += 1
       }
-      if (m == 0) Iterator.empty
-      else {
-      // bucket by src via a src-span-sized degree array (build-time only;
-      // range partitioning makes the local span ~n/P, not n)
-      var lo = Int.MaxValue; var hi = Int.MinValue
-      var i = 0
-      while (i < m) { val s = ss(i); if (s < lo) lo = s; if (s > hi) hi = s; i += 1 }
-      val span = hi - lo + 1
-      val deg = new Array[Int](span)
-      i = 0
-      while (i < m) { deg(ss(i) - lo) += 1; i += 1 }
-      var nSrc = 0
-      i = 0
-      while (i < span) { if (deg(i) > 0) nSrc += 1; i += 1 }
-      val srcs = new Array[Int](nSrc)
-      val off = new Array[Int](nSrc + 1)
-      val start = new Array[Int](span) // running write cursor per src
-      var k = 0; var acc = 0
-      i = 0
-      while (i < span) {
-        if (deg(i) > 0) {
-          srcs(k) = i + lo; off(k) = acc; start(i) = acc
-          acc += deg(i); k += 1
-        }
-        i += 1
-      }
-      off(nSrc) = acc
-      val dstA = new Array[Int](m); val wA = new Array[Double](m)
-      var unit = true
-      i = 0
-      while (i < m) {
-        val s = ss(i) - lo; val pos = start(s)
-        dstA(pos) = dd(i); wA(pos) = ww(i); start(s) = pos + 1
-        if (ww(i) != 1.0) unit = false
-        i += 1
-      }
-      // sort each adjacency by dst (scaladoc: membership-lookup locality).
-      // Unit blocks sort dst alone; weighted blocks sort (dst, slot) keys
-      // packed in longs and permute w through a slice-sized scratch.
-      if (unit) {
-        k = 0
-        while (k < nSrc) { java.util.Arrays.sort(dstA, off(k), off(k + 1)); k += 1 }
-        if (pack) {
-          val (pk, wd, bo) = packGaps(srcs, off, dstA)
-          Iterator.single(CsrBlock(srcs, off, null, null, pk, wd, bo))
-        } else Iterator.single(CsrBlock(srcs, off, dstA, null))
-      } else {
-        var maxDeg = 0
-        k = 0
-        while (k < nSrc) { val d = off(k + 1) - off(k); if (d > maxDeg) maxDeg = d; k += 1 }
-        val key = new Array[Long](maxDeg)
-        val wTmp = new Array[Double](maxDeg)
-        k = 0
-        while (k < nSrc) {
-          val e0 = off(k); val e1 = off(k + 1); val len = e1 - e0
-          if (len > 1) {
-            var j = 0
-            while (j < len) {
-              key(j) = (dstA(e0 + j).toLong << 32) | j.toLong
-              wTmp(j) = wA(e0 + j)
-              j += 1
-            }
-            java.util.Arrays.sort(key, 0, len)
-            j = 0
-            while (j < len) {
-              val kk = key(j)
-              dstA(e0 + j) = (kk >>> 32).toInt
-              wA(e0 + j) = wTmp((kk & 0xFFFFFFFFL).toInt)
-              j += 1
-            }
+      i += 1
+    }
+    off(nSrc) = acc
+    val dstA = new Array[Int](m); val wA = new Array[Double](m)
+    var unit = true
+    i = 0
+    while (i < m) {
+      val s = ss(i) - lo; val pos = start(s)
+      dstA(pos) = dd(i); wA(pos) = ww(i); start(s) = pos + 1
+      if (ww(i) != 1.0) unit = false
+      i += 1
+    }
+    // sort each adjacency by dst (scaladoc: membership-lookup locality).
+    // Unit blocks sort dst alone; weighted blocks sort (dst, slot) keys
+    // packed in longs and permute w through a slice-sized scratch.
+    if (unit) {
+      k = 0
+      while (k < nSrc) { java.util.Arrays.sort(dstA, off(k), off(k + 1)); k += 1 }
+      if (pack) {
+        val (pk, wd, bo) = packGaps(srcs, off, dstA)
+        CsrBlock(srcs, off, null, null, pk, wd, bo)
+      } else CsrBlock(srcs, off, dstA, null)
+    } else {
+      var maxDeg = 0
+      k = 0
+      while (k < nSrc) { val d = off(k + 1) - off(k); if (d > maxDeg) maxDeg = d; k += 1 }
+      val key = new Array[Long](maxDeg)
+      val wTmp = new Array[Double](maxDeg)
+      k = 0
+      while (k < nSrc) {
+        val e0 = off(k); val e1 = off(k + 1); val len = e1 - e0
+        if (len > 1) {
+          var j = 0
+          while (j < len) {
+            key(j) = (dstA(e0 + j).toLong << 32) | j.toLong
+            wTmp(j) = wA(e0 + j)
+            j += 1
           }
-          k += 1
+          java.util.Arrays.sort(key, 0, len)
+          j = 0
+          while (j < len) {
+            val kk = key(j)
+            dstA(e0 + j) = (kk >>> 32).toInt
+            wA(e0 + j) = wTmp((kk & 0xFFFFFFFFL).toInt)
+            j += 1
+          }
         }
-        Iterator.single(CsrBlock(srcs, off, dstA, wA))
+        k += 1
       }
-      }
-    }, preservesPartitioning = true)
+      CsrBlock(srcs, off, dstA, wA)
+    }
   }
 
   /** Deep-copy of a state's mutable members (bench repetition restarts). */
@@ -699,13 +691,10 @@ object CsrSweep {
       * driver's block manager every half-sweep), off for local[k] (one
       * in-process copy, serialize-once is cheaper than mirror upkeep).
       * Requires the integral gate — mirror replay must be exact.
-      * SPARK_GRAFT_CSR_DELTA=1/0 overrides the master-shape default (A/B
-      * measurement of the exchange protocols on one box).
+      * `deltaOpt` overrides the master-shape default.
       */
     val deltaMode: Boolean =
-      integral && deltaOpt
-        .orElse(sys.env.get("SPARK_GRAFT_CSR_DELTA").map(_ == "1"))
-        .getOrElse(!csr.sparkContext.isLocal)
+      integral && deltaOpt.getOrElse(!csr.sparkContext.isLocal)
     private[CsrSweep] val stateId: Long = stateIds.incrementAndGet()
     liveStates.add(stateId)
     // per-state sweep sequence: the localSweepState registry key suffix
@@ -759,7 +748,8 @@ object CsrSweep {
     }
     /** Re-init to singletons for the refinement phase, reusing this
       * state's vtot broadcast; returns the previous membership (the
-      * refinement bound). Mirrors [[ArraySweep.ArrayState.resetToSingletons]].
+      * refinement bound), like the DataFrame tier's singleton re-init
+      * before its refine phase ([[Leiden.detect]]).
       */
     def resetToSingletons(): Array[Long] = {
       destroyChain() // membership rewritten wholesale: next sweep rebases
@@ -856,7 +846,7 @@ object CsrSweep {
 
   /** One synchronous half-sweep; mutates `st`, returns (moves, dqSum).
     * Non-moving sweeps leave the frontier state untouched, exactly like
-    * [[ArraySweep.halfSweep]]'s two early returns.
+    * [[LocalMove.sweep]] (an empty frontier or zero moves keeps the bits).
     *
     * `sketchSlots > 0` switches the per-src candidate accumulation to the
     * low-memory two-pass scan (the reference's lowmem tier on this kernel's
@@ -1232,12 +1222,12 @@ object CsrSweep {
         st.pendingDelta = all
       }
       val inc = st.integral // incremental totals (exact: integral weights)
-      // Apply, three sections. (1) SERIAL walk: dq left-fold only. Blocks
-      // are ascending src ranges (range partitioning) and within-block
-      // emission is ascending src, so walking out[] in order IS the
-      // ascending-src fp summation order every tier pins — no O(V) scratch
-      // scatter needed, just sequential reads. The moved-bitmap writes
-      // (order-free, set-only) ride the parallel scatter pass below.
+      // Apply, three sections. (1) SERIAL walk: dq left-fold only, in
+      // block order with ascending-src emission inside each block. Range
+      // blocks make that the ascending-src order; hash blocks
+      // (build's srcComplete) fold in partition order instead, which is
+      // exact on integral weights only (build scaladoc). The moved-bitmap
+      // writes (order-free, set-only) ride the parallel scatter pass below.
       var dq = 0.0
       var wb = 0
       while (wb < out.length) {

@@ -1,9 +1,10 @@
 package graft.leiden
 
-import graft.graph.EdgeTable
+import graft.graph.{EdgeTable, Packed}
 import graft.io.Snapshots
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.graft.PlanUtils
 
 /** Leiden community detection: the pass-loop driver
@@ -32,6 +33,14 @@ object Leiden {
 
   private def singletonState(vtot: DataFrame): DataFrame =
     vtot.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
+
+  /** A driver-side (id, comm) membership as a `parts`-partition DataFrame. */
+  private def idComm(spark: SparkSession, rows: Seq[(Long, Long)], parts: Int): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("comm", LongType, nullable = false)))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (k, v) => Row(k, v) }, parts), schema)
+  }
 
   /** @param edges0 canonical symmetrized edge table (src,dst,w)
     * @param prevMembership warm start (the reference's `fi` hook,
@@ -91,16 +100,6 @@ object Leiden {
       return r
     }
 
-    // P4 partition-local first pass (opt-in): runs the high-churn singleton
-    // collapse shuffle-free and feeds the result through the same fi hook a
-    // caller-supplied warm start uses. An explicit prevMembership wins.
-    val seedMembership =
-      if (opts.localFirstPassIters > 0 && prevMembership.isEmpty)
-        Some(timed("firstpass_local") {
-          PlanUtils.checkpointTruncated(
-            LocalFirstPass.seed(edges, m, opts.resolution, opts.localFirstPassIters))
-        })
-      else prevMembership
     var leaf = timed("input") {
       PlanUtils.checkpointTruncated(verts0.select(col("id"), col("id").as("comm")))
     }
@@ -110,6 +109,12 @@ object Leiden {
     // original leaf-vertex count: gates the final modularity's membership
     // broadcast (leaf always has exactly this many rows)
     val leafCount = gn
+    // the fi/fm warm-start hooks on the driver, read by the first pass only
+    lazy val warmComm: Map[Long, Long] = prevMembership.fold(Map.empty[Long, Long])(
+      _.select(col("id").cast("long"), col("comm").cast("long")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    lazy val warmAff: Option[Set[Long]] = affected.map(a =>
+      a.select(col(a.columns.head).cast("long")).collect().map(_.getLong(0)).toSet)
     var tolerance = opts.tolerance
     var pass = 0
     var totalIters = 0
@@ -148,27 +153,14 @@ object Leiden {
           // packed collect (no per-edge Row), then the tuple view LocalSolver
           // expects — same row order as a Row collect, so the solver's
           // order-sensitive accumulations are unchanged
-          val (sA, dA, wA) = graft.graph.EdgeTable.collectPacked(edges)
+          val (sA, dA, wA) = EdgeTable.collectPacked(edges)
           val arr = Array.tabulate(sA.length)(i => (sA(i), dA(i), wA(i)))
-          val init =
-            if (warm) seedMembership.map(_.select(col("id").cast("long"), col("comm").cast("long"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-              .getOrElse(Map.empty[Long, Long])
-            else Map.empty[Long, Long]
-          val affSet =
-            if (warm) affected.map(a => a.select(col(a.columns.head).cast("long"))
-              .collect().map(_.getLong(0)).toSet)
-            else None
-          LocalSolver.solve(arr, m, opts, tolerance, opts.maxPasses - pass, init, affSet)
+          LocalSolver.solve(arr, m, opts, tolerance, opts.maxPasses - pass,
+            if (warm) warmComm else Map.empty[Long, Long], if (warm) warmAff else None)
         }
         totalIters += local.iterations
         pass += local.passes
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("comm", org.apache.spark.sql.types.LongType, nullable = false)))
-        val lvl = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            local.leaf.toSeq.map { case (k, v) => org.apache.spark.sql.Row(k, v) }, 4), schema)
+        val lvl = idComm(spark, local.leaf.toSeq, 4)
         val prevLeaf = leaf
         leaf = timed("compose") {
           PlanUtils.checkpointTruncated(Aggregate.compose(leaf, lvl))
@@ -184,10 +176,9 @@ object Leiden {
       val minMoves =
         if (opts.minMovedFraction > 0) (opts.minMovedFraction * gn).toLong else 0L
 
-      // lazy per-vertex weights: the DENSE tiers consume them as ONE
-      // collected row set (vtotRows below) and never pay the checkpoint
-      // job or the state0 joins — only the DataFrame tier (huge or sparse
-      // passes) materializes them, after the gate decides
+      // lazy per-vertex weights: the dense tier consumes them as one packed
+      // collect and never pays the checkpoint job or the state0 joins —
+      // only the DataFrame tier materializes them, after the gate decides
       val vtotLazy = EdgeTable.vertexWeights(edges)
 
       // 1. local moving. C ≤ V = gn, so whenever the pass's vertex count
@@ -199,46 +190,18 @@ object Leiden {
       // cap (pass 0 of a 10^10-vertex web graph), build the dst twin once
       // and gather via the dstGather plan (LocalMove.sweep scaladoc).
       val bcCt = gn <= LocalMove.CtBroadcastMax
-      // Frontier-bitmap tier gate (FrontierBits scaladoc): dense-enough id
-      // space, checked against the pass's actual id bounds. gn <= the 4M
-      // cap already bounds the row count, so the bounds come from ONE
-      // collect of the vtot rows — the dense tiers needed exactly this
-      // collect anyway (it was a separate min/max job before), and the
-      // rows are reused below for vt/present. Post-aggregation passes are
-      // renumbered dense, so the gate holds for every pass but possibly
-      // the raw pass 0.
-      // packed (no per-row Row object): the fill loops below are
-      // order-independent per-id assignments, so the collect mechanism is
-      // observationally identical to the old Row collect
+      // Dense gate (also the FrontierBits gate): a dense-enough id space,
+      // checked against the pass's actual id bounds. gn <= the 4M cap
+      // bounds the row count, so the bounds come from one packed collect of
+      // the vtot rows, reused below for vt/present (order-independent
+      // per-id fills). A dense pass's coarse graph keeps ids below its n,
+      // so the gate holds for every pass after one; a DataFrame-tier pass
+      // passes its community labels on unchanged.
       val (vtIds, vtVals): (Array[Long], Array[Double]) =
         if (bcCt) timed("init") {
-          val blocks = vtotLazy
-            .select(col("id").cast("long"), col("vtot").cast("double"))
-            .queryExecution.toRdd.mapPartitions { it =>
-              var cap = 1 << 12
-              var ids = new Array[Long](cap); var vs = new Array[Double](cap)
-              var k = 0
-              while (it.hasNext) {
-                val r = it.next()
-                if (k == cap) {
-                  cap *= 2
-                  ids = java.util.Arrays.copyOf(ids, cap)
-                  vs = java.util.Arrays.copyOf(vs, cap)
-                }
-                ids(k) = r.getLong(0); vs(k) = r.getDouble(1); k += 1
-              }
-              Iterator.single((java.util.Arrays.copyOf(ids, k),
-                java.util.Arrays.copyOf(vs, k)))
-            }.collect()
-          val nRows = blocks.iterator.map(_._1.length).sum
-          val ia = new Array[Long](nRows); val va = new Array[Double](nRows)
-          var off = 0
-          blocks.foreach { case (i2, v2) =>
-            System.arraycopy(i2, 0, ia, off, i2.length)
-            System.arraycopy(v2, 0, va, off, v2.length)
-            off += i2.length
-          }
-          (ia, va)
+          val p = Packed.collect(
+            vtotLazy.select(col("id").cast("long"), col("vtot").cast("double")))
+          (p.longs(0), p.doubles(1))
         } else (Array.empty[Long], Array.empty[Double])
       val (minId, maxId): (Long, Long) =
         if (bcCt && vtIds.nonEmpty) {
@@ -257,24 +220,21 @@ object Leiden {
           (maxId + 1).toInt
         else 0
 
-      // Array tier (ArraySweep scaladoc): dense id space small enough for
-      // driver arrays + exact scans → all O(V) state lives on the driver
-      // and each half-sweep is two zero-shuffle jobs. A warm start whose
-      // community labels escape the dense id space falls through to the
-      // DataFrame tiers (they accept arbitrary labels).
+      // Dense tier (CsrSweep scaladoc): dense id space small enough for
+      // driver arrays → all O(V) state lives on the driver. A warm start
+      // whose community labels escape the dense id space falls through to
+      // the DataFrame tier (it accepts arbitrary labels).
       val warmInit = pass == firstPass && !resumed &&
-        (seedMembership.isDefined || affected.isDefined)
-      // dense-gate init: (vt, comm0, bits0, present) shared by the driver-
-      // state tiers (ArraySweep / CsrSweep); None when the gate fails or a
-      // warm start's community labels escape the dense id space. The CSR
-      // kernel carries the MG-sketch scan natively (CsrSweep.halfSweep
-      // lowmem branch), so sketch passes ride it too; the array tier is
-      // exact-only. `present` marks the pass's REAL vertex ids (the vtot
-      // rows) so the post-pass community count can run on the driver —
-      // id-space holes keep their singleton labels and must not count.
+        (prevMembership.isDefined || affected.isDefined)
+      // dense-gate init: (vt, comm0, bits0, present) for CsrSweep; None
+      // when the gate fails or a warm start's community labels escape the
+      // dense id space. The CSR kernel carries the MG-sketch scan natively
+      // (CsrSweep.halfSweep lowmem branch), so sketch passes ride it too.
+      // `present` marks the pass's REAL vertex ids (the vtot rows) so the
+      // post-pass community count can run on the driver — id-space holes
+      // keep their singleton labels and must not count.
       val denseInit: Option[(Array[Double], Array[Long], Array[Byte], Array[Boolean])] =
-        if (fBits > 0 && (slots == 0 || opts.csrKernel) &&
-          fBits <= LocalMove.CtBroadcastMax) timed("mark") {
+        if (fBits > 0 && fBits <= LocalMove.CtBroadcastMax) timed("mark") {
           val n = fBits
           val vt = new Array[Double](n)
           val present = new Array[Boolean](n)
@@ -291,29 +251,18 @@ object Leiden {
             // when present else the id (left join + coalesce); aff = id in
             // the affected set, defaulting to all-true without one. Same
             // escape check as before: any effective comm outside [0, n)
-            // falls back to the DataFrame tiers (they accept any labels).
-            val seedMap = new java.util.HashMap[Long, Long]()
-            seedMembership.foreach(_.select(col("id").cast("long"), col("comm").cast("long"))
-              .collect().foreach(r => seedMap.put(r.getLong(0), r.getLong(1))))
-            val affSet = affected.map { a =>
-              val s = new java.util.HashSet[Long]()
-              a.select(col(a.columns.head).cast("long")).collect()
-                .foreach(r => s.add(r.getLong(0)))
-              s
-            }
+            // falls back to the DataFrame tier (it accepts any labels).
             var ok = true
             val comm0 = Array.tabulate(n)(_.toLong)
             val bits0 = new Array[Byte]((n + 7) / 8)
             var id = 0
             while (ok && id < n) {
               if (present(id)) {
-                val sc = seedMap.get(id.toLong)
-                val c = if (seedMap.containsKey(id.toLong)) sc else id.toLong
+                val c = warmComm.getOrElse(id.toLong, id.toLong)
                 if (c < 0 || c >= n) ok = false
                 else {
                   comm0(id) = c
-                  val aff = affSet.forall(_.contains(id.toLong))
-                  if (aff)
+                  if (warmAff.forall(_.contains(id.toLong)))
                     bits0(id >>> 3) = (bits0(id >>> 3) | (1 << (id & 7))).toByte
                 }
               }
@@ -334,7 +283,7 @@ object Leiden {
         if (denseInit.isDefined) null
         else timed("mark") {
           if (warmInit) {
-            val withComm = seedMembership match {
+            val withComm = prevMembership match {
               case Some(pm) => vtot
                 .join(pm.select(col("id"), col("comm").as("__pc")), Seq("id"), "left")
                 .select(col("id"), coalesce(col("__pc"), col("id")).as("comm"), col("vtot"))
@@ -350,13 +299,13 @@ object Leiden {
           } else singletonState(vtot)
         }
 
-      // dense tiers return the final membership as the DRIVER ARRAY itself
+      // the dense tier returns the final membership as the DRIVER ARRAY itself
       // (denseComm): the pass tail below then composes, counts and coarsens
       // through broadcast array lookups — no per-pass materialize job, no
       // compose join, no membership joins in the coarsen, no distinct-count
       // job. The DataFrame tier keeps its refMemb DataFrame unchanged.
       val (denseComm, refMembOpt, iters, lMoves, rMoves) = denseInit match {
-        case Some((vt, comm0, bits0, _)) if opts.csrKernel =>
+        case Some((vt, comm0, bits0, _)) =>
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
           // array pass per half-sweep, frontier folded into the same pass
           val csr = timed("csrbuild") {
@@ -384,24 +333,6 @@ object Leiden {
           val commArr = st.comm
           st.close()
           csr.unpersist(blocking = false)
-          (Some(commArr), None, lIt + rIt, lMv, rMv)
-
-        case Some((vt, comm0, bits0, _)) =>
-          val st = ArraySweep.init(edges, fBits, vt, comm0, bits0)
-          val (lIt, lMv) = timed(if (pass == firstPass) "firstpass" else "move") {
-            ArraySweep.run(st, m, opts.resolution, tolerance,
-              opts.maxIterations, minMoves = minMoves)
-          }
-          // 2. refinement: bound = post-move membership (a driver array);
-          // re-init singletons in place
-          val boundArr = st.resetToSingletons()
-          val (rIt, rMv) = timed("refine") {
-            ArraySweep.run(st, m, opts.resolution, tolerance,
-              opts.maxIterations, boundArr = Some(boundArr),
-              refineSingletons = true, minMoves = minMoves)
-          }
-          val commArr = st.comm
-          st.close()
           (Some(commArr), None, lIt + rIt, lMv, rMv)
 
         case None =>
@@ -447,7 +378,7 @@ object Leiden {
 
       if (lMoves + rMoves == 0 || pass >= opts.maxPasses) done = true
       else {
-        // community count of the pass: dense tiers count distinct labels of
+        // community count of the pass: the dense tier counts distinct labels of
         // the PRESENT ids on the driver (identical to the refMemb distinct —
         // refMemb rows are exactly the present ids); the DataFrame tier
         // keeps the distinct-count job
@@ -497,15 +428,8 @@ object Leiden {
                 val rm = refMembOpt.getOrElse {
                   val present = denseInit.get._4
                   val arr = denseComm.get
-                  val schema = org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("id",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("comm",
-                      org.apache.spark.sql.types.LongType, nullable = false)))
-                  spark.createDataFrame(spark.sparkContext.parallelize(
-                    (0 until arr.length).iterator.filter(present(_))
-                      .map(v => org.apache.spark.sql.Row(v.toLong, arr(v))).toSeq,
-                    math.max(4, spark.sparkContext.defaultParallelism)), schema)
+                  idComm(spark, (0 until arr.length).filter(present(_)).map(v => v.toLong -> arr(v)),
+                    math.max(4, spark.sparkContext.defaultParallelism))
                 }
                 val c = PlanUtils.checkpointTruncated(
                   if (slots > 0 && opts.sketchAggregation)
@@ -545,8 +469,6 @@ object Leiden {
     }
     if (edges ne inputEdges) edges.unpersist()
     inputEdges.unpersist()
-    if (opts.localFirstPassIters > 0 && prevMembership.isEmpty)
-      seedMembership.foreach(PlanUtils.release)
     phase = phase.updated("total", System.currentTimeMillis() - t0)
     LeidenResult(leaf, totalIters, pass, q, communities, phase)
   }

@@ -64,39 +64,7 @@ case class LeidenOptions(
     /** Directory for per-pass snapshots (checkpoint/resume). Empty = use
       * Spark localCheckpoint only (no durability).
       */
-    snapshotDir: Option[String] = None,
-    /** Route dense-gated passes through the packed-CSR fused kernel
-      * ([[CsrSweep]]) instead of the Catalyst array tier ([[ArraySweep]]).
-      * Same gate, decision-for-decision identical moves (LeidenSpec pins
-      * parity); trades the array tier's codegen'd columnar scan for
-      * 12 B/edge primitive blocks and folds the frontier update into the
-      * same single pass, cutting per-half-sweep DRAM traffic roughly 4x —
-      * the one-box bandwidth roofline is what caps N->4N core scaling
-      * (BENCH.md). Default on: parity is pinned at half-sweep, run and
-      * end-to-end levels (LeidenSpec) and bit-identical on a 4.8M-edge
-      * Cli run (Q=0.2073758011042955 both paths, 2.8x faster wall-clock).
-      *
-      * Caveat (arbitrary non-dyadic double weights only): the kernel sorts
-      * each adjacency by dst and range-partitions blocks by sampling, so
-      * the per-src fp accumulation ORDER differs from the array/column
-      * tiers. On integers and binary fractions (every web graph, every
-      * coarsened pass of one) addition is exact and the tiers are
-      * bit-identical; on weights like 0.1 the accumulated candidate
-      * weights can differ in the last ulp, which in principle can flip an
-      * exactly-tied argmax. Both outcomes are valid moves of the same
-      * objective; set csrKernel=false if cross-tier bit-reproducibility on
-      * non-dyadic weights matters more than throughput.
-      */
-    csrKernel: Boolean = true,
-    /** > 0 enables the partition-local CSR first pass (LocalFirstPass,
-      * SURVEY P4): each src-partition runs this many asynchronous local
-      * sweeps against stale remote state, and the result seeds pass 0 the
-      * same way `prevMembership` does. The bulk of all moves (singleton
-      * collapse) then happens with zero shuffled bytes. Off by default:
-      * a different (valid) move schedule reaches a different local optimum
-      * than the cold-start goldens. Ignored when `prevMembership` is given.
-      */
-    localFirstPassIters: Int = 0)
+    snapshotDir: Option[String] = None)
 
 /** Result record (`/root/reference/inc/leiden.hxx:73-145` analog).
   *

@@ -47,8 +47,4 @@ object NativeColumns {
   def bcLookupLong(holder: graft.catalyst.BcLongs, id: Column): Column =
     ExpressionUtils.column(graft.catalyst.BcLookupLongExpr(
       ExpressionUtils.expression(id), holder))
-  /** O(1) read `arr(id)` from a broadcast double array (dense-id state). */
-  def bcLookupDouble(holder: graft.catalyst.BcDoubles, id: Column): Column =
-    ExpressionUtils.column(graft.catalyst.BcLookupDoubleExpr(
-      ExpressionUtils.expression(id), holder))
 }

@@ -128,6 +128,20 @@ class NativeSpec extends SparkSpec {
     }
   }
 
+  test("native ordered pairs: an input whose pair count passes one array fails, not wraps") {
+    // 46,342 elements: n*(n-1) passes Int.MaxValue, so an Int count went
+    // negative; symmetric emission doubles the 1.07e9 pairs past any array
+    val big = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](46342)(_.toLong))
+    val e = intercept[IllegalArgumentException](Kernels.orderedPairs(big, sym = true))
+    assert(e.getMessage.contains(
+      "graft_ordered_pairs: 46342 elements give 2147534622 pairs, more than one array holds"),
+      e.getMessage)
+    // small inputs are unchanged: 4 elements, 6 pairs, 12 rows symmetric
+    val small = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](1L, 2L, 3L, 4L))
+    assert(Kernels.orderedPairs(small, sym = true).numElements() === 12)
+  }
+
   test("property: native kernels equal HOF forms on 200 seeded random texts") {
     val spark2 = spark
     import spark2.implicits._

@@ -25,6 +25,23 @@ class EdgesSpec extends SparkSpec {
     assert(rows.indices.forall(i => rows(i) == ((s(i), d(i), w(i)))))
   }
 
+  test("Packed reads int, long and double columns per partition in row order") {
+    val df = EdgeTable.of(spark, (0 until 300).map(i => (i.toLong, (i * 7).toLong, i / 4.0)))
+      .repartition(6, col("src"))
+      .select(col("src").cast("int"), col("dst"), col("w"))
+    val byPart = df.rdd.glom().collect()
+    val blocks = Packed.blocks(df).collect()
+    assert(blocks.map(_.size).toSeq === byPart.map(_.length).toSeq)
+    blocks.zip(byPart).foreach { case (b, rows) =>
+      assert(rows.indices.forall(i => rows(i).getInt(0) == b.ints(0)(i) &&
+        rows(i).getLong(1) == b.longs(1)(i) && rows(i).getDouble(2) == b.doubles(2)(i)))
+      assert(b.ints(0).length === b.size) // cut to the row count
+    }
+    val empty = Packed.collect(df.filter(col("src") < 0))
+    assert(empty.size === 0 && empty.longs(1).isEmpty)
+    intercept[IllegalArgumentException](Packed.collect(df.select(col("src").cast("string"))))
+  }
+
   test("dedupLastSeq keeps the last write per (src,dst)") {
     val spark2 = spark
     import spark2.implicits._

@@ -10,6 +10,95 @@ class LeidenSpec extends SparkSpec {
   def clique(ids: Seq[Long]): Seq[(Long, Long, Double)] =
     for (a <- ids; b <- ids if a < b) yield (a, b, 1.0)
 
+  /** LocalMove.run from singletons, then the bounded refine phase from
+    * singletons, as Leiden.detect runs a DataFrame-tier pass: (post-move
+    * membership, refined membership, move iterations, move moves, refine
+    * iterations, refine moves).
+    */
+  def columnRun(edges: org.apache.spark.sql.DataFrame, vw: org.apache.spark.sql.DataFrame,
+                m: Double): (Map[Long, Long], Map[Long, Long], Int, Long, Int, Long) = {
+    def st0 = vw.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
+    def memb(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "comm").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (moved, itM, mvM) = LocalMove.run(edges, st0, m, 1.0, 1e-9, 50,
+      broadcastCt = true, broadcastMembership = true)
+    val (refined, itR, mvR) = LocalMove.run(edges, st0, m, 1.0, 1e-9, 50,
+      Some(moved.select(col("id"), col("comm").as("bound"))), refineSingletons = true,
+      broadcastCt = true, broadcastMembership = true)
+    (memb(moved), memb(refined), itM, mvM, itR, mvR)
+  }
+
+  /** Driver-array reference of the synchronous local-moving phase: plain
+    * Scala over a collected adjacency, with the frontier kept as the
+    * explicit [[FrontierBits.next]] recurrence. Decisions follow
+    * [[LocalMove.sweep]]: the same score and ΔQ expressions, the swap
+    * guard between singletons, ties toward the smaller community id,
+    * mdq > 0 acceptance, moves applied after the whole half-sweep scored.
+    */
+  final class ArrayTier(edges: Array[(Int, Int, Double)], val n: Int, vtot: Array[Double]) {
+    val comm: Array[Long] = Array.tabulate(n)(_.toLong)
+    private var bits = Array.fill[Byte]((n + 7) / 8)(-1)
+    private val adj = edges.groupBy(_._1)
+
+    def resetToSingletons(): Array[Long] = {
+      val prev = comm.clone()
+      (0 until n).foreach(i => comm(i) = i.toLong)
+      bits = Array.fill[Byte]((n + 7) / 8)(-1)
+      prev
+    }
+
+    private def bit(b: Array[Byte], i: Int): Boolean = (b(i >> 3) & (1 << (i & 7))) != 0
+
+    def halfSweep(m: Double, r: Double, parity: Int, bound: Option[Array[Long]],
+                  refineSingletons: Boolean): (Long, Double) = {
+      if (FrontierBits.isEmpty(bits, parity)) return (0L, 0.0)
+      val ctot = new Array[Double](n)
+      val csize = new Array[Int](n)
+      (0 until n).foreach { i => val c = comm(i).toInt; ctot(c) += vtot(i); csize(c) += 1 }
+      def sgl(c: Long): Boolean = csize(c.toInt) == 1
+      val moves = (0 until n).filter(s => s % 2 == parity && bit(bits, s) &&
+          (!refineSingletons || sgl(comm(s)))).flatMap { s =>
+        val ccur = comm(s); val vu = vtot(s)
+        val wuc = adj.getOrElse(s, Array.empty[(Int, Int, Double)])
+          .filter { case (_, d, _) => d != s && bound.forall(b => b(s) == b(d)) }
+          .groupBy(e => comm(e._2)).map { case (c, es) => c -> es.map(_._3).sum }
+        val wud = wuc.getOrElse(ccur, 0.0)
+        val eligible = wuc.filter { case (c, _) =>
+          c != ccur && !(sgl(c) && sgl(ccur) && c > ccur) }
+        if (eligible.isEmpty) None
+        else {
+          val (best, score) = eligible
+            .map { case (c, w) => c -> (w / m - r * vu * ctot(c.toInt) / (2 * m * m)) }
+            .maxBy { case (c, sc) => (sc, -c) }
+          val mdq = score - wud / m - r * vu * (vu - ctot(ccur.toInt)) / (2 * m * m)
+          if (mdq > 0) Some((s, best, mdq)) else None
+        }
+      }
+      if (moves.isEmpty) return (0L, 0.0)
+      val nb = new Array[Byte](bits.length)
+      moves.foreach { case (s, best, _) =>
+        comm(s) = best
+        adj.getOrElse(s, Array.empty[(Int, Int, Double)]).foreach { case (_, d, _) =>
+          nb(d >> 3) = (nb(d >> 3) | (1 << (d & 7))).toByte }
+      }
+      bits = FrontierBits.next(bits, nb, parity)
+      (moves.length.toLong, moves.map(_._3).sum)
+    }
+
+    /** [[LocalMove.run]]'s termination rule; returns (iterations, moves). */
+    def run(m: Double, r: Double, tolerance: Double, maxIterations: Int,
+            bound: Option[Array[Long]] = None, refineSingletons: Boolean = false): (Int, Long) = {
+      var it = 0; var total = 0L; var go = true
+      while (go && it < maxIterations) {
+        val (am, adq) = halfSweep(m, r, 0, bound, refineSingletons)
+        val (bm, bdq) = halfSweep(m, r, 1, bound, refineSingletons)
+        it += 1; total += am + bm
+        if (am + bm < 1L || adq + bdq <= tolerance) go = false
+      }
+      (it, total)
+    }
+  }
+
   test("two 4-cliques + bridge: recovers the planted partition, Q=11/26, none disconnected") {
     val edges = EdgeTable.undirected(spark,
       clique(0L to 3L) ++ clique(4L to 7L) :+ ((3L, 4L, 1.0)))
@@ -110,42 +199,12 @@ class LeidenSpec extends SparkSpec {
     edst.unpersist(); edges.unpersist()
   }
 
-  test("driver-array half-sweep equals the legacy sweep from a blocked state") {
-    // same fixture discipline as the dst-cache parity test: non-trivial
-    // graph, non-singleton blocked start, both parities
-    val rnd = new Random(7)
-    val es = Seq.newBuilder[(Long, Long, Double)]
-    for (a <- 0 until 400; b <- a + 1 until 400)
-      if (rnd.nextDouble() < (if ((a / 40) == (b / 40)) 0.25 else 0.01))
-        es += ((a.toLong, b.toLong, 1.0))
-    val edges = EdgeTable.undirected(spark, es.result())
-      .repartition(col("src")).cache()
-    val m = EdgeTable.totalWeight(edges) / 2
-    val vw = EdgeTable.vertexWeights(edges)
-    val st0 = vw.select(col("id"), pmod(col("id"), lit(16)).as("comm"),
-      col("vtot"), lit(true).as("aff"))
-    val vt = new Array[Double](400)
-    vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
-    def memb(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "comm").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val realIds = vw.select("id").collect().map(_.getLong(0))
-    for (parity <- 0 to 1) {
-      val legacy = LocalMove.sweep(edges, st0, m, 1.0, parity)
-      val comm0 = (0 until 400).map(i => (i % 16).toLong).toArray
-      val st = ArraySweep.init(edges, 400, vt, comm0,
-        Array.fill[Byte](50)(-1))
-      val (mvA, _) = ArraySweep.halfSweep(st, m, 1.0, parity)
-      assert(mvA === legacy.moves, s"parity=$parity")
-      val legacyM = memb(legacy.state)
-      realIds.foreach { id =>
-        assert(st.comm(id.toInt) === legacyM(id), s"id=$id parity=$parity")
-      }
-      st.close()
-    }
-    edges.unpersist()
-  }
-
   test("driver-array tier equals the column tiers across move and refine phases") {
+    // full-run parity of CsrSweep against LocalMove, the independent
+    // DataFrame tier, including the non-moving half-sweeps near
+    // convergence: the folded frontier (acc/seedAlive algebra) must visit
+    // the same iteration count, move counts, refinement bound and final
+    // membership as the column tier's explicit frontier
     val rnd = new Random(19)
     val es = Seq.newBuilder[(Long, Long, Double)]
     for (a <- 0 until 300; b <- a + 1 until 300)
@@ -155,35 +214,27 @@ class LeidenSpec extends SparkSpec {
       .repartition(col("src")).cache()
     val m = EdgeTable.totalWeight(edges) / 2
     val vw = EdgeTable.vertexWeights(edges)
-    def st0 = vw.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
-    def memb(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "comm").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val realIds = vw.select("id").collect().map(_.getLong(0))
+    val (movedM, refM, itMC, mvMC, itRC, mvRC) = columnRun(edges, vw, m)
+    val realIds = vw.select("id").collect().map(_.getLong(0)).toSet
 
-    // column path: move phase, then the bounded refine phase
-    val (movedC, itMC, mvMC) = LocalMove.run(edges, st0, m, 1.0, 1e-9, 50,
-      broadcastCt = true, broadcastMembership = true)
-    val boundDf = movedC.select(col("id"), col("comm").as("bound"))
-    val (refC, itRC, mvRC) = LocalMove.run(edges, st0, m, 1.0, 1e-9, 50,
-      Some(boundDf), refineSingletons = true,
-      broadcastCt = true, broadcastMembership = true)
-
-    // array path, same phases
     val vt = new Array[Double](300)
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
-    val st = ArraySweep.singleton(edges, 300, vt)
-    val (itMA, mvMA) = ArraySweep.run(st, m, 1.0, 1e-9, 50)
+    val csr = CsrSweep.build(edges, 300).cache()
+    val st = CsrSweep.singleton(csr, 300, vt)
+    val (itMA, mvMA) = CsrSweep.run(st, m, 1.0, 1e-9, 50)
     assert(itMA === itMC); assert(mvMA === mvMC)
-    val movedM = memb(movedC)
-    realIds.foreach(id => assert(st.comm(id.toInt) === movedM(id), s"move id=$id"))
     val bound = st.resetToSingletons()
-    val (itRA, mvRA) = ArraySweep.run(st, m, 1.0, 1e-9, 50,
+    (0 until 300).foreach { i =>
+      // id-space holes keep their singleton label
+      val want = if (realIds(i.toLong)) movedM(i.toLong) else i.toLong
+      assert(bound(i) === want, s"bound id=$i")
+    }
+    val (itRA, mvRA) = CsrSweep.run(st, m, 1.0, 1e-9, 50,
       boundArr = Some(bound), refineSingletons = true)
     assert(itRA === itRC); assert(mvRA === mvRC)
-    val refM = memb(refC)
     realIds.foreach(id => assert(st.comm(id.toInt) === refM(id), s"refine id=$id"))
     st.close()
-    edges.unpersist()
+    csr.unpersist(); edges.unpersist()
   }
 
   test("packed-CSR half-sweep equals the legacy sweep from a blocked state") {
@@ -223,7 +274,7 @@ class LeidenSpec extends SparkSpec {
     // full-run parity including the non-moving half-sweeps near
     // convergence: the folded frontier (acc/seedAlive algebra) must visit
     // the same iteration count, move counts, and final membership as the
-    // array tier's explicit bits recurrence
+    // driver-array reference's explicit bits recurrence
     val rnd = new Random(19)
     val es = Seq.newBuilder[(Long, Long, Double)]
     for (a <- 0 until 300; b <- a + 1 until 300)
@@ -236,11 +287,12 @@ class LeidenSpec extends SparkSpec {
     val vt = new Array[Double](300)
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
 
-    val stA = ArraySweep.singleton(edges, 300, vt)
-    val (itMA, mvMA) = ArraySweep.run(stA, m, 1.0, 1e-9, 50)
+    val stA = new ArrayTier(edges.select("src", "dst", "w").collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2))), 300, vt)
+    val (itMA, mvMA) = stA.run(m, 1.0, 1e-9, 50)
     val boundA = stA.resetToSingletons()
-    val (itRA, mvRA) = ArraySweep.run(stA, m, 1.0, 1e-9, 50,
-      boundArr = Some(boundA), refineSingletons = true)
+    val (itRA, mvRA) = stA.run(m, 1.0, 1e-9, 50,
+      bound = Some(boundA), refineSingletons = true)
 
     val csr = CsrSweep.build(edges, 300).cache()
     val stC = CsrSweep.singleton(csr, 300, vt)
@@ -252,7 +304,7 @@ class LeidenSpec extends SparkSpec {
       boundArr = Some(boundC), refineSingletons = true)
     assert(itRC === itRA); assert(mvRC === mvRA)
     assert(stC.comm.toSeq === stA.comm.toSeq)
-    stA.close(); stC.close()
+    stC.close()
     csr.unpersist(); edges.unpersist()
   }
 
@@ -298,11 +350,11 @@ class LeidenSpec extends SparkSpec {
     csr.unpersist(); edges.unpersist()
   }
 
-  test("packed-CSR tier equals the array tier on NON-integral weights") {
+  test("packed-CSR tier equals the column tier on NON-integral weights") {
     // fractional weights fail CsrState.integral, putting every half-sweep
     // on the executor-side memoized derive path (CsrSweep.derive) with a
     // cloned membership per sweep — the branch the incremental driver
-    // totals do NOT cover. Parity with the array tier across move+refine
+    // totals do NOT cover. Parity with the column tier across move+refine
     // proves the clone-per-sweep rule: a stale memo entry (in-place-mutated
     // commI reused as a key) would surface as diverged totals here.
     val rnd = new Random(31)
@@ -314,35 +366,32 @@ class LeidenSpec extends SparkSpec {
       .repartition(col("src")).cache()
     val m = EdgeTable.totalWeight(edges) / 2
     val vw = EdgeTable.vertexWeights(edges)
+    val (movedM, refM, itMA, mvMA, itRA, mvRA) = columnRun(edges, vw, m)
+    val realIds = vw.select("id").collect().map(_.getLong(0))
+
     val vt = new Array[Double](300)
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
-
-    val stA = ArraySweep.singleton(edges, 300, vt)
-    val (itMA, mvMA) = ArraySweep.run(stA, m, 1.0, 1e-9, 50)
-    val boundA = stA.resetToSingletons()
-    val (itRA, mvRA) = ArraySweep.run(stA, m, 1.0, 1e-9, 50,
-      boundArr = Some(boundA), refineSingletons = true)
-
     val csr = CsrSweep.build(edges, 300).cache()
     val stC = CsrSweep.singleton(csr, 300, vt)
     assert(!stC.integral, "fixture must take the non-integral derive path")
     val (itMC, mvMC) = CsrSweep.run(stC, m, 1.0, 1e-9, 50)
     assert(itMC === itMA); assert(mvMC === mvMA)
+    realIds.foreach(id => assert(stC.comm(id.toInt) === movedM(id), s"move id=$id"))
     val boundC = stC.resetToSingletons()
     val (itRC, mvRC) = CsrSweep.run(stC, m, 1.0, 1e-9, 50,
       boundArr = Some(boundC), refineSingletons = true)
     assert(itRC === itRA); assert(mvRC === mvRA)
-    assert(stC.comm.toSeq === stA.comm.toSeq)
-    stA.close(); stC.close()
+    realIds.foreach(id => assert(stC.comm(id.toInt) === refM(id), s"refine id=$id"))
+    stC.close()
     csr.unpersist(); edges.unpersist()
   }
 
-  test("packed-CSR vs array tier on NON-DYADIC weights: quality parity within tolerance") {
+  test("packed-CSR vs column tier on NON-DYADIC weights: quality parity within tolerance") {
     // Arbitrary decimal weights (0.1 + k*0.3 — NOT binary fractions) void
     // the bit-parity contract: the CSR tier's dst-sorted accumulation
     // reorders double additions within a src, so a near-tie argmax can
-    // legitimately flip between tiers (documented caveat on
-    // LeidenOptions.csrKernel). What MUST still hold: both tiers converge,
+    // legitimately flip between tiers (CsrSweep scaladoc, "Non-dyadic
+    // weights"). What MUST still hold: both tiers converge,
     // and the partitions they land are quality-equivalent — modularity of
     // each tier's own membership within 1e-3 absolute on a Q≈0.6 fixture
     // (a tie flip near ΔQ=0 moves Q by ~the tie margin, not by structure).
@@ -358,46 +407,54 @@ class LeidenSpec extends SparkSpec {
     val vt = new Array[Double](240)
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
 
-    val stA = ArraySweep.singleton(edges, 240, vt)
-    ArraySweep.run(stA, m, 1.0, 1e-9, 50)
+    val (movedA, _, _) = LocalMove.run(edges,
+      vw.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff")),
+      m, 1.0, 1e-9, 50, broadcastCt = true, broadcastMembership = true)
     val csr = CsrSweep.build(edges, 240).cache()
     val stC = CsrSweep.singleton(csr, 240, vt)
     assert(!stC.integral)
     CsrSweep.run(stC, m, 1.0, 1e-9, 50)
 
-    def q(comm: Array[Long]): Double = {
+    val qa = Modularity.modularity(edges, movedA.select("id", "comm"), m)
+    val qc = {
       import spark.implicits._
-      val memb = comm.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
+      val memb = stC.comm.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
         .toDF("id", "comm")
       Modularity.modularity(edges, memb, m)
     }
-    val qa = q(stA.comm)
-    val qc = q(stC.comm)
     assert(qa > 0.3 && qc > 0.3, s"fixture must cluster: $qa / $qc")
     assert(math.abs(qa - qc) < 1e-3, s"tier quality diverged: $qa vs $qc")
-    stA.close(); stC.close()
+    stC.close()
     csr.unpersist(); edges.unpersist()
   }
 
-  test("csrKernel end-to-end Leiden equals the array-tier run across passes") {
+  test("end-to-end Leiden: the CSR tier equals the LocalMove tier across passes") {
     // multi-pass detect parity: coarsened passes arrive (src,dst)-hash
     // partitioned, exercising build()'s repartition-to-src requirement;
-    // localSolveEdgeThreshold = 0 keeps every pass on the distributed tiers
+    // localSolveEdgeThreshold = 0 keeps every pass on the distributed
+    // tiers. Shifting every id by FrontierBitsMax makes the dense gate
+    // decline, so the shifted run takes LocalMove on every pass (coarsening
+    // keeps community labels, which stay shifted) while the plain run
+    // takes CsrSweep.
     val rnd = new Random(23)
     val es = Seq.newBuilder[(Long, Long, Double)]
     for (a <- 0 until 360; b <- a + 1 until 360)
       if (rnd.nextDouble() < (if ((a / 24) == (b / 24)) 0.35 else 0.008))
         es += ((a.toLong, b.toLong, 1.0))
-    val edges = EdgeTable.undirected(spark, es.result())
-    val base = LeidenOptions(localSolveEdgeThreshold = 0)
-    val ra = Leiden.detect(edges, base.copy(csrKernel = false))
-    val rc = Leiden.detect(edges, base.copy(csrKernel = true))
-    assert(rc.iterations === ra.iterations)
-    assert(rc.passes === ra.passes)
-    assert(rc.communities === ra.communities)
-    assert(rc.modularity === ra.modularity)
-    assert(rc.membership.except(ra.membership).count() === 0L)
-    assert(ra.membership.except(rc.membership).count() === 0L)
+    val shift = LocalMove.FrontierBitsMax
+    val opts = LeidenOptions(localSolveEdgeThreshold = 0)
+    val rc = Leiden.detect(EdgeTable.undirected(spark, es.result()), opts)
+    val rl = Leiden.detect(EdgeTable.undirected(spark,
+      es.result().map { case (a, b, w) => (a + shift, b + shift, w) }), opts)
+    assert(rc.phaseMillis.contains("csrbuild"), rc.phaseMillis.toString)
+    assert(!rl.phaseMillis.contains("csrbuild"), rl.phaseMillis.toString)
+    assert(rl.iterations === rc.iterations)
+    assert(rl.passes === rc.passes)
+    assert(rl.communities === rc.communities)
+    assert(math.abs(rl.modularity - rc.modularity) < 1e-12, s"${rl.modularity} vs ${rc.modularity}")
+    def partition(memb: org.apache.spark.sql.DataFrame, by: Long): Set[Set[Long]] =
+      memb.collect().groupBy(_.getLong(1)).values.map(_.map(_.getLong(0) - by).toSet).toSet
+    assert(partition(rl.membership, shift) === partition(rc.membership, 0L))
   }
 
   test("frontier-bitmap run equals the column-path run across full phases") {
@@ -423,45 +480,6 @@ class LeidenSpec extends SparkSpec {
       df.select("id", "comm").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(memb(viaBits) === memb(plain))
     edges.unpersist()
-  }
-
-  test("P4 local first pass: deterministic shuffle-free seed, full run still exact") {
-    // SBM fixture (same as the golden test)
-    val rnd = new Random(42)
-    val k = 4; val mSize = 30
-    val es = Seq.newBuilder[(Long, Long, Double)]
-    for (a <- 0 until k * mSize; b <- a + 1 until k * mSize) {
-      val p = if ((a / mSize) == (b / mSize)) 0.3 else 0.01
-      if (rnd.nextDouble() < p) es += ((a.toLong, b.toLong, 1.0))
-    }
-    val edges = EdgeTable.undirected(spark, es.result())
-    val m = EdgeTable.totalWeight(edges) / 2
-
-    // the seed genuinely moves vertices: its modularity beats singletons
-    val part = edges.repartition(col("src"))
-    val seed = LocalFirstPass.seed(part, m)
-    val singletons = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comm"))
-    val qSeed = Modularity.modularity(edges, seed, m)
-    val qSingle = Modularity.modularity(edges, singletons, m)
-    assert(qSeed > qSingle + 0.1, s"seed q=$qSeed singleton q=$qSingle")
-
-    // deterministic: a second invocation emits the identical membership
-    val seed2 = LocalFirstPass.seed(part, m)
-    assert(seed.except(seed2).count() === 0L && seed2.except(seed).count() === 0L)
-
-    // warm-started detect still lands on the planted blocks (both the
-    // distributed pass-0 and the driver-local tail consume the seed)
-    for (tail <- Seq(0L, 1000000L)) {
-      val r = Leiden.detect(edges, LeidenOptions(localFirstPassIters = 3,
-        localSolveEdgeThreshold = tail))
-      assert(r.communities === k.toLong, s"tail=$tail communities=${r.communities}")
-      assert(Leiden.disconnectedCommunities(edges, r.membership) === 0L)
-      val blocks = r.membership.collect().groupBy(_.getLong(1)).values
-        .map(_.map(_.getLong(0) / mSize).toSet).toSet
-      assert(blocks === (0 until k).map(b => Set(b.toLong)).toSet, s"tail=$tail")
-      assert(approx(r.modularity, 0.647583673693155, 1e-6), s"tail=$tail q=${r.modularity}")
-    }
   }
 
   test("driver-local tail solver equals the distributed path bit-for-bit on exact-weight graphs") {
