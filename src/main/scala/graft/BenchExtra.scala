@@ -96,10 +96,10 @@ object BenchExtra {
       val mx = edges.agg(max(greatest(col("src"), col("dst")))).head.getLong(0).toInt
       val comm = Array.tabulate(mx + 1)(v => (v % 5000).toLong)
       timed("agg: coarsenArrayCached 1st") {
-        graft.leiden.Aggregate.coarsenArrayCached(edges, comm).unpersist(blocking = true); ()
+        graft.leiden.Aggregate.coarsenArrayCached(edges, comm)._1.unpersist(blocking = true); ()
       }
       timed("agg: coarsenArrayCached 2nd") {
-        graft.leiden.Aggregate.coarsenArrayCached(edges, comm).unpersist(blocking = true); ()
+        graft.leiden.Aggregate.coarsenArrayCached(edges, comm)._1.unpersist(blocking = true); ()
       }
       val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
       val proj = edges.select(

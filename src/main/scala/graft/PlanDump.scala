@@ -181,10 +181,12 @@ object PlanDump {
               org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("dst")).as("dst"),
               col("w")).groupBy("src", "dst").agg(sum("w").as("w"))
           },
-        ("g_leiden AFTER (2/3): per-pass leaf composition on dense-tier passes — " +
-          "join replaced by the same broadcast array lookup (Aggregate." +
-          "composeArray): map-only, zero exchanges; the community count for the " +
-          "aggregation-tolerance check is an O(n) driver loop (no job at all)") ->
+        ("g_leiden AFTER (2/3): leaf composition on a dense pass whose leaf is " +
+          "still a DataFrame (after a DataFrame-tier pass 0) — join replaced by " +
+          "the same broadcast array lookup (Aggregate.composeArray): map-only, " +
+          "zero exchanges. After a dense pass 0 the leaf is a driver array and " +
+          "composition, the community counts and the final count run no plan at " +
+          "all") ->
           explainStr {
             val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
             leaf.select(col("id"),

@@ -81,8 +81,12 @@ object Aggregate {
     * executor copies drop, the handle stays valid (a recompute or late task
     * re-fetches it from the driver), and the array is GC-eligible once
     * detect() releases the cache at pass end.
+    *
+    * @return the coarse edges and their row count — the count of the
+    *         materializing job, which detect's local-tail gate reads
+    *         instead of counting again
     */
-  def coarsenArrayCached(edges: DataFrame, comm: Array[Long]): DataFrame = {
+  def coarsenArrayCached(edges: DataFrame, comm: Array[Long]): (DataFrame, Long) = {
     val spark = edges.sparkSession
     val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
     val out = edges.select(
@@ -91,16 +95,19 @@ object Aggregate {
         col("w"))
       .groupBy("src", "dst").agg(sum("w").as("w"))
       .cache()
-    out.count()
+    val rows = out.count()
     bcRef.bc.unpersist(blocking = false)
-    out
+    (out, rows)
   }
 
-  /** Dense-tier twin of [[compose]]: the pass membership is a driver array
-    * indexed by current-pass vertex id, so the leaf join becomes a
-    * broadcast array lookup on `comm` — same rows (the join was total on
-    * the leaf's comm values), no join exchange. Returns the result LOCALLY
-    * CHECKPOINTED (broadcast destroyed before returning).
+  /** [[compose]] for a dense pass whose leaf is still a DataFrame: the
+    * pass membership is a driver array indexed by current-pass vertex id,
+    * so the leaf join becomes a broadcast array lookup on `comm` — same
+    * rows (the join was total on the leaf's comm values), no join
+    * exchange. Returns the result LOCALLY CHECKPOINTED (broadcast destroyed
+    * before returning). Only the mixed case takes it — a DataFrame-tier
+    * pass 0, then a dense pass; a dense pass 0 keeps the leaf on the
+    * driver, where detect composes by indexing.
     */
   def composeArray(leaf: DataFrame, comm: Array[Long]): DataFrame = {
     val spark = leaf.sparkSession

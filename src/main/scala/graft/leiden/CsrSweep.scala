@@ -313,13 +313,12 @@ object CsrSweep {
     *        `repartition(P, col("src"))` cache) — the pack then reads the
     *        cached partitions directly, skipping the range shuffle AND its
     *        sampling pre-job (two jobs and an O(E) exchange per build).
-    *        Moves are unchanged (above), but the half-sweep's dq sum is
-    *        not block-composition-independent: the driver folds the
-    *        per-block dq partials in block order, which is ascending src
-    *        under range blocks and partition order under these hash
-    *        blocks. On integral weights every dq term is exact, so the
-    *        order is moot; on other weights dq can differ in the last ulp,
-    *        and dq decides termination against the tolerance.
+    *        Moves are unchanged (above), and so is the half-sweep's dq:
+    *        the driver folds the movers' dq terms in ascending src over
+    *        all blocks ([[foldDq]]), whichever way the blocks were formed,
+    *        so termination matches the range path bit for bit on any
+    *        weights. A hash block spans ~n ids, so it is bucketed by a
+    *        sort rather than a span-sized counting array ([[toBlock]]).
     *        Default false: the range-balanced path remains for hub-heavy
     *        graphs where equal-edge blocks bound the straggler tail.
     */
@@ -333,44 +332,85 @@ object CsrSweep {
       .flatMap(b => if (b.size == 0) Iterator.empty else Iterator.single(toBlock(b, pack)))
   }
 
-  /** One partition's (src, dst, w) rows as a [[CsrBlock]]. */
-  private def toBlock(b: Packed, pack: Boolean): CsrBlock = {
+  /** One partition's (src, dst, w) rows as a [[CsrBlock]].
+    *
+    * Rows are bucketed by src, keeping their partition order within a src,
+    * in one of two ways with the same result: a counting sort over the
+    * block's src span, or a sort of packed (src, row) longs. The counting
+    * sort allocates a span-sized int array; under range blocks the span
+    * is ~n/P, but a hash block (build's srcComplete) spans ~n, so every
+    * concurrent task would allocate O(n) for O(E/P) rows. A block whose
+    * span exceeds twice its row count takes the sort instead.
+    *
+    * @param bySort test hook: force one bucketing; None picks by span
+    */
+  private[leiden] def toBlock(b: Packed, pack: Boolean,
+                              bySort: Option[Boolean] = None): CsrBlock = {
     val m = b.size
     val ss = b.ints(0); val dd = b.ints(1); val ww = b.doubles(2)
-    // bucket by src via a src-span-sized degree array (build-time only;
-    // range partitioning makes the local span ~n/P, not n)
     var lo = Int.MaxValue; var hi = Int.MinValue
     var i = 0
     while (i < m) { val s = ss(i); if (s < lo) lo = s; if (s > hi) hi = s; i += 1 }
     val span = hi - lo + 1
-    val deg = new Array[Int](span)
-    i = 0
-    while (i < m) { deg(ss(i) - lo) += 1; i += 1 }
-    var nSrc = 0
-    i = 0
-    while (i < span) { if (deg(i) > 0) nSrc += 1; i += 1 }
-    val srcs = new Array[Int](nSrc)
-    val off = new Array[Int](nSrc + 1)
-    val start = new Array[Int](span) // running write cursor per src
-    var k = 0; var acc = 0
-    i = 0
-    while (i < span) {
-      if (deg(i) > 0) {
-        srcs(k) = i + lo; off(k) = acc; start(i) = acc
-        acc += deg(i); k += 1
-      }
-      i += 1
-    }
-    off(nSrc) = acc
     val dstA = new Array[Int](m); val wA = new Array[Double](m)
+    val (srcs, off) =
+      if (bySort.getOrElse(span.toLong > 2L * m)) {
+        // (src - lo, row) keys: one sort groups rows by src, rows in order
+        val key = new Array[Long](m)
+        i = 0
+        while (i < m) { key(i) = ((ss(i) - lo).toLong << 32) | i.toLong; i += 1 }
+        java.util.Arrays.sort(key)
+        var nSrc = 0
+        i = 0
+        while (i < m) {
+          if (i == 0 || (key(i) >>> 32) != (key(i - 1) >>> 32)) nSrc += 1
+          i += 1
+        }
+        val srcs = new Array[Int](nSrc)
+        val off = new Array[Int](nSrc + 1)
+        var k = -1
+        i = 0
+        while (i < m) {
+          val s = (key(i) >>> 32).toInt
+          if (k < 0 || srcs(k) != s + lo) { k += 1; srcs(k) = s + lo; off(k) = i }
+          val row = (key(i) & 0xFFFFFFFFL).toInt
+          dstA(i) = dd(row); wA(i) = ww(row)
+          i += 1
+        }
+        off(nSrc) = m
+        (srcs, off)
+      } else {
+        // counting sort over a src-span-sized degree array
+        val deg = new Array[Int](span)
+        i = 0
+        while (i < m) { deg(ss(i) - lo) += 1; i += 1 }
+        var nSrc = 0
+        i = 0
+        while (i < span) { if (deg(i) > 0) nSrc += 1; i += 1 }
+        val srcs = new Array[Int](nSrc)
+        val off = new Array[Int](nSrc + 1)
+        val start = deg // reused as the running write cursor per src
+        var k = 0; var acc = 0
+        i = 0
+        while (i < span) {
+          val d = deg(i)
+          if (d > 0) { srcs(k) = i + lo; off(k) = acc; start(i) = acc; acc += d; k += 1 }
+          i += 1
+        }
+        off(nSrc) = acc
+        i = 0
+        while (i < m) {
+          val s = ss(i) - lo; val pos = start(s)
+          dstA(pos) = dd(i); wA(pos) = ww(i); start(s) = pos + 1
+          i += 1
+        }
+        (srcs, off)
+      }
+    val nSrc = srcs.length
     var unit = true
     i = 0
-    while (i < m) {
-      val s = ss(i) - lo; val pos = start(s)
-      dstA(pos) = dd(i); wA(pos) = ww(i); start(s) = pos + 1
-      if (ww(i) != 1.0) unit = false
-      i += 1
-    }
+    while (i < m && unit) { if (wA(i) != 1.0) unit = false; i += 1 }
+    var k = 0
     // sort each adjacency by dst (scaladoc: membership-lookup locality).
     // Unit blocks sort dst alone; weighted blocks sort (dst, slot) keys
     // packed in longs and permute w through a slice-sized scratch.
@@ -1223,19 +1263,10 @@ object CsrSweep {
       }
       val inc = st.integral // incremental totals (exact: integral weights)
       // Apply, three sections. (1) SERIAL walk: dq left-fold only, in
-      // block order with ascending-src emission inside each block. Range
-      // blocks make that the ascending-src order; hash blocks
-      // (build's srcComplete) fold in partition order instead, which is
-      // exact on integral weights only (build scaladoc). The moved-bitmap
-      // writes (order-free, set-only) ride the parallel scatter pass below.
-      var dq = 0.0
-      var wb = 0
-      while (wb < out.length) {
-        val md = out(wb)._2
-        var j = 0
-        while (j < md.length) { dq += md(j); j += 1 }
-        wb += 1
-      }
+      // ascending src over all blocks (foldDq), under range and hash
+      // blocks alike. The moved-bitmap writes (order-free, set-only) ride
+      // the parallel scatter pass below.
+      val dq = foldDq(out)
       if (total >= ParallelApplyMin && out.length > 1) {
         // (2) PARALLEL pass over blocks — the O(moves) scatter was the
         // dominant serial Amdahl term of the N->4N witness once the kernel
@@ -1343,6 +1374,52 @@ object CsrSweep {
       if (bcTot != null) bcTot.destroy()
       Timers.destroy.addAndGet(System.nanoTime() - d0)
     }
+  }
+
+  /** Left-fold of a half-sweep's mover dq terms in ascending src over all
+    * blocks: `out(b)` is block b's (packed (src, to) movers, their dq),
+    * each block's movers in ascending src, and a src moves in one block
+    * only. Range blocks arrive in ascending src ranges and fold one after
+    * another; hash blocks (build's srcComplete) interleave, and fold
+    * through a k-way merge of the blocks' movers — the same order, so dq
+    * does not depend on how the blocks were formed.
+    */
+  private[leiden] def foldDq(out: Array[(Array[Long], Array[Double])]): Double = {
+    var ordered = true
+    var last = -1L
+    var b = 0
+    while (b < out.length && ordered) {
+      val mp = out(b)._1
+      if (mp.length > 0) {
+        if ((mp(0) >>> 32) <= last) ordered = false
+        last = mp(mp.length - 1) >>> 32
+      }
+      b += 1
+    }
+    var dq = 0.0
+    if (ordered) {
+      b = 0
+      while (b < out.length) {
+        val md = out(b)._2
+        var j = 0
+        while (j < md.length) { dq += md(j); j += 1 }
+        b += 1
+      }
+    } else {
+      val pos = new Array[Int](out.length)
+      val heads = new java.util.PriorityQueue[Integer](out.length,
+        (x: Integer, y: Integer) =>
+          java.lang.Long.compare(out(x)._1(pos(x)) >>> 32, out(y)._1(pos(y)) >>> 32))
+      b = 0
+      while (b < out.length) { if (out(b)._1.length > 0) heads.add(b); b += 1 }
+      while (!heads.isEmpty) {
+        val h: Int = heads.poll()
+        dq += out(h)._2(pos(h))
+        pos(h) += 1
+        if (pos(h) < out(h)._1.length) heads.add(h)
+      }
+    }
+    dq
   }
 
   /** [[LocalMove.run]]'s exact termination rule over this tier. */

@@ -25,21 +25,62 @@ import org.apache.spark.sql.graft.PlanUtils
   * M is computed once on the input graph and is invariant under coarsening
   * (aggregation preserves total edge weight, self loops carry intra weight).
   *
-  * Every pass ends in a durable snapshot (coarse edges + composed leaf
-  * membership + metrics + per-partition lineage) via graft.io.Snapshots;
-  * `detect` resumes from the latest committed snapshot if one exists.
+  * The leaf membership (original vertex -> current community) lives where
+  * the pass-0 ids allow. When they fit the dense gate (0 <= id <
+  * `LocalMove.CtBroadcastMax`) it is a driver array over the pass-0 id
+  * space, as the reference keeps it (`/root/reference/inc/leiden.hxx:565-570`):
+  * passes compose it by indexing, the community count and the final
+  * modularity (`Modularity.dense`) read it on the driver, and the result's
+  * membership is built from it once at the end. Otherwise it is a
+  * checkpointed (id, comm) DataFrame composed by joins.
+  *
+  * With a snapshot directory, every pass ends in a durable snapshot (coarse
+  * edges + composed leaf membership + metrics + per-partition lineage) via
+  * graft.io.Snapshots; `detect` resumes from the latest committed snapshot
+  * if one exists.
   */
 object Leiden {
+
+  /** Spark local property that [[detect]] sets, while each of its phases
+    * runs, to the phase's `phaseMillis` key; a SparkListener can count
+    * jobs per phase from it (`LeidenResult` scaladoc).
+    */
+  val PhaseProperty = "graft.leiden.phase"
 
   private def singletonState(vtot: DataFrame): DataFrame =
     vtot.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
 
-  /** A driver-side (id, comm) membership as a `parts`-partition DataFrame. */
-  private def idComm(spark: SparkSession, rows: Seq[(Long, Long)], parts: Int): DataFrame = {
-    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+  /** A driver-side (id, comm) membership as a `parts`-partition DataFrame
+    * over slices of the two arrays (no job); `id` is nullable as the input
+    * column it came from.
+    */
+  private def idComm(spark: SparkSession, ids: Array[Long], comms: Array[Long], parts: Int,
+                     idNullable: Boolean = false): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType, idNullable),
       StructField("comm", LongType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (k, v) => Row(k, v) }, parts), schema)
+    val n = ids.length
+    val slices = (0 until parts).map { p =>
+      val lo = (n.toLong * p / parts).toInt; val hi = (n.toLong * (p + 1) / parts).toInt
+      (ids.slice(lo, hi), comms.slice(lo, hi))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(slices, parts).flatMap {
+      case (is, cs) => is.indices.iterator.map(i => Row(is(i), cs(i)))
+    }, schema)
+  }
+
+  /** (id, comm) rows of the present ids of a driver leaf. */
+  private def presentRows(leaf: Array[Long], present: Array[Boolean]): (Array[Long], Array[Long]) = {
+    var k = 0
+    var v = 0
+    while (v < present.length) { if (present(v)) k += 1; v += 1 }
+    val ids = new Array[Long](k); val comms = new Array[Long](k)
+    k = 0
+    v = 0
+    while (v < present.length) {
+      if (present(v)) { ids(k) = v; comms(k) = leaf(v); k += 1 }
+      v += 1
+    }
+    (ids, comms)
   }
 
   /** @param edges0 canonical symmetrized edge table (src,dst,w)
@@ -58,24 +99,31 @@ object Leiden {
              prevMembership: Option[DataFrame] = None,
              affected: Option[DataFrame] = None): LeidenResult = {
     val spark = edges0.sparkSession
+    val sc = spark.sparkContext
     val t0 = System.currentTimeMillis()
     var phase = Map.empty[String, Long]
+    // times a phase and tags its Spark jobs with its name (PhaseProperty)
     def timed[T](name: String)(f: => T): T = {
+      val outer = sc.getLocalProperty(PhaseProperty)
+      sc.setLocalProperty(PhaseProperty, name)
       val s = System.currentTimeMillis()
-      val r = f
-      phase = phase.updated(name, phase.getOrElse(name, 0L) + (System.currentTimeMillis() - s))
-      r
+      try f
+      finally {
+        phase = phase.updated(name, phase.getOrElse(name, 0L) + (System.currentTimeMillis() - s))
+        sc.setLocalProperty(PhaseProperty, outer)
+      }
     }
 
     // Cache the input ONCE, up front, hash-partitioned by src (every
     // half-sweep's gather join and the affected-neighbor join key on src).
-    // Every pre-pass aggregate (totalWeight, vertices, the leaf init, the
-    // local-tail gate count) and the final modularity evaluation read THIS
-    // cache: with a derived input (the bench queries feed the copurchase
-    // self-join straight in) the old shape re-derived the input plan five
-    // to six times per detect() call — about half of g_leiden's sf0.1 wall.
-    // Weight sums are unaffected (integral-weight sums are exact in any
-    // order; detect's float tolerance covers the rest — LeidenSpec).
+    // Every pre-pass aggregate (the totals job below, the pass-0 vertex
+    // weights, the local-tail collect) and the final modularity evaluation
+    // read THIS cache: with a derived input (the bench queries feed the
+    // copurchase self-join straight in) the old shape re-derived the input
+    // plan five to six times per detect() call — about half of g_leiden's
+    // sf0.1 wall. Weight sums are unaffected (integral-weight sums are
+    // exact in any order; detect's float tolerance covers the rest —
+    // LeidenSpec).
     // Explicit partition count: an unpinned repartition(col) is an AQE
     // coalescing target — a small input could collapse to 1-2 cached
     // partitions, serializing every kernel sweep and the CSR pack. Pinning
@@ -83,9 +131,16 @@ object Leiden {
     // best) and lets CsrSweep.build(srcComplete=true) pack straight from
     // these cached partitions with no further exchange.
     val inputEdges = edges0
-      .repartition(spark.sparkContext.defaultParallelism, col("src")).cache()
+      .repartition(sc.defaultParallelism, col("src")).cache()
     var edges = inputEdges
-    val twoM = timed("input") { EdgeTable.totalWeight(edges) }
+    // One job for the total weight, the row count (pass 0's local-tail
+    // gate) and the src id bounds (pass 0's dense gate).
+    val (twoM, rows0, minSrc, maxSrc) = timed("input") {
+      val r = edges.agg(coalesce(sum(col("w")), lit(0.0)), count(lit(1)),
+        min(col("src")).cast("long"), max(col("src")).cast("long")).head
+      (r.getDouble(0), r.getLong(1),
+        if (r.isNullAt(2)) 0L else r.getLong(2), if (r.isNullAt(3)) -1L else r.getLong(3))
+    }
     val m = twoM / 2
     // detect's input contract is a SYMMETRIZED edge table (every caller
     // symmetrizes: scaladoc param, GraphStream applyOps(symmetric=true),
@@ -100,15 +155,44 @@ object Leiden {
       return r
     }
 
-    var leaf = timed("input") {
-      PlanUtils.checkpointTruncated(verts0.select(col("id"), col("id").as("comm")))
+    // The pass-0 id-space size when the src ids pass the dense gate's id
+    // test (0 <= id < CtBroadcastMax, so V <= CtBroadcastMax too), else 0.
+    val n0: Int =
+      if (minSrc >= 0 && maxSrc < LocalMove.CtBroadcastMax) (maxSrc + 1).toInt else 0
+    // The leaf membership (object scaladoc), in one of two forms:
+    //  - `leafArr` over the pass-0 ids, masked by `present0`, with `vt0`
+    //    the pass-0 vertex weights (Modularity.dense's ctot). Only when
+    //    n0 > 0; the first pass fills it, dense or local tail. Its values
+    //    are the current pass graph's vertex ids, all below n0.
+    //  - `leaf`, a checkpointed (id, comm) DataFrame. A run with n0 > 0
+    //    builds it only if a pass takes the DataFrame tier.
+    var leafArr: Array[Long] = null
+    var present0: Array[Boolean] = null
+    var vt0: Array[Double] = null
+    var leaf: DataFrame = null
+    // rows of `leaf`: gates the final modularity's membership broadcast
+    var leafCount = 0L
+    // the pass graph's vertex count; -1 until pass 0's dense collect counts it
+    var gn = -1L
+    // the pass graph's edge rows when a job already counted them, else -1
+    var rows = rows0
+    val srcField = inputEdges.schema("src")
+    def identityLeaf(): DataFrame = {
+      val l = timed("input") {
+        PlanUtils.checkpointTruncated(verts0.select(col("id"), col("id").as("comm")))
+      }
+      // the checkpointed (id, id) projection of verts0 — counting it counts
+      // the same rows without re-running the distinct
+      leafCount = l.count()
+      l
     }
-    // leaf is the checkpointed (id, id) projection of verts0 — counting it
-    // counts the same rows without re-running the distinct-union
-    var gn = leaf.count()
-    // original leaf-vertex count: gates the final modularity's membership
-    // broadcast (leaf always has exactly this many rows)
-    val leafCount = gn
+    def leafFrame(): DataFrame = {
+      val (ids, comms) = presentRows(leafArr, present0)
+      val f = idComm(spark, ids, comms, sc.defaultParallelism, srcField.nullable)
+      if (srcField.dataType == LongType) f
+      else f.select(col("id").cast(srcField.dataType), col("comm"))
+    }
+    if (n0 == 0) { leaf = identityLeaf(); gn = leafCount }
     // the fi/fm warm-start hooks on the driver, read by the first pass only
     lazy val warmComm: Map[Long, Long] = prevMembership.fold(Map.empty[Long, Long])(
       _.select(col("id").cast("long"), col("comm").cast("long")).collect()
@@ -125,11 +209,32 @@ object Leiden {
     for (root <- opts.snapshotDir; last <- Snapshots.committed(root, "leiden").lastOption) {
       if (edges ne inputEdges) edges.unpersist()
       edges = Snapshots.read(spark, root, "leiden", last, "edges").cache()
-      PlanUtils.release(leaf)
+      if (leaf != null) PlanUtils.release(leaf)
       leaf = Snapshots.read(spark, root, "leiden", last, "leaf")
+      if (n0 > 0) {
+        // a dense-range run reads the snapshot leaf back into the driver
+        // array, with the pass-0 vertex weights a fresh pass 0 collects
+        val l = Packed.collect(leaf.select(col("id").cast("long"), col("comm").cast("long")))
+        val (ids, comms) = (l.longs(0), l.longs(1))
+        if (ids.forall(v => v >= 0 && v < n0) && comms.forall(c => c >= 0 && c < n0)) {
+          val vw = Packed.collect(EdgeTable.vertexWeights(inputEdges)
+            .select(col("id").cast("long"), col("vtot").cast("double")))
+          leafArr = new Array[Long](n0)
+          present0 = new Array[Boolean](n0)
+          vt0 = new Array[Double](n0)
+          ids.indices.foreach(i => leafArr(ids(i).toInt) = comms(i))
+          vw.longs(0).indices.foreach { i =>
+            val v = vw.longs(0)(i).toInt
+            present0(v) = true
+            vt0(v) = vw.doubles(1)(i)
+          }
+          leaf = null
+        } else leafCount = ids.length
+      }
       pass = (last + 1).toInt
       tolerance = opts.tolerance / math.pow(opts.toleranceDrop, pass.toDouble)
       gn = EdgeTable.vertices(edges).count()
+      rows = -1L
       totalIters = Snapshots.manifestText(root, "leiden", last)
         .split("\"iterations\":\"").lift(1).flatMap(_.takeWhile(_.isDigit).toIntOption)
         .getOrElse(0)
@@ -147,35 +252,48 @@ object Leiden {
       // per-pass durability contract (resume from the last committed pass)
       // outranks the tail's fixed-cost saving.
       if (opts.localSolveEdgeThreshold > 0 && opts.snapshotDir.isEmpty &&
-        edges.count() <= opts.localSolveEdgeThreshold) {
+        (if (rows >= 0) rows else edges.count()) <= opts.localSolveEdgeThreshold) {
         val warm = pass == firstPass && !resumed
-        val local = timed("localtail") {
+        val (local, sA, wA) = timed("localtail") {
           // packed collect (no per-edge Row), then the tuple view LocalSolver
           // expects — same row order as a Row collect, so the solver's
           // order-sensitive accumulations are unchanged
           val (sA, dA, wA) = EdgeTable.collectPacked(edges)
           val arr = Array.tabulate(sA.length)(i => (sA(i), dA(i), wA(i)))
-          LocalSolver.solve(arr, m, opts, tolerance, opts.maxPasses - pass,
-            if (warm) warmComm else Map.empty[Long, Long], if (warm) warmAff else None)
+          (LocalSolver.solve(arr, m, opts, tolerance, opts.maxPasses - pass,
+            if (warm) warmComm else Map.empty[Long, Long], if (warm) warmAff else None),
+            sA, wA)
         }
         totalIters += local.iterations
         pass += local.passes
-        val lvl = idComm(spark, local.leaf.toSeq, 4)
-        val prevLeaf = leaf
-        leaf = timed("compose") {
-          PlanUtils.checkpointTruncated(Aggregate.compose(leaf, lvl))
+        timed("compose") {
+          if (leafArr == null && leaf == null) {
+            // the whole run is local: the leaf starts as the identity over
+            // the pass-0 ids, weighted from the collected rows
+            leafArr = Array.tabulate(n0)(_.toLong)
+            present0 = new Array[Boolean](n0)
+            vt0 = new Array[Double](n0)
+            var i = 0
+            while (i < sA.length) {
+              val v = sA(i).toInt
+              present0(v) = true
+              vt0(v) += wA(i)
+              i += 1
+            }
+          }
+          if (leafArr != null) {
+            var v = 0
+            while (v < n0) { if (present0(v)) leafArr(v) = local.leaf(leafArr(v)); v += 1 }
+          } else {
+            val (ids, comms) = local.leaf.toArray.unzip
+            val prevLeaf = leaf
+            leaf = PlanUtils.checkpointTruncated(
+              Aggregate.compose(leaf, idComm(spark, ids, comms, 4)))
+            PlanUtils.release(prevLeaf)
+          }
         }
-        PlanUtils.release(prevLeaf)
         done = true
       } else {
-      // sketch auto-fallback: exact scan/coarsening once the pass graph is
-      // small — the sketch's candidate filter exists to bound hub-vertex
-      // aggregation state, not to slow down broadcast-sized graphs
-      val slots =
-        if (opts.sketchSlots > 0 && gn >= opts.sketchExactCutoff) opts.sketchSlots else 0
-      val minMoves =
-        if (opts.minMovedFraction > 0) (opts.minMovedFraction * gn).toLong else 0L
-
       // lazy per-vertex weights: the dense tier consumes them as one packed
       // collect and never pays the checkpoint job or the state0 joins —
       // only the DataFrame tier materializes them, after the gate decides
@@ -189,7 +307,8 @@ object Leiden {
       // at all (saving its once-per-pass O(E) exchange + cache). Above the
       // cap (pass 0 of a 10^10-vertex web graph), build the dst twin once
       // and gather via the dstGather plan (LocalMove.sweep scaladoc).
-      val bcCt = gn <= LocalMove.CtBroadcastMax
+      // gn < 0 only on pass 0 with n0 > 0, whose id bounds already cap V.
+      val bcCt = gn < 0 || gn <= LocalMove.CtBroadcastMax
       // Dense gate (also the FrontierBits gate): a dense-enough id space,
       // checked against the pass's actual id bounds. gn <= the 4M cap
       // bounds the row count, so the bounds come from one packed collect of
@@ -203,6 +322,14 @@ object Leiden {
             vtotLazy.select(col("id").cast("long"), col("vtot").cast("double")))
           (p.longs(0), p.doubles(1))
         } else (Array.empty[Long], Array.empty[Double])
+      if (gn < 0) gn = vtIds.length
+      // sketch auto-fallback: exact scan/coarsening once the pass graph is
+      // small — the sketch's candidate filter exists to bound hub-vertex
+      // aggregation state, not to slow down broadcast-sized graphs
+      val slots =
+        if (opts.sketchSlots > 0 && gn >= opts.sketchExactCutoff) opts.sketchSlots else 0
+      val minMoves =
+        if (opts.minMovedFraction > 0) (opts.minMovedFraction * gn).toLong else 0L
       val (minId, maxId): (Long, Long) =
         if (bcCt && vtIds.nonEmpty) {
           var mn = Long.MaxValue; var mx = Long.MinValue
@@ -366,14 +493,35 @@ object Leiden {
         PlanUtils.release(vtot)
         if (state0 ne vtot) PlanUtils.release(state0)
       }
-      val prevLeaf = leaf
-      leaf = timed("compose") {
+      if (denseComm.isEmpty) {
+        // a DataFrame-tier pass composes by join: the leaf must be a frame
+        if (leafArr != null) {
+          leaf = leafFrame()
+          leafCount = present0.count(identity)
+          leafArr = null; present0 = null; vt0 = null
+        } else if (leaf == null) leaf = identityLeaf()
+      }
+      timed("compose") {
         denseComm match {
-          case Some(arr) => Aggregate.composeArray(leaf, arr) // checkpointed inside
-          case None => PlanUtils.checkpointTruncated(Aggregate.compose(leaf, refMembOpt.get))
+          case Some(arr) if leafArr != null =>
+            var v = 0
+            while (v < n0) { if (present0(v)) leafArr(v) = arr(leafArr(v).toInt); v += 1 }
+          case Some(arr) if leaf == null =>
+            // pass 0 over a dense id space: the leaf is this pass's
+            // membership (a copy: `arr` stays behind the coarse cache's
+            // broadcast, and the leaf is composed in place)
+            val (vt, _, _, present) = denseInit.get
+            leafArr = arr.clone(); present0 = present; vt0 = vt
+          case Some(arr) =>
+            val prevLeaf = leaf
+            leaf = Aggregate.composeArray(leaf, arr) // checkpointed inside
+            PlanUtils.release(prevLeaf)
+          case None =>
+            val prevLeaf = leaf
+            leaf = PlanUtils.checkpointTruncated(Aggregate.compose(leaf, refMembOpt.get))
+            PlanUtils.release(prevLeaf)
         }
       }
-      PlanUtils.release(prevLeaf)
       pass += 1
 
       if (lMoves + rMoves == 0 || pass >= opts.maxPasses) done = true
@@ -383,19 +531,7 @@ object Leiden {
         // refMemb rows are exactly the present ids); the DataFrame tier
         // keeps the distinct-count job
         val cn = denseComm match {
-          case Some(arr) =>
-            val present = denseInit.get._4
-            val seen = new Array[Boolean](arr.length)
-            var c = 0L
-            var v = 0
-            while (v < arr.length) {
-              if (present(v)) {
-                val l = arr(v).toInt
-                if (!seen(l)) { seen(l) = true; c += 1 }
-              }
-              v += 1
-            }
-            c
+          case Some(arr) => countLabels(arr, denseInit.get._4)
           case None => refMembOpt.get.select("comm").distinct().count()
         }
         if (cn.toDouble / gn >= opts.aggregationTolerance) done = true
@@ -414,35 +550,35 @@ object Leiden {
           // community) loses connectivity that synchronous supersteps —
           // unlike the reference's asynchronous CAS dynamics — cannot
           // recover. The scan keeps the caller's width (1 = Boyer-Moore).
-          val (coarse, coarseCached) = timed("aggregate") {
+          val (coarse, coarseCached, coarseRows) = timed("aggregate") {
             denseComm match {
               case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
                 // cached+materialized in one pass (no checkpoint-then-cache
                 // double materialization); the cache assignment below skips
-                // its own .cache() for this branch
-                (Aggregate.coarsenArrayCached(edges, arr), true)
+                // its own .cache() for this branch. Its row count is the
+                // next pass's local-tail gate.
+                val (c, r) = Aggregate.coarsenArrayCached(edges, arr)
+                (c, true, r)
               case _ =>
                 // sketch-aggregation with a dense-tier membership: build
                 // the (id, comm) rows straight from the driver arrays
                 // (vtot is already released at this point)
                 val rm = refMembOpt.getOrElse {
-                  val present = denseInit.get._4
-                  val arr = denseComm.get
-                  idComm(spark, (0 until arr.length).filter(present(_)).map(v => v.toLong -> arr(v)),
-                    math.max(4, spark.sparkContext.defaultParallelism))
+                  val (ids, comms) = presentRows(denseComm.get, denseInit.get._4)
+                  idComm(spark, ids, comms, math.max(4, sc.defaultParallelism))
                 }
                 val c = PlanUtils.checkpointTruncated(
                   if (slots > 0 && opts.sketchAggregation)
                     Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
                   else Aggregate.coarsen(edges, rm))
-                (c, false)
+                (c, false, -1L)
             }
           }
           opts.snapshotDir.foreach { root =>
             timed("snapshot") {
               Snapshots.commit(root, "leiden", (pass - 1).toLong,
                 if (pass >= 2) Some((pass - 2).toLong) else None,
-                Map("edges" -> coarse, "leaf" -> leaf),
+                Map("edges" -> coarse, "leaf" -> (if (leafArr != null) leafFrame() else leaf)),
                 Map("pass" -> (pass - 1).toString, "vertices" -> cn.toString,
                   "iterations" -> totalIters.toString,
                   "tolerance" -> tolerance.toString))
@@ -451,6 +587,7 @@ object Leiden {
           // inputEdges stays cached: the final modularity evaluation reads it
           if (edges ne inputEdges) edges.unpersist()
           edges = if (coarseCached) coarse else coarse.cache()
+          rows = coarseRows
           gn = cn
           tolerance /= opts.toleranceDrop
         }
@@ -459,18 +596,44 @@ object Leiden {
       } // end distributed pass
     }
 
-    val communities = timed("finalcount") { leaf.select("comm").distinct().count() }
-    val q = timed("modularity") {
-      // same rows as edges0 (a repartition), read from the cache built at
-      // detect() start instead of re-deriving the caller's input plan;
-      // broadcast the membership joins whenever V fits the broadcast gate
-      Modularity.modularity(inputEdges, leaf, m, opts.resolution,
-        broadcastMembership = leafCount <= LocalMove.CtBroadcastMax)
-    }
+    val (membership, communities, q) =
+      if (leafArr != null) {
+        val communities = timed("finalcount") { countLabels(leafArr, present0) }
+        // one scan job over the input cache; terms in ascending community id
+        val q = timed("modularity") {
+          Modularity.dense(inputEdges, leafArr, present0, vt0, m, opts.resolution)
+        }
+        (leafFrame(), communities, q)
+      } else {
+        val communities = timed("finalcount") { leaf.select("comm").distinct().count() }
+        val q = timed("modularity") {
+          // same rows as edges0 (a repartition), read from the cache built at
+          // detect() start instead of re-deriving the caller's input plan;
+          // broadcast the membership joins whenever V fits the broadcast gate
+          Modularity.modularity(inputEdges, leaf, m, opts.resolution,
+            broadcastMembership = leafCount <= LocalMove.CtBroadcastMax)
+        }
+        (leaf, communities, q)
+      }
     if (edges ne inputEdges) edges.unpersist()
     inputEdges.unpersist()
     phase = phase.updated("total", System.currentTimeMillis() - t0)
-    LeidenResult(leaf, totalIters, pass, q, communities, phase)
+    LeidenResult(membership, totalIters, pass, q, communities, phase)
+  }
+
+  /** Distinct labels of the present ids; every label is below `arr.length`. */
+  private def countLabels(arr: Array[Long], present: Array[Boolean]): Long = {
+    val seen = new Array[Boolean](arr.length)
+    var c = 0L
+    var v = 0
+    while (v < arr.length) {
+      if (present(v)) {
+        val l = arr(v).toInt
+        if (!seen(l)) { seen(l) = true; c += 1 }
+      }
+      v += 1
+    }
+    c
   }
 
   /** Count communities that are internally disconnected on the given graph —

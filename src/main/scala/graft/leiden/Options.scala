@@ -68,12 +68,20 @@ case class LeidenOptions(
 
 /** Result record (`/root/reference/inc/leiden.hxx:73-145` analog).
   *
+  * While each phase of `Leiden.detect` runs, the Spark local property
+  * `Leiden.PhaseProperty` ("graft.leiden.phase") holds the phase's
+  * `phaseMillis` key, and the caller's value is restored afterwards. So a
+  * SparkListener can count the jobs of each phase from
+  * `SparkListenerJobStart.properties`.
+  *
   * @param membership   (id, comm) final leaf-vertex community assignment
   * @param iterations   total local-move+refine iterations across passes
   * @param passes       number of coarsening passes executed
   * @param modularity   Q of the final membership on the input graph
   * @param communities  number of distinct final communities
-  * @param phaseMillis  per-phase wall times (init/move/refine/aggregate/total)
+  * @param phaseMillis  per-phase wall times (input/init/mark/csrbuild/
+  *                     firstpass/move/refine/compose/aggregate/snapshot/
+  *                     localtail/finalcount/modularity/total)
   */
 case class LeidenResult(
     membership: DataFrame,

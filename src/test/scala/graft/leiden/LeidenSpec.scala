@@ -457,6 +457,175 @@ class LeidenSpec extends SparkSpec {
     assert(partition(rl.membership, shift) === partition(rc.membership, 0L))
   }
 
+  /** Symmetric planted-block graph over ids 0..n-1 with weights `w(a, b)`. */
+  def blocks(n: Int, block: Int, seed: Int, w: (Int, Int) => Double): Seq[(Long, Long, Double)] = {
+    val rnd = new Random(seed)
+    val es = Seq.newBuilder[(Long, Long, Double)]
+    for (a <- 0 until n; b <- a + 1 until n)
+      if (rnd.nextDouble() < (if (a / block == b / block) 0.35 else 0.008))
+        es += ((a.toLong, b.toLong, w(a, b)))
+    es.result()
+  }
+
+  test("end-to-end Leiden: the driver-array leaf equals the DataFrame leaf") {
+    // Plain ids keep the leaf membership on the driver (dense pass 0, then
+    // dense passes or the local tail); ids shifted by FrontierBitsMax make
+    // every pass take LocalMove and keep the leaf a checkpointed DataFrame.
+    // Composition, counts and Q must not depend on where the leaf lives,
+    // on integral and on non-dyadic weights, with and without the tail.
+    val shift = LocalMove.FrontierBitsMax
+    for ((name, es) <- Seq(
+        "integral" -> blocks(300, 25, 41, (a, b) => 1.0 + (a + b) % 3),
+        "non-dyadic" -> blocks(300, 25, 43, (a, b) => 0.1 + (a * 13 + b) % 7 * 0.3))) {
+      val rows = EdgeTable.undirected(spark, es).count()
+      for (threshold <- Seq(0L, rows - 1)) {
+        val opts = LeidenOptions(localSolveEdgeThreshold = threshold)
+        val what = s"$name, tail threshold $threshold"
+        val rc = Leiden.detect(EdgeTable.undirected(spark, es), opts)
+        val rl = Leiden.detect(EdgeTable.undirected(spark,
+          es.map { case (a, b, w) => (a + shift, b + shift, w) }), opts)
+        assert(rc.phaseMillis.contains("csrbuild"), s"$what: ${rc.phaseMillis}")
+        assert(!rl.phaseMillis.contains("csrbuild"), s"$what: ${rl.phaseMillis}")
+        assert(rc.phaseMillis.contains("localtail") === (threshold > 0), s"$what: ${rc.phaseMillis}")
+        assert(rl.iterations === rc.iterations, what)
+        assert(rl.passes === rc.passes, what)
+        assert(rc.passes > 1, s"$what: fixture must coarsen")
+        assert(rl.communities === rc.communities, what)
+        assert(math.abs(rl.modularity - rc.modularity) < 1e-12,
+          s"$what: ${rl.modularity} vs ${rc.modularity}")
+        def memb(df: org.apache.spark.sql.DataFrame, by: Long): Map[Long, Long] =
+          df.collect().map(r => (r.getLong(0) - by) -> (r.getLong(1) - by)).toMap
+        val mc = memb(rc.membership, 0L)
+        assert(mc.size === 300, what)
+        assert(memb(rl.membership, shift) === mc, what)
+        assert(rc.membership.schema === rl.membership.schema, what)
+      }
+    }
+  }
+
+  /** Phase tag of every job `f` starts (null = untagged), and f's result. */
+  def jobPhases[T](f: => T): (Seq[String], T) = {
+    val phases = scala.collection.mutable.ArrayBuffer[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        phases.synchronized {
+          phases += Option(e.properties).map(_.getProperty(Leiden.PhaseProperty)).orNull
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.PlanUtils.drainListenerBus(spark)
+    sc.addSparkListener(l)
+    val r = try {
+      val r = f
+      org.apache.spark.sql.graft.PlanUtils.drainListenerBus(spark)
+      r
+    } finally sc.removeSparkListener(l)
+    (phases.synchronized(phases.toList), r)
+  }
+
+  test("dense detect ending in the local tail: no compose, count or gate job, one modularity job") {
+    val es = blocks(300, 25, 41, (_, _) => 1.0)
+    val edges = EdgeTable.undirected(spark, es).cache()
+    val rows = edges.count()
+    val (phases, r) = jobPhases(
+      Leiden.detect(edges, LeidenOptions(localSolveEdgeThreshold = rows - 1)))
+    assert(r.phaseMillis.contains("csrbuild") && r.phaseMillis.contains("localtail"),
+      r.phaseMillis.toString)
+    val byPhase = phases.groupBy(identity).map { case (k, v) => k -> v.size }
+    // every job runs inside a phase: the local-tail gate reads row counts
+    // that earlier jobs already produced instead of counting again
+    assert(!byPhase.contains(null), s"untagged jobs: $byPhase")
+    assert(!byPhase.contains("compose"), byPhase.toString)
+    assert(!byPhase.contains("finalcount"), byPhase.toString)
+    assert(byPhase.get("modularity") === Some(1), byPhase.toString)
+    edges.unpersist()
+  }
+
+  test("detect tags its jobs with the phase property and restores the caller's value") {
+    val es = blocks(120, 30, 42, (_, _) => 1.0)
+    val sc = spark.sparkContext
+    sc.setLocalProperty(Leiden.PhaseProperty, "caller")
+    val (phases, _) = try jobPhases(
+      Leiden.detect(EdgeTable.undirected(spark, es), LeidenOptions(localSolveEdgeThreshold = 0)))
+    finally assert(sc.getLocalProperty(Leiden.PhaseProperty) === "caller")
+    sc.setLocalProperty(Leiden.PhaseProperty, null)
+    assert(phases.contains("firstpass"), phases.toString)
+    assert(phases.contains("modularity"), phases.toString)
+  }
+
+  test("srcComplete hash blocks fold dq bit-for-bit as range blocks on NON-DYADIC weights") {
+    // hash(src) blocks interleave src ranges; the driver must still fold
+    // the movers' dq in ascending src, so dq — which decides termination —
+    // is the same double as under range blocks
+    val n = 300
+    val es = blocks(n, 30, 53, (a, b) => 0.1 + (a * 17 + b) % 5 * 0.3)
+    val edges = EdgeTable.undirected(spark, es).repartition(4, col("src")).cache()
+    val m = EdgeTable.totalWeight(edges) / 2
+    val vt = new Array[Double](n)
+    EdgeTable.vertexWeights(edges).collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
+    val hashCsr = CsrSweep.build(edges, n, srcComplete = true).cache()
+    val rangeCsr = CsrSweep.build(edges, n).cache()
+    val hashSrcs = hashCsr.collect().map(_.srcs)
+    assert(hashSrcs.length > 1 && hashSrcs.exists(s => s.last - s.head > n / 2),
+      "fixture must interleave src ranges across blocks")
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    val sh = CsrSweep.singleton(hashCsr, n, vt)
+    val sr = CsrSweep.singleton(rangeCsr, n, vt)
+    assert(!sh.integral)
+    var sweeps = 0; var moved = true
+    while (moved && sweeps < 40) {
+      val (mh, dh) = CsrSweep.halfSweep(sh, m, 1.0, sweeps % 2)
+      val (mr, dr) = CsrSweep.halfSweep(sr, m, 1.0, sweeps % 2)
+      assert(mh === mr, s"sweep $sweeps")
+      assert(bits(dh) === bits(dr), s"sweep $sweeps: dq $dh vs $dr")
+      assert(sh.comm.sameElements(sr.comm), s"sweep $sweeps")
+      moved = mh > 0 || sweeps % 2 == 0
+      sweeps += 1
+    }
+    assert(sweeps > 4, "fixture must take several moving sweeps")
+    sh.close(); sr.close()
+    // the full run: move then refine, iterations and moves alike
+    val rh = CsrSweep.singleton(hashCsr, n, vt)
+    val rr = CsrSweep.singleton(rangeCsr, n, vt)
+    assert(CsrSweep.run(rh, m, 1.0, 1e-6, 50) === CsrSweep.run(rr, m, 1.0, 1e-6, 50))
+    val bh = rh.resetToSingletons(); val br = rr.resetToSingletons()
+    assert(CsrSweep.run(rh, m, 1.0, 1e-6, 50, boundArr = Some(bh), refineSingletons = true) ===
+      CsrSweep.run(rr, m, 1.0, 1e-6, 50, boundArr = Some(br), refineSingletons = true))
+    assert(rh.comm.sameElements(rr.comm))
+    rh.close(); rr.close()
+    hashCsr.unpersist(); rangeCsr.unpersist(); edges.unpersist()
+  }
+
+  test("a hash block with a large src span packs into the same CsrBlock as the range path") {
+    // one hash-partitioned block spans ~n ids for a few dozen rows: the
+    // pack buckets it by sort, not by two span-sized arrays; the range
+    // path's block of the same rows, and the counting sort forced on
+    // them, must come out identical
+    val n = 200000
+    val ids = Seq(0, 3, 17, 18, 50000, 99999, 150001, 199999).map(_.toLong)
+    def same(a: CsrSweep.CsrBlock, b: CsrSweep.CsrBlock): Boolean = {
+      import java.util.Arrays.{equals => arrEq}
+      arrEq(a.srcs, b.srcs) && arrEq(a.off, b.off) && arrEq(a.dst, b.dst) && arrEq(a.w, b.w) &&
+        arrEq(a.packed, b.packed) && arrEq(a.widths, b.widths) && arrEq(a.bitOff, b.bitOff)
+    }
+    for ((name, w) <- Seq[(String, (Long, Long) => Double)](
+        "unit" -> ((_, _) => 1.0), "weighted" -> ((a, b) => 0.5 + (a + b) % 3))) {
+      val es = for (a <- ids; b <- ids if a < b && (a + b) % 3 != 1) yield (a, b, w(a, b))
+      val edges = EdgeTable.undirected(spark, es).repartition(1, col("src")).cache()
+      val hash = CsrSweep.build(edges, n, srcComplete = true).collect()
+      val range = CsrSweep.build(edges, n, parts = 1).collect()
+      val packed = graft.graph.Packed.collect(
+        edges.select(col("src").cast("int"), col("dst").cast("int"), col("w").cast("double")))
+      val counted = CsrSweep.toBlock(packed, CsrSweep.PackGaps, bySort = Some(false))
+      val sorted = CsrSweep.toBlock(packed, CsrSweep.PackGaps, bySort = Some(true))
+      assert(hash.length === 1 && range.length === 1, name)
+      assert(same(sorted, counted), name)
+      assert(same(hash(0), counted), s"$name: hash block")
+      assert(same(range(0), counted), s"$name: range block")
+      edges.unpersist()
+    }
+  }
+
   test("frontier-bitmap run equals the column-path run across full phases") {
     // multi-iteration LocalMove.run parity: the bitmap tier must converge
     // through the SAME states (same iterations, moves, membership) as the

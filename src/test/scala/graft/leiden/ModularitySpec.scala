@@ -54,4 +54,32 @@ class ModularitySpec extends SparkSpec {
     val dq = Modularity.modularity(edges, merged, m) - Modularity.modularity(edges, single, m)
     assert(approx(dq, 0.5), s"dq=$dq")
   }
+
+  test("driver-array modularity equals the join oracle, with holes and non-dyadic weights") {
+    val rnd = new scala.util.Random(5)
+    val es = Seq.newBuilder[(Long, Long, Double)]
+    // ids 0..199 on even ids only: odd ids are id-space holes
+    for (a <- 0 until 100; b <- a + 1 until 100)
+      if (rnd.nextDouble() < (if (a / 20 == b / 20) 0.3 else 0.02))
+        es += ((2L * a, 2L * b, 0.1 + (a * 7 + b) % 5 * 0.3))
+    val edges = EdgeTable.undirected(spark, es.result()).cache()
+    val m = EdgeTable.totalWeight(edges) / 2
+    val n = 199
+    val present = new Array[Boolean](n)
+    val vt = new Array[Double](n)
+    EdgeTable.vertexWeights(edges).collect().foreach { r =>
+      present(r.getLong(0).toInt) = true; vt(r.getLong(0).toInt) = r.getDouble(1) }
+    // communities: blocks of 40 ids labelled by a member id; holes carry junk
+    val comm = Array.tabulate(n)(v => if (present(v)) (v / 40 * 40).toLong else 9999L)
+    val spark2 = spark
+    import spark2.implicits._
+    val memb = (0 until n).filter(present).map(v => (v.toLong, comm(v))).toDF("id", "comm")
+    for (res <- Seq(1.0, 0.5)) {
+      val oracle = Modularity.modularity(edges, memb, m, res)
+      val q = Modularity.dense(edges, comm, present, vt, m, res)
+      assert(math.abs(q - oracle) < 1e-12, s"res=$res: $q vs $oracle")
+      assert(Modularity.dense(edges, comm, present, vt, m, res) === q, "repeatable")
+    }
+    edges.unpersist()
+  }
 }
