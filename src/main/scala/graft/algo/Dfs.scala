@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * entire traversal before it, so there is no shuffle-parallel formulation
   * (unlike BFS's frontier supersteps). The reference's dfs.hxx is likewise
   * a single-threaded routine. The implementation mirrors the engine's other
-  * driver-local tails (LocalSolver, PageRank.localSolve): the graph is
+  * driver-local tails (Leiden's local tail, PageRank.localSolve): the graph is
   * collected under an explicit edge bound and traversed iteratively.
   * Neighbor order is ascending id — deterministic, playing the role of the
   * reference's adjacency-list order.

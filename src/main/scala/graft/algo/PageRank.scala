@@ -26,7 +26,7 @@ object PageRank {
     *              vertex's rank among its out-neighbors
     * @param localEdgeThreshold graphs with at most this many edge rows are
     *              solved in the driver-local tail (`localSolve`) — the same
-    *              device as Leiden's LocalSolver tail: a power iteration on
+    *              device as Leiden's local tail: a power iteration on
     *              a sub-threshold graph is ~100 Spark jobs of pure fixed
     *              scheduling cost, while 2M edge rows collect to well under
     *              a GB transiently. Semantics identical (same formula, same

@@ -81,8 +81,8 @@ object EdgeTable {
     edges.agg(coalesce(sum(W), lit(0.0))).head.getDouble(0)
 
   /** Driver-side packed collect of (src, dst, w) as three primitive arrays
-    * — the feed for the driver-local tail solvers (PageRank.localSolve,
-    * Leiden's LocalSolver). Rows arrive in the order a Row collect returns
+    * — the feed for the driver-local tails (PageRank.localSolve,
+    * Leiden's local tail). Rows arrive in the order a Row collect returns
     * them ([[Packed]]), so any order-sensitive float accumulation
     * downstream is unchanged. Callers gate on an edge-count threshold
     * first — this is the sub-threshold tail path, never the 100-TB path.

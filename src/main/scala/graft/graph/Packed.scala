@@ -22,13 +22,16 @@ final class Packed private (val size: Int, private val cols: Array[AnyRef]) exte
   * the UnsafeRow iterator of `queryExecution.toRdd`, so no Row, tuple or
   * boxed value is allocated per row. Row order is kept: a block holds its
   * partition's rows in iterator order, and [[collect]] concatenates blocks
-  * in partition-index order, the order a Row collect returns — LocalSolver
-  * and PageRank.localSolve accumulate floats in exactly that order.
+  * in partition-index order, the order a Row collect returns —
+  * PageRank.localSolve accumulates floats in exactly that order.
   *
   * Columns are read as selected: cast them to int, long or double in the
   * caller's `select`.
   */
 object Packed {
+  /** Rows the caller already holds, one array per column. */
+  private[graft] def of(size: Int, cols: AnyRef*): Packed = new Packed(size, cols.toArray)
+
   private final val IntCol = 0
   private final val LongCol = 1
   private final val DoubleCol = 2

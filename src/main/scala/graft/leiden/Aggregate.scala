@@ -1,5 +1,6 @@
 package graft.leiden
 
+import graft.graph.Packed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -98,6 +99,38 @@ object Aggregate {
     val rows = out.count()
     bcRef.bc.unpersist(blocking = false)
     (out, rows)
+  }
+
+  /** [[coarsenArrayCached]] for rows the driver holds (the local tail of
+    * `Leiden.detect`): `rows` are (src int, dst int, w double) and `comm`
+    * maps a vertex to its community. Exact, like the distributed coarsen.
+    */
+  def coarsenRows(rows: Packed, comm: Array[Long]): Packed = {
+    val s = rows.ints(0); val d = rows.ints(1)
+    sumPairs(Array.tabulate(rows.size)(i => (comm(s(i)) << 32) | comm(d(i))), rows.doubles(2))
+  }
+
+  /** Rows keyed by packed `(src << 32) | dst` longs of non-negative ints,
+    * one row per pair: one sort of the keys gives the distinct pairs in
+    * ascending (src, dst), and each row's weight adds to its pair's in row
+    * order. Returns (src int, dst int, w double) rows.
+    */
+  def sumPairs(keys: Array[Long], w: Array[Double]): Packed = {
+    val pairs = keys.clone()
+    java.util.Arrays.sort(pairs)
+    var k = 0
+    var i = 0
+    while (i < pairs.length) {
+      if (k == 0 || pairs(i) != pairs(k - 1)) { pairs(k) = pairs(i); k += 1 }
+      i += 1
+    }
+    val ws = new Array[Double](k)
+    i = 0
+    while (i < keys.length) { ws(java.util.Arrays.binarySearch(pairs, 0, k, keys(i))) += w(i); i += 1 }
+    val src = new Array[Int](k); val dst = new Array[Int](k)
+    i = 0
+    while (i < k) { src(i) = (pairs(i) >>> 32).toInt; dst(i) = pairs(i).toInt; i += 1 }
+    Packed.of(k, src, dst, ws)
   }
 
   /** [[compose]] for a dense pass whose leaf is still a DataFrame: the

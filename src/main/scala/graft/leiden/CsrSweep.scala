@@ -1,6 +1,7 @@
 package graft.leiden
 
 import graft.graph.Packed
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -12,8 +13,9 @@ import org.apache.spark.sql.functions.col
   * sorted CSR-like per-partition blocks").
   *
   * The dense tier of [[Leiden.detect]]: it runs every pass whose ids fit
-  * the dense gate (within the broadcast cap); [[LocalMove]], the Catalyst
-  * DataFrame tier, runs the rest. It exists for one measured reason: a
+  * the dense gate (within the broadcast cap), and every pass of the local
+  * tail on one driver-held block; [[LocalMove]], the Catalyst DataFrame
+  * tier, runs the rest. It exists for one measured reason: a
   * Catalyst half-sweep is full passes over the cached edge table
   * (gather-aggregate-argmax, then the frontier bit-OR), each paying the
   * columnar-cache decode per row, and at 8 cores those passes already
@@ -238,7 +240,7 @@ object CsrSweep {
     * are the scaling ceiling, not instructions; the ~5 ALU ops/edge decode
     * hides under the memory wait it removes). Web graphs cluster their
     * links, so real gaps (and widths) shrink further. Returns
-    * (packed, widths, bitOff); decode is inlined in [[halfSweep]].
+    * (packed, widths, bitOff); decode is inlined in [[scanBlock]].
     */
   private def packGaps(srcs: Array[Int], off: Array[Int], dstA: Array[Int])
       : (Array[Long], Array[Byte], Array[Long]) = {
@@ -681,12 +683,20 @@ object CsrSweep {
     * barrier that every task of every half-sweep had to wait out (the
     * dominant serial Amdahl term of the N->4N scaling witness after the
     * kernel itself was measured to scale core-linearly). Non-integral
-    * weights keep the executor-side scratch derive.
+    * weights rebuild them from scratch, in ascending vertex order, before
+    * every half-sweep's scan ([[halfSweep]]).
+    *
+    * The blocks are an RDD (`Right`), scanned by one job per half-sweep, or
+    * a driver array (`Left`), scanned in-process with no payload, no
+    * broadcast and no job — the local tail of [[Leiden.detect]]. That is
+    * the only place the two differ ([[halfSweep]]).
     */
-  final class CsrState(val csr: RDD[CsrBlock], val n: Int,
+  final class CsrState(val blocks: Either[Array[CsrBlock], RDD[CsrBlock]], val n: Int,
                        val vtot: Array[Double], val comm: Array[Long],
                        val seed: Array[Byte],
                        deltaOpt: Option[Boolean] = None) {
+    /** The blocks' Spark context; null when the driver holds the blocks. */
+    private[CsrSweep] val sc: SparkContext = blocks.fold(_ => null, _.sparkContext)
     val nBytes: Int = (n + 7) / 8
     val acc: Array[Array[Byte]] =
       Array(new Array[Byte](nBytes), new Array[Byte](nBytes))
@@ -697,13 +707,15 @@ object CsrSweep {
     private[CsrSweep] val mvScratchL = new Array[Long]((n + 63) / 64)
     val seedAlive: Array[Boolean] = Array(true, true)
     private[CsrSweep] val bcVtot: Broadcast[Array[Double]] =
-      csr.sparkContext.broadcast(vtot)
+      if (sc == null) null else sc.broadcast(vtot)
     // executor-task nanos (kernel scan / mirror-resolve+replay), summed
     // across all tasks of every half-sweep on this state; accumulators so
     // the values cross the executor-JVM boundary (Timers.taskAccs)
-    private[CsrSweep] val accKernelNs = csr.sparkContext.longAccumulator("graft.csr.kernelNs")
-    private[CsrSweep] val accDeriveNs = csr.sparkContext.longAccumulator("graft.csr.deriveNs")
-    Timers.taskAccs = (accKernelNs, accDeriveNs)
+    private[CsrSweep] val accKernelNs =
+      if (sc == null) null else sc.longAccumulator("graft.csr.kernelNs")
+    private[CsrSweep] val accDeriveNs =
+      if (sc == null) null else sc.longAccumulator("graft.csr.deriveNs")
+    if (sc != null) Timers.taskAccs = (accKernelNs, accDeriveNs)
     /** All weight mass integral => incremental totals are exact. */
     val integral: Boolean = {
       var i = 0; var ok = true
@@ -734,7 +746,7 @@ object CsrSweep {
       * `deltaOpt` overrides the master-shape default.
       */
     val deltaMode: Boolean =
-      integral && deltaOpt.getOrElse(!csr.sparkContext.isLocal)
+      integral && sc != null && deltaOpt.getOrElse(!sc.isLocal)
     private[CsrSweep] val stateId: Long = stateIds.incrementAndGet()
     liveStates.add(stateId)
     // per-state sweep sequence: the localSweepState registry key suffix
@@ -752,9 +764,13 @@ object CsrSweep {
     private[CsrSweep] def rebase(): Unit = {
       destroyChain()
       gen += 1
-      baseBc = csr.sparkContext.broadcast(
+      baseBc = sc.broadcast(
         CsrBase(commI.clone(), ctot.clone(), csize.clone(), sgl.clone()))
     }
+    // the refinement bound of the phase [[run]] is running, or null; with
+    // RDD-held blocks also broadcast, once per phase
+    private[CsrSweep] var bound: Array[Int] = null
+    private[CsrSweep] var bcBound: Broadcast[Array[Int]] = null
     /** Scratch rebuild, ascending-vertex order (init / restore / reset). */
     private[CsrSweep] def rebuildTotals(): Unit = {
       java.util.Arrays.fill(ctot, 0.0)
@@ -769,7 +785,8 @@ object CsrSweep {
       }
     }
     def close(): Unit = {
-      destroyChain(); bcVtot.destroy()
+      destroyChain()
+      if (bcVtot != null) bcVtot.destroy()
       liveStates.remove(stateId); ()
     }
     def snapshot(): Snap =
@@ -814,12 +831,17 @@ object CsrSweep {
   def init(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
            comm0: Array[Long], aff0: Array[Byte],
            deltaBcast: Option[Boolean] = None): CsrState =
-    new CsrState(csr, n, vtot, comm0, aff0, deltaBcast)
+    new CsrState(Right(csr), n, vtot, comm0, aff0, deltaBcast)
+
+  /** [[init]] over blocks the driver holds. */
+  def onDriver(blocks: Array[CsrBlock], n: Int, vtot: Array[Double],
+               comm0: Array[Long], aff0: Array[Byte]): CsrState =
+    new CsrState(Left(blocks), n, vtot, comm0, aff0)
 
   /** Identity membership + all-affected seed (singleton init). */
   def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
                 deltaBcast: Option[Boolean] = None): CsrState =
-    new CsrState(csr, n, vtot, Array.tabulate(n)(_.toLong),
+    new CsrState(Right(csr), n, vtot, Array.tabulate(n)(_.toLong),
       Array.fill[Byte]((n + 7) / 8)(-1), deltaBcast)
 
   @inline private def bit(b: Array[Byte], i: Int): Boolean =
@@ -827,49 +849,6 @@ object CsrSweep {
 
   @inline private def bitL(b: Array[Long], i: Int): Boolean =
     (b(i >> 6) & (1L << (i & 63))) != 0
-
-  /** Community totals + singleton flags, derived from (comm, vtot). The
-    * kernel needs these per half-sweep but they are a pure O(V) function
-    * of the membership — so instead of broadcasting 8 B/vertex of ctot on
-    * top of the 4 B/vertex membership, each EXECUTOR derives them once per
-    * broadcast (weak-identity memo on the broadcast's value instance; all
-    * tasks of one executor share it, GC reclaims with the broadcast).
-    * Exactness unchanged: the scatter-add runs in ascending vertex order,
-    * identical to the driver-side loop it replaces.
-    */
-  private val derivMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[Array[Int], (Array[Double], Array[Long])]())
-
-  private def derive(comm: Array[Int], vt: Array[Double]): (Array[Double], Array[Long]) = {
-    val got = derivMemo.get(comm)
-    if (got != null) return got
-    // single-flight per broadcast value: every task of a half-sweep sees
-    // the same deserialized array instance, so locking it makes exactly
-    // ONE task compute the O(V) scatter while the rest block ~ms. Without
-    // this, all P concurrent tasks raced through the cold memo and each
-    // ran the cache-hostile scatter — wasted work GROWING with core count
-    // (measured: 32 cores spent 2.1s/half-sweep of summed derive time vs
-    // 0.45s at 8, inverting the scaling the memo exists to protect).
-    comm.synchronized {
-      val again = derivMemo.get(comm)
-      if (again != null) return again
-      val n = comm.length
-      val ctot = new Array[Double](n)
-      val csize = new Array[Int](n)
-      var i = 0
-      while (i < n) { val c = comm(i); ctot(c) += vt(i); csize(c) += 1; i += 1 }
-      val sgl = new Array[Long]((n + 63) / 64)
-      i = 0
-      while (i < n) {
-        if (csize(i) == 1) sgl(i >> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      val r = (ctot, sgl)
-      derivMemo.put(comm, r)
-      r
-    }
-  }
 
   private def hasParityBits(b: Array[Byte], parity: Int): Boolean = {
     val mask = FrontierBits.parityMask(parity)
@@ -888,7 +867,126 @@ object CsrSweep {
     * Non-moving sweeps leave the frontier state untouched, exactly like
     * [[LocalMove.sweep]] (an empty frontier or zero moves keeps the bits).
     *
-    * `sketchSlots > 0` switches the per-src candidate accumulation to the
+    * Every block runs [[scanBlock]]: executors run it on RDD-held blocks,
+    * the driver runs it in-process on driver-held ones. Either way the
+    * driver then applies the moves and folds dq and the frontier.
+    */
+  def halfSweep(st: CsrState, m: Double, resolution: Double, parity: Int,
+                refineSingletons: Boolean = false,
+                sketchSlots: Int = 0): (Long, Double) = {
+    val useSeed = st.seedAlive(parity)
+    // frontier provably empty at this parity -> skip the scan
+    if (allZero(st.acc(parity)) && !(useSeed && hasParityBits(st.seed, parity)))
+      return (0L, 0.0)
+    Timers.sweeps.incrementAndGet()
+    val seedL = if (useSeed) st.seed else null
+    val accL = st.acc(parity)
+    // the apply maintains totals only when they stay exact (CsrState)
+    if (!st.integral) st.rebuildTotals()
+    val out = st.blocks match {
+      case Left(held) => // in-process, on the live state arrays
+        held.map(scanBlock(_, st.commI, st.ctot, st.sgl, st.vtot, st.bound,
+          seedL, accL, m, resolution, parity, refineSingletons, sketchSlots))
+      case Right(csr) =>
+        scanRemote(st, csr, seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
+    }
+    applyMoves(st, out, parity)
+  }
+
+  /** The scan of RDD-held blocks: one job, each task running [[scanBlock]]
+    * on its block against a shipped copy of the state.
+    */
+  private def scanRemote(st: CsrState, csr: RDD[CsrBlock], seedL: Array[Byte],
+                         accL: Array[Byte], m: Double, resolution: Double, parity: Int,
+                         refineSingletons: Boolean,
+                         sketchSlots: Int): Array[(Array[Long], Array[Double])] = {
+    val sc = st.sc
+    val tT0 = System.nanoTime()
+    // Per-half-sweep payload, three tiers:
+    //   delta mode (multi-executor + integral): ship only the moves the
+    //     driver just applied; executors advance a mirror (resolveMirror).
+    //   local: the live Int membership and totals, by registry.
+    //   otherwise: a broadcast of them. Broadcasting the live arrays is
+    //     safe: TorrentBroadcast serializes at construction.
+    val deltaOn = st.deltaMode
+    var bcComm: Broadcast[Array[Int]] = null
+    var bcTot: Broadcast[(Array[Double], Array[Long])] = null
+    var localKey: (Long, Long) = null
+    if (deltaOn) {
+      if (st.baseBc == null || st.deltaBcs.size >= RebaseEvery) st.rebase()
+      else if (st.pendingDelta.nonEmpty) {
+        st.deltaBcs :+= sc.broadcast(st.pendingDelta)
+        st.pendingDelta = Array.emptyLongArray
+      }
+    } else if (sc.isLocal) {
+      // same-JVM registry instead of a broadcast (localSweepState scaladoc)
+      localKey = (st.stateId, st.sweepSeq)
+      st.sweepSeq += 1
+      localSweepState.put(localKey, (st.commI, st.ctot, st.sgl))
+    } else {
+      bcComm = sc.broadcast(st.commI)
+      bcTot = sc.broadcast((st.ctot, st.sgl))
+    }
+    val mirSid = st.stateId
+    val mirGen = st.gen
+    val mirWm: Long =
+      try liveStates.first().longValue()
+      catch { case _: java.util.NoSuchElementException => st.stateId }
+    val mirBase = st.baseBc
+    val mirDeltas = st.deltaBcs
+    val tT1 = System.nanoTime()
+    Timers.bcast.addAndGet(tT1 - tT0)
+    val bcVtot = st.bcVtot
+    val accK = st.accKernelNs
+    val accD = st.accDeriveNs
+    val bcB = st.bcBound
+    try {
+      val out = csr.map { blk =>
+        val tk0 = System.nanoTime()
+        val vt = bcVtot.value
+        val (comm, ct, sglL) =
+          if (deltaOn) {
+            val mir = resolveMirror(mirSid, mirGen, mirWm, mirBase, mirDeltas, vt)
+            (mir.commI, mir.ctot, mir.sgl)
+          } else if (localKey != null) {
+            localSweepState.get(localKey)
+          } else {
+            val t = bcTot.value
+            (bcComm.value, t._1, t._2)
+          }
+        val tk1 = System.nanoTime()
+        Timers.deriveTask.addAndGet(tk1 - tk0)
+        accD.add(tk1 - tk0)
+        val r = scanBlock(blk, comm, ct, sglL, vt, if (bcB == null) null else bcB.value,
+          seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
+        val tkEnd = System.nanoTime()
+        Timers.kernelTask.addAndGet(tkEnd - tk1)
+        accK.add(tkEnd - tk1)
+        r
+      }.collect()
+      Timers.job.addAndGet(System.nanoTime() - tT1)
+      out
+    } finally {
+      val d0 = System.nanoTime()
+      // delta mode keeps its chain alive for fresh-executor replay; it is
+      // destroyed at rebase / reset / close instead
+      if (localKey != null) localSweepState.remove(localKey)
+      if (bcComm != null) bcComm.destroy()
+      if (bcTot != null) bcTot.destroy()
+      Timers.destroy.addAndGet(System.nanoTime() - d0)
+    }
+  }
+
+  /** One block's scan-and-decide: for each src of parity `par` on the
+    * frontier (a live `seedL` mark, or an edge into `accL`), accumulate its
+    * neighbor communities and pick the best move by the same ΔQ expression,
+    * singleton swap guard and (score, smaller community id) tie rule as the
+    * Catalyst tiers. `bnd` (the refinement bound, or null) restricts both
+    * the candidates and, with `refine`, the movers to singletons. Returns
+    * the block's movers in ascending src as packed (src, to) longs, with
+    * their dq terms.
+    *
+    * `slots > 0` switches the per-src candidate accumulation to the
     * low-memory two-pass scan (the reference's lowmem tier on this kernel's
     * layout): a k-slot Misra-Gries pass over the adjacency
     * (`/root/reference/inc/leidenLowmem.hxx:69-95`; k=1 degenerates to the
@@ -901,479 +999,396 @@ object CsrSweep {
     * in one block sorted by dst, the sketch consumes a deterministic
     * stream — run-to-run reproducible, unlike merge-order-dependent
     * distributed aggregation.
+    *
+    * Pure: it reads the state arrays and writes only its own scratch.
     */
-  def halfSweep(st: CsrState, m: Double, resolution: Double, parity: Int,
-                bcBound: Option[Broadcast[Array[Int]]] = None,
-                refineSingletons: Boolean = false,
-                sketchSlots: Int = 0): (Long, Double) = {
-    val n = st.n
-    val useSeed = st.seedAlive(parity)
-    // frontier provably empty at this parity -> skip the scan job
-    if (allZero(st.acc(parity)) && !(useSeed && hasParityBits(st.seed, parity)))
-      return (0L, 0.0)
-    val sc = st.csr.sparkContext
-    val tT0 = System.nanoTime()
-    // Per-half-sweep payload, three tiers:
-    //   delta mode (multi-executor + integral): ship only the moves the
-    //     driver just applied; executors advance a mirror (resolveMirror).
-    //   integral local: the Int membership mirror plus the driver-
-    //     maintained totals, so no task ever derives them. Broadcasting
-    //     the live arrays is safe: TorrentBroadcast serializes at
-    //     construction (cluster mode snapshots here), and in local mode
-    //     every task of this half-sweep completes inside collect() below,
-    //     strictly before the apply loop mutates them.
-    //   non-integral: derive totals executor-side, memoized by array
-    //     INSTANCE — ship a fresh clone per sweep so an in-place-mutated
-    //     commI can never hit a stale memo entry.
-    val deltaOn = st.deltaMode
-    var bcComm: Broadcast[Array[Int]] = null
-    var bcTot: Broadcast[(Array[Double], Array[Long])] = null
-    var localKey: (Long, Long) = null
-    if (deltaOn) {
-      if (st.baseBc == null || st.deltaBcs.size >= RebaseEvery) st.rebase()
-      else if (st.pendingDelta.nonEmpty) {
-        st.deltaBcs :+= sc.broadcast(st.pendingDelta)
-        st.pendingDelta = Array.emptyLongArray
-      }
-    } else if (st.integral && sc.isLocal) {
-      // same-JVM registry instead of a broadcast (localSweepState scaladoc)
-      localKey = (st.stateId, st.sweepSeq)
-      st.sweepSeq += 1
-      localSweepState.put(localKey, (st.commI, st.ctot, st.sgl))
-    } else {
-      bcComm = sc.broadcast(if (st.integral) st.commI else st.commI.clone())
-      if (st.integral) bcTot = sc.broadcast((st.ctot, st.sgl))
-    }
-    val mirSid = st.stateId
-    val mirGen = st.gen
-    val mirWm: Long =
-      try liveStates.first().longValue()
-      catch { case _: java.util.NoSuchElementException => st.stateId }
-    val mirBase = st.baseBc
-    val mirDeltas = st.deltaBcs
-    val tT1 = System.nanoTime()
-    Timers.bcast.addAndGet(tT1 - tT0)
-    Timers.sweeps.incrementAndGet()
-    val bcVtot = st.bcVtot
-    val seedL = if (useSeed) st.seed else null
-    val accL = st.acc(parity)
+  private[leiden] def scanBlock(blk: CsrBlock, comm: Array[Int], ct: Array[Double],
+                                sglL: Array[Long], vt: Array[Double], bnd: Array[Int],
+                                seedL: Array[Byte], accL: Array[Byte], m: Double,
+                                res: Double, par: Int, refine: Boolean,
+                                slots: Int): (Array[Long], Array[Double]) = {
     val twoM2 = 2 * m * m
-    val res = resolution
-    val par = parity
-    val refine = refineSingletons
-    val slots = sketchSlots
-    val accK = st.accKernelNs
-    val accD = st.accDeriveNs
-    try {
-      val out = st.csr.map { blk =>
-        val tk0 = System.nanoTime()
-        val vt = bcVtot.value
-        val (comm, ct, sglL) =
-          if (deltaOn) {
-            val mir = resolveMirror(mirSid, mirGen, mirWm, mirBase, mirDeltas, vt)
-            (mir.commI, mir.ctot, mir.sgl)
-          } else if (localKey != null) {
-            localSweepState.get(localKey)
-          } else if (bcTot != null) {
-            val t = bcTot.value
-            (bcComm.value, t._1, t._2)
-          } else {
-            val c = bcComm.value
-            val d = derive(c, vt)
-            (c, d._1, d._2)
-          }
-        val tk1 = System.nanoTime()
-        Timers.deriveTask.addAndGet(tk1 - tk0)
-        accD.add(tk1 - tk0)
-        val bnd = bcBound.map(_.value).orNull
-        // per-src scratch: open-address cdst -> wuc map, cleared via a
-        // touched list; stays L1-sized for all but hub vertices
-        var cap = 1 << 10
-        var keys = Array.fill[Int](cap)(-1)
-        var vals = new Array[Double](cap)
-        var touched = new Array[Int](cap)
-        var nt = 0
-        def grow(): Unit = {
-          val ok = keys; val ov = vals; val oc = cap
-          cap *= 4
-          keys = Array.fill[Int](cap)(-1); vals = new Array[Double](cap)
-          touched = new Array[Int](cap)
-          val shift = 32 - Integer.numberOfTrailingZeros(cap)
-          val mask = cap - 1
-          nt = 0
-          var q = 0
-          while (q < oc) {
-            val kk = ok(q)
-            if (kk >= 0) {
-              var h = ((kk * 0x9E3779B1) >>> shift) & mask
-              while (keys(h) >= 0) h = (h + 1) & mask
-              keys(h) = kk; vals(h) = ov(q); touched(nt) = h; nt += 1
-            }
-            q += 1
-          }
+    // per-src scratch: open-address cdst -> wuc map, cleared via a
+    // touched list; stays L1-sized for all but hub vertices
+    var cap = 1 << 10
+    var keys = Array.fill[Int](cap)(-1)
+    var vals = new Array[Double](cap)
+    var touched = new Array[Int](cap)
+    var nt = 0
+    def grow(): Unit = {
+      val ok = keys; val ov = vals; val oc = cap
+      cap *= 4
+      keys = Array.fill[Int](cap)(-1); vals = new Array[Double](cap)
+      touched = new Array[Int](cap)
+      val shift = 32 - Integer.numberOfTrailingZeros(cap)
+      val mask = cap - 1
+      nt = 0
+      var q = 0
+      while (q < oc) {
+        val kk = ok(q)
+        if (kk >= 0) {
+          var h = ((kk * 0x9E3779B1) >>> shift) & mask
+          while (keys(h) >= 0) h = (h + 1) & mask
+          keys(h) = kk; vals(h) = ov(q); touched(nt) = h; nt += 1
         }
-        def slot(k: Int): Int = {
-          val mask = cap - 1
-          var h = ((k * 0x9E3779B1) >>> (32 - Integer.numberOfTrailingZeros(cap))) & mask
-          while (keys(h) >= 0 && keys(h) != k) h = (h + 1) & mask
-          h
-        }
-        var mvCap = 256
-        var mvPacked = new Array[Long](mvCap)
-        var mvDq = new Array[Double](mvCap)
-        var nMv = 0
-        // low-memory tier scratch: the k-slot Misra-Gries sketch
-        val skeys = if (slots > 0) new Array[Int](slots) else null
-        val sws = if (slots > 0) new Array[Double](slots) else null
-        val srcs = blk.srcs; val off = blk.off; val dst = blk.dst
-        val w = blk.w // null => all 1.0 (unit-weight block, 4 B/edge)
-        val packed = blk.packed; val pWidths = blk.widths; val pBitOff = blk.bitOff
-        // gap-decode scratch (packed blocks): one src's adjacency, grown to
-        // the block's max degree on demand
-        var dbuf = if (packed != null) new Array[Int](1 << 10) else null
-        // batched community gather scratch: cbuf(i) = comm(adj(a0+i)),
-        // filled in ONE tight pure-gather pass before the scan loops. The
-        // scan's comm(dst) read is the kernel's dominant random DRAM/L3
-        // stream (gap-packing shrank the sequential stream to ~18
-        // bits/edge); buried inside the branch+hash-probe loop body its
-        // cache misses serialize behind the probe's dependent loads, while
-        // a dedicated gather loop exposes the full adjacency's worth of
-        // independent loads to the out-of-order window. Same element
-        // order, same values — the scans read cbuf instead of re-deriving
-        // comm(d), so every accumulation happens in the identical order
-        // and the sweep's decisions are bit-identical (parity specs).
-        var cbuf = new Array[Int](1 << 10)
-        var k = 0
-        while (k < srcs.length) {
-          val s = srcs(k)
-          if ((s & 1) == par) {
-            val ccur = comm(s)
-            val refineOk = !refine || bitL(sglL, ccur)
-            if (refineOk) {
-              val e0 = off(k); val e1 = off(k + 1)
-              // inline frontier test: live seed mark on s itself, else an
-              // edge into acc (self-loops count — symmetric table). Packed
-              // blocks fold the test into the single decode pass — the
-              // unpacked early exit saves nothing there because a miss
-              // must scan (decode) the whole adjacency either way.
-              var front = seedL != null && bit(seedL, s)
-              var adj = dst
-              var a0 = e0; var a1 = e1
-              if (packed == null) {
-                if (!front) {
-                  var e = e0
-                  while (!front && e < e1) { if (bit(accL, dst(e))) front = true; e += 1 }
-                }
-              } else {
-                val len = e1 - e0
-                if (dbuf.length < len)
-                  dbuf = new Array[Int](math.max(len, dbuf.length * 2))
-                val wd = pWidths(k).toInt
-                val mask = (1L << wd) - 1
-                var bp = pBitOff(k)
-                var cur = -1
-                var i2 = 0
-                while (i2 < len) {
-                  val wIdx = (bp >>> 6).toInt
-                  val sh = (bp & 63).toInt
-                  var bits = packed(wIdx) >>> sh
-                  if (sh + wd > 64) bits |= packed(wIdx + 1) << (64 - sh)
-                  cur += (bits & mask).toInt
-                  dbuf(i2) = cur
-                  if (!front && bit(accL, cur)) front = true
-                  i2 += 1
-                  bp += wd
-                }
-                adj = dbuf; a0 = 0; a1 = len
-              }
-              if (front) {
-                // accumulate candidates (dst != s; refine: same bound)
-                if (nt > 0) { var t = 0; while (t < nt) { keys(touched(t)) = -1; t += 1 }; nt = 0 }
-                // batched community gather (cbuf scaladoc above)
-                val alen = a1 - a0
-                if (cbuf.length < alen) {
-                  cbuf = new Array[Int](math.max(alen, cbuf.length * 2))
-                }
-                var g = 0
-                while (g < alen) { cbuf(g) = comm(adj(a0 + g)); g += 1 }
-                var e = a0
-                if (slots > 0) {
-                  // lowmem scan (halfSweep scaladoc): MG/BM sketch pass,
-                  // replaying MGSketch.Agg.reduce decision-for-decision on
-                  // the dst-sorted stream, then exact rescore of survivors
-                  val bs = if (bnd == null) 0 else bnd(s)
-                  java.util.Arrays.fill(skeys, -1)
-                  java.util.Arrays.fill(sws, 0.0)
-                  while (e < a1) {
-                    val d = adj(e)
-                    if (d != s && (bnd == null || bnd(d) == bs)) {
-                      val c = cbuf(e - a0)
-                      val we = if (w == null) 1.0 else w(e)
-                      if (slots == 1) {
-                        // weighted Boyer-Moore replacement vote; exact tie
-                        // keeps the smaller community id (MGSketch k=1)
-                        if (skeys(0) == c && sws(0) > 0) sws(0) += we
-                        else if (sws(0) > we) sws(0) -= we
-                        else if (sws(0) < we) { skeys(0) = c; sws(0) = we }
-                        else {
-                          skeys(0) = math.min(if (sws(0) > 0) skeys(0) else c, c)
-                          sws(0) = we
-                        }
-                      } else {
-                        var i2 = 0
-                        var has = false
-                        while (i2 < slots && !has) {
-                          if (skeys(i2) == c && sws(i2) > 0) { sws(i2) += we; has = true }
-                          i2 += 1
-                        }
-                        if (!has) {
-                          var f = -1
-                          i2 = 0
-                          while (i2 < slots) { if (sws(i2) == 0.0) f = i2; i2 += 1 }
-                          if (f >= 0) { skeys(f) = c; sws(f) = we }
-                          else {
-                            i2 = 0
-                            while (i2 < slots) { sws(i2) = math.max(sws(i2) - we, 0.0); i2 += 1 }
-                          }
-                        }
-                      }
-                    }
-                    e += 1
-                  }
-                  // seed the exact map with survivors + ccur at weight 0
-                  var i2 = 0
-                  while (i2 <= slots) {
-                    val c = if (i2 == slots) ccur
-                            else if (sws(i2) > 0) skeys(i2) else -1
-                    if (c >= 0) {
-                      if ((nt + 1) * 2 > cap) grow()
-                      val h = slot(c)
-                      if (keys(h) < 0) { keys(h) = c; vals(h) = 0.0; touched(nt) = h; nt += 1 }
-                    }
-                    i2 += 1
-                  }
-                  // exact rescore restricted to the seeded keys (probe
-                  // without insert): survivors get their true weights, so
-                  // the move decision below is exact over the sketch pool
-                  e = a0
-                  while (e < a1) {
-                    val d = adj(e)
-                    if (d != s && (bnd == null || bnd(d) == bs)) {
-                      val c = cbuf(e - a0)
-                      val h = slot(c)
-                      if (keys(h) == c) vals(h) += (if (w == null) 1.0 else w(e))
-                    }
-                    e += 1
-                  }
-                } else if (bnd == null) {
-                  while (e < a1) {
-                    val d = adj(e)
-                    if (d != s) {
-                      if ((nt + 1) * 2 > cap) grow()
-                      val we = if (w == null) 1.0 else w(e)
-                      val c = cbuf(e - a0)
-                      val h = slot(c)
-                      if (keys(h) < 0) { keys(h) = c; vals(h) = we; touched(nt) = h; nt += 1 }
-                      else vals(h) += we
-                    }
-                    e += 1
-                  }
-                } else {
-                  val bs = bnd(s)
-                  while (e < a1) {
-                    val d = adj(e)
-                    if (d != s && bnd(d) == bs) {
-                      if ((nt + 1) * 2 > cap) grow()
-                      val we = if (w == null) 1.0 else w(e)
-                      val c = cbuf(e - a0)
-                      val h = slot(c)
-                      if (keys(h) < 0) { keys(h) = c; vals(h) = we; touched(nt) = h; nt += 1 }
-                      else vals(h) += we
-                    }
-                    e += 1
-                  }
-                }
-                if (nt > 0) {
-                  // argmax over eligible candidates: same score expression
-                  // and (score, smaller community id) tie rule as the
-                  // Catalyst tiers; order-independent strict compare
-                  val vtotU = vt(s)
-                  val sglCur = bitL(sglL, ccur)
-                  var wud = 0.0
-                  var bestC = -1
-                  var bestScore = 0.0
-                  var t = 0
-                  while (t < nt) {
-                    val h = touched(t)
-                    val c = keys(h)
-                    val wuc = vals(h)
-                    if (c == ccur) wud = wuc
-                    else if (!(sglCur && bitL(sglL, c) && c > ccur)) {
-                      val score = wuc / m - res * vtotU * ct(c) / twoM2
-                      if (bestC < 0 || score > bestScore ||
-                          (score == bestScore && c < bestC)) {
-                        bestScore = score; bestC = c
-                      }
-                    }
-                    t += 1
-                  }
-                  if (bestC >= 0) {
-                    val mdq = bestScore - wud / m -
-                      res * vtotU * (vtotU - ct(ccur)) / twoM2
-                    if (mdq > 0) {
-                      if (nMv == mvCap) {
-                        mvCap *= 2
-                        mvPacked = java.util.Arrays.copyOf(mvPacked, mvCap)
-                        mvDq = java.util.Arrays.copyOf(mvDq, mvCap)
-                      }
-                      mvPacked(nMv) = (s.toLong << 32) | bestC.toLong
-                      mvDq(nMv) = mdq
-                      nMv += 1
-                    }
-                  }
-                }
-              }
-            }
-          }
-          k += 1
-        }
-        val tkEnd = System.nanoTime()
-        Timers.kernelTask.addAndGet(tkEnd - tk1)
-        accK.add(tkEnd - tk1)
-        (java.util.Arrays.copyOf(mvPacked, nMv), java.util.Arrays.copyOf(mvDq, nMv))
-      }.collect()
-      val tT2 = System.nanoTime()
-      Timers.job.addAndGet(tT2 - tT1)
-
-      var total = 0
-      out.foreach(p => total += p._1.length)
-      // non-moving sweep: frontier state untouched (legacy parity)
-      if (total == 0) return (0L, 0.0)
-      val mvL = st.mvScratchL
-      java.util.Arrays.fill(mvL, 0L)
-      // delta mode: the concatenated moves (in driver-apply order) are the
-      // NEXT half-sweep's broadcast payload
-      if (deltaOn) {
-        val all = new Array[Long](total)
-        var p = 0
-        out.foreach { case (mp, _) =>
-          System.arraycopy(mp, 0, all, p, mp.length); p += mp.length
-        }
-        st.pendingDelta = all
+        q += 1
       }
-      val inc = st.integral // incremental totals (exact: integral weights)
-      // Apply, three sections. (1) SERIAL walk: dq left-fold only, in
-      // ascending src over all blocks (foldDq), under range and hash
-      // blocks alike. The moved-bitmap writes (order-free, set-only) ride
-      // the parallel scatter pass below.
-      val dq = foldDq(out)
-      if (total >= ParallelApplyMin && out.length > 1) {
-        // (2) PARALLEL pass over blocks — the O(moves) scatter was the
-        // dominant serial Amdahl term of the N->4N witness once the kernel
-        // itself scaled (~10 random O(V)-array accesses per move). Each
-        // src moves at most once per half-sweep, so comm/commI writes are
-        // disjoint; ctot/csize are scatter-adds to shared communities →
-        // lock-free atomic RMW (exact: adds are ± integral doubles on the
-        // `inc` gate, order-independent). mp is rewritten in place to
-        // (from, to) as the pass-3 payload — the delta snapshot above and
-        // the serial walk have already consumed the original packing.
+    }
+    def slot(k: Int): Int = {
+      val mask = cap - 1
+      var h = ((k * 0x9E3779B1) >>> (32 - Integer.numberOfTrailingZeros(cap))) & mask
+      while (keys(h) >= 0 && keys(h) != k) h = (h + 1) & mask
+      h
+    }
+    var mvCap = 256
+    var mvPacked = new Array[Long](mvCap)
+    var mvDq = new Array[Double](mvCap)
+    var nMv = 0
+    // low-memory tier scratch: the k-slot Misra-Gries sketch
+    val skeys = if (slots > 0) new Array[Int](slots) else null
+    val sws = if (slots > 0) new Array[Double](slots) else null
+    val srcs = blk.srcs; val off = blk.off; val dst = blk.dst
+    val w = blk.w // null => all 1.0 (unit-weight block, 4 B/edge)
+    val packed = blk.packed; val pWidths = blk.widths; val pBitOff = blk.bitOff
+    // gap-decode scratch (packed blocks): one src's adjacency, grown to
+    // the block's max degree on demand
+    var dbuf = if (packed != null) new Array[Int](1 << 10) else null
+    // batched community gather scratch: cbuf(i) = comm(adj(a0+i)),
+    // filled in ONE tight pure-gather pass before the scan loops. The
+    // scan's comm(dst) read is the kernel's dominant random DRAM/L3
+    // stream (gap-packing shrank the sequential stream to ~18
+    // bits/edge); buried inside the branch+hash-probe loop body its
+    // cache misses serialize behind the probe's dependent loads, while
+    // a dedicated gather loop exposes the full adjacency's worth of
+    // independent loads to the out-of-order window. Same element
+    // order, same values — the scans read cbuf instead of re-deriving
+    // comm(d), so every accumulation happens in the identical order
+    // and the sweep's decisions are bit-identical (parity specs).
+    var cbuf = new Array[Int](1 << 10)
+    var k = 0
+    while (k < srcs.length) {
+      val s = srcs(k)
+      if ((s & 1) == par) {
+        val ccur = comm(s)
+        val refineOk = !refine || bitL(sglL, ccur)
+        if (refineOk) {
+          val e0 = off(k); val e1 = off(k + 1)
+          // inline frontier test: live seed mark on s itself, else an
+          // edge into acc (self-loops count — symmetric table). Packed
+          // blocks fold the test into the single decode pass — the
+          // unpacked early exit saves nothing there because a miss
+          // must scan (decode) the whole adjacency either way.
+          var front = seedL != null && bit(seedL, s)
+          var adj = dst
+          var a0 = e0; var a1 = e1
+          if (packed == null) {
+            if (!front) {
+              var e = e0
+              while (!front && e < e1) { if (bit(accL, dst(e))) front = true; e += 1 }
+            }
+          } else {
+            val len = e1 - e0
+            if (dbuf.length < len)
+              dbuf = new Array[Int](math.max(len, dbuf.length * 2))
+            val wd = pWidths(k).toInt
+            val mask = (1L << wd) - 1
+            var bp = pBitOff(k)
+            var cur = -1
+            var i2 = 0
+            while (i2 < len) {
+              val wIdx = (bp >>> 6).toInt
+              val sh = (bp & 63).toInt
+              var bits = packed(wIdx) >>> sh
+              if (sh + wd > 64) bits |= packed(wIdx + 1) << (64 - sh)
+              cur += (bits & mask).toInt
+              dbuf(i2) = cur
+              if (!front && bit(accL, cur)) front = true
+              i2 += 1
+              bp += wd
+            }
+            adj = dbuf; a0 = 0; a1 = len
+          }
+          if (front) {
+            // accumulate candidates (dst != s; refine: same bound)
+            if (nt > 0) { var t = 0; while (t < nt) { keys(touched(t)) = -1; t += 1 }; nt = 0 }
+            // batched community gather (cbuf scaladoc above)
+            val alen = a1 - a0
+            if (cbuf.length < alen) {
+              cbuf = new Array[Int](math.max(alen, cbuf.length * 2))
+            }
+            var g = 0
+            while (g < alen) { cbuf(g) = comm(adj(a0 + g)); g += 1 }
+            var e = a0
+            if (slots > 0) {
+              // lowmem scan (scanBlock scaladoc): MG/BM sketch pass,
+              // replaying MGSketch.Agg.reduce decision-for-decision on
+              // the dst-sorted stream, then exact rescore of survivors
+              val bs = if (bnd == null) 0 else bnd(s)
+              java.util.Arrays.fill(skeys, -1)
+              java.util.Arrays.fill(sws, 0.0)
+              while (e < a1) {
+                val d = adj(e)
+                if (d != s && (bnd == null || bnd(d) == bs)) {
+                  val c = cbuf(e - a0)
+                  val we = if (w == null) 1.0 else w(e)
+                  if (slots == 1) {
+                    // weighted Boyer-Moore replacement vote; exact tie
+                    // keeps the smaller community id (MGSketch k=1)
+                    if (skeys(0) == c && sws(0) > 0) sws(0) += we
+                    else if (sws(0) > we) sws(0) -= we
+                    else if (sws(0) < we) { skeys(0) = c; sws(0) = we }
+                    else {
+                      skeys(0) = math.min(if (sws(0) > 0) skeys(0) else c, c)
+                      sws(0) = we
+                    }
+                  } else {
+                    var i2 = 0
+                    var has = false
+                    while (i2 < slots && !has) {
+                      if (skeys(i2) == c && sws(i2) > 0) { sws(i2) += we; has = true }
+                      i2 += 1
+                    }
+                    if (!has) {
+                      var f = -1
+                      i2 = 0
+                      while (i2 < slots) { if (sws(i2) == 0.0) f = i2; i2 += 1 }
+                      if (f >= 0) { skeys(f) = c; sws(f) = we }
+                      else {
+                        i2 = 0
+                        while (i2 < slots) { sws(i2) = math.max(sws(i2) - we, 0.0); i2 += 1 }
+                      }
+                    }
+                  }
+                }
+                e += 1
+              }
+              // seed the exact map with survivors + ccur at weight 0
+              var i2 = 0
+              while (i2 <= slots) {
+                val c = if (i2 == slots) ccur
+                        else if (sws(i2) > 0) skeys(i2) else -1
+                if (c >= 0) {
+                  if ((nt + 1) * 2 > cap) grow()
+                  val h = slot(c)
+                  if (keys(h) < 0) { keys(h) = c; vals(h) = 0.0; touched(nt) = h; nt += 1 }
+                }
+                i2 += 1
+              }
+              // exact rescore restricted to the seeded keys (probe
+              // without insert): survivors get their true weights, so
+              // the move decision below is exact over the sketch pool
+              e = a0
+              while (e < a1) {
+                val d = adj(e)
+                if (d != s && (bnd == null || bnd(d) == bs)) {
+                  val c = cbuf(e - a0)
+                  val h = slot(c)
+                  if (keys(h) == c) vals(h) += (if (w == null) 1.0 else w(e))
+                }
+                e += 1
+              }
+            } else if (bnd == null) {
+              while (e < a1) {
+                val d = adj(e)
+                if (d != s) {
+                  if ((nt + 1) * 2 > cap) grow()
+                  val we = if (w == null) 1.0 else w(e)
+                  val c = cbuf(e - a0)
+                  val h = slot(c)
+                  if (keys(h) < 0) { keys(h) = c; vals(h) = we; touched(nt) = h; nt += 1 }
+                  else vals(h) += we
+                }
+                e += 1
+              }
+            } else {
+              val bs = bnd(s)
+              while (e < a1) {
+                val d = adj(e)
+                if (d != s && bnd(d) == bs) {
+                  if ((nt + 1) * 2 > cap) grow()
+                  val we = if (w == null) 1.0 else w(e)
+                  val c = cbuf(e - a0)
+                  val h = slot(c)
+                  if (keys(h) < 0) { keys(h) = c; vals(h) = we; touched(nt) = h; nt += 1 }
+                  else vals(h) += we
+                }
+                e += 1
+              }
+            }
+            if (nt > 0) {
+              // argmax over eligible candidates: same score expression
+              // and (score, smaller community id) tie rule as the
+              // Catalyst tiers; order-independent strict compare
+              val vtotU = vt(s)
+              val sglCur = bitL(sglL, ccur)
+              var wud = 0.0
+              var bestC = -1
+              var bestScore = 0.0
+              var t = 0
+              while (t < nt) {
+                val h = touched(t)
+                val c = keys(h)
+                val wuc = vals(h)
+                if (c == ccur) wud = wuc
+                else if (!(sglCur && bitL(sglL, c) && c > ccur)) {
+                  val score = wuc / m - res * vtotU * ct(c) / twoM2
+                  if (bestC < 0 || score > bestScore ||
+                      (score == bestScore && c < bestC)) {
+                    bestScore = score; bestC = c
+                  }
+                }
+                t += 1
+              }
+              if (bestC >= 0) {
+                val mdq = bestScore - wud / m -
+                  res * vtotU * (vtotU - ct(ccur)) / twoM2
+                if (mdq > 0) {
+                  if (nMv == mvCap) {
+                    mvCap *= 2
+                    mvPacked = java.util.Arrays.copyOf(mvPacked, mvCap)
+                    mvDq = java.util.Arrays.copyOf(mvDq, mvCap)
+                  }
+                  mvPacked(nMv) = (s.toLong << 32) | bestC.toLong
+                  mvDq(nMv) = mdq
+                  nMv += 1
+                }
+              }
+            }
+          }
+        }
+      }
+      k += 1
+    }
+    (java.util.Arrays.copyOf(mvPacked, nMv), java.util.Arrays.copyOf(mvDq, nMv))
+  }
+
+  /** The driver's half of a half-sweep: apply the blocks' movers to `st`,
+    * fold their dq in ascending src ([[foldDq]]) and fold the frontier.
+    * Returns (moves, dqSum).
+    */
+  private def applyMoves(st: CsrState, out: Array[(Array[Long], Array[Double])],
+                         parity: Int): (Long, Double) = {
+    val tT2 = System.nanoTime()
+    var total = 0
+    out.foreach(p => total += p._1.length)
+    // non-moving sweep: frontier state untouched (legacy parity)
+    if (total == 0) return (0L, 0.0)
+    val mvL = st.mvScratchL
+    java.util.Arrays.fill(mvL, 0L)
+    // delta mode: the concatenated moves (in driver-apply order) are the
+    // NEXT half-sweep's broadcast payload
+    if (st.deltaMode) {
+      val all = new Array[Long](total)
+      var p = 0
+      out.foreach { case (mp, _) =>
+        System.arraycopy(mp, 0, all, p, mp.length); p += mp.length
+      }
+      st.pendingDelta = all
+    }
+    val inc = st.integral // incremental totals (exact: integral weights)
+    // Apply, three sections. (1) SERIAL walk: dq left-fold only, in
+    // ascending src over all blocks (foldDq), under range and hash
+    // blocks alike. The moved-bitmap writes (order-free, set-only) ride
+    // the parallel scatter pass below.
+    val dq = foldDq(out)
+    if (total >= ParallelApplyMin && out.length > 1) {
+      // (2) PARALLEL pass over blocks — the O(moves) scatter was the
+      // dominant serial Amdahl term of the N->4N witness once the kernel
+      // itself scaled (~10 random O(V)-array accesses per move). Each
+      // src moves at most once per half-sweep, so comm/commI writes are
+      // disjoint; ctot/csize are scatter-adds to shared communities →
+      // lock-free atomic RMW (exact: adds are ± integral doubles on the
+      // `inc` gate, order-independent). mp is rewritten in place to
+      // (from, to) as the pass-3 payload — the delta snapshot above and
+      // the serial walk have already consumed the original packing.
+      java.util.stream.IntStream.range(0, out.length).parallel().forEach { b =>
+        val mp = out(b)._1
+        var j = 0
+        while (j < mp.length) {
+          val pk = mp(j)
+          val s = (pk >>> 32).toInt
+          val to = (pk & 0xFFFFFFFFL).toInt
+          atomicSetBit(mvL, s, v = true)
+          if (inc) {
+            val from = st.commI(s)
+            val vts = st.vtot(s)
+            atomicAdd(st.ctot, from, -vts)
+            atomicAdd(st.ctot, to, vts)
+            atomicAddInt(st.csize, from, -1)
+            atomicAddInt(st.csize, to, 1)
+            mp(j) = (from.toLong << 32) | to.toLong
+          }
+          st.comm(s) = to.toLong
+          st.commI(s) = to
+          j += 1
+        }
+      }
+      // (3) PARALLEL singleton-bit pass from the now-final sizes: the
+      // serial per-update rule's final bit equals (csize == 1) — the
+      // same invariant the mirror replay documents — so recomputing
+      // from final sizes is bit-identical and order-free. The pass's
+      // real cost is two RANDOM csize loads per move (DRAM latency);
+      // running it over blocks overlaps those latencies, and the bit
+      // writes are lock-free and idempotent (atomicSetBit scaladoc).
+      if (inc) {
         java.util.stream.IntStream.range(0, out.length).parallel().forEach { b =>
           val mp = out(b)._1
           var j = 0
           while (j < mp.length) {
             val pk = mp(j)
-            val s = (pk >>> 32).toInt
+            val from = (pk >>> 32).toInt
             val to = (pk & 0xFFFFFFFFL).toInt
-            atomicSetBit(mvL, s, v = true)
-            if (inc) {
-              val from = st.commI(s)
-              val vts = st.vtot(s)
-              atomicAdd(st.ctot, from, -vts)
-              atomicAdd(st.ctot, to, vts)
-              atomicAddInt(st.csize, from, -1)
-              atomicAddInt(st.csize, to, 1)
-              mp(j) = (from.toLong << 32) | to.toLong
-            }
-            st.comm(s) = to.toLong
-            st.commI(s) = to
-            j += 1
-          }
-        }
-        // (3) PARALLEL singleton-bit pass from the now-final sizes: the
-        // serial per-update rule's final bit equals (csize == 1) — the
-        // same invariant the mirror replay documents — so recomputing
-        // from final sizes is bit-identical and order-free. The pass's
-        // real cost is two RANDOM csize loads per move (DRAM latency);
-        // running it over blocks overlaps those latencies, and the bit
-        // writes are lock-free and idempotent (atomicSetBit scaladoc).
-        if (inc) {
-          java.util.stream.IntStream.range(0, out.length).parallel().forEach { b =>
-            val mp = out(b)._1
-            var j = 0
-            while (j < mp.length) {
-              val pk = mp(j)
-              val from = (pk >>> 32).toInt
-              val to = (pk & 0xFFFFFFFFL).toInt
-              atomicSetBit(st.sgl, from, st.csize(from) == 1)
-              atomicSetBit(st.sgl, to, st.csize(to) == 1)
-              j += 1
-            }
-          }
-        }
-      } else {
-        // serial apply (small move counts): per-update singleton rule
-        out.foreach { case (mp, _) =>
-          var j = 0
-          while (j < mp.length) {
-            val pk = mp(j)
-            val s = (pk >>> 32).toInt
-            val to = (pk & 0xFFFFFFFFL).toInt
-            setBitL(mvL, s, v = true)
-            if (inc) {
-              val from = st.commI(s)
-              val vts = st.vtot(s)
-              st.ctot(from) -= vts
-              st.ctot(to) += vts
-              val fs = st.csize(from) - 1
-              st.csize(from) = fs
-              // singleton bit: set iff the community's size is exactly 1
-              // after EACH update — `to` can go 0 -> 1 when earlier movers
-              // of this same apply batch drained it first
-              setBitL(st.sgl, from, fs == 1)
-              val ts = st.csize(to) + 1
-              st.csize(to) = ts
-              setBitL(st.sgl, to, ts == 1)
-            }
-            st.comm(s) = to.toLong
-            st.commI(s) = to
+            atomicSetBit(st.sgl, from, st.csize(from) == 1)
+            atomicSetBit(st.sgl, to, st.csize(to) == 1)
             j += 1
           }
         }
       }
-      // frontier fold: acc(p) := M, acc(1-p) |= M, seed of p consumed.
-      // mvL is long words; byte i of the fold is bits 8*(i&7)..8*(i&7)+7 of
-      // word i>>3 (bit s of the byte layout == bit s&63 of word s>>6).
-      val accP = st.acc(parity)
-      val other = st.acc(1 - parity)
-      var i = 0
-      while (i < st.nBytes) {
-        val b = (mvL(i >> 3) >>> ((i & 7) << 3)).toByte
-        accP(i) = b
-        other(i) = ((other(i) | b) & 0xFF).toByte
-        i += 1
+    } else {
+      // serial apply (small move counts): per-update singleton rule
+      out.foreach { case (mp, _) =>
+        var j = 0
+        while (j < mp.length) {
+          val pk = mp(j)
+          val s = (pk >>> 32).toInt
+          val to = (pk & 0xFFFFFFFFL).toInt
+          setBitL(mvL, s, v = true)
+          if (inc) {
+            val from = st.commI(s)
+            val vts = st.vtot(s)
+            st.ctot(from) -= vts
+            st.ctot(to) += vts
+            val fs = st.csize(from) - 1
+            st.csize(from) = fs
+            // singleton bit: set iff the community's size is exactly 1
+            // after EACH update — `to` can go 0 -> 1 when earlier movers
+            // of this same apply batch drained it first
+            setBitL(st.sgl, from, fs == 1)
+            val ts = st.csize(to) + 1
+            st.csize(to) = ts
+            setBitL(st.sgl, to, ts == 1)
+          }
+          st.comm(s) = to.toLong
+          st.commI(s) = to
+          j += 1
+        }
       }
-      st.seedAlive(parity) = false
-      Timers.apply.addAndGet(System.nanoTime() - tT2)
-      (total.toLong, dq)
-    } finally {
-      val d0 = System.nanoTime()
-      // delta mode keeps its chain alive for fresh-executor replay; it is
-      // destroyed at rebase / reset / close instead
-      if (localKey != null) localSweepState.remove(localKey)
-      if (bcComm != null) bcComm.destroy()
-      if (bcTot != null) bcTot.destroy()
-      Timers.destroy.addAndGet(System.nanoTime() - d0)
     }
+    // frontier fold: acc(p) := M, acc(1-p) |= M, seed of p consumed.
+    // mvL is long words; byte i of the fold is bits 8*(i&7)..8*(i&7)+7 of
+    // word i>>3 (bit s of the byte layout == bit s&63 of word s>>6).
+    val accP = st.acc(parity)
+    val other = st.acc(1 - parity)
+    var i = 0
+    while (i < st.nBytes) {
+      val b = (mvL(i >> 3) >>> ((i & 7) << 3)).toByte
+      accP(i) = b
+      other(i) = ((other(i) | b) & 0xFF).toByte
+      i += 1
+    }
+    st.seedAlive(parity) = false
+    Timers.apply.addAndGet(System.nanoTime() - tT2)
+    (total.toLong, dq)
   }
 
   /** Left-fold of a half-sweep's mover dq terms in ascending src over all
@@ -1427,25 +1442,24 @@ object CsrSweep {
           maxIterations: Int, boundArr: Option[Array[Long]] = None,
           refineSingletons: Boolean = false, minMoves: Long = 0L,
           sketchSlots: Int = 0): (Int, Long) = {
-    val sc = st.csr.sparkContext
-    val bcBound = boundArr.map { b =>
-      val a = new Array[Int](st.n); var j = 0
-      while (j < st.n) { a(j) = b(j).toInt; j += 1 }
-      sc.broadcast(a)
-    }
+    st.bound = boundArr.map(b => Array.tabulate(st.n)(b(_).toInt)).orNull
+    if (st.bound != null && st.sc != null) st.bcBound = st.sc.broadcast(st.bound)
     try {
       var it = 0
       var totalMoves = 0L
       var continue = true
       while (continue && it < maxIterations) {
-        val (am, adq) = halfSweep(st, m, resolution, 0, bcBound, refineSingletons, sketchSlots)
-        val (bm, bdq) = halfSweep(st, m, resolution, 1, bcBound, refineSingletons, sketchSlots)
+        val (am, adq) = halfSweep(st, m, resolution, 0, refineSingletons, sketchSlots)
+        val (bm, bdq) = halfSweep(st, m, resolution, 1, refineSingletons, sketchSlots)
         it += 1
         totalMoves += am + bm
         if (am + bm < math.max(1L, minMoves) || adq + bdq <= tolerance)
           continue = false
       }
       (it, totalMoves)
-    } finally bcBound.foreach(_.destroy())
+    } finally {
+      if (st.bcBound != null) st.bcBound.destroy()
+      st.bound = null; st.bcBound = null
+    }
   }
 }

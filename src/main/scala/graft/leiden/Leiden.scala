@@ -34,6 +34,11 @@ import org.apache.spark.sql.graft.PlanUtils
   * membership is built from it once at the end. Otherwise it is a
   * checkpointed (id, comm) DataFrame composed by joins.
   *
+  * Once a pass graph has at most `LeidenOptions.localSolveEdgeThreshold`
+  * rows, it is collected once and the remaining passes run the same steps
+  * on the driver: the CSR block scan in-process (`CsrSweep.onDriver`) and
+  * coarsening by one sort (`Aggregate.coarsenRows`).
+  *
   * With a snapshot directory, every pass ends in a durable snapshot (coarse
   * edges + composed leaf membership + metrics + per-partition lineage) via
   * graft.io.Snapshots; `detect` resumes from the latest committed snapshot
@@ -102,14 +107,25 @@ object Leiden {
     val sc = spark.sparkContext
     val t0 = System.currentTimeMillis()
     var phase = Map.empty[String, Long]
-    // times a phase and tags its Spark jobs with its name (PhaseProperty)
+    // The local tail (enterTail): the pass graph's rows on the driver (src
+    // int, dst int, w double; sorted, one per pair) over tail ids, a
+    // monotone, parity-preserving relabel of the pass ids, so tie-breaks,
+    // parity schedule and sketch stream are unchanged. `tailBack` maps a
+    // tail id to its pass id (-1: none), and `tailLeaf` maps each tail id
+    // at entry to its community, composed into the leaf when the run ends.
+    var tail: Packed = null
+    var tailBack: Array[Long] = null
+    var tailLeaf: Array[Int] = null
+    // times a phase and tags its Spark jobs with its name (PhaseProperty);
+    // every phase of a tail pass counts as the local tail's
     def timed[T](name: String)(f: => T): T = {
+      val key = if (tail != null) "localtail" else name
       val outer = sc.getLocalProperty(PhaseProperty)
-      sc.setLocalProperty(PhaseProperty, name)
+      sc.setLocalProperty(PhaseProperty, key)
       val s = System.currentTimeMillis()
       try f
       finally {
-        phase = phase.updated(name, phase.getOrElse(name, 0L) + (System.currentTimeMillis() - s))
+        phase = phase.updated(key, phase.getOrElse(key, 0L) + (System.currentTimeMillis() - s))
         sc.setLocalProperty(PhaseProperty, outer)
       }
     }
@@ -163,7 +179,8 @@ object Leiden {
     //  - `leafArr` over the pass-0 ids, masked by `present0`, with `vt0`
     //    the pass-0 vertex weights (Modularity.dense's ctot). Only when
     //    n0 > 0; the first pass fills it, dense or local tail. Its values
-    //    are the current pass graph's vertex ids, all below n0.
+    //    are the current pass graph's vertex ids, all below n0 (during
+    //    the local tail, the tail ids at entry).
     //  - `leaf`, a checkpointed (id, comm) DataFrame. A run with n0 > 0
     //    builds it only if a pass takes the DataFrame tier.
     var leafArr: Array[Long] = null
@@ -193,12 +210,18 @@ object Leiden {
       else f.select(col("id").cast(srcField.dataType), col("comm"))
     }
     if (n0 == 0) { leaf = identityLeaf(); gn = leafCount }
-    // the fi/fm warm-start hooks on the driver, read by the first pass only
-    lazy val warmComm: Map[Long, Long] = prevMembership.fold(Map.empty[Long, Long])(
-      _.select(col("id").cast("long"), col("comm").cast("long")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    lazy val warmAff: Option[Set[Long]] = affected.map(a =>
-      a.select(col(a.columns.head).cast("long")).collect().map(_.getLong(0)).toSet)
+    // the fi/fm warm-start hooks on the driver, keyed by the first pass's
+    // graph ids (re-keyed to tail ids when that pass enters the tail);
+    // collected and read by the first pass only
+    var warmComm: Map[Long, Long] = null
+    var warmAff: Option[Set[Long]] = None
+    def loadWarm(): Unit = if (warmComm == null) {
+      warmComm = prevMembership.fold(Map.empty[Long, Long])(
+        _.select(col("id").cast("long"), col("comm").cast("long")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      warmAff = affected.map(a =>
+        a.select(col(a.columns.head).cast("long")).collect().map(_.getLong(0)).toSet)
+    }
     var tolerance = opts.tolerance
     var pass = 0
     var totalIters = 0
@@ -242,62 +265,77 @@ object Leiden {
     }
     val firstPass = pass
 
+    // Collect the pass graph into the local tail (`tail` above). Its ids
+    // are the endpoints plus, on a warm first pass, the seed labels.
+    def enterTail(): Unit = {
+      val (sA, dA, wA) = EdgeTable.collectPacked(edges)
+      val r = sA.length
+      val warm = pass == firstPass && !resumed &&
+        (prevMembership.isDefined || affected.isDefined)
+      if (warm) loadWarm()
+      val labels = if (warm) warmComm.values.toArray else Array.emptyLongArray
+      if (leafArr == null && leaf == null) {
+        // the whole run is local: the leaf starts as the identity over the
+        // pass-0 ids, weighted from the collected rows. Seed labels outside
+        // them need the DataFrame leaf, as they do on a dense pass.
+        if (labels.exists(c => c < 0 || c >= n0)) leaf = identityLeaf()
+        else {
+          leafArr = Array.tabulate(n0)(_.toLong)
+          present0 = new Array[Boolean](n0)
+          vt0 = new Array[Double](n0)
+          for (i <- 0 until r) { present0(sA(i).toInt) = true; vt0(sA(i).toInt) += wA(i) }
+        }
+      }
+      val ids = new Array[Long](2 * r + labels.length)
+      System.arraycopy(sA, 0, ids, 0, r)
+      System.arraycopy(dA, 0, ids, r, r)
+      System.arraycopy(labels, 0, ids, 2 * r, labels.length)
+      java.util.Arrays.sort(ids)
+      var k = 0
+      for (i <- ids.indices) if (k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+      // the next tail id is one up after an odd step of the pass ids and
+      // two up after an even one, so order and parity are kept
+      val tid = new Array[Int](k)
+      tid(0) = java.lang.Math.floorMod(ids(0), 2L).toInt
+      for (i <- 1 until k) tid(i) = tid(i - 1) + 2 - ((ids(i) - ids(i - 1)) & 1L).toInt
+      tailBack = Array.fill(tid(k - 1) + 1)(-1L)
+      for (i <- 0 until k) tailBack(tid(i)) = ids(i)
+      // tail id of a pass id, -1 if it is not one of `ids`
+      def rank(id: Long): Int = {
+        val j = java.util.Arrays.binarySearch(ids, 0, k, id)
+        if (j < 0) -1 else tid(j)
+      }
+      tail = Aggregate.sumPairs(
+        Array.tabulate(r)(i => (rank(sA(i)).toLong << 32) | rank(dA(i))), wA)
+      tailLeaf = Array.tabulate(tailBack.length)(identity)
+      if (leafArr != null)
+        for (v <- 0 until n0) if (present0(v)) leafArr(v) = rank(leafArr(v))
+      if (warm) {
+        warmComm = warmComm.iterator.collect {
+          case (id, c) if rank(id) >= 0 => rank(id).toLong -> rank(c).toLong
+        }.toMap
+        warmAff = warmAff.map(_.iterator.map(rank).filter(_ >= 0).map(_.toLong).toSet)
+      }
+      if (edges ne inputEdges) edges.unpersist()
+      edges = null
+    }
+
     while (!done && pass < opts.maxPasses) {
-      // Local tail: once the (coarsened) graph fits the driver threshold,
-      // finish all remaining passes in the sequential twin of these sweeps
-      // — per-superstep Spark job scheduling dominates sub-threshold
-      // graphs. Semantics identical (LocalSolver scaladoc); exact-weight
-      // graphs produce bit-identical memberships (pinned by LeidenSpec).
-      // Snapshot-enabled runs keep the distributed path throughout: the
-      // per-pass durability contract (resume from the last committed pass)
-      // outranks the tail's fixed-cost saving.
-      if (opts.localSolveEdgeThreshold > 0 && opts.snapshotDir.isEmpty &&
-        (if (rows >= 0) rows else edges.count()) <= opts.localSolveEdgeThreshold) {
-        val warm = pass == firstPass && !resumed
-        val (local, sA, wA) = timed("localtail") {
-          // packed collect (no per-edge Row), then the tuple view LocalSolver
-          // expects — same row order as a Row collect, so the solver's
-          // order-sensitive accumulations are unchanged
-          val (sA, dA, wA) = EdgeTable.collectPacked(edges)
-          val arr = Array.tabulate(sA.length)(i => (sA(i), dA(i), wA(i)))
-          (LocalSolver.solve(arr, m, opts, tolerance, opts.maxPasses - pass,
-            if (warm) warmComm else Map.empty[Long, Long], if (warm) warmAff else None),
-            sA, wA)
-        }
-        totalIters += local.iterations
-        pass += local.passes
-        timed("compose") {
-          if (leafArr == null && leaf == null) {
-            // the whole run is local: the leaf starts as the identity over
-            // the pass-0 ids, weighted from the collected rows
-            leafArr = Array.tabulate(n0)(_.toLong)
-            present0 = new Array[Boolean](n0)
-            vt0 = new Array[Double](n0)
-            var i = 0
-            while (i < sA.length) {
-              val v = sA(i).toInt
-              present0(v) = true
-              vt0(v) += wA(i)
-              i += 1
-            }
-          }
-          if (leafArr != null) {
-            var v = 0
-            while (v < n0) { if (present0(v)) leafArr(v) = local.leaf(leafArr(v)); v += 1 }
-          } else {
-            val (ids, comms) = local.leaf.toArray.unzip
-            val prevLeaf = leaf
-            leaf = PlanUtils.checkpointTruncated(
-              Aggregate.compose(leaf, idComm(spark, ids, comms, 4)))
-            PlanUtils.release(prevLeaf)
-          }
-        }
-        done = true
-      } else {
+      // Local tail: once the pass graph has at most
+      // localSolveEdgeThreshold rows, per-half-sweep Spark jobs are pure
+      // fixed cost, so the rows are collected once and every remaining
+      // pass runs the steps below on the driver, on one driver-held CSR
+      // block, coarsening by one sort. Snapshot-enabled runs stay
+      // distributed: the per-pass durability contract (resume from the
+      // last committed pass) outranks the tail's saving.
+      if (tail == null && opts.localSolveEdgeThreshold > 0 && opts.snapshotDir.isEmpty &&
+        (if (rows >= 0) rows else edges.count()) <= opts.localSolveEdgeThreshold)
+        timed("localtail") { enterTail() }
+
       // lazy per-vertex weights: the dense tier consumes them as one packed
       // collect and never pays the checkpoint job or the state0 joins —
       // only the DataFrame tier materializes them, after the gate decides
-      val vtotLazy = EdgeTable.vertexWeights(edges)
+      val vtotLazy = if (tail == null) EdgeTable.vertexWeights(edges) else null
 
       // 1. local moving. C ≤ V = gn, so whenever the pass's vertex count
       // fits the cap (LocalMove.CtBroadcastMax) BOTH the community-totals
@@ -317,7 +355,8 @@ object Leiden {
       // so the gate holds for every pass after one; a DataFrame-tier pass
       // passes its community labels on unchanged.
       val (vtIds, vtVals): (Array[Long], Array[Double]) =
-        if (bcCt) timed("init") {
+        if (tail != null) timed("init") { rowWeights(tail) }
+        else if (bcCt) timed("init") {
           val p = Packed.collect(
             vtotLazy.select(col("id").cast("long"), col("vtot").cast("double")))
           (p.longs(0), p.doubles(1))
@@ -342,8 +381,10 @@ object Leiden {
           }
           (mn, mx)
         } else (0L, Long.MaxValue)
+      // a tail pass keeps the tail's whole id space, seed labels included
       val fBits: Int =
-        if (bcCt && minId >= 0 && maxId + 1 <= LocalMove.FrontierBitsMax)
+        if (tail != null) tailBack.length
+        else if (bcCt && minId >= 0 && maxId + 1 <= LocalMove.FrontierBitsMax)
           (maxId + 1).toInt
         else 0
 
@@ -356,12 +397,12 @@ object Leiden {
       // dense-gate init: (vt, comm0, bits0, present) for CsrSweep; None
       // when the gate fails or a warm start's community labels escape the
       // dense id space. The CSR kernel carries the MG-sketch scan natively
-      // (CsrSweep.halfSweep lowmem branch), so sketch passes ride it too.
+      // (CsrSweep.scanBlock), so sketch passes ride it too, tail included.
       // `present` marks the pass's REAL vertex ids (the vtot rows) so the
       // post-pass community count can run on the driver — id-space holes
       // keep their singleton labels and must not count.
       val denseInit: Option[(Array[Double], Array[Long], Array[Byte], Array[Boolean])] =
-        if (fBits > 0 && fBits <= LocalMove.CtBroadcastMax) timed("mark") {
+        if (fBits > 0 && (tail != null || fBits <= LocalMove.CtBroadcastMax)) timed("mark") {
           val n = fBits
           val vt = new Array[Double](n)
           val present = new Array[Boolean](n)
@@ -373,6 +414,7 @@ object Leiden {
             vi += 1
           }
           if (warmInit) {
+            loadWarm()
             // driver-side twin of the DataFrame tier's state0 joins: the
             // state rows are the vtot ids; comm = seed membership's comm
             // when present else the id (left join + coalesce); aff = id in
@@ -434,8 +476,9 @@ object Leiden {
       val (denseComm, refMembOpt, iters, lMoves, rMoves) = denseInit match {
         case Some((vt, comm0, bits0, _)) =>
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
-          // array pass per half-sweep, frontier folded into the same pass
-          val csr = timed("csrbuild") {
+          // array pass per half-sweep, frontier folded into the same pass.
+          // A tail pass holds its one block on the driver.
+          val csr = if (tail != null) null else timed("csrbuild") {
             // pass-0 edges are the src-hash input cache: every edge of a src
             // already lives in one partition, so the pack skips the range
             // shuffle and its sampling pre-job (srcComplete contract in
@@ -445,7 +488,10 @@ object Leiden {
             c.count() // materialize here so sweep timings are pure
             c
           }
-          val st = CsrSweep.init(csr, fBits, vt, comm0, bits0)
+          val st =
+            if (csr == null) CsrSweep.onDriver(
+              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0)
+            else CsrSweep.init(csr, fBits, vt, comm0, bits0)
           val (lIt, lMv) = timed(if (pass == firstPass) "firstpass" else "move") {
             CsrSweep.run(st, m, opts.resolution, tolerance,
               opts.maxIterations, minMoves = minMoves, sketchSlots = slots)
@@ -459,7 +505,7 @@ object Leiden {
           }
           val commArr = st.comm
           st.close()
-          csr.unpersist(blocking = false)
+          if (csr != null) csr.unpersist(blocking = false)
           (Some(commArr), None, lIt + rIt, lMv, rMv)
 
         case None =>
@@ -503,6 +549,9 @@ object Leiden {
       }
       timed("compose") {
         denseComm match {
+          case Some(arr) if tail != null =>
+            var t = 0
+            while (t < tailLeaf.length) { tailLeaf(t) = arr(tailLeaf(t)).toInt; t += 1 }
           case Some(arr) if leafArr != null =>
             var v = 0
             while (v < n0) { if (present0(v)) leafArr(v) = arr(leafArr(v).toInt); v += 1 }
@@ -550,50 +599,68 @@ object Leiden {
           // community) loses connectivity that synchronous supersteps —
           // unlike the reference's asynchronous CAS dynamics — cannot
           // recover. The scan keeps the caller's width (1 = Boyer-Moore).
-          val (coarse, coarseCached, coarseRows) = timed("aggregate") {
-            denseComm match {
-              case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
-                // cached+materialized in one pass (no checkpoint-then-cache
-                // double materialization); the cache assignment below skips
-                // its own .cache() for this branch. Its row count is the
-                // next pass's local-tail gate.
-                val (c, r) = Aggregate.coarsenArrayCached(edges, arr)
-                (c, true, r)
-              case _ =>
-                // sketch-aggregation with a dense-tier membership: build
-                // the (id, comm) rows straight from the driver arrays
-                // (vtot is already released at this point)
-                val rm = refMembOpt.getOrElse {
-                  val (ids, comms) = presentRows(denseComm.get, denseInit.get._4)
-                  idComm(spark, ids, comms, math.max(4, sc.defaultParallelism))
-                }
-                val c = PlanUtils.checkpointTruncated(
-                  if (slots > 0 && opts.sketchAggregation)
-                    Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
-                  else Aggregate.coarsen(edges, rm))
-                (c, false, -1L)
+          // A tail pass coarsens its driver rows by one sort, always
+          // exactly: the sort holds no per-thread hash state to bound.
+          if (tail != null) timed("aggregate") {
+            tail = Aggregate.coarsenRows(tail, denseComm.get)
+          } else {
+            val (coarse, coarseCached, coarseRows) = timed("aggregate") {
+              denseComm match {
+                case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
+                  // cached+materialized in one pass (no checkpoint-then-cache
+                  // double materialization); the cache assignment below skips
+                  // its own .cache() for this branch. Its row count is the
+                  // next pass's local-tail gate.
+                  val (c, r) = Aggregate.coarsenArrayCached(edges, arr)
+                  (c, true, r)
+                case _ =>
+                  // sketch-aggregation with a dense-tier membership: build
+                  // the (id, comm) rows straight from the driver arrays
+                  // (vtot is already released at this point)
+                  val rm = refMembOpt.getOrElse {
+                    val (ids, comms) = presentRows(denseComm.get, denseInit.get._4)
+                    idComm(spark, ids, comms, math.max(4, sc.defaultParallelism))
+                  }
+                  val c = PlanUtils.checkpointTruncated(
+                    if (slots > 0 && opts.sketchAggregation)
+                      Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
+                    else Aggregate.coarsen(edges, rm))
+                  (c, false, -1L)
+              }
             }
-          }
-          opts.snapshotDir.foreach { root =>
-            timed("snapshot") {
-              Snapshots.commit(root, "leiden", (pass - 1).toLong,
-                if (pass >= 2) Some((pass - 2).toLong) else None,
-                Map("edges" -> coarse, "leaf" -> (if (leafArr != null) leafFrame() else leaf)),
-                Map("pass" -> (pass - 1).toString, "vertices" -> cn.toString,
-                  "iterations" -> totalIters.toString,
-                  "tolerance" -> tolerance.toString))
+            opts.snapshotDir.foreach { root =>
+              timed("snapshot") {
+                Snapshots.commit(root, "leiden", (pass - 1).toLong,
+                  if (pass >= 2) Some((pass - 2).toLong) else None,
+                  Map("edges" -> coarse, "leaf" -> (if (leafArr != null) leafFrame() else leaf)),
+                  Map("pass" -> (pass - 1).toString, "vertices" -> cn.toString,
+                    "iterations" -> totalIters.toString,
+                    "tolerance" -> tolerance.toString))
+              }
             }
+            // inputEdges stays cached: the final modularity evaluation reads it
+            if (edges ne inputEdges) edges.unpersist()
+            edges = if (coarseCached) coarse else coarse.cache()
+            rows = coarseRows
           }
-          // inputEdges stays cached: the final modularity evaluation reads it
-          if (edges ne inputEdges) edges.unpersist()
-          edges = if (coarseCached) coarse else coarse.cache()
-          rows = coarseRows
           gn = cn
           tolerance /= opts.toleranceDrop
         }
       }
       refMembOpt.foreach(PlanUtils.release)
-      } // end distributed pass
+    }
+    if (tail != null) timed("compose") {
+      // the tail's leaf into the run's leaf, once
+      if (leafArr != null) {
+        for (v <- 0 until n0) if (present0(v)) leafArr(v) = tailBack(tailLeaf(leafArr(v).toInt))
+      } else {
+        val ts = tailLeaf.indices.filter(tailBack(_) >= 0).toArray
+        val prevLeaf = leaf
+        leaf = PlanUtils.checkpointTruncated(Aggregate.compose(leaf,
+          idComm(spark, ts.map(tailBack(_)), ts.map(t => tailBack(tailLeaf(t))), 4)))
+        PlanUtils.release(prevLeaf)
+      }
+      tail = null
     }
 
     val (membership, communities, q) =
@@ -615,10 +682,22 @@ object Leiden {
         }
         (leaf, communities, q)
       }
-    if (edges ne inputEdges) edges.unpersist()
+    if (edges != null && (edges ne inputEdges)) edges.unpersist()
     inputEdges.unpersist()
     phase = phase.updated("total", System.currentTimeMillis() - t0)
     LeidenResult(membership, totalIters, pass, q, communities, phase)
+  }
+
+  /** (id, vtot) of rows sorted by src: each src once, ascending, its rows'
+    * weights summed in row order.
+    */
+  private def rowWeights(rows: Packed): (Array[Long], Array[Double]) = {
+    val s = rows.ints(0); val w = rows.doubles(2)
+    val ids = s.distinct.map(_.toLong)
+    val vt = new Array[Double](ids.length)
+    var k = -1
+    for (i <- 0 until rows.size) { if (i == 0 || s(i) != s(i - 1)) k += 1; vt(k) += w(i) }
+    (ids, vt)
   }
 
   /** Distinct labels of the present ids; every label is below `arr.length`. */

@@ -51,14 +51,16 @@ case class LeidenOptions(
       */
     minMovedFraction: Double = 0.0,
     /** Once a pass's (coarsened) graph has at most this many edge rows,
-      * the remaining passes run in the driver-local tail solver
-      * (graft.leiden.LocalSolver) — a sequential twin of the distributed
-      * sweeps. Coarsening shrinks graphs geometrically, so the multi-level
-      * tail is a few thousand super-vertices for which per-superstep Spark
-      * job scheduling is pure fixed cost. 1M edge rows ≈ 24 MB on the
-      * driver — conservative next to broadcast-join thresholds, and the
-      * reference solves 100M-edge graphs on one node. 0 disables (tests of
-      * the distributed machinery use 0).
+      * it is collected to the driver once and the remaining passes run
+      * there: the same dense-tier steps and block scan
+      * (`CsrSweep.scanBlock`), called in-process on one driver-held block,
+      * with coarsening by one sort (`Aggregate.coarsenRows`). Coarsening
+      * shrinks graphs geometrically, so the multi-level tail is a few
+      * thousand super-vertices for which per-superstep Spark job
+      * scheduling is pure fixed cost. 1M edge rows ≈ 24 MB on the driver —
+      * conservative next to broadcast-join thresholds, and the reference
+      * solves 100M-edge graphs on one node. 0 disables (tests of the
+      * distributed machinery use 0).
       */
     localSolveEdgeThreshold: Long = 1000000,
     /** Directory for per-pass snapshots (checkpoint/resume). Empty = use

@@ -22,7 +22,7 @@ import org.apache.spark.sql.DataFrame
   * createDataFrame(rdd.rdd, schema) which would deserialize + re-encode
   * every row).
   */
-object PlanUtils {
+object PlanUtils extends org.apache.spark.internal.Logging {
 
   /** Materialize `df` once (local checkpoint) and return a DataFrame with
     * truncated lineage, fresh statistics, AND the materialized RDD's
@@ -103,8 +103,21 @@ object PlanUtils {
   def release(df: DataFrame): Unit = {
     def walk(r: org.apache.spark.rdd.RDD[_], depth: Int): Unit = {
       if (depth > 8) return
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false)
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {
+        if (r.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]])) {
+          // RDD.unpersist warns that a locally checkpointed RDD "cannot be
+          // recomputed after unpersisting". That is the point here: release
+          // only unpersists frames that are dead, so the warning is noise
+          // (hundreds per test run). Drop the blocks the way unpersist
+          // does, and log the event at debug level instead. The RDD keeps
+          // its storage level, so the persisted-RDD registry tells whether
+          // its blocks are already gone.
+          if (r.sparkContext.getPersistentRDDs.contains(r.id)) {
+            logDebug(s"release: unpersisting locally checkpointed RDD ${r.id}")
+            r.sparkContext.unpersistRDD(r.id, blocking = false)
+          }
+        } else r.unpersist(blocking = false)
+      }
       r.dependencies.foreach(d => walk(d.rdd, depth + 1))
     }
     df.queryExecution.analyzed.collectLeaves().foreach {

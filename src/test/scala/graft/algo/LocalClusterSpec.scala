@@ -5,19 +5,22 @@ import java.util.concurrent.TimeUnit
 
 import graft.Sessions
 import graft.graph.EdgeTable
+import graft.leiden.{Leiden, LeidenOptions, LeidenResult}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dense kernels' shared-array registry lives in the driver JVM only,
   * so on a `local-cluster` master, whose executors are JVMs of their own,
-  * PageRank and triangle counting must take their Catalyst plans. The run
+  * PageRank and triangle counting must take their Catalyst plans, and
+  * Leiden's dense tier ships its state as broadcast move deltas. Each run
   * needs a JVM of its own: one JVM holds one SparkContext, and the suites'
   * shared session is `local[4]`.
   */
 class LocalClusterSpec extends AnyFunSuite {
 
-  test("local-cluster[2,1,1024]: pagerank and triangles run on executor JVMs") {
+  /** Runs [[LocalClusterMain]] with `part` in a child JVM; its output. */
+  def child(part: String): String = {
     // executors launch from a Spark distribution's jars directory: the one
     // this JVM loaded Spark from
     val sparkJars = java.nio.file.Paths.get(
@@ -28,7 +31,7 @@ class LocalClusterSpec extends AnyFunSuite {
     val jvmFlags = ManagementFactory.getRuntimeMXBean.getInputArguments.toArray
       .map(_.toString).filterNot(_.startsWith("-Xmx")).toSeq
     val cmd = Seq(javaBin, "-Xmx1g") ++ jvmFlags ++
-      Seq("-cp", sys.props("java.class.path"), LocalClusterMain.getClass.getName.stripSuffix("$"))
+      Seq("-cp", sys.props("java.class.path"), LocalClusterMain.getClass.getName.stripSuffix("$"), part)
     // the standalone workers write under SPARK_HOME/work: point them at a
     // scratch home whose jars are the distribution's
     val home = java.nio.file.Files.createTempDirectory("graft-local-cluster")
@@ -45,7 +48,7 @@ class LocalClusterSpec extends AnyFunSuite {
       if (!finished) p.destroyForcibly().waitFor()
       val out = new String(java.nio.file.Files.readAllBytes(log.toPath), "UTF-8")
       assert(finished && p.exitValue() == 0, out.takeRight(4000))
-      assert(out.contains("RESULT triangles=2000 ranks=2000 uniform=true"), out.takeRight(4000))
+      out
     } finally {
       // walk does not follow the jars link, so only the link is deleted
       val paths = java.nio.file.Files.walk(home)
@@ -53,11 +56,24 @@ class LocalClusterSpec extends AnyFunSuite {
       finally paths.close()
     }
   }
+
+  test("local-cluster[2,1,1024]: pagerank and triangles run on executor JVMs") {
+    val out = child("algos")
+    assert(out.contains("RESULT triangles=2000 ranks=2000 uniform=true"), out.takeRight(4000))
+  }
+
+  test("local-cluster[2,1,1024]: Leiden's dense tier on executor JVMs equals the driver tail") {
+    val out = child("leiden")
+    assert(out.contains("RESULT leiden dense=true tail=true same=true disconnected=0,0"),
+      out.takeRight(4000))
+  }
 }
 
-/** Child-JVM body of [[LocalClusterSpec]]: a 2000-vertex ring with +1/+2
-  * chords (2000 triangles, 4-regular, so every PageRank rank is 1/2000) on
-  * two single-core executors.
+/** Child-JVM body of [[LocalClusterSpec]], on two single-core executors.
+  * "algos": a 2000-vertex ring with +1/+2 chords (2000 triangles,
+  * 4-regular, so every PageRank rank is 1/2000). "leiden": a planted
+  * 8-block graph, detected with the local tail off (the dense tier, whose
+  * executors replay move deltas) and wholly in the local tail.
   */
 object LocalClusterMain {
   def main(args: Array[String]): Unit = {
@@ -66,14 +82,30 @@ object LocalClusterMain {
       .config("spark.executor.memory", "1g")
       .config("spark.executor.extraClassPath", sys.props("java.class.path")), 2,
       "graft-local-cluster")
-    try {
-      val n = 2000L
-      val ring = (0L until n).flatMap(i => Seq((i, (i + 1) % n, 1.0), (i, (i + 2) % n, 1.0)))
-      val edges = EdgeTable.undirected(spark, ring).cache()
-      val tri = Triangles.globalCount(edges)
-      val ranks = PageRank.run(edges, localEdgeThreshold = 0).collect().map(_.getDouble(1))
-      val uniform = ranks.forall(r => math.abs(r - 1.0 / n) < 1e-9)
-      println(s"RESULT triangles=$tri ranks=${ranks.length} uniform=$uniform")
+    try args.headOption match {
+      case Some("algos") =>
+        val n = 2000L
+        val ring = (0L until n).flatMap(i => Seq((i, (i + 1) % n, 1.0), (i, (i + 2) % n, 1.0)))
+        val edges = EdgeTable.undirected(spark, ring).cache()
+        val tri = Triangles.globalCount(edges)
+        val ranks = PageRank.run(edges, localEdgeThreshold = 0).collect().map(_.getDouble(1))
+        val uniform = ranks.forall(r => math.abs(r - 1.0 / n) < 1e-9)
+        println(s"RESULT triangles=$tri ranks=${ranks.length} uniform=$uniform")
+      case Some("leiden") =>
+        val rnd = new scala.util.Random(5)
+        val planted = for (a <- 0 until 160; b <- a + 1 until 160
+                           if rnd.nextDouble() < (if (a / 20 == b / 20) 0.4 else 0.01))
+          yield (a.toLong, b.toLong, 1.0)
+        val g = EdgeTable.undirected(spark, planted).cache()
+        val dense = Leiden.detect(g, LeidenOptions(localSolveEdgeThreshold = 0))
+        val tail = Leiden.detect(g)
+        def memb(r: LeidenResult): Map[Long, Long] =
+          r.membership.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        println(s"RESULT leiden dense=${dense.phaseMillis.contains("csrbuild")} " +
+          s"tail=${!tail.phaseMillis.contains("csrbuild")} same=${memb(dense) == memb(tail)} " +
+          s"disconnected=${Leiden.disconnectedCommunities(g, dense.membership)}," +
+          s"${Leiden.disconnectedCommunities(g, tail.membership)}")
+      case other => throw new IllegalArgumentException(s"unknown part: $other")
     } finally spark.stop()
   }
 }

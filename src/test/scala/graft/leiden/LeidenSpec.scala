@@ -351,12 +351,11 @@ class LeidenSpec extends SparkSpec {
   }
 
   test("packed-CSR tier equals the column tier on NON-integral weights") {
-    // fractional weights fail CsrState.integral, putting every half-sweep
-    // on the executor-side memoized derive path (CsrSweep.derive) with a
-    // cloned membership per sweep — the branch the incremental driver
-    // totals do NOT cover. Parity with the column tier across move+refine
-    // proves the clone-per-sweep rule: a stale memo entry (in-place-mutated
-    // commI reused as a key) would surface as diverged totals here.
+    // fractional weights fail CsrState.integral, so every half-sweep
+    // rebuilds the community totals from scratch on the driver — the
+    // branch the incremental driver totals do NOT cover. Parity with the
+    // column tier across move+refine proves the rebuild: stale totals
+    // would surface as diverged moves here.
     val rnd = new Random(31)
     val es = Seq.newBuilder[(Long, Long, Double)]
     for (a <- 0 until 300; b <- a + 1 until 300)
@@ -373,7 +372,7 @@ class LeidenSpec extends SparkSpec {
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
     val csr = CsrSweep.build(edges, 300).cache()
     val stC = CsrSweep.singleton(csr, 300, vt)
-    assert(!stC.integral, "fixture must take the non-integral derive path")
+    assert(!stC.integral, "fixture must take the non-integral rebuild path")
     val (itMC, mvMC) = CsrSweep.run(stC, m, 1.0, 1e-9, 50)
     assert(itMC === itMA); assert(mvMC === mvMA)
     realIds.foreach(id => assert(stC.comm(id.toInt) === movedM(id), s"move id=$id"))
@@ -656,23 +655,55 @@ class LeidenSpec extends SparkSpec {
       val k = 6; val s = 5
       val cliques = (0 until k).flatMap(c => clique((c * s).toLong until (c * s + s).toLong))
       val bridge = (0 until k).map(c => ((c * s).toLong, (((c + 1) % k) * s + 1).toLong, 1.0))
-      EdgeTable.undirected(spark, cliques ++ bridge)
+      cliques ++ bridge
     }
     val sbm = {
       val rnd = new Random(42)
       val es = Seq.newBuilder[(Long, Long, Double)]
       for (a <- 0 until 120; b <- a + 1 until 120)
         if (rnd.nextDouble() < (if (a / 30 == b / 30) 0.3 else 0.01)) es += ((a.toLong, b.toLong, 1.0))
-      EdgeTable.undirected(spark, es.result())
+      es.result()
     }
-    for ((name, edges) <- Seq("ring" -> ring, "sbm" -> sbm)) {
-      val local = Leiden.detect(edges) // default threshold: whole run is local
-      val dist = Leiden.detect(edges, LeidenOptions(localSolveEdgeThreshold = 0))
-      assert(local.modularity === dist.modularity, s"$name: ${local.modularity} vs ${dist.modularity}")
-      assert(local.membership.except(dist.membership).count() === 0L, name)
-      assert(dist.membership.except(local.membership).count() === 0L, name)
-      assert(local.iterations === dist.iterations, s"$name iter parity")
-      assert(local.passes === dist.passes, s"$name pass parity")
+    // hub-heavy, as Cli.fixtureEdges: dst = floor(u^3 * src), so hubs see
+    // more than 64 neighbor communities and the MG-64 sketch evicts
+    val hubs = {
+      val rnd = new Random(9)
+      val es = scala.collection.mutable.LinkedHashSet[(Long, Long, Double)]()
+      for (s <- 1 until 600; _ <- 0 until 8) {
+        val d = (math.pow(rnd.nextDouble(), 3) * s).toLong
+        if (d != s) es += ((math.min(s, d), math.max(s, d), 1.0))
+      }
+      es.toSeq
+    }
+    // the tail scans with the sketch the options ask for: every width, with
+    // the sketch on at every pass size
+    val shift = LocalMove.FrontierBitsMax
+    for ((name, es) <- Seq("ring" -> ring, "sbm" -> sbm, "hubs" -> hubs); slots <- Seq(0, 64, 1)) {
+      val what = s"$name, sketchSlots $slots"
+      val opts = LeidenOptions(sketchSlots = slots, sketchExactCutoff = 0)
+      val edges = EdgeTable.undirected(spark, es)
+      val local = Leiden.detect(edges, opts) // default threshold: whole run is local
+      val dist = Leiden.detect(edges, opts.copy(localSolveEdgeThreshold = 0))
+      assert(local.phaseMillis.contains("localtail") && !local.phaseMillis.contains("csrbuild"),
+        s"$what: ${local.phaseMillis}")
+      assert(local.modularity === dist.modularity, s"$what: ${local.modularity} vs ${dist.modularity}")
+      assert(local.membership.except(dist.membership).count() === 0L, what)
+      assert(dist.membership.except(local.membership).count() === 0L, what)
+      assert(local.iterations === dist.iterations, s"$what iter parity")
+      assert(local.passes === dist.passes, s"$what pass parity")
+      // the same graph over ids out of the dense id space: a whole-tail
+      // run from a DataFrame leaf gives the same un-shifted partition
+      val shifted = Leiden.detect(EdgeTable.undirected(spark,
+        es.map { case (a, b, w) => (a + shift, b + shift, w) }), opts)
+      assert(shifted.phaseMillis.contains("localtail") && !shifted.phaseMillis.contains("csrbuild"),
+        s"$what shifted: ${shifted.phaseMillis}")
+      def memb(df: org.apache.spark.sql.DataFrame, by: Long): Map[Long, Long] =
+        df.collect().map(r => (r.getLong(0) - by) -> (r.getLong(1) - by)).toMap
+      assert(memb(shifted.membership, shift) === memb(dist.membership, 0L), s"$what shifted")
+      assert(shifted.iterations === dist.iterations, s"$what shifted iter parity")
+      assert(shifted.passes === dist.passes, s"$what shifted pass parity")
+      assert(math.abs(shifted.modularity - dist.modularity) < 1e-12,
+        s"$what shifted: ${shifted.modularity} vs ${dist.modularity}")
     }
   }
 
@@ -729,6 +760,19 @@ class LeidenSpec extends SparkSpec {
     assert(partition(inc.membership) === partition(scratch.membership))
     assert(approx(inc.modularity, scratch.modularity, 1e-9),
       s"inc=${inc.modularity} scratch=${scratch.modularity}")
+
+    // GraphStream's path: the default threshold runs both wholly in the
+    // local tail, which takes the fi/fm hooks itself
+    val scratchT = Leiden.detect(updated)
+    val incT = Leiden.detect(updated, prevMembership = Some(r0.membership), affected = Some(touched))
+    assert(incT.phaseMillis.contains("localtail") && !incT.phaseMillis.contains("csrbuild"),
+      incT.phaseMillis.toString)
+    assert(partition(scratchT.membership) === partition(scratch.membership))
+    assert(incT.membership.except(inc.membership).count() === 0L)
+    assert(inc.membership.except(incT.membership).count() === 0L)
+    assert(incT.iterations === inc.iterations)
+    assert(approx(incT.modularity, inc.modularity, 1e-12),
+      s"incT=${incT.modularity} inc=${inc.modularity}")
     edges.unpersist(); updated.unpersist()
   }
 
@@ -740,6 +784,13 @@ class LeidenSpec extends SparkSpec {
     val coarse = Aggregate.coarsen(edges, memb).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(coarse === Map((0L, 0L) -> 6.0, (1L, 1L) -> 6.0, (0L, 1L) -> 1.0, (1L, 0L) -> 1.0))
+    // the local tail's driver coarsen: the same rows, sorted by (src, dst)
+    val rows = graft.graph.Packed.collect(edges.select(col("src").cast("int"),
+      col("dst").cast("int"), col("w").cast("double")))
+    val driver = Aggregate.coarsenRows(rows, Array(0L, 0L, 0L, 1L, 1L, 1L))
+    assert(driver.ints(0).toSeq === Seq(0, 0, 1, 1) && driver.ints(1).toSeq === Seq(0, 1, 0, 1))
+    assert(driver.ints(0).indices.map(i => ((driver.ints(0)(i).toLong, driver.ints(1)(i).toLong),
+      driver.doubles(2)(i))).toMap === coarse)
   }
 
   test("compose maps leaf communities through the next level") {
