@@ -77,9 +77,9 @@ object BenchExtra {
         .agg(count(lit(1)).as("w"))))
     }
     if (want("leiden_agg_steps")) {
-      // decompose the pass-0 coarsen (leiden_phases "aggregate"): broadcast
-      // build vs agg-only (noop) vs cache+count, on the same cached input
-      // detect() builds
+      // the pass-0 coarsen (leiden_phases "aggregate") over the CSR blocks
+      // detect() builds from the same cached input: distributed (no rows
+      // returned) and under the default local-tail gate (rows returned)
       val perOrder = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
@@ -95,23 +95,17 @@ object BenchExtra {
       println(s"[benchextra] agg input edges=$ec")
       val mx = edges.agg(max(greatest(col("src"), col("dst")))).head.getLong(0).toInt
       val comm = Array.tabulate(mx + 1)(v => (v % 5000).toLong)
-      timed("agg: coarsenArrayCached 1st") {
-        graft.leiden.Aggregate.coarsenArrayCached(edges, comm)._1.unpersist(blocking = true); ()
+      val csr = graft.leiden.CsrSweep.build(edges, mx + 1, srcComplete = true).cache()
+      csr.count()
+      def coarsen(threshold: Long): Unit = {
+        val c = graft.leiden.Aggregate.coarsenBlocks(spark, csr, comm, threshold)
+        println(s"[benchextra] agg rows=${c.rows} held=${c.held != null}")
+        org.apache.spark.sql.graft.PlanUtils.release(c.edges)
       }
-      timed("agg: coarsenArrayCached 2nd") {
-        graft.leiden.Aggregate.coarsenArrayCached(edges, comm)._1.unpersist(blocking = true); ()
-      }
-      val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
-      val proj = edges.select(
-          org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("src")).as("src"),
-          org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("dst")).as("dst"),
-          col("w"))
-        .groupBy("src", "dst").agg(sum("w").as("w"))
-      timed("agg: agg-only noop")(noop(proj))
-      timed("agg: agg-only noop again")(noop(proj))
-      timed("agg: cache+count") {
-        val c = proj.cache(); c.count(); c.unpersist(blocking = true); ()
-      }
+      timed("agg: coarsenBlocks 1st")(coarsen(0L))
+      timed("agg: coarsenBlocks 2nd")(coarsen(0L))
+      timed("agg: coarsenBlocks to driver")(coarsen(1000000L))
+      csr.unpersist(blocking = false)
       edges.unpersist(blocking = false)
     }
     if (want("ngram_steps")) {

@@ -171,15 +171,18 @@ object PlanDump {
       val n = 1 + edges.agg(max(greatest(col("src"), col("dst")))).head.getLong(0).toInt
       val comm = Array.tabulate(n)(v => (v % 64).toLong)
       write(dir, "g_leiden_after.txt",
-        ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes — the " +
-          "membership joins are replaced by a broadcast array lookup projection " +
-          "(Aggregate.coarsenArrayCached); the only exchange left is the aggregation " +
-          "itself") -> explainStr {
-            val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
-            edges.select(
-              org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("src")).as("src"),
-              org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("dst")).as("dst"),
-              col("w")).groupBy("src", "dst").agg(sum("w").as("w"))
+        ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes — no SQL " +
+          "plan: one RDD job over the pass's CSR blocks (Aggregate.coarsenBlocks) " +
+          "maps each row through the broadcast membership, sums per block, and " +
+          "shuffles the partial rows once into hash slices. The slices are " +
+          "persisted and locally checkpointed by that job; their lineage after " +
+          "it (RDD.toDebugString) is") -> {
+            val csr = graft.leiden.CsrSweep.build(edges, n, srcComplete = true).cache()
+            val c = graft.leiden.Aggregate.coarsenBlocks(spark, csr, comm, 0L)
+            val lineage = c.slices.toDebugString
+            org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+            csr.unpersist()
+            lineage
           },
         ("g_leiden AFTER (2/3): leaf composition on a dense pass whose leaf is " +
           "still a DataFrame (after a DataFrame-tier pass 0) — join replaced by " +

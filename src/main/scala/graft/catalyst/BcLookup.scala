@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** O(1) indexed reads into a driver-built primitive array shipped to
   * executors as a torrent `Broadcast` — the carrier for a dense Leiden
-  * pass's community membership into the coarsen and compose plans
-  * (`Aggregate.coarsenArrayCached`, `Aggregate.composeArray`).
+  * pass's community membership into the leaf compose plan
+  * (`Aggregate.composeArray`, when the leaf is still a DataFrame).
   *
   * Why not a broadcast hash JOIN: resolving `comm(dst)` per edge row via a
   * BroadcastHashJoin probes a BytesToBytesMap — hashing plus one-or-more

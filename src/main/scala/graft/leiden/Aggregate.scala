@@ -1,8 +1,13 @@
 package graft.leiden
 
 import graft.graph.Packed
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Graph coarsening (`leidenAggregateOmpW`,
   * `/root/reference/inc/leiden.hxx:591-645`): collapse each refined
@@ -10,10 +15,16 @@ import org.apache.spark.sql.functions._
   * weights; intra-community weight becomes the super-vertex self loop
   * (SELF=true during aggregation, `/root/reference/inc/leiden.hxx:600-601`).
   *
-  * Two membership joins + one hash aggregation. The output shrinks
-  * geometrically per pass, so AQE coalesces partitions and later passes run
-  * on broadcast-sized data — the Spark analog of the reference's
-  * DiGraph->CSR switch (`/root/reference/inc/leiden.hxx:724-725`).
+  * Three forms, by where the pass membership lives:
+  *  - [[coarsen]]: a DataFrame-tier pass's membership frame, two membership
+  *    joins and one hash aggregation;
+  *  - [[coarsenBlocks]]: a dense pass's driver array, one RDD job over the
+  *    pass's cached CSR blocks into hash slices of the coarse graph, whose
+  *    rows come back with the job when the local tail takes them;
+  *  - [[coarsenRows]]: a local-tail pass, one sort on the driver.
+  * The output shrinks geometrically per pass, so later passes run on
+  * driver-sized data — the analog of the reference's DiGraph->CSR switch
+  * (`/root/reference/inc/leiden.hxx:724-725`).
   */
 object Aggregate {
 
@@ -65,43 +76,155 @@ object Aggregate {
         lit(0.0).as("w")).distinct())
   }
 
-  /** Dense-tier twin of [[coarsen]]: when the pass membership lives in a
-    * driver array (the CsrSweep state; a LocalMove pass keeps a DataFrame
-    * membership and takes [[coarsen]]), project src/dst through a
-    * broadcast array lookup instead of two membership joins — the result
-    * (comm(src), comm(dst), sum w) is identical (the joins were total on
-    * the pass's vertices), and the plan is scan → project → one hash
-    * aggregation: zero join exchanges, zero broadcast-relation builds.
+  /** A dense pass's coarse graph, from [[coarsenBlocks]]: its rows in
+    * `slices.getNumPartitions` disjoint hash slices of the packed
+    * `(src << 32) | dst` key, one (src int, dst int, w double) row per pair,
+    * ascending within a slice. `slices` is persisted at MEMORY_AND_DISK and
+    * locally checkpointed, so it never recomputes the passes before it.
     *
-    * Returns the coarse edges cached AND materialized, not checkpointed:
-    * the pass loop caches the coarse graph anyway (the next pass reads it
-    * repeatedly), so checkpoint-then-cache paid two materializations of the
-    * same rows. The cached plan still SERIALIZES the broadcast handle into
-    * every later task over the cache (the InMemoryTableScan keeps its child
-    * plan for recompute), so the broadcast is only UNPERSISTED here —
-    * executor copies drop, the handle stays valid (a recompute or late task
-    * re-fetches it from the driver), and the array is GC-eligible once
-    * detect() releases the cache at pass end.
-    *
-    * @return the coarse edges and their row count — the count of the
-    *         materializing job, which detect's local-tail gate reads
-    *         instead of counting again
+    * @param sliceRows each slice's exact row count
+    * @param held every row on the driver (the slices one after another), or
+    *             null
+    * @param edges the rows as a (src long, dst long, w double) frame over
+    *              `slices` (no job)
     */
-  def coarsenArrayCached(edges: DataFrame, comm: Array[Long]): (DataFrame, Long) = {
-    val spark = edges.sparkSession
-    val bcRef = new graft.catalyst.BcLongs(spark.sparkContext.broadcast(comm))
-    val out = edges.select(
-        org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("src")).as("src"),
-        org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("dst")).as("dst"),
-        col("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .cache()
-    val rows = out.count()
-    bcRef.bc.unpersist(blocking = false)
-    (out, rows)
+  final class Coarse(val slices: RDD[Packed], val sliceRows: Array[Long], val held: Packed,
+                     val edges: DataFrame) {
+    def rows: Long = sliceRows.sum
   }
 
-  /** [[coarsenArrayCached]] for rows the driver holds (the local tail of
+  private val CoarseSchema = StructType(Seq(StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false), StructField("w", DoubleType, nullable = false)))
+
+  /** [[coarsen]] for a dense pass, in one Spark job over the pass's cached
+    * CSR blocks: the pass membership is a driver array indexed by pass
+    * vertex id (the CsrSweep state), broadcast once as `Int`s.
+    *
+    * Each block maps its rows to packed `(comm(src) << 32) | comm(dst)` keys
+    * and sums duplicates by one sort ([[sumPairs]]), in CSR row order. Its
+    * partial rows are shuffled by key hash into P = defaultParallelism
+    * slices. A slice's reduce task sums each pair's partials in ascending
+    * block index, so the weights are the same doubles on every run over
+    * the same blocks; on integral weights they equal [[coarsen]]'s. The
+    * job returns every slice's row count, and the slice's rows too when it
+    * has at most ⌈threshold / P⌉ of them: the driver receives at most
+    * about `threshold` rows.
+    *
+    * The slices are marked for `localCheckpoint` before the job, so the
+    * job materializes them at MEMORY_AND_DISK with the lineage cut: an
+    * evicted slice spills instead of recomputing every earlier pass, and
+    * the broadcast is destroyed once the job ends. The caller drops the
+    * slices with `PlanUtils.release(edges)`.
+    *
+    * @param threshold the local tail's gate in rows; 0 returns no rows
+    * @return `held` is set when the rows number at most `threshold` and
+    *         every slice came back; otherwise a caller that wants the rows
+    *         collects `edges` (one job over the persisted slices)
+    */
+  def coarsenBlocks(spark: SparkSession, csr: RDD[CsrSweep.CsrBlock], comm: Array[Long],
+                    threshold: Long): Coarse = {
+    val sc = csr.sparkContext
+    val p = sc.defaultParallelism
+    val bc = sc.broadcast(comm.map(_.toInt))
+    val partials = csr.mapPartitionsWithIndex { (b, blocks) =>
+      blocks.flatMap(blk => sliced(b, blockKeys(blk, bc.value), blockWeights(blk), p))
+    }
+    val slices = partials.partitionBy(new HashPartitioner(p)).mapPartitions { parts =>
+      val byBlock = parts.map(_._2).toArray.sortBy(_._1)
+      val (keys, ws, k) = sumKeys(concat(byBlock.map(_._2)), concat(byBlock.map(_._3)))
+      Iterator.single(unpack(keys, ws, k))
+    }
+    slices.localCheckpoint()
+    val share = if (threshold > 0) (threshold + p - 1) / p else -1L
+    val got =
+      try slices.map(s => (s.size.toLong, if (s.size <= share) s else null)).collect()
+      finally bc.destroy()
+    val sliceRows = got.map(_._1)
+    val held =
+      if (threshold > 0 && sliceRows.sum <= threshold && got.forall(_._2 != null)) {
+        val ss = got.map(_._2)
+        Packed.of(ss.map(_.size).sum, concat(ss.map(_.ints(0))), concat(ss.map(_.ints(1))),
+          concat(ss.map(_.doubles(2))))
+      } else null
+    val unsafeRows = slices.mapPartitions { it =>
+      val wr = new UnsafeRowWriter(3)
+      it.flatMap { s =>
+        val src = s.ints(0); val dst = s.ints(1); val w = s.doubles(2)
+        Iterator.tabulate(s.size) { i =>
+          wr.reset()
+          wr.write(0, src(i).toLong); wr.write(1, dst(i).toLong); wr.write(2, w(i))
+          wr.getRow: InternalRow
+        }
+      }
+    }
+    new Coarse(slices, sliceRows, held,
+      org.apache.spark.sql.graft.PlanUtils.frameOf(spark, unsafeRows, CoarseSchema))
+  }
+
+  /** Block `b`'s partial coarse rows, one per pair of `keys` (weights
+    * summed in row order), as (slice, (b, keys, weights)) chunks, one per
+    * non-empty slice of `p`; a slice is a multiplicative hash of the key.
+    */
+  private def sliced(b: Int, rowKeys: Array[Long], rowW: Array[Double], p: Int)
+      : Iterator[(Int, (Int, Array[Long], Array[Double]))] = {
+    val (keys, ws, k) = sumKeys(rowKeys, rowW)
+    val slice = new Array[Int](k)
+    val start = new Array[Int](p + 1)
+    var i = 0
+    while (i < k) {
+      slice(i) = ((keys(i) * 0x9E3779B97F4A7C15L >>> 33) % p).toInt
+      start(slice(i) + 1) += 1
+      i += 1
+    }
+    var sl = 0
+    while (sl < p) { start(sl + 1) += start(sl); sl += 1 }
+    val at = start.clone()
+    val sk = new Array[Long](k); val sw = new Array[Double](k)
+    i = 0
+    while (i < k) { val j = at(slice(i)); sk(j) = keys(i); sw(j) = ws(i); at(slice(i)) = j + 1; i += 1 }
+    (0 until p).iterator.filter(s => start(s + 1) > start(s)).map { s =>
+      (s, (b, java.util.Arrays.copyOfRange(sk, start(s), start(s + 1)),
+        java.util.Arrays.copyOfRange(sw, start(s), start(s + 1))))
+    }
+  }
+
+  /** A block's rows as packed `(comm(src) << 32) | comm(dst)` keys, in CSR
+    * row order; gap-packed unit blocks decode through `CsrSweep.decodeGaps`.
+    */
+  private def blockKeys(blk: CsrSweep.CsrBlock, comm: Array[Int]): Array[Long] = {
+    val srcs = blk.srcs; val off = blk.off
+    val keys = new Array[Long](off(srcs.length))
+    var buf = if (blk.dst == null) new Array[Int](1 << 10) else null
+    var k = 0
+    while (k < srcs.length) {
+      val cs = comm(srcs(k)).toLong << 32
+      val e0 = off(k); val len = off(k + 1) - e0
+      var i = 0
+      if (blk.dst != null) {
+        while (i < len) { keys(e0 + i) = cs | comm(blk.dst(e0 + i)); i += 1 }
+      } else {
+        if (buf.length < len) buf = new Array[Int](math.max(len, buf.length * 2))
+        CsrSweep.decodeGaps(blk, k, len, buf)
+        while (i < len) { keys(e0 + i) = cs | comm(buf(i)); i += 1 }
+      }
+      k += 1
+    }
+    keys
+  }
+
+  /** A block's row weights in CSR row order (a unit block's are all 1.0). */
+  private def blockWeights(blk: CsrSweep.CsrBlock): Array[Double] =
+    if (blk.w != null) blk.w else Array.fill(blk.off(blk.srcs.length))(1.0)
+
+  /** The arrays one after another. */
+  private def concat[T: scala.reflect.ClassTag](parts: Array[Array[T]]): Array[T] = {
+    val out = new Array[T](parts.map(_.length).sum)
+    var off = 0
+    parts.foreach { a => System.arraycopy(a, 0, out, off, a.length); off += a.length }
+    out
+  }
+
+  /** [[coarsenBlocks]] for rows the driver holds (the local tail of
     * `Leiden.detect`): `rows` are (src int, dst int, w double) and `comm`
     * maps a vertex to its community. Exact, like the distributed coarsen.
     */
@@ -116,6 +239,14 @@ object Aggregate {
     * order. Returns (src int, dst int, w double) rows.
     */
   def sumPairs(keys: Array[Long], w: Array[Double]): Packed = {
+    val (pairs, ws, k) = sumKeys(keys, w)
+    unpack(pairs, ws, k)
+  }
+
+  /** [[sumPairs]] as (pair keys, weights, pair count k): the first k
+    * entries of both arrays are the pairs, ascending.
+    */
+  private def sumKeys(keys: Array[Long], w: Array[Double]): (Array[Long], Array[Double], Int) = {
     val pairs = keys.clone()
     java.util.Arrays.sort(pairs)
     var k = 0
@@ -127,8 +258,13 @@ object Aggregate {
     val ws = new Array[Double](k)
     i = 0
     while (i < keys.length) { ws(java.util.Arrays.binarySearch(pairs, 0, k, keys(i))) += w(i); i += 1 }
+    (pairs, ws, k)
+  }
+
+  /** The first k packed pairs as (src int, dst int, w double) rows. */
+  private def unpack(pairs: Array[Long], ws: Array[Double], k: Int): Packed = {
     val src = new Array[Int](k); val dst = new Array[Int](k)
-    i = 0
+    var i = 0
     while (i < k) { src(i) = (pairs(i) >>> 32).toInt; dst(i) = pairs(i).toInt; i += 1 }
     Packed.of(k, src, dst, ws)
   }

@@ -240,7 +240,7 @@ object CsrSweep {
     * are the scaling ceiling, not instructions; the ~5 ALU ops/edge decode
     * hides under the memory wait it removes). Web graphs cluster their
     * links, so real gaps (and widths) shrink further. Returns
-    * (packed, widths, bitOff); decode is inlined in [[scanBlock]].
+    * (packed, widths, bitOff); [[decodeGaps]] reads it back.
     */
   private def packGaps(srcs: Array[Int], off: Array[Int], dstA: Array[Int])
       : (Array[Long], Array[Byte], Array[Long]) = {
@@ -282,6 +282,30 @@ object CsrSweep {
       k += 1
     }
     (packed, widths, bitOff)
+  }
+
+  /** Decode src `k`'s gap-packed adjacency ([[packGaps]]) of `blk` — `len`
+    * dsts, ascending — into `buf(0 until len)`. The one decode: the scan
+    * ([[scanBlock]]) and the coarsen (`Aggregate.coarsenBlocks`) read
+    * packed blocks through it.
+    */
+  @inline private[leiden] def decodeGaps(blk: CsrBlock, k: Int, len: Int, buf: Array[Int]): Unit = {
+    val packed = blk.packed
+    val wd = blk.widths(k).toInt
+    val mask = (1L << wd) - 1
+    var bp = blk.bitOff(k)
+    var cur = -1
+    var i = 0
+    while (i < len) {
+      val wIdx = (bp >>> 6).toInt
+      val sh = (bp & 63).toInt
+      var bits = packed(wIdx) >>> sh
+      if (sh + wd > 64) bits |= packed(wIdx + 1) << (64 - sh)
+      cur += (bits & mask).toInt
+      buf(i) = cur
+      i += 1
+      bp += wd
+    }
   }
 
   /** Gap-packed unit blocks (see [[packGaps]]); var so parity specs can
@@ -1049,7 +1073,7 @@ object CsrSweep {
     val sws = if (slots > 0) new Array[Double](slots) else null
     val srcs = blk.srcs; val off = blk.off; val dst = blk.dst
     val w = blk.w // null => all 1.0 (unit-weight block, 4 B/edge)
-    val packed = blk.packed; val pWidths = blk.widths; val pBitOff = blk.bitOff
+    val packed = blk.packed
     // gap-decode scratch (packed blocks): one src's adjacency, grown to
     // the block's max degree on demand
     var dbuf = if (packed != null) new Array[Int](1 << 10) else null
@@ -1075,9 +1099,8 @@ object CsrSweep {
           val e0 = off(k); val e1 = off(k + 1)
           // inline frontier test: live seed mark on s itself, else an
           // edge into acc (self-loops count — symmetric table). Packed
-          // blocks fold the test into the single decode pass — the
-          // unpacked early exit saves nothing there because a miss
-          // must scan (decode) the whole adjacency either way.
+          // blocks decode the adjacency first: the scan below reads the
+          // decoded stream, and a miss must decode all of it anyway.
           var front = seedL != null && bit(seedL, s)
           var adj = dst
           var a0 = e0; var a1 = e1
@@ -1090,22 +1113,9 @@ object CsrSweep {
             val len = e1 - e0
             if (dbuf.length < len)
               dbuf = new Array[Int](math.max(len, dbuf.length * 2))
-            val wd = pWidths(k).toInt
-            val mask = (1L << wd) - 1
-            var bp = pBitOff(k)
-            var cur = -1
+            decodeGaps(blk, k, len, dbuf)
             var i2 = 0
-            while (i2 < len) {
-              val wIdx = (bp >>> 6).toInt
-              val sh = (bp & 63).toInt
-              var bits = packed(wIdx) >>> sh
-              if (sh + wd > 64) bits |= packed(wIdx + 1) << (64 - sh)
-              cur += (bits & mask).toInt
-              dbuf(i2) = cur
-              if (!front && bit(accL, cur)) front = true
-              i2 += 1
-              bp += wd
-            }
+            while (!front && i2 < len) { if (bit(accL, dbuf(i2))) front = true; i2 += 1 }
             adj = dbuf; a0 = 0; a1 = len
           }
           if (front) {

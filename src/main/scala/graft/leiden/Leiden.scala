@@ -34,10 +34,16 @@ import org.apache.spark.sql.graft.PlanUtils
   * membership is built from it once at the end. Otherwise it is a
   * checkpointed (id, comm) DataFrame composed by joins.
   *
+  * A dense pass coarsens its cached CSR blocks in one Spark job
+  * (`Aggregate.coarsenBlocks`) into disjoint hash slices of the coarse
+  * graph, persisted and locally checkpointed; the job also returns the
+  * slices' rows when they fit the local tail's gate.
+  *
   * Once a pass graph has at most `LeidenOptions.localSolveEdgeThreshold`
-  * rows, it is collected once and the remaining passes run the same steps
-  * on the driver: the CSR block scan in-process (`CsrSweep.onDriver`) and
-  * coarsening by one sort (`Aggregate.coarsenRows`).
+  * rows, the remaining passes run the same steps on the driver: the CSR
+  * block scan in-process (`CsrSweep.onDriver`) and coarsening by one sort
+  * (`Aggregate.coarsenRows`). The rows arrive once: with the coarsen job's
+  * result after a dense pass, else by one collect.
   *
   * With a snapshot directory, every pass ends in a durable snapshot (coarse
   * edges + composed leaf membership + metrics + per-partition lineage) via
@@ -116,6 +122,13 @@ object Leiden {
     var tail: Packed = null
     var tailBack: Array[Long] = null
     var tailLeaf: Array[Int] = null
+    // the pass graph's rows when its coarsen job already returned them to
+    // the driver (src int, dst int, w double), else null
+    var held: Packed = null
+    // the local tail's gate in rows, 0 = off. Snapshot-enabled runs stay
+    // distributed: the per-pass durability contract (resume from the last
+    // committed pass) outranks the tail's saving.
+    val tailRows = if (opts.snapshotDir.isEmpty) math.max(opts.localSolveEdgeThreshold, 0L) else 0L
     // times a phase and tags its Spark jobs with its name (PhaseProperty);
     // every phase of a tail pass counts as the local tail's
     def timed[T](name: String)(f: => T): T = {
@@ -149,6 +162,12 @@ object Leiden {
     val inputEdges = edges0
       .repartition(sc.defaultParallelism, col("src")).cache()
     var edges = inputEdges
+    // drops the pass graph's cache or persisted slices; inputEdges stays
+    // cached for the final modularity
+    def dropEdges(): Unit = if (edges != null && (edges ne inputEdges)) {
+      edges.unpersist()
+      PlanUtils.release(edges)
+    }
     // One job for the total weight, the row count (pass 0's local-tail
     // gate) and the src id bounds (pass 0's dense gate).
     val (twoM, rows0, minSrc, maxSrc) = timed("input") {
@@ -230,7 +249,7 @@ object Leiden {
 
     // Resume from the latest committed pass snapshot, if any.
     for (root <- opts.snapshotDir; last <- Snapshots.committed(root, "leiden").lastOption) {
-      if (edges ne inputEdges) edges.unpersist()
+      dropEdges()
       edges = Snapshots.read(spark, root, "leiden", last, "edges").cache()
       if (leaf != null) PlanUtils.release(leaf)
       leaf = Snapshots.read(spark, root, "leiden", last, "leaf")
@@ -265,10 +284,14 @@ object Leiden {
     }
     val firstPass = pass
 
-    // Collect the pass graph into the local tail (`tail` above). Its ids
-    // are the endpoints plus, on a warm first pass, the seed labels.
+    // Move the pass graph into the local tail (`tail` above): the rows its
+    // coarsen job returned, else one collect. Its ids are the endpoints
+    // plus, on a warm first pass, the seed labels.
     def enterTail(): Unit = {
-      val (sA, dA, wA) = EdgeTable.collectPacked(edges)
+      val (sA, dA, wA) =
+        if (held == null) EdgeTable.collectPacked(edges)
+        else (held.ints(0).map(_.toLong), held.ints(1).map(_.toLong), held.doubles(2))
+      held = null
       val r = sA.length
       val warm = pass == firstPass && !resumed &&
         (prevMembership.isDefined || affected.isDefined)
@@ -316,20 +339,17 @@ object Leiden {
         }.toMap
         warmAff = warmAff.map(_.iterator.map(rank).filter(_ >= 0).map(_.toLong).toSet)
       }
-      if (edges ne inputEdges) edges.unpersist()
+      dropEdges()
       edges = null
     }
 
     while (!done && pass < opts.maxPasses) {
-      // Local tail: once the pass graph has at most
-      // localSolveEdgeThreshold rows, per-half-sweep Spark jobs are pure
-      // fixed cost, so the rows are collected once and every remaining
-      // pass runs the steps below on the driver, on one driver-held CSR
-      // block, coarsening by one sort. Snapshot-enabled runs stay
-      // distributed: the per-pass durability contract (resume from the
-      // last committed pass) outranks the tail's saving.
-      if (tail == null && opts.localSolveEdgeThreshold > 0 && opts.snapshotDir.isEmpty &&
-        (if (rows >= 0) rows else edges.count()) <= opts.localSolveEdgeThreshold)
+      // Local tail: once the pass graph has at most `tailRows` rows,
+      // per-half-sweep Spark jobs are pure fixed cost, so the rows move to
+      // the driver once and every remaining pass runs the steps below on
+      // one driver-held CSR block, coarsening by one sort.
+      if (tail == null && tailRows > 0 &&
+        (if (rows >= 0) rows else edges.count()) <= tailRows)
         timed("localtail") { enterTail() }
 
       // lazy per-vertex weights: the dense tier consumes them as one packed
@@ -469,11 +489,12 @@ object Leiden {
         }
 
       // the dense tier returns the final membership as the DRIVER ARRAY itself
-      // (denseComm): the pass tail below then composes, counts and coarsens
-      // through broadcast array lookups — no per-pass materialize job, no
+      // (denseComm): the pass tail below then composes and counts on the
+      // driver and coarsens the pass's CSR blocks (passCsr, cached until
+      // then) through the broadcast array — no per-pass materialize job, no
       // compose join, no membership joins in the coarsen, no distinct-count
       // job. The DataFrame tier keeps its refMemb DataFrame unchanged.
-      val (denseComm, refMembOpt, iters, lMoves, rMoves) = denseInit match {
+      val (denseComm, refMembOpt, iters, lMoves, rMoves, passCsr) = denseInit match {
         case Some((vt, comm0, bits0, _)) =>
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
           // array pass per half-sweep, frontier folded into the same pass.
@@ -505,8 +526,7 @@ object Leiden {
           }
           val commArr = st.comm
           st.close()
-          if (csr != null) csr.unpersist(blocking = false)
-          (Some(commArr), None, lIt + rIt, lMv, rMv)
+          (Some(commArr), None, lIt + rIt, lMv, rMv, csr)
 
         case None =>
           val edgesByDst =
@@ -532,7 +552,7 @@ object Leiden {
           val rm = PlanUtils.checkpointTruncated(refined.select("id", "comm"))
           PlanUtils.release(bound)
           if (refined ne rm) PlanUtils.release(refined)
-          (None, Some(rm), lIters + rIters, lMoves, rMoves)
+          (None, Some(rm), lIters + rIters, lMoves, rMoves, null)
       }
       totalIters += math.max(iters, 1)
       if (vtot != null) {
@@ -557,8 +577,7 @@ object Leiden {
             while (v < n0) { if (present0(v)) leafArr(v) = arr(leafArr(v).toInt); v += 1 }
           case Some(arr) if leaf == null =>
             // pass 0 over a dense id space: the leaf is this pass's
-            // membership (a copy: `arr` stays behind the coarse cache's
-            // broadcast, and the leaf is composed in place)
+            // membership (a copy: the leaf is composed in place)
             val (vt, _, _, present) = denseInit.get
             leafArr = arr.clone(); present0 = present; vt0 = vt
           case Some(arr) =>
@@ -607,12 +626,13 @@ object Leiden {
             val (coarse, coarseCached, coarseRows) = timed("aggregate") {
               denseComm match {
                 case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
-                  // cached+materialized in one pass (no checkpoint-then-cache
-                  // double materialization); the cache assignment below skips
-                  // its own .cache() for this branch. Its row count is the
-                  // next pass's local-tail gate.
-                  val (c, r) = Aggregate.coarsenArrayCached(edges, arr)
-                  (c, true, r)
+                  // one job over the pass's CSR blocks into persisted,
+                  // checkpointed slices; its row count is the next pass's
+                  // local-tail gate, and a graph under the gate comes back
+                  // with it (`held`), so the tail collects nothing
+                  val c = Aggregate.coarsenBlocks(spark, passCsr, arr, tailRows)
+                  held = c.held
+                  (c.edges, true, c.rows)
                 case _ =>
                   // sketch-aggregation with a dense-tier membership: build
                   // the (id, comm) rows straight from the driver arrays
@@ -638,8 +658,7 @@ object Leiden {
                     "tolerance" -> tolerance.toString))
               }
             }
-            // inputEdges stays cached: the final modularity evaluation reads it
-            if (edges ne inputEdges) edges.unpersist()
+            dropEdges()
             edges = if (coarseCached) coarse else coarse.cache()
             rows = coarseRows
           }
@@ -648,6 +667,7 @@ object Leiden {
         }
       }
       refMembOpt.foreach(PlanUtils.release)
+      if (passCsr != null) passCsr.unpersist(blocking = false)
     }
     if (tail != null) timed("compose") {
       // the tail's leaf into the run's leaf, once
@@ -682,7 +702,7 @@ object Leiden {
         }
         (leaf, communities, q)
       }
-    if (edges != null && (edges ne inputEdges)) edges.unpersist()
+    dropEdges()
     inputEdges.unpersist()
     phase = phase.updated("total", System.currentTimeMillis() - t0)
     LeidenResult(membership, totalIters, pass, q, communities, phase)

@@ -86,6 +86,15 @@ object PlanUtils extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** `rows` as a DataFrame of `schema`, with no conversion of the rows and
+    * no job: one scan of the RDD, which the frame's plans read as it is.
+    */
+  def frameOf(spark: org.apache.spark.sql.SparkSession,
+              rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+              schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** Block until the async listener bus has delivered all posted events —
     * required before reading metrics accumulated by a SparkListener
     * (task-end events post asynchronously). private[spark] on SparkContext,

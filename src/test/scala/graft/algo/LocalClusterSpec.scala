@@ -64,7 +64,7 @@ class LocalClusterSpec extends AnyFunSuite {
 
   test("local-cluster[2,1,1024]: Leiden's dense tier on executor JVMs equals the driver tail") {
     val out = child("leiden")
-    assert(out.contains("RESULT leiden dense=true tail=true same=true disconnected=0,0"),
+    assert(out.contains("RESULT leiden dense=true tail=true mixed=true same=true disconnected=0,0,0"),
       out.takeRight(4000))
   }
 }
@@ -73,7 +73,9 @@ class LocalClusterSpec extends AnyFunSuite {
   * "algos": a 2000-vertex ring with +1/+2 chords (2000 triangles,
   * 4-regular, so every PageRank rank is 1/2000). "leiden": a planted
   * 8-block graph, detected with the local tail off (the dense tier, whose
-  * executors replay move deltas) and wholly in the local tail.
+  * executors replay move deltas), wholly in the local tail, and with a
+  * dense pass 0 whose coarsen (broadcast and shuffle across the executor
+  * JVMs) hands the rest to the tail.
   */
 object LocalClusterMain {
   def main(args: Array[String]): Unit = {
@@ -99,12 +101,15 @@ object LocalClusterMain {
         val g = EdgeTable.undirected(spark, planted).cache()
         val dense = Leiden.detect(g, LeidenOptions(localSolveEdgeThreshold = 0))
         val tail = Leiden.detect(g)
+        val mixed = Leiden.detect(g, LeidenOptions(localSolveEdgeThreshold = g.count() - 1))
         def memb(r: LeidenResult): Map[Long, Long] =
           r.membership.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        val same = memb(dense) == memb(tail) && memb(mixed) == memb(dense)
         println(s"RESULT leiden dense=${dense.phaseMillis.contains("csrbuild")} " +
-          s"tail=${!tail.phaseMillis.contains("csrbuild")} same=${memb(dense) == memb(tail)} " +
-          s"disconnected=${Leiden.disconnectedCommunities(g, dense.membership)}," +
-          s"${Leiden.disconnectedCommunities(g, tail.membership)}")
+          s"tail=${!tail.phaseMillis.contains("csrbuild")} " +
+          s"mixed=${mixed.phaseMillis.contains("csrbuild") && mixed.phaseMillis.contains("localtail")} " +
+          s"same=$same disconnected=" +
+          Seq(dense, tail, mixed).map(r => Leiden.disconnectedCommunities(g, r.membership)).mkString(","))
       case other => throw new IllegalArgumentException(s"unknown part: $other")
     } finally spark.stop()
   }

@@ -537,6 +537,10 @@ class LeidenSpec extends SparkSpec {
     assert(!byPhase.contains("compose"), byPhase.toString)
     assert(!byPhase.contains("finalcount"), byPhase.toString)
     assert(byPhase.get("modularity") === Some(1), byPhase.toString)
+    // the dense pass coarsens in one job, whose result carries the coarse
+    // rows into the tail (a second job only if a slice stayed behind)
+    assert(byPhase.get("aggregate") === Some(1), byPhase.toString)
+    assert(byPhase.getOrElse("localtail", 0) <= 1, byPhase.toString)
     edges.unpersist()
   }
 
@@ -791,6 +795,112 @@ class LeidenSpec extends SparkSpec {
     assert(driver.ints(0).toSeq === Seq(0, 0, 1, 1) && driver.ints(1).toSeq === Seq(0, 1, 0, 1))
     assert(driver.ints(0).indices.map(i => ((driver.ints(0)(i).toLong, driver.ints(1)(i).toLong),
       driver.doubles(2)(i))).toMap === coarse)
+  }
+
+  /** (src, dst) -> w of (src, dst, w) rows. */
+  def pairMap(rows: (Array[Long], Array[Long], Array[Double])): Map[(Long, Long), Double] =
+    rows._1.indices.map(i => (rows._1(i), rows._2(i)) -> rows._3(i)).toMap
+
+  def heldMap(p: graft.graph.Packed): Map[(Long, Long), Double] =
+    pairMap((p.ints(0).map(_.toLong), p.ints(1).map(_.toLong), p.doubles(2)))
+
+  def bitsOf(m: Map[(Long, Long), Double]): Map[(Long, Long), Long] =
+    m.map { case (k, w) => k -> java.lang.Double.doubleToRawLongBits(w) }
+
+  test("aggregate.coarsenBlocks equals the coarsen join on unit, weighted, hash and range blocks") {
+    val spark2 = spark
+    import spark2.implicits._
+    val n = 300
+    // blocks of 9 with every 11th vertex a singleton; ids stay below n
+    val comm = Array.tabulate(n)(v => if (v % 11 == 0) v.toLong else (v / 9 * 9).toLong)
+    val memb = comm.indices.map(v => (v.toLong, comm(v))).toDF("id", "comm")
+    def withLoops(es: Seq[(Long, Long, Double)], w: Double) =
+      es ++ (0 until n by 13).map(v => (v.toLong, v.toLong, w))
+    for ((name, es, integral) <- Seq(
+        ("unit", withLoops(blocks(n, 25, 61, (_, _) => 1.0), 1.0), true),
+        ("weighted", withLoops(blocks(n, 25, 62, (a, b) => 1.0 + (a + b) % 3), 2.0), true),
+        ("non-dyadic", withLoops(blocks(n, 25, 63, (a, b) => 0.1 + (a * 13 + b) % 7 * 0.3), 0.7),
+          false))) {
+      val edges = EdgeTable.undirected(spark, es).repartition(4, col("src")).cache()
+      val oracle = Aggregate.coarsen(edges, memb).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(oracle.keys.exists { case (a, b) => a == b }, s"$name: fixture must keep self loops")
+      for ((kind, csr) <- Seq(
+          "hash" -> CsrSweep.build(edges, n, srcComplete = true).cache(),
+          "range" -> CsrSweep.build(edges, n).cache())) {
+        val what = s"$name, $kind blocks"
+        val blks = csr.collect()
+        assert(blks.length > 1, what)
+        assert(blks.forall(b => (b.dst == null) == (name == "unit")), s"$what: block layout")
+        def run(): Map[(Long, Long), Double] = {
+          val c = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
+          assert(c.held == null && c.rows === oracle.size.toLong, what)
+          val got = pairMap(EdgeTable.collectPacked(c.edges))
+          org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+          got
+        }
+        val got = run()
+        assert(got.keySet === oracle.keySet, what)
+        if (integral) assert(bitsOf(got) === bitsOf(oracle), what)
+        else {
+          got.foreach { case (k, w) => assert(math.abs(w - oracle(k)) <= 1e-12, s"$what: $k") }
+          assert(bitsOf(run()) === bitsOf(got), s"$what: a second run over the same blocks")
+        }
+        if (kind == "hash" && name == "weighted") {
+          // the slice rule: every slice back (1 job); one slice over its
+          // share of a gate the total fits (a second job collects); the
+          // gate one row below the total (stays distributed)
+          val c0 = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
+          org.apache.spark.sql.graft.PlanUtils.release(c0.edges)
+          val p = c0.sliceRows.length.toLong
+          val (total, most) = (c0.rows, c0.sliceRows.max)
+          assert(p === spark.sparkContext.defaultParallelism.toLong, what)
+          assert((total + p - 1) / p < most, s"$what: fixture must leave a slice over its share")
+          for ((threshold, jobs, held) <- Seq((p * most, 1, true), (total, 2, false),
+              (total - 1, 1, false))) {
+            // the jobs of a hand-off to the local tail, as Leiden.detect
+            // makes it: the rows come back, else one collect if they fit
+            val (phases, c) = jobPhases {
+              val c = Aggregate.coarsenBlocks(spark, csr, comm, threshold)
+              if (c.held == null && c.rows <= threshold) EdgeTable.collectPacked(c.edges)
+              c
+            }
+            assert(phases.size === jobs, s"$what, threshold $threshold: $phases")
+            assert((c.held != null) === held, s"$what, threshold $threshold")
+            val rows = if (c.held != null) heldMap(c.held) else pairMap(EdgeTable.collectPacked(c.edges))
+            assert(bitsOf(rows) === bitsOf(oracle), s"$what, threshold $threshold")
+            org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+          }
+        }
+        csr.unpersist()
+      }
+      edges.unpersist()
+    }
+  }
+
+  test("aggregate.coarsenBlocks: the coarse slices are checkpointed at MEMORY_AND_DISK, cut from the CSR blocks") {
+    val n = 200
+    val edges = EdgeTable.undirected(spark, blocks(n, 20, 71, (_, _) => 1.0)).cache()
+    val csr = CsrSweep.build(edges, n).cache()
+    val comm = Array.tabulate(n)(v => (v / 20 * 20).toLong)
+    // the distributed coarsen (a local-tail gate of 0)
+    val c = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[Int] =
+      r.id +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val frameRdds = c.edges.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    assert(frameRdds.nonEmpty)
+    assert(c.slices.isCheckpointed)
+    assert(c.slices.getStorageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    assert(!lineage(c.slices).contains(csr.id), c.slices.toDebugString)
+    frameRdds.foreach(r => assert(!lineage(r).contains(csr.id), r.toDebugString))
+    // the blocks gone, the coarse rows still read back without them
+    csr.unpersist(blocking = true)
+    assert(c.edges.count() === c.rows)
+    assert(c.edges.agg(sum("w")).head.getDouble(0) === edges.agg(sum("w")).head.getDouble(0))
+    org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+    edges.unpersist()
   }
 
   test("compose maps leaf communities through the next level") {
