@@ -240,8 +240,8 @@ object Bench {
       // step scales executor COUNT, not executor size (5g OOM'd the
       // 1-executor point under the 4M-doc cached witness)
       "--conf", "spark.executor.memory=12g",
-      // advertised explicitly so executor-side pools (CsrSweep.replayPool)
-      // bound themselves to the executor's share of the box, not all of it
+      // advertised explicitly, so that code reading an executor's conf
+      // sees its share of the box, not all of it
       "--conf", s"spark.executor.cores=$coresPerExec",
       "--conf", "spark.driver.memory=6g",
       // no locality stalls: the witnesses read evenly-cached deterministic
@@ -252,7 +252,7 @@ object Bench {
       // near-incompressible; lz4 is pure serial driver cost over loopback
       "--conf", "spark.broadcast.compress=false",
       // match Sessions.configure: Kryo's bulk primitive-array path for the
-      // per-half-sweep delta broadcast + task-result collect (JavaSerializer
+      // per-half-sweep state broadcast + task-result collect (JavaSerializer
       // was ~40 ms/half-sweep of driver-serial time at 4x8, csr_timers)
       "--conf", "spark.serializer=org.apache.spark.serializer.KryoSerializer",
       "--conf", "spark.kryo.unsafe=true",

@@ -24,7 +24,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       // Kryo for RDD-level payloads (DataFrame shuffles ride Tungsten's own
       // UnsafeRow path either way). The sweep kernels move primitive arrays
-      // through broadcasts (delta move-lists, membership mirrors) and task
+      // through broadcasts (membership and community totals) and task
       // results (packed moves + dq) every half-sweep; JavaSerializer writes
       // long[]/double[] element-wise (~40 MB/s measured as ~40 ms of
       // driver-serial bcast per half-sweep at 4x8 executors on the 128M-edge

@@ -157,6 +157,8 @@ object CsrSweep {
     // executor-side (meaningful in local mode only: same JVM): summed
     // ACROSS tasks, so divide by parallelism for wall attribution
     val kernelTask = new java.util.concurrent.atomic.AtomicLong
+    // the task's payload lookup (registry get or broadcast value); the
+    // "derive" key names predate the lookup and stay for the JSON readers
     val deriveTask = new java.util.concurrent.atomic.AtomicLong
     // the same two sums gathered through Spark accumulators, so they
     // survive the executor-JVM boundary (local-cluster/spark-submit —
@@ -483,215 +485,21 @@ object CsrSweep {
                         seedAlive: Array[Boolean], commI: Array[Int],
                         ctot: Array[Double], csize: Array[Int], sgl: Array[Long])
 
-  /** Full-state snapshot shipped once per rebase in delta mode. */
-  final case class CsrBase(commI: Array[Int], ctot: Array[Double],
-                           csize: Array[Int], sgl: Array[Long])
-
   private val stateIds = new java.util.concurrent.atomic.AtomicLong
 
-  /** Driver-side registry of live CsrState ids. Its minimum is the low
-    * watermark shipped with every delta-mode half-sweep: executors evict
-    * mirror entries below it ([[resolveMirror]]), so the per-executor
-    * registry is bounded by CONCURRENTLY-live states — not by all states
-    * ever created (a long-lived app running repeated detect() calls would
-    * otherwise grow executor memory by ~17 B/vertex per pass forever).
-    */
-  private val liveStates =
-    new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]()
-
-  /** Per-executor mirror of the sweep state, advanced by replaying move
-    * deltas (delta mode, see [[CsrState]] scaladoc). One entry per live
-    * CsrState id; rebases re-materialize in place (gen check), and ids
-    * below the driver's live-state watermark are evicted on every resolve.
-    */
-  private[leiden] final class ExecMirror {
-    var gen: Long = -1L
-    var epoch: Int = -1
-    var commI: Array[Int] = null
-    var ctot: Array[Double] = null
-    var csize: Array[Int] = null
-    var sgl: Array[Long] = null
-  }
-  private val mirrors =
-    new java.util.concurrent.ConcurrentHashMap[Long, ExecMirror]()
-
-  /** Test hook: live mirror entries on this JVM's executor side. */
-  private[graft] def mirrorCount: Int = mirrors.size
-
-  /** Test hook: (gen, epoch, commI, ctot, csize) of one mirror — the
-    * lifecycle spec asserts replay results and rebase/eviction behavior
-    * without reaching into the private class.
-    */
-  private[leiden] def mirrorProbe(sid: Long): Option[(Long, Int, Array[Int], Array[Double], Array[Int])] =
-    Option(mirrors.get(sid)).map(m =>
-      (m.gen, m.epoch, m.commI.clone(), m.ctot.clone(), m.csize.clone()))
-
-  /** Test hook: the eviction sweep alone (no entry creation) — specs drop
-    * their synthetic mirrors so suite-order-sensitive count assertions in
-    * OTHER specs stay exact. Always safe: an evicted live mirror simply
-    * re-materializes from its base chain on the next resolve (the
-    * fresh-executor path).
-    */
-  private[leiden] def mirrorEvictBelow(watermark: Long): Unit = {
-    val it = mirrors.keySet().iterator()
-    while (it.hasNext) if (it.next() < watermark) it.remove()
-  }
-
-  /** local[k] fast path: tasks run in the driver's JVM, so the per-sweep
-    * (commI, ctot, sgl) payload needs no broadcast at all — TorrentBroadcast
-    * still SERIALIZES ~16 B/vertex at construction (~25 ms/half-sweep at 2M
-    * vertices, a pure driver serial term under the N->4N witness). Instead
+  /** The half-sweep payload on local[k]: tasks run in the driver's JVM, so
+    * the per-sweep (commI, ctot, sgl) state needs no broadcast at all —
+    * TorrentBroadcast would still SERIALIZE ~16 B/vertex at construction
+    * (~25 ms/half-sweep at 2M vertices, a pure driver serial term). Instead
     * the driver registers the live arrays here keyed by (stateId, sweep
     * sequence) and tasks read them directly; safe because every task of the
     * half-sweep completes inside collect() strictly before the apply loop
-    * mutates the arrays (same reasoning as the live-array broadcast it
-    * replaces), and the key is removed in the sweep's finally. Cluster
-    * masters never touch this path.
+    * mutates the arrays, and the key is removed in the sweep's finally.
+    * Every other master takes the one other payload: a broadcast of the
+    * same arrays per half-sweep ([[scanRemote]]).
     */
   private val localSweepState =
     new java.util.concurrent.ConcurrentHashMap[(Long, Long), (Array[Int], Array[Double], Array[Long])]()
-
-  /** Single-flight per executor: the first task of a half-sweep
-    * materializes/advances the mirror (O(base) once per rebase, O(moves)
-    * per delta), the rest block only for that. A task landing on a FRESH
-    * executor (dynamic allocation, task retry after executor loss) replays
-    * base + all deltas since — every payload is a Broadcast, fetchable on
-    * first access, so recovery needs no driver round-trip.
-    *
-    * Big replays run PARALLEL (same machinery and exactness argument as
-    * the driver apply's parallel pass): every task of the half-sweep
-    * blocks on this single-flight, so a serial O(moves) scatter here was
-    * an executor-local Amdahl term that GREW relative to the kernel as
-    * executors were added — the 4×8 point paid the same per-executor
-    * replay wall as 1×8 against a 4× smaller kernel job. Within one delta
-    * epoch each src moves at most once, so commI writes are disjoint;
-    * ctot/csize scatter-adds use lock-free atomic RMW, exact because the
-    * ±vtot adds are integral doubles on the gate that enables delta mode;
-    * epochs apply in order (a src may move again in a later epoch). The
-    * singleton bitmap is rebuilt from FINAL sizes after the last epoch —
-    * the per-update rule's final bits equal (csize == 1), so the rebuild
-    * is bit-identical and order-free. Small replays (converged sweeps)
-    * keep the serial per-update rule: fork-join dispatch plus the O(V)
-    * bitmap rebuild would cost more than they save.
-    */
-  /** Executor-side replay parallelism, bounded by the executor's ADVERTISED
-    * core count (`spark.executor.cores`), not the box's: the ForkJoin
-    * common pool sizes itself from host CPUs, and on a one-box
-    * local-cluster emulation that would hand the 1-executor scaling point
-    * a 32-thread replay — inflating the lo leg the N->4N witness divides
-    * by. A real executor should also not burst past its core reservation
-    * into a co-tenant's share. Unset (local-mode tests, driver-side
-    * mirrors) falls back to host CPUs, which is then the truth.
-    */
-  private lazy val replayPool: java.util.concurrent.ForkJoinPool = {
-    val cores =
-      try {
-        val env = org.apache.spark.SparkEnv.get
-        if (env != null)
-          env.conf.getInt("spark.executor.cores",
-            Runtime.getRuntime.availableProcessors())
-        else Runtime.getRuntime.availableProcessors()
-      } catch { case _: Throwable => Runtime.getRuntime.availableProcessors() }
-    new java.util.concurrent.ForkJoinPool(math.max(1, cores))
-  }
-
-  private[leiden] def resolveMirror(sid: Long, gen: Long, watermark: Long,
-                            base: Broadcast[CsrBase],
-                            deltas: IndexedSeq[Broadcast[Array[Long]]],
-                            vt: Array[Double]): ExecMirror = {
-    // evict mirrors of driver-closed states (ids below the live watermark);
-    // O(live mirrors) — a handful of entries
-    if (!mirrors.isEmpty) {
-      val it = mirrors.keySet().iterator()
-      while (it.hasNext) if (it.next() < watermark) it.remove()
-    }
-    val m = mirrors.computeIfAbsent(sid, _ => new ExecMirror)
-    m.synchronized {
-      // a zombie/speculative task from BEFORE a rebase must never roll the
-      // mirror back (its base broadcast is destroyed; re-materializing from
-      // it would thrash live tasks of the current job) — fail it explicitly
-      if (gen < m.gen)
-        throw new IllegalStateException(
-          s"stale sweep generation $gen < ${m.gen} (zombie/speculative task)")
-      if (m.gen != gen) {
-        val b = base.value
-        m.commI = b.commI.clone(); m.ctot = b.ctot.clone()
-        m.csize = b.csize.clone(); m.sgl = b.sgl.clone()
-        m.gen = gen; m.epoch = 0
-      }
-      var totalNew = 0
-      var ei = m.epoch
-      while (ei < deltas.length) { totalNew += deltas(ei).value.length; ei += 1 }
-      val par = totalNew >= ParallelApplyMin
-      while (m.epoch < deltas.length) {
-        val mv = deltas(m.epoch).value
-        val commI = m.commI; val ctot = m.ctot; val csize = m.csize; val sgl = m.sgl
-        if (par) {
-          val chunk = 1 << 15
-          val nCh = (mv.length + chunk - 1) / chunk
-          // parallel streams invoked from inside a ForkJoinPool task run in
-          // THAT pool — this bounds the replay to the executor's cores
-          replayPool.submit(new Runnable {
-            def run(): Unit =
-              java.util.stream.IntStream.range(0, nCh).parallel().forEach { c =>
-                var j = c * chunk
-                val end = math.min(j + chunk, mv.length)
-                while (j < end) {
-                  val pk = mv(j)
-                  val s = (pk >>> 32).toInt
-                  val to = (pk & 0xFFFFFFFFL).toInt
-                  val from = commI(s)
-                  val vts = vt(s)
-                  atomicAdd(ctot, from, -vts)
-                  atomicAdd(ctot, to, vts)
-                  atomicAddInt(csize, from, -1)
-                  atomicAddInt(csize, to, 1)
-                  commI(s) = to
-                  j += 1
-                }
-              }
-          }).get()
-        } else {
-          var j = 0
-          while (j < mv.length) {
-            val pk = mv(j)
-            val s = (pk >>> 32).toInt
-            val to = (pk & 0xFFFFFFFFL).toInt
-            val from = commI(s)
-            val vts = vt(s)
-            ctot(from) -= vts; ctot(to) += vts
-            val fs = csize(from) - 1
-            csize(from) = fs
-            if (fs == 1) sgl(from >> 6) |= 1L << (from & 63)
-            else sgl(from >> 6) &= ~(1L << (from & 63))
-            val ts = csize(to) + 1
-            csize(to) = ts
-            if (ts == 1) sgl(to >> 6) |= 1L << (to & 63)
-            else sgl(to >> 6) &= ~(1L << (to & 63))
-            commI(s) = to
-            j += 1
-          }
-        }
-        m.epoch += 1
-      }
-      if (par && totalNew > 0) {
-        // singleton bits from final sizes: one sequential O(V) scan (~ms at
-        // the 4M-vertex gate) instead of 2 random csize loads per move
-        val csize = m.csize; val sgl = m.sgl
-        val n = csize.length
-        var wi = 0
-        while (wi < sgl.length) {
-          var word = 0L
-          var b = wi << 6
-          val end = math.min(b + 64, n)
-          while (b < end) { if (csize(b) == 1) word |= 1L << (b & 63); b += 1 }
-          sgl(wi) = word
-          wi += 1
-        }
-      }
-    }
-    m
-  }
 
   /** Driver-held sweep state for this tier: membership + the folded
     * frontier (scaladoc algebra). `vtot` broadcasts once per state
@@ -703,7 +511,7 @@ object CsrSweep {
     * every coarsened pass of an integer-weight input qualify), so the
     * incremental totals are bit-identical to the ascending-vertex scratch
     * rebuild they replace. The kernel receives them in the per-sweep
-    * broadcast instead of re-deriving O(V) totals behind a single-flight
+    * payload instead of re-deriving O(V) totals behind a single-flight
     * barrier that every task of every half-sweep had to wait out (the
     * dominant serial Amdahl term of the N->4N scaling witness after the
     * kernel itself was measured to scale core-linearly). Non-integral
@@ -713,12 +521,14 @@ object CsrSweep {
     * The blocks are an RDD (`Right`), scanned by one job per half-sweep, or
     * a driver array (`Left`), scanned in-process with no payload, no
     * broadcast and no job — the local tail of [[Leiden.detect]]. That is
-    * the only place the two differ ([[halfSweep]]).
+    * the only place the two differ ([[halfSweep]]). An RDD scan reads
+    * (commI, ctot, sgl) as one payload per half-sweep, picked by the
+    * master: the same-JVM [[localSweepState]] registry on local[k], one
+    * broadcast of the arrays on any other ([[scanRemote]]).
     */
   final class CsrState(val blocks: Either[Array[CsrBlock], RDD[CsrBlock]], val n: Int,
                        val vtot: Array[Double], val comm: Array[Long],
-                       val seed: Array[Byte],
-                       deltaOpt: Option[Boolean] = None) {
+                       val seed: Array[Byte]) {
     /** The blocks' Spark context; null when the driver holds the blocks. */
     private[CsrSweep] val sc: SparkContext = blocks.fold(_ => null, _.sparkContext)
     val nBytes: Int = (n + 7) / 8
@@ -732,12 +542,12 @@ object CsrSweep {
     val seedAlive: Array[Boolean] = Array(true, true)
     private[CsrSweep] val bcVtot: Broadcast[Array[Double]] =
       if (sc == null) null else sc.broadcast(vtot)
-    // executor-task nanos (kernel scan / mirror-resolve+replay), summed
+    // executor-task nanos (kernel scan / payload lookup), summed
     // across all tasks of every half-sweep on this state; accumulators so
     // the values cross the executor-JVM boundary (Timers.taskAccs)
     private[CsrSweep] val accKernelNs =
       if (sc == null) null else sc.longAccumulator("graft.csr.kernelNs")
-    private[CsrSweep] val accDeriveNs =
+    private[CsrSweep] val accDeriveNs = // payload lookup (Timers.deriveTask)
       if (sc == null) null else sc.longAccumulator("graft.csr.deriveNs")
     if (sc != null) Timers.taskAccs = (accKernelNs, accDeriveNs)
     /** All weight mass integral => incremental totals are exact. */
@@ -746,7 +556,7 @@ object CsrSweep {
       while (ok && i < n) { ok = vtot(i) == math.rint(vtot(i)); i += 1 }
       ok
     }
-    // Int mirror of `comm` (dense ids < n <= 4M): the per-sweep broadcast
+    // Int copy of `comm` (dense ids < n <= 4M): the per-sweep scan
     // payload, updated by the same O(moves) apply — no O(V) rebuild/copy
     private[CsrSweep] val commI: Array[Int] = {
       val a = new Array[Int](n); var i = 0
@@ -757,40 +567,9 @@ object CsrSweep {
     private[CsrSweep] val csize = new Array[Int](n)
     private[CsrSweep] val sgl = new Array[Long]((n + 63) / 64)
     rebuildTotals()
-    /** Delta mode: per half-sweep, ship only the moves the driver just
-      * applied (8 B/move) instead of the full commI+ctot+sgl snapshot
-      * (~16 B/vertex); executors advance a mirror ([[resolveMirror]]).
-      * A full-state rebase every [[RebaseEvery]] deltas bounds both the
-      * recovery replay chain and the undestroyed-broadcast footprint.
-      * Default: on for multi-executor masters (the N->4N cluster shape,
-      * where the full snapshot costs executors x bytes through the
-      * driver's block manager every half-sweep), off for local[k] (one
-      * in-process copy, serialize-once is cheaper than mirror upkeep).
-      * Requires the integral gate — mirror replay must be exact.
-      * `deltaOpt` overrides the master-shape default.
-      */
-    val deltaMode: Boolean =
-      integral && sc != null && deltaOpt.getOrElse(!sc.isLocal)
+    // (stateId, sweepSeq) keys this state's localSweepState entries
     private[CsrSweep] val stateId: Long = stateIds.incrementAndGet()
-    liveStates.add(stateId)
-    // per-state sweep sequence: the localSweepState registry key suffix
     private[CsrSweep] var sweepSeq: Long = 0L
-    private[CsrSweep] var gen: Long = 0L
-    private[CsrSweep] var baseBc: Broadcast[CsrBase] = null
-    private[CsrSweep] var deltaBcs: Vector[Broadcast[Array[Long]]] = Vector.empty
-    private[CsrSweep] var pendingDelta: Array[Long] = Array.emptyLongArray
-    private[CsrSweep] def destroyChain(): Unit = {
-      if (baseBc != null) { baseBc.destroy(); baseBc = null }
-      deltaBcs.foreach(_.destroy())
-      deltaBcs = Vector.empty
-      pendingDelta = Array.emptyLongArray
-    }
-    private[CsrSweep] def rebase(): Unit = {
-      destroyChain()
-      gen += 1
-      baseBc = sc.broadcast(
-        CsrBase(commI.clone(), ctot.clone(), csize.clone(), sgl.clone()))
-    }
     // the refinement bound of the phase [[run]] is running, or null; with
     // RDD-held blocks also broadcast, once per phase
     private[CsrSweep] var bound: Array[Int] = null
@@ -808,16 +587,12 @@ object CsrSweep {
         i += 1
       }
     }
-    def close(): Unit = {
-      destroyChain()
+    def close(): Unit =
       if (bcVtot != null) bcVtot.destroy()
-      liveStates.remove(stateId); ()
-    }
     def snapshot(): Snap =
       Snap(comm.clone(), acc(0).clone(), acc(1).clone(), seedAlive.clone(),
         commI.clone(), ctot.clone(), csize.clone(), sgl.clone())
     def restore(s: Snap): Unit = {
-      destroyChain() // driver state rewound: next half-sweep rebases
       Array.copy(s.comm, 0, comm, 0, n)
       Array.copy(s.acc0, 0, acc(0), 0, nBytes)
       Array.copy(s.acc1, 0, acc(1), 0, nBytes)
@@ -833,7 +608,6 @@ object CsrSweep {
       * before its refine phase ([[Leiden.detect]]).
       */
     def resetToSingletons(): Array[Long] = {
-      destroyChain() // membership rewritten wholesale: next sweep rebases
       val prev = comm.clone()
       var i = 0
       while (i < n) { comm(i) = i.toLong; commI(i) = i; i += 1 }
@@ -846,16 +620,9 @@ object CsrSweep {
     }
   }
 
-  /** Full-state rebase cadence in delta mode: bounds a fresh executor's
-    * replay chain and the undestroyed broadcast footprint (first sweeps
-    * move ~V/2 vertices, converged sweeps near zero).
-    */
-  private val RebaseEvery = 64
-
   def init(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
-           comm0: Array[Long], aff0: Array[Byte],
-           deltaBcast: Option[Boolean] = None): CsrState =
-    new CsrState(Right(csr), n, vtot, comm0, aff0, deltaBcast)
+           comm0: Array[Long], aff0: Array[Byte]): CsrState =
+    new CsrState(Right(csr), n, vtot, comm0, aff0)
 
   /** [[init]] over blocks the driver holds. */
   def onDriver(blocks: Array[CsrBlock], n: Int, vtot: Array[Double],
@@ -863,10 +630,9 @@ object CsrSweep {
     new CsrState(Left(blocks), n, vtot, comm0, aff0)
 
   /** Identity membership + all-affected seed (singleton init). */
-  def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
-                deltaBcast: Option[Boolean] = None): CsrState =
+  def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double]): CsrState =
     new CsrState(Right(csr), n, vtot, Array.tabulate(n)(_.toLong),
-      Array.fill[Byte]((n + 7) / 8)(-1), deltaBcast)
+      Array.fill[Byte]((n + 7) / 8)(-1))
 
   @inline private def bit(b: Array[Byte], i: Int): Boolean =
     (b(i >> 3) & (1 << (i & 7))) != 0
@@ -926,38 +692,18 @@ object CsrSweep {
                          sketchSlots: Int): Array[(Array[Long], Array[Double])] = {
     val sc = st.sc
     val tT0 = System.nanoTime()
-    // Per-half-sweep payload, three tiers:
-    //   delta mode (multi-executor + integral): ship only the moves the
-    //     driver just applied; executors advance a mirror (resolveMirror).
-    //   local: the live Int membership and totals, by registry.
-    //   otherwise: a broadcast of them. Broadcasting the live arrays is
-    //     safe: TorrentBroadcast serializes at construction.
-    val deltaOn = st.deltaMode
-    var bcComm: Broadcast[Array[Int]] = null
-    var bcTot: Broadcast[(Array[Double], Array[Long])] = null
+    // Per-half-sweep payload, one per master: on local[k] the live Int
+    // membership and totals, by registry (localSweepState scaladoc);
+    // otherwise one broadcast of them. Broadcasting the live arrays is
+    // safe: TorrentBroadcast serializes at construction.
+    val payload = (st.commI, st.ctot, st.sgl)
+    var bcState: Broadcast[(Array[Int], Array[Double], Array[Long])] = null
     var localKey: (Long, Long) = null
-    if (deltaOn) {
-      if (st.baseBc == null || st.deltaBcs.size >= RebaseEvery) st.rebase()
-      else if (st.pendingDelta.nonEmpty) {
-        st.deltaBcs :+= sc.broadcast(st.pendingDelta)
-        st.pendingDelta = Array.emptyLongArray
-      }
-    } else if (sc.isLocal) {
-      // same-JVM registry instead of a broadcast (localSweepState scaladoc)
+    if (sc.isLocal) {
       localKey = (st.stateId, st.sweepSeq)
       st.sweepSeq += 1
-      localSweepState.put(localKey, (st.commI, st.ctot, st.sgl))
-    } else {
-      bcComm = sc.broadcast(st.commI)
-      bcTot = sc.broadcast((st.ctot, st.sgl))
-    }
-    val mirSid = st.stateId
-    val mirGen = st.gen
-    val mirWm: Long =
-      try liveStates.first().longValue()
-      catch { case _: java.util.NoSuchElementException => st.stateId }
-    val mirBase = st.baseBc
-    val mirDeltas = st.deltaBcs
+      localSweepState.put(localKey, payload)
+    } else bcState = sc.broadcast(payload)
     val tT1 = System.nanoTime()
     Timers.bcast.addAndGet(tT1 - tT0)
     val bcVtot = st.bcVtot
@@ -969,15 +715,7 @@ object CsrSweep {
         val tk0 = System.nanoTime()
         val vt = bcVtot.value
         val (comm, ct, sglL) =
-          if (deltaOn) {
-            val mir = resolveMirror(mirSid, mirGen, mirWm, mirBase, mirDeltas, vt)
-            (mir.commI, mir.ctot, mir.sgl)
-          } else if (localKey != null) {
-            localSweepState.get(localKey)
-          } else {
-            val t = bcTot.value
-            (bcComm.value, t._1, t._2)
-          }
+          if (localKey != null) localSweepState.get(localKey) else bcState.value
         val tk1 = System.nanoTime()
         Timers.deriveTask.addAndGet(tk1 - tk0)
         accD.add(tk1 - tk0)
@@ -992,11 +730,8 @@ object CsrSweep {
       out
     } finally {
       val d0 = System.nanoTime()
-      // delta mode keeps its chain alive for fresh-executor replay; it is
-      // destroyed at rebase / reset / close instead
       if (localKey != null) localSweepState.remove(localKey)
-      if (bcComm != null) bcComm.destroy()
-      if (bcTot != null) bcTot.destroy()
+      if (bcState != null) bcState.destroy()
       Timers.destroy.addAndGet(System.nanoTime() - d0)
     }
   }
@@ -1285,16 +1020,6 @@ object CsrSweep {
     if (total == 0) return (0L, 0.0)
     val mvL = st.mvScratchL
     java.util.Arrays.fill(mvL, 0L)
-    // delta mode: the concatenated moves (in driver-apply order) are the
-    // NEXT half-sweep's broadcast payload
-    if (st.deltaMode) {
-      val all = new Array[Long](total)
-      var p = 0
-      out.foreach { case (mp, _) =>
-        System.arraycopy(mp, 0, all, p, mp.length); p += mp.length
-      }
-      st.pendingDelta = all
-    }
     val inc = st.integral // incremental totals (exact: integral weights)
     // Apply, three sections. (1) SERIAL walk: dq left-fold only, in
     // ascending src over all blocks (foldDq), under range and hash
@@ -1309,8 +1034,8 @@ object CsrSweep {
       // disjoint; ctot/csize are scatter-adds to shared communities →
       // lock-free atomic RMW (exact: adds are ± integral doubles on the
       // `inc` gate, order-independent). mp is rewritten in place to
-      // (from, to) as the pass-3 payload — the delta snapshot above and
-      // the serial walk have already consumed the original packing.
+      // (from, to) as the pass-3 payload — the serial walk has already
+      // consumed the original packing.
       java.util.stream.IntStream.range(0, out.length).parallel().forEach { b =>
         val mp = out(b)._1
         var j = 0
@@ -1334,9 +1059,8 @@ object CsrSweep {
         }
       }
       // (3) PARALLEL singleton-bit pass from the now-final sizes: the
-      // serial per-update rule's final bit equals (csize == 1) — the
-      // same invariant the mirror replay documents — so recomputing
-      // from final sizes is bit-identical and order-free. The pass's
+      // serial per-update rule's final bit equals (csize == 1), so
+      // recomputing from final sizes is bit-identical and order-free. The pass's
       // real cost is two RANDOM csize loads per move (DRAM latency);
       // running it over blocks overlaps those latencies, and the bit
       // writes are lock-free and idempotent (atomicSetBit scaladoc).

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The dense kernels' shared-array registry lives in the driver JVM only,
   * so on a `local-cluster` master, whose executors are JVMs of their own,
   * PageRank and triangle counting must take their Catalyst plans, and
-  * Leiden's dense tier ships its state as broadcast move deltas. Each run
+  * Leiden's dense tier broadcasts its state every half-sweep. Each run
   * needs a JVM of its own: one JVM holds one SparkContext, and the suites'
   * shared session is `local[4]`.
   */
@@ -64,7 +64,8 @@ class LocalClusterSpec extends AnyFunSuite {
 
   test("local-cluster[2,1,1024]: Leiden's dense tier on executor JVMs equals the driver tail") {
     val out = child("leiden")
-    assert(out.contains("RESULT leiden dense=true tail=true mixed=true same=true disconnected=0,0,0"),
+    assert(out.contains(
+      "RESULT leiden dense=true tail=true mixed=true same=true weighted=true disconnected=0,0,0"),
       out.takeRight(4000))
   }
 }
@@ -73,9 +74,11 @@ class LocalClusterSpec extends AnyFunSuite {
   * "algos": a 2000-vertex ring with +1/+2 chords (2000 triangles,
   * 4-regular, so every PageRank rank is 1/2000). "leiden": a planted
   * 8-block graph, detected with the local tail off (the dense tier, whose
-  * executors replay move deltas), wholly in the local tail, and with a
-  * dense pass 0 whose coarsen (broadcast and shuffle across the executor
-  * JVMs) hands the rest to the tail.
+  * executors read the broadcast state), wholly in the local tail, and with
+  * a dense pass 0 whose coarsen (broadcast and shuffle across the executor
+  * JVMs) hands the rest to the tail. The same graph with integral weights
+  * `1 + (a + b) % 3` runs dense and wholly in the tail, so weighted blocks
+  * are scanned on the executors too.
   */
 object LocalClusterMain {
   def main(args: Array[String]): Unit = {
@@ -99,16 +102,22 @@ object LocalClusterMain {
                            if rnd.nextDouble() < (if (a / 20 == b / 20) 0.4 else 0.01))
           yield (a.toLong, b.toLong, 1.0)
         val g = EdgeTable.undirected(spark, planted).cache()
+        val gw = EdgeTable.undirected(spark,
+          planted.map { case (a, b, _) => (a, b, 1.0 + (a + b) % 3) }).cache()
         val dense = Leiden.detect(g, LeidenOptions(localSolveEdgeThreshold = 0))
         val tail = Leiden.detect(g)
         val mixed = Leiden.detect(g, LeidenOptions(localSolveEdgeThreshold = g.count() - 1))
         def memb(r: LeidenResult): Map[Long, Long] =
           r.membership.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
         val same = memb(dense) == memb(tail) && memb(mixed) == memb(dense)
+        val denseW = Leiden.detect(gw, LeidenOptions(localSolveEdgeThreshold = 0))
+        val tailW = Leiden.detect(gw)
+        val weighted = denseW.phaseMillis.contains("csrbuild") &&
+          !tailW.phaseMillis.contains("csrbuild") && memb(denseW) == memb(tailW)
         println(s"RESULT leiden dense=${dense.phaseMillis.contains("csrbuild")} " +
           s"tail=${!tail.phaseMillis.contains("csrbuild")} " +
           s"mixed=${mixed.phaseMillis.contains("csrbuild") && mixed.phaseMillis.contains("localtail")} " +
-          s"same=$same disconnected=" +
+          s"same=$same weighted=$weighted disconnected=" +
           Seq(dense, tail, mixed).map(r => Leiden.disconnectedCommunities(g, r.membership)).mkString(","))
       case other => throw new IllegalArgumentException(s"unknown part: $other")
     } finally spark.stop()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.util.Random
 
 /** Round-5 CSR-kernel additions: the lowmem (Misra-Gries) scan on the fused
-  * kernel, the parallel driver apply, and delta-mirror lifecycle.
+  * kernel, the parallel driver apply, and the gap-packed block layout.
   */
 class CsrLowmemSpec extends SparkSpec {
 
@@ -130,32 +130,6 @@ class CsrLowmemSpec extends SparkSpec {
     csr.unpersist(); edges.unpersist()
   }
 
-  test("parallel mirror replay is bit-identical to the serial replay (delta mode)") {
-    // deltaBcast=Some(true) forces the executor-mirror exchange on the local
-    // master; ParallelApplyMin=1 then forces BOTH the parallel driver apply
-    // and the parallel epoch replay inside resolveMirror on every sweep
-    val n = 300
-    val edges = sbmEdges(19, n)
-    val (m, vt) = vtArr(edges, n)
-    val csr = CsrSweep.build(edges, n, parts = 4).cache()
-    def fullRun(): (Int, Long, Int, Long, Seq[Long]) = {
-      val st = CsrSweep.singleton(csr, n, vt, deltaBcast = Some(true))
-      val (itM, mvM) = CsrSweep.run(st, m, 1.0, 1e-9, 50)
-      val bound = st.resetToSingletons()
-      val (itR, mvR) = CsrSweep.run(st, m, 1.0, 1e-9, 50,
-        boundArr = Some(bound), refineSingletons = true)
-      val out = (itM, mvM, itR, mvR, st.comm.toSeq)
-      st.close()
-      out
-    }
-    val serial = fullRun()
-    val old = CsrSweep.ParallelApplyMin
-    CsrSweep.ParallelApplyMin = 1
-    val parallel = try fullRun() finally CsrSweep.ParallelApplyMin = old
-    assert(parallel === serial)
-    csr.unpersist(); edges.unpersist()
-  }
-
   test("gap-packed blocks are bit-identical to unpacked across move+refine+sketch") {
     // the packed layout must be a pure re-encoding: every decision of every
     // half-sweep flavor (exact, bounded refine, MG-sketch) identical
@@ -223,22 +197,5 @@ class CsrLowmemSpec extends SparkSpec {
     assert(adjMap(packs) === adjMap(plain))
     assert(packs.forall(b => b.dst == null && b.packed != null))
     edges.unpersist()
-  }
-
-  test("executor mirrors of closed delta-mode states are evicted at the live watermark") {
-    val n = 300
-    val edges = sbmEdges(19, n)
-    val (m, vt) = vtArr(edges, n)
-    val csr = CsrSweep.build(edges, n).cache()
-    val stA = CsrSweep.singleton(csr, n, vt, deltaBcast = Some(true))
-    CsrSweep.run(stA, m, 1.0, 1e-9, 4)
-    assert(CsrSweep.mirrorCount >= 1)
-    stA.close()
-    // a later state's first sweep carries the new watermark; A's mirror goes
-    val stB = CsrSweep.singleton(csr, n, vt, deltaBcast = Some(true))
-    CsrSweep.halfSweep(stB, m, 1.0, 0)
-    assert(CsrSweep.mirrorCount === 1)
-    stB.close()
-    csr.unpersist(); edges.unpersist()
   }
 }

@@ -308,12 +308,11 @@ class LeidenSpec extends SparkSpec {
     csr.unpersist(); edges.unpersist()
   }
 
-  test("delta-broadcast CSR sweep equals the full-broadcast sweep (move+refine)") {
-    // delta mode (executor-shape payload: base snapshot + per-sweep move
-    // deltas replayed into executor mirrors) forced on in local mode; a
-    // 50-iteration cap over both phases crosses sweeps with zero moves
-    // (empty-delta skip), resetToSingletons invalidation, and — via the
-    // snapshot/restore below — the restore-destroys-chain path
+  test("a restored CSR sweep state replays the same move+refine run") {
+    // a state dirtied by one half-sweep and rewound with restore(snap0)
+    // must replay a fresh state's run exactly; a 50-iteration cap over
+    // both phases crosses sweeps with zero moves and the
+    // resetToSingletons re-init
     val rnd = new Random(19)
     val es = Seq.newBuilder[(Long, Long, Double)]
     for (a <- 0 until 300; b <- a + 1 until 300)
@@ -327,14 +326,13 @@ class LeidenSpec extends SparkSpec {
     vw.collect().foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
     val csr = CsrSweep.build(edges, 300).cache()
 
-    val stF = CsrSweep.singleton(csr, 300, vt, deltaBcast = Some(false))
+    val stF = CsrSweep.singleton(csr, 300, vt)
     val (itMF, mvMF) = CsrSweep.run(stF, m, 1.0, 1e-9, 50)
     val boundF = stF.resetToSingletons()
     val (itRF, mvRF) = CsrSweep.run(stF, m, 1.0, 1e-9, 50,
       boundArr = Some(boundF), refineSingletons = true)
 
-    val stD = CsrSweep.singleton(csr, 300, vt, deltaBcast = Some(true))
-    assert(stD.deltaMode)
+    val stD = CsrSweep.singleton(csr, 300, vt)
     val snap0 = stD.snapshot()
     CsrSweep.halfSweep(stD, m, 1.0, 0) // dirty the state, then rewind
     stD.restore(snap0)
