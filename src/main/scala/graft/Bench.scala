@@ -25,7 +25,11 @@ import org.apache.spark.sql.graft.PlanUtils
   *     superstep is back in the seconds range and the fixed per-half-sweep
   *     driver serial terms (broadcast + move apply, CsrSweep.Timers) are
   *     ~1-3% of the wall instead of the 10-15% that Amdahl-capped a 4x
-  *     step near 0.59 on the 32M fixture (round-4 verdict #1), and
+  *     step near 0.59 on the 32M fixture (round-4 verdict #1). Since then
+  *     a local master scans pinned blocks in-process (no job and no
+  *     broadcast per half-sweep; CsrSweep scaladoc), so that master's
+  *     serial terms are the apply alone; the figures in BENCH.md predate
+  *     this, and
   *   - simhash signature throughput over 4M synthetic docs (compute-dense
   *     scan+agg, one hash per token, no shuffle — the witness whose scaling
   *     is NOT DRAM-bound).
@@ -111,13 +115,13 @@ object Bench {
     if (bcMd && nVerts <= LocalMove.CtBroadcastMax) {
       // the tier Leiden.detect runs on dense passes — packed-CSR fused
       // kernel (CsrSweep scaladoc): ONE primitive-array pass per
-      // half-sweep, frontier folded in
+      // half-sweep, frontier folded in. On a local master singleton pins
+      // the blocks and each half-sweep scans them in-process, with no job
       val n = nVerts.toInt
       val vt = new Array[Double](n)
       vtot.select("id", "vtot").collect()
         .foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
       val csr = graft.leiden.CsrSweep.build(edges, n).cache()
-      csr.count()
       val st = graft.leiden.CsrSweep.singleton(csr, n, vt)
       graft.leiden.CsrSweep.halfSweep(st, m, 1.0, 0) // warmup = fixed start
       val snap = st.snapshot()

@@ -77,7 +77,8 @@ object BenchDiag {
     if (sys.env.get("SPARK_GRAFT_DIAG_MODE").contains("csr")) {
       // CSR-tier serial-term decomposition: same measurement window as the
       // Bench csr leg, with CsrSweep.Timers splitting each half-sweep into
-      // broadcast / kernel-job / driver-apply / destroy
+      // broadcast / scan / driver-apply / destroy (on a local master the
+      // blocks are pinned and scanned in-process: broadcast reads 0)
       val deg = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEG", "8").toInt
       val edges = EdgeTable.canonicalize(Cli.fixtureEdges(spark, verts, deg))
         .repartition(col("src")).cache()
@@ -89,7 +90,6 @@ object BenchDiag {
       vtot.select("id", "vtot").collect()
         .foreach(r => vt(r.getLong(0).toInt) = r.getDouble(1))
       val csr = graft.leiden.CsrSweep.build(edges, n).cache()
-      csr.count()
       val st = graft.leiden.CsrSweep.singleton(csr, n, vt)
       graft.leiden.CsrSweep.halfSweep(st, m, 1.0, 0)
       val snap = st.snapshot()

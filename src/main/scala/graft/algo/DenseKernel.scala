@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
   */
 object DenseKernel {
 
-  /** Task-visible registry of the shared arrays (same device as
-    * CsrSweep.localSweepState): on a local master, tasks and driver share
-    * one JVM, so an id into this map replaces any broadcast. Entries are
-    * removed in the caller's finally.
+  /** Task-visible registry of the shared arrays: on a local master, tasks
+    * and driver share one JVM, so an id into this map replaces any
+    * broadcast (`CsrSweep.pin` hands blocks the other way through the same
+    * kind of map). Entries are removed in the caller's finally.
     */
   private val registry = new ConcurrentHashMap[Long, AnyRef]()
   private val ids = new AtomicLong(0L)

@@ -1,7 +1,7 @@
 package graft.leiden
 
 import graft.graph.Packed
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -27,6 +27,14 @@ import org.apache.spark.sql.functions.col
   * resolves membership via one 4-byte indexed load, and keeps every
   * per-src scratch structure L1-resident. The frontier update costs zero
   * extra passes — see the algebra below.
+  *
+  * Where the scan runs follows the master, as the reference runs each
+  * sweep as one parallel loop over flat arrays in one process
+  * (`leidenMoveOmpW`, the reference's `inc/leiden.hxx:409-435`): on a
+  * local master the driver pins a pass's cached blocks once ([[pin]]) and
+  * every half-sweep scans them in-process, in parallel over blocks, with
+  * no Spark job; on any other master each half-sweep is one job over the
+  * cached block RDD ([[CsrState]]).
   *
   * Decision-for-decision parity with [[LocalMove.sweep]] / [[LocalMove.run]]
   * (same ΔQ expression evaluation order, the same singleton swap guard,
@@ -146,22 +154,27 @@ object CsrSweep {
   /** Cumulative per-component wall nanos of every [[halfSweep]] — the
     * sweep's serial driver sections are the Amdahl term of the N->4N
     * scaling witness, so they stay permanently instrumented (5 nanoTime
-    * reads per half-sweep; reset + read from BenchDiag's csr mode).
+    * reads per half-sweep; reset + read from BenchDiag's csr mode). A
+    * state whose blocks the driver holds (a local master, the local tail)
+    * scans in-process: it adds to `sweeps`, `job` and `kernelTask`, and
+    * its `bcast` and `deriveTask` stay 0.
     */
   object Timers {
-    val bcast = new java.util.concurrent.atomic.AtomicLong // commI build + broadcast
-    val job = new java.util.concurrent.atomic.AtomicLong   // kernel job incl. collect
+    val bcast = new java.util.concurrent.atomic.AtomicLong // payload broadcast (RDD blocks)
+    val job = new java.util.concurrent.atomic.AtomicLong   // the scan: kernel job incl. collect, or in-process
     val apply = new java.util.concurrent.atomic.AtomicLong // move apply + dq + frontier fold
     val destroy = new java.util.concurrent.atomic.AtomicLong
     val sweeps = new java.util.concurrent.atomic.AtomicLong
-    // executor-side (meaningful in local mode only: same JVM): summed
-    // ACROSS tasks, so divide by parallelism for wall attribution
+    // per-block scan time (tasks in the driver's JVM, or the in-process
+    // scan): summed ACROSS blocks, so divide by parallelism for wall
+    // attribution
     val kernelTask = new java.util.concurrent.atomic.AtomicLong
-    // the task's payload lookup (registry get or broadcast value); the
+    // the task's payload lookup (broadcast value; RDD blocks only); the
     // "derive" key names predate the lookup and stay for the JSON readers
     val deriveTask = new java.util.concurrent.atomic.AtomicLong
-    // the same two sums gathered through Spark accumulators, so they
-    // survive the executor-JVM boundary (local-cluster/spark-submit —
+    // the same two sums gathered through Spark accumulators by RDD-held
+    // blocks (a pinned state adds nothing to them), so they survive the
+    // executor-JVM boundary (local-cluster/spark-submit —
     // where the 4x8 job-vs-kernel gap actually needs attributing).
     // SCOPE (round-5 ADVICE): last-writer-wins across live CsrStates —
     // exec_* covers only the MOST RECENTLY CONSTRUCTED state, while
@@ -485,21 +498,40 @@ object CsrSweep {
                         seedAlive: Array[Boolean], commI: Array[Int],
                         ctot: Array[Double], csize: Array[Int], sgl: Array[Long])
 
-  private val stateIds = new java.util.concurrent.atomic.AtomicLong
-
-  /** The half-sweep payload on local[k]: tasks run in the driver's JVM, so
-    * the per-sweep (commI, ctot, sgl) state needs no broadcast at all —
-    * TorrentBroadcast would still SERIALIZE ~16 B/vertex at construction
-    * (~25 ms/half-sweep at 2M vertices, a pure driver serial term). Instead
-    * the driver registers the live arrays here keyed by (stateId, sweep
-    * sequence) and tasks read them directly; safe because every task of the
-    * half-sweep completes inside collect() strictly before the apply loop
-    * mutates the arrays, and the key is removed in the sweep's finally.
-    * Every other master takes the one other payload: a broadcast of the
-    * same arrays per half-sweep ([[scanRemote]]).
+  /** Same-JVM handoff of [[pin]]'s blocks: one slot per partition, under
+    * a key unique to the pin job. A task writes its partition's blocks into
+    * the slots it finds under the key; the driver removes the key when the
+    * job ends, whether it succeeded or threw, so a task that finishes after
+    * a failed job finds no slots and the map keeps nothing.
     */
-  private val localSweepState =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Long), (Array[Int], Array[Double], Array[Long])]()
+  private val handoff = new java.util.concurrent.ConcurrentHashMap[
+    Long, java.util.concurrent.atomic.AtomicReferenceArray[Array[CsrBlock]]]()
+  private val pinKeys = new java.util.concurrent.atomic.AtomicLong
+
+  /** Open handoff keys; 0 whenever no [[pin]] job runs (test hook). */
+  private[leiden] def handoffSize: Int = handoff.size
+
+  /** A local master's blocks of `csr`, as the driver holds them: one job
+    * over the RDD, which also materializes its cache, hands each
+    * partition's block objects to the driver through [[handoff]]. Tasks
+    * share the driver's JVM, so nothing is serialized and no block travels
+    * as a task result. Blocks come back in partition order with empty
+    * partitions skipped, the order `collect()` gives.
+    */
+  private[leiden] def pin(csr: RDD[CsrBlock]): Array[CsrBlock] = {
+    val key = pinKeys.incrementAndGet()
+    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[Array[CsrBlock]](
+      csr.getNumPartitions)
+    handoff.put(key, slots)
+    try {
+      csr.sparkContext.runJob(csr, (ctx: TaskContext, it: Iterator[CsrBlock]) => {
+        val bs = it.toArray
+        val s = handoff.get(key)
+        if (s != null) s.set(ctx.partitionId, bs)
+      })
+      Array.tabulate(slots.length())(slots.get).flatten
+    } finally handoff.remove(key)
+  }
 
   /** Driver-held sweep state for this tier: membership + the folded
     * frontier (scaladoc algebra). `vtot` broadcasts once per state
@@ -518,19 +550,24 @@ object CsrSweep {
     * weights rebuild them from scratch, in ascending vertex order, before
     * every half-sweep's scan ([[halfSweep]]).
     *
-    * The blocks are an RDD (`Right`), scanned by one job per half-sweep, or
-    * a driver array (`Left`), scanned in-process with no payload, no
-    * broadcast and no job — the local tail of [[Leiden.detect]]. That is
-    * the only place the two differ ([[halfSweep]]). An RDD scan reads
-    * (commI, ctot, sgl) as one payload per half-sweep, picked by the
-    * master: the same-JVM [[localSweepState]] registry on local[k], one
-    * broadcast of the arrays on any other ([[scanRemote]]).
+    * The blocks are a driver array (`Left`) or an RDD (`Right`), and that
+    * is the only place the two differ ([[halfSweep]]). The driver holds
+    * them on a local master, where [[init]] and [[singleton]] pin the
+    * cached blocks once ([[pin]]), and in the local tail of
+    * [[Leiden.detect]] ([[onDriver]]): each half-sweep scans them
+    * in-process, in parallel over blocks, against the live arrays, with no
+    * payload, no broadcast and no job. On any other master the blocks stay
+    * an RDD, scanned by one job per half-sweep that reads (commI, ctot,
+    * sgl) from one broadcast ([[scanRemote]]). [[close]] drops the blocks.
     */
-  final class CsrState(val blocks: Either[Array[CsrBlock], RDD[CsrBlock]], val n: Int,
+  final class CsrState(blocks0: Either[Array[CsrBlock], RDD[CsrBlock]], val n: Int,
                        val vtot: Array[Double], val comm: Array[Long],
                        val seed: Array[Byte]) {
+    private[this] var held = blocks0
+    /** The blocks this state scans; null once closed. */
+    def blocks: Either[Array[CsrBlock], RDD[CsrBlock]] = held
     /** The blocks' Spark context; null when the driver holds the blocks. */
-    private[CsrSweep] val sc: SparkContext = blocks.fold(_ => null, _.sparkContext)
+    private[CsrSweep] val sc: SparkContext = blocks0.fold(_ => null, _.sparkContext)
     val nBytes: Int = (n + 7) / 8
     val acc: Array[Array[Byte]] =
       Array(new Array[Byte](nBytes), new Array[Byte](nBytes))
@@ -567,13 +604,22 @@ object CsrSweep {
     private[CsrSweep] val csize = new Array[Int](n)
     private[CsrSweep] val sgl = new Array[Long]((n + 63) / 64)
     rebuildTotals()
-    // (stateId, sweepSeq) keys this state's localSweepState entries
-    private[CsrSweep] val stateId: Long = stateIds.incrementAndGet()
-    private[CsrSweep] var sweepSeq: Long = 0L
     // the refinement bound of the phase [[run]] is running, or null; with
     // RDD-held blocks also broadcast, once per phase
     private[CsrSweep] var bound: Array[Int] = null
     private[CsrSweep] var bcBound: Broadcast[Array[Int]] = null
+    /** Sets the refinement bound of the half-sweeps that follow (None: no
+      * bound) until [[unbind]].
+      */
+    private[leiden] def bind(boundArr: Option[Array[Long]]): Unit = {
+      unbind()
+      bound = boundArr.map(b => Array.tabulate(n)(b(_).toInt)).orNull
+      if (bound != null && sc != null) bcBound = sc.broadcast(bound)
+    }
+    private[leiden] def unbind(): Unit = {
+      if (bcBound != null) bcBound.destroy()
+      bound = null; bcBound = null
+    }
     /** Scratch rebuild, ascending-vertex order (init / restore / reset). */
     private[CsrSweep] def rebuildTotals(): Unit = {
       java.util.Arrays.fill(ctot, 0.0)
@@ -587,8 +633,11 @@ object CsrSweep {
         i += 1
       }
     }
-    def close(): Unit =
+    /** Releases the vtot broadcast and the block references; idempotent. */
+    def close(): Unit = if (held != null) {
+      held = null
       if (bcVtot != null) bcVtot.destroy()
+    }
     def snapshot(): Snap =
       Snap(comm.clone(), acc(0).clone(), acc(1).clone(), seedAlive.clone(),
         commI.clone(), ctot.clone(), csize.clone(), sgl.clone())
@@ -620,9 +669,16 @@ object CsrSweep {
     }
   }
 
+  /** A state over cached blocks, after one job that materializes their
+    * cache: on a local master that job pins them on the driver ([[pin]]),
+    * elsewhere it counts them and the state keeps the RDD.
+    */
   def init(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
            comm0: Array[Long], aff0: Array[Byte]): CsrState =
-    new CsrState(Right(csr), n, vtot, comm0, aff0)
+    new CsrState(materialize(csr), n, vtot, comm0, aff0)
+
+  private def materialize(csr: RDD[CsrBlock]): Either[Array[CsrBlock], RDD[CsrBlock]] =
+    if (csr.sparkContext.isLocal) Left(pin(csr)) else { csr.count(); Right(csr) }
 
   /** [[init]] over blocks the driver holds. */
   def onDriver(blocks: Array[CsrBlock], n: Int, vtot: Array[Double],
@@ -631,7 +687,7 @@ object CsrSweep {
 
   /** Identity membership + all-affected seed (singleton init). */
   def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double]): CsrState =
-    new CsrState(Right(csr), n, vtot, Array.tabulate(n)(_.toLong),
+    new CsrState(materialize(csr), n, vtot, Array.tabulate(n)(_.toLong),
       Array.fill[Byte]((n + 7) / 8)(-1))
 
   @inline private def bit(b: Array[Byte], i: Int): Boolean =
@@ -657,9 +713,10 @@ object CsrSweep {
     * Non-moving sweeps leave the frontier state untouched, exactly like
     * [[LocalMove.sweep]] (an empty frontier or zero moves keeps the bits).
     *
-    * Every block runs [[scanBlock]]: executors run it on RDD-held blocks,
-    * the driver runs it in-process on driver-held ones. Either way the
-    * driver then applies the moves and folds dq and the frontier.
+    * Every block runs [[scanBlock]]: the driver runs it in-process on
+    * driver-held blocks ([[scanHeld]]), executors on RDD-held ones
+    * ([[scanRemote]]). Either way the results arrive in block order, and
+    * the driver then applies the moves and folds dq and the frontier.
     */
   def halfSweep(st: CsrState, m: Double, resolution: Double, parity: Int,
                 refineSingletons: Boolean = false,
@@ -674,17 +731,37 @@ object CsrSweep {
     // the apply maintains totals only when they stay exact (CsrState)
     if (!st.integral) st.rebuildTotals()
     val out = st.blocks match {
-      case Left(held) => // in-process, on the live state arrays
-        held.map(scanBlock(_, st.commI, st.ctot, st.sgl, st.vtot, st.bound,
-          seedL, accL, m, resolution, parity, refineSingletons, sketchSlots))
+      case Left(held) =>
+        scanHeld(st, held, seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
       case Right(csr) =>
         scanRemote(st, csr, seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
     }
     applyMoves(st, out, parity)
   }
 
+  /** The scan of driver-held blocks: [[scanBlock]] on each block against
+    * the live state arrays, in parallel over blocks in the common pool the
+    * apply uses. Timers: the scan's wall adds to `job` and each block's
+    * scan to `kernelTask`; `bcast` and `deriveTask` stay 0.
+    */
+  private def scanHeld(st: CsrState, held: Array[CsrBlock], seedL: Array[Byte],
+                       accL: Array[Byte], m: Double, resolution: Double, parity: Int,
+                       refineSingletons: Boolean,
+                       sketchSlots: Int): Array[(Array[Long], Array[Double])] = {
+    val t0 = System.nanoTime()
+    val out = new Array[(Array[Long], Array[Double])](held.length)
+    java.util.stream.IntStream.range(0, held.length).parallel().forEach { b =>
+      val tk0 = System.nanoTime()
+      out(b) = scanBlock(held(b), st.commI, st.ctot, st.sgl, st.vtot, st.bound,
+        seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
+      Timers.kernelTask.addAndGet(System.nanoTime() - tk0)
+    }
+    Timers.job.addAndGet(System.nanoTime() - t0)
+    out
+  }
+
   /** The scan of RDD-held blocks: one job, each task running [[scanBlock]]
-    * on its block against a shipped copy of the state.
+    * on its block against one broadcast of (commI, ctot, sgl).
     */
   private def scanRemote(st: CsrState, csr: RDD[CsrBlock], seedL: Array[Byte],
                          accL: Array[Byte], m: Double, resolution: Double, parity: Int,
@@ -692,18 +769,9 @@ object CsrSweep {
                          sketchSlots: Int): Array[(Array[Long], Array[Double])] = {
     val sc = st.sc
     val tT0 = System.nanoTime()
-    // Per-half-sweep payload, one per master: on local[k] the live Int
-    // membership and totals, by registry (localSweepState scaladoc);
-    // otherwise one broadcast of them. Broadcasting the live arrays is
-    // safe: TorrentBroadcast serializes at construction.
-    val payload = (st.commI, st.ctot, st.sgl)
-    var bcState: Broadcast[(Array[Int], Array[Double], Array[Long])] = null
-    var localKey: (Long, Long) = null
-    if (sc.isLocal) {
-      localKey = (st.stateId, st.sweepSeq)
-      st.sweepSeq += 1
-      localSweepState.put(localKey, payload)
-    } else bcState = sc.broadcast(payload)
+    // Broadcasting the live arrays is safe: TorrentBroadcast serializes
+    // at construction.
+    val bcState = sc.broadcast((st.commI, st.ctot, st.sgl))
     val tT1 = System.nanoTime()
     Timers.bcast.addAndGet(tT1 - tT0)
     val bcVtot = st.bcVtot
@@ -714,8 +782,7 @@ object CsrSweep {
       val out = csr.map { blk =>
         val tk0 = System.nanoTime()
         val vt = bcVtot.value
-        val (comm, ct, sglL) =
-          if (localKey != null) localSweepState.get(localKey) else bcState.value
+        val (comm, ct, sglL) = bcState.value
         val tk1 = System.nanoTime()
         Timers.deriveTask.addAndGet(tk1 - tk0)
         accD.add(tk1 - tk0)
@@ -730,8 +797,7 @@ object CsrSweep {
       out
     } finally {
       val d0 = System.nanoTime()
-      if (localKey != null) localSweepState.remove(localKey)
-      if (bcState != null) bcState.destroy()
+      bcState.destroy()
       Timers.destroy.addAndGet(System.nanoTime() - d0)
     }
   }
@@ -1176,8 +1242,7 @@ object CsrSweep {
           maxIterations: Int, boundArr: Option[Array[Long]] = None,
           refineSingletons: Boolean = false, minMoves: Long = 0L,
           sketchSlots: Int = 0): (Int, Long) = {
-    st.bound = boundArr.map(b => Array.tabulate(st.n)(b(_).toInt)).orNull
-    if (st.bound != null && st.sc != null) st.bcBound = st.sc.broadcast(st.bound)
+    st.bind(boundArr)
     try {
       var it = 0
       var totalMoves = 0L
@@ -1191,9 +1256,6 @@ object CsrSweep {
           continue = false
       }
       (it, totalMoves)
-    } finally {
-      if (st.bcBound != null) st.bcBound.destroy()
-      st.bound = null; st.bcBound = null
-    }
+    } finally st.unbind()
   }
 }

@@ -34,7 +34,11 @@ import org.apache.spark.sql.graft.PlanUtils
   * membership is built from it once at the end. Otherwise it is a
   * checkpointed (id, comm) DataFrame composed by joins.
   *
-  * A dense pass coarsens its cached CSR blocks in one Spark job
+  * A dense pass packs its graph into cached CSR blocks (`csrbuild`). On a
+  * local master the job that materializes the cache also pins the blocks
+  * on the driver (`CsrSweep.init`), so its half-sweeps run no Spark job;
+  * on any other master each half-sweep is one job over the blocks. The
+  * pass then coarsens its cached CSR blocks in one Spark job
   * (`Aggregate.coarsenBlocks`) into disjoint hash slices of the coarse
   * graph, persisted and locally checkpointed; the job also returns the
   * slices' rows when they fit the local tail's gate.
@@ -344,10 +348,11 @@ object Leiden {
     }
 
     while (!done && pass < opts.maxPasses) {
-      // Local tail: once the pass graph has at most `tailRows` rows,
-      // per-half-sweep Spark jobs are pure fixed cost, so the rows move to
-      // the driver once and every remaining pass runs the steps below on
-      // one driver-held CSR block, coarsening by one sort.
+      // Local tail: once the pass graph has at most `tailRows` rows, a
+      // pass's Spark jobs (the CSR pack, the coarsen, and on non-local
+      // masters one per half-sweep) are pure fixed cost, so the rows move
+      // to the driver once and every remaining pass runs the steps below
+      // on one driver-held CSR block, coarsening by one sort.
       if (tail == null && tailRows > 0 &&
         (if (rows >= 0) rows else edges.count()) <= tailRows)
         timed("localtail") { enterTail() }
@@ -499,34 +504,35 @@ object Leiden {
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
           // array pass per half-sweep, frontier folded into the same pass.
           // A tail pass holds its one block on the driver.
-          val csr = if (tail != null) null else timed("csrbuild") {
-            // pass-0 edges are the src-hash input cache: every edge of a src
-            // already lives in one partition, so the pack skips the range
-            // shuffle and its sampling pre-job (srcComplete contract in
-            // CsrSweep.build). Coarsened passes keep the range-balanced path.
-            val c = CsrSweep.build(edges, fBits,
-              srcComplete = edges eq inputEdges).cache()
-            c.count() // materialize here so sweep timings are pure
-            c
-          }
-          val st =
-            if (csr == null) CsrSweep.onDriver(
-              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0)
-            else CsrSweep.init(csr, fBits, vt, comm0, bits0)
-          val (lIt, lMv) = timed(if (pass == firstPass) "firstpass" else "move") {
-            CsrSweep.run(st, m, opts.resolution, tolerance,
-              opts.maxIterations, minMoves = minMoves, sketchSlots = slots)
-          }
-          val boundArr = st.resetToSingletons()
-          val (rIt, rMv) = timed("refine") {
-            CsrSweep.run(st, m, opts.resolution, tolerance,
-              opts.maxIterations, boundArr = Some(boundArr),
-              refineSingletons = true, minMoves = minMoves,
-              sketchSlots = slots)
-          }
-          val commArr = st.comm
-          st.close()
-          (Some(commArr), None, lIt + rIt, lMv, rMv, csr)
+          val (csr, st) =
+            if (tail != null) (null, CsrSweep.onDriver(
+              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0))
+            else timed("csrbuild") {
+              // pass-0 edges are the src-hash input cache: every edge of a
+              // src already lives in one partition, so the pack skips the
+              // range shuffle and its sampling pre-job (srcComplete contract
+              // in CsrSweep.build). Coarsened passes keep the range-balanced
+              // path. init's one job materializes the cache here, so sweep
+              // timings are pure; on a local master it also pins the blocks.
+              val c = CsrSweep.build(edges, fBits,
+                srcComplete = edges eq inputEdges).cache()
+              (c, CsrSweep.init(c, fBits, vt, comm0, bits0))
+            }
+          // closed on failure too: a failed call keeps no pinned blocks
+          try {
+            val (lIt, lMv) = timed(if (pass == firstPass) "firstpass" else "move") {
+              CsrSweep.run(st, m, opts.resolution, tolerance,
+                opts.maxIterations, minMoves = minMoves, sketchSlots = slots)
+            }
+            val boundArr = st.resetToSingletons()
+            val (rIt, rMv) = timed("refine") {
+              CsrSweep.run(st, m, opts.resolution, tolerance,
+                opts.maxIterations, boundArr = Some(boundArr),
+                refineSingletons = true, minMoves = minMoves,
+                sketchSlots = slots)
+            }
+            (Some(st.comm), None, lIt + rIt, lMv, rMv, csr)
+          } finally st.close()
 
         case None =>
           val edgesByDst =

@@ -56,8 +56,9 @@ case class LeidenOptions(
       * (`CsrSweep.scanBlock`), called in-process on one driver-held block,
       * with coarsening by one sort (`Aggregate.coarsenRows`). Coarsening
       * shrinks graphs geometrically, so the multi-level tail is a few
-      * thousand super-vertices for which per-superstep Spark job
-      * scheduling is pure fixed cost. 1M edge rows ≈ 24 MB on the driver —
+      * thousand super-vertices for which a pass's Spark jobs (the CSR
+      * pack, the coarsen, and off local masters one per half-sweep) are
+      * pure fixed cost. 1M edge rows ≈ 24 MB on the driver —
       * conservative next to broadcast-join thresholds, and the reference
       * solves 100M-edge graphs on one node. 0 disables (tests of the
       * distributed machinery use 0).

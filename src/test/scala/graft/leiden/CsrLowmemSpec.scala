@@ -51,6 +51,88 @@ class CsrLowmemSpec extends SparkSpec {
     csr.unpersist(); edges.unpersist()
   }
 
+  test("pinned blocks scanned in-process equal the RDD scan, half-sweep by half-sweep") {
+    // CsrSweep.init pins the cached blocks on a local master; a state over
+    // the RDD itself scans them with one job and one broadcast per
+    // half-sweep. Both must take the same moves with the same dq bits in
+    // every half-sweep of the move and the refine phase.
+    val n = 300
+    val sc = spark.sparkContext
+    assert(sc.isLocal)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def same(a: CsrSweep.CsrBlock, b: CsrSweep.CsrBlock): Boolean = {
+      import java.util.Arrays.{equals => arrEq}
+      arrEq(a.srcs, b.srcs) && arrEq(a.off, b.off) && arrEq(a.dst, b.dst) && arrEq(a.w, b.w) &&
+        arrEq(a.packed, b.packed) && arrEq(a.widths, b.widths) && arrEq(a.bitOff, b.bitOff)
+    }
+    val weights = Seq[(String, (Long, Long) => Double)](
+      "unit" -> ((_, _) => 1.0),
+      "integral" -> ((a, b) => 1.0 + (a + b) % 3),
+      "non-dyadic" -> ((a, b) => 0.1 + (a * 17 + b) % 5 * 0.3))
+    for ((wName, wf) <- weights) {
+      val rnd = new Random(23)
+      val es = for (a <- 0 until n; b <- a + 1 until n
+          if rnd.nextDouble() < (if (a / 30 == b / 30) 0.3 else 0.015))
+        yield (a.toLong, b.toLong, wf(a.toLong, b.toLong))
+      val edges = EdgeTable.undirected(spark, es).repartition(4, col("src")).cache()
+      val (m, vt) = vtArr(edges, n)
+      for ((kind, csr) <- Seq(
+          "hash" -> CsrSweep.build(edges, n, srcComplete = true).cache(),
+          "range" -> CsrSweep.build(edges, n, parts = 4).cache())) {
+        val collected = csr.collect()
+        if (kind == "hash")
+          assert(collected.exists(b => b.srcs.last - b.srcs.head > n / 2),
+            s"$wName: hash blocks must interleave src ranges")
+        for (slots <- Seq(0, 64, 1)) {
+          val tag = s"$wName $kind slots=$slots"
+          def start = (Array.tabulate(n)(_.toLong), Array.fill[Byte]((n + 7) / 8)(-1))
+          val (c0, s0) = start
+          val viaRdd = new CsrSweep.CsrState(Right(csr), n, vt, c0, s0)
+          val (c1, s1) = start
+          val pinned = CsrSweep.init(csr, n, vt, c1, s1)
+          assert(viaRdd.blocks.isRight, tag)
+          assert(pinned.blocks.isLeft, tag)
+          assert(CsrSweep.handoffSize === 0, tag)
+          val held = pinned.blocks.swap.toOption.get
+          assert(held.length === collected.length && held.indices.forall(i =>
+            same(held(i), collected(i))), s"$tag: pinned blocks vs collect()")
+          // half-sweeps until two in a row move nothing
+          def phase(name: String, refine: Boolean): Int = {
+            var i = 0; var quiet = 0
+            while (quiet < 2 && i < 80) {
+              val (ma, da) = CsrSweep.halfSweep(viaRdd, m, 1.0, i % 2, refine, slots)
+              val (mb, db) = CsrSweep.halfSweep(pinned, m, 1.0, i % 2, refine, slots)
+              assert(mb === ma, s"$tag $name sweep $i")
+              assert(bits(db) === bits(da), s"$tag $name sweep $i: dq $db vs $da")
+              quiet = if (ma == 0) quiet + 1 else 0
+              i += 1
+            }
+            i
+          }
+          assert(phase("move", refine = false) > 4, s"$tag: the move phase must take several sweeps")
+          assert(pinned.comm.sameElements(viaRdd.comm), tag)
+          val bR = viaRdd.resetToSingletons(); val bP = pinned.resetToSingletons()
+          viaRdd.bind(Some(bR)); pinned.bind(Some(bP))
+          try phase("refine", refine = true)
+          finally { viaRdd.unbind(); pinned.unbind() }
+          assert(pinned.comm.sameElements(viaRdd.comm), tag)
+          viaRdd.close(); pinned.close()
+          assert(pinned.blocks == null, s"$tag: close drops the blocks")
+        }
+        csr.unpersist()
+      }
+      edges.unpersist()
+    }
+    // a pin job that throws leaves no handoff key behind
+    val failing = sc.parallelize(0 until 4, 4).map { p =>
+      if (p == 1) throw new IllegalStateException("pin test: partition 1 fails")
+      CsrSweep.CsrBlock(Array(p), Array(0, 0), Array.emptyIntArray, null)
+    }
+    intercept[org.apache.spark.SparkException](CsrSweep.init(failing, 4, Array.fill(4)(1.0),
+      Array.tabulate(4)(_.toLong), Array.fill[Byte](1)(-1)))
+    assert(CsrSweep.handoffSize === 0, "after a failed pin")
+  }
+
   test("kernel sketch with slots >= distinct candidates equals the exact kernel bit-for-bit") {
     // no vertex here sees > 64 neighbor communities, so the MG sketch never
     // evicts: survivors == the full candidate set and the rescored weights

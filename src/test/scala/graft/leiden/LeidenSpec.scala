@@ -539,6 +539,11 @@ class LeidenSpec extends SparkSpec {
     // rows into the tail (a second job only if a slice stayed behind)
     assert(byPhase.get("aggregate") === Some(1), byPhase.toString)
     assert(byPhase.getOrElse("localtail", 0) <= 1, byPhase.toString)
+    // on a local master the dense pass's one csrbuild job also pins its
+    // blocks on the driver, and every half-sweep scans them in-process
+    assert(byPhase.get("csrbuild") === Some(1), byPhase.toString)
+    assert(!byPhase.contains("firstpass") && !byPhase.contains("move") &&
+      !byPhase.contains("refine"), byPhase.toString)
     edges.unpersist()
   }
 
@@ -546,11 +551,14 @@ class LeidenSpec extends SparkSpec {
     val es = blocks(120, 30, 42, (_, _) => 1.0)
     val sc = spark.sparkContext
     sc.setLocalProperty(Leiden.PhaseProperty, "caller")
-    val (phases, _) = try jobPhases(
+    val (phases, r) = try jobPhases(
       Leiden.detect(EdgeTable.undirected(spark, es), LeidenOptions(localSolveEdgeThreshold = 0)))
     finally assert(sc.getLocalProperty(Leiden.PhaseProperty) === "caller")
     sc.setLocalProperty(Leiden.PhaseProperty, null)
-    assert(phases.contains("firstpass"), phases.toString)
+    // the first pass's half-sweeps run no job on a local master: its
+    // csrbuild job carries the tag, and the phase is still timed
+    assert(phases.contains("csrbuild"), phases.toString)
+    assert(r.phaseMillis.contains("firstpass"), r.phaseMillis.toString)
     assert(phases.contains("modularity"), phases.toString)
   }
 
