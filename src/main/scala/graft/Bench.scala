@@ -112,11 +112,12 @@ object Bench {
     val m = EdgeTable.totalWeight(edges) / 2
     val vtot = PlanUtils.checkpointTruncated(EdgeTable.vertexWeights(edges))
     var bestSecs = Double.MaxValue
-    if (bcMd && nVerts <= LocalMove.CtBroadcastMax) {
-      // the tier Leiden.detect runs on dense passes — packed-CSR fused
-      // kernel (CsrSweep scaladoc): ONE primitive-array pass per
-      // half-sweep, frontier folded in. On a local master singleton pins
-      // the blocks and each half-sweep scans them in-process, with no job
+    if (bcMd && nVerts <= LocalMove.CtBroadcastMax && spark.sparkContext.isLocal) {
+      // the tier Leiden.detect runs on a local master's dense passes —
+      // packed-CSR fused kernel (CsrSweep scaladoc): ONE primitive-array
+      // pass per half-sweep, frontier folded in. singleton pins the blocks
+      // and each half-sweep scans them in-process, with no job. Off a
+      // local master detect runs the Catalyst tier below, and so does this
       val n = nVerts.toInt
       val vt = new Array[Double](n)
       vtot.select("id", "vtot").collect()
@@ -252,17 +253,18 @@ object Bench {
       // fixtures; a 3s-per-level locality wait would serialize any
       // imbalance onto one executor instead of reading remotely
       "--conf", "spark.locality.wait=0s",
-      // match Sessions.configure: the per-half-sweep O(V) broadcast is
-      // near-incompressible; lz4 is pure serial driver cost over loopback
+      // match Sessions.configure: the Catalyst tier's per-half-sweep O(V)
+      // broadcasts are near-incompressible; lz4 is pure serial driver cost
+      // over loopback
       "--conf", "spark.broadcast.compress=false",
       // match Sessions.configure: Kryo's bulk primitive-array path for the
-      // per-half-sweep state broadcast + task-result collect (JavaSerializer
-      // was ~40 ms/half-sweep of driver-serial time at 4x8, csr_timers)
+      // driver's broadcast arrays (JavaSerializer was ~40 ms/half-sweep of
+      // driver-serial time at 4x8, BENCH.md round 5)
       "--conf", "spark.serializer=org.apache.spark.serializer.KryoSerializer",
       "--conf", "spark.kryo.unsafe=true",
-      // keep the per-task move-list results on the direct path (default
-      // 1 MiB detours them through the BlockManager — one extra fetch
-      // round-trip per task per half-sweep at near-singleton move counts)
+      // match Sessions.configure: keep per-task packed collects on the
+      // direct path (default 1 MiB detours them through the BlockManager,
+      // one extra fetch round-trip per task)
       "--conf", "spark.task.maxDirectResultSize=16m",
       jar.toString)
     pb.directory(new java.io.File(System.getProperty("java.io.tmpdir")))
@@ -619,16 +621,15 @@ object Bench {
             s""""alu_efficiency":${"%.3f".format(aluH / aluL / 4.0)},""" +
             s""""simhash_docs_per_sec_lo":${"%.0f".format(shL)},"simhash_docs_per_sec_hi":${"%.0f".format(shH)},""" +
             s""""simhash_efficiency":${"%.3f".format(shH / shL / 4.0)},""" +
-            s""""leiden_eps_lo":${"%.0f".format(epL)},"leiden_eps_hi":${"%.0f".format(epH)},""" +
-            s""""leiden_efficiency":${"%.3f".format(epH / epL / 4.0)},""" +
+            // executor JVMs time the Catalyst tier (LocalMove): the CSR
+            // tier needs a local master
+            s""""leiden_catalyst_eps_lo":${"%.0f".format(epL)},""" +
+            s""""leiden_catalyst_eps_hi":${"%.0f".format(epH)},""" +
+            s""""leiden_catalyst_efficiency":${"%.3f".format(epH / epL / 4.0)},""" +
             s""""superstep_secs_hi":${"%.3f".format(secH)},"retries":$tries,""" +
             s""""fixture_deg":$scaleDeg,""" +
             s""""lo_attempts_eps":${loAttempts.map(v => "%.0f".format(v)).mkString("[", ",", "]")},""" +
             s""""hi_attempts_eps":${hiAttempts.map(v => "%.0f".format(v)).mkString("[", ",", "]")}}"""
-          // executor hi is a legitimate engine rate: it seeds the headline
-          // until (unless) the in-JVM pair below replaces it
-          for ((_, _, epH, secH, feH) <- hi if headline.isEmpty)
-            headline = Some((epH, feH, secH, "executor_hi"))
         }
       } catch { case e: Throwable =>
         execSkipReason = Some(s"error_${e.getClass.getSimpleName}")
@@ -686,12 +687,9 @@ object Bench {
         s""""fixture_deg":$scaleDeg,""" +
         s""""lo_attempts_eps":${loAttempts.map(v => "%.0f".format(v)).mkString("[", ",", "]")},""" +
         s""""hi_attempts_eps":${hiAttempts.map(v => "%.0f".format(v)).mkString("[", ",", "]")}}""")
-      // the headline is the run's best MEASURED engine rate: keep the
-      // executor-mode hi if it beat the in-JVM pair (run E: in-JVM landed
-      // on a 0.486-ALU contended window at 155M while the same run's
-      // executor hi measured 215.8M — replacing downward misstated the run)
-      if (headline.forall(_._1 < epsHi))
-        headline = Some((epsHi, fixtureEdgeCount, supersteps, "in_jvm_local32"))
+      // the headline is the CSR tier's rate, which only the in-JVM pair
+      // measures: the executor pair times the Catalyst tier
+      headline = Some((epsHi, fixtureEdgeCount, supersteps, "in_jvm_local32"))
       phasesDone ::= "scaling"
     } else phasesDone ::= "scaling_skipped_time_budget"
     phasesDone ::= "final"

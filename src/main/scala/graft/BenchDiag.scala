@@ -77,8 +77,7 @@ object BenchDiag {
     if (sys.env.get("SPARK_GRAFT_DIAG_MODE").contains("csr")) {
       // CSR-tier serial-term decomposition: same measurement window as the
       // Bench csr leg, with CsrSweep.Timers splitting each half-sweep into
-      // broadcast / scan / driver-apply / destroy (on a local master the
-      // blocks are pinned and scanned in-process: broadcast reads 0)
+      // the in-process scan and the driver apply
       val deg = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEG", "8").toInt
       val edges = EdgeTable.canonicalize(Cli.fixtureEdges(spark, verts, deg))
         .repartition(col("src")).cache()

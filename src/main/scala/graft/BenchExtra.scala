@@ -76,38 +76,6 @@ object BenchExtra {
         .groupBy(col("pr.src").as("src"), col("pr.dst").as("dst"))
         .agg(count(lit(1)).as("w"))))
     }
-    if (want("leiden_agg_steps")) {
-      // the pass-0 coarsen (leiden_phases "aggregate") over the CSR blocks
-      // detect() builds from the same cached input: distributed (no rows
-      // returned) and under the default local-tail gate (rows returned)
-      val perOrder = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(col("ps"))
-      val pairsDf = perOrder
-        .select(explode(org.apache.spark.sql.graft.NativeColumns
-          .orderedPairs(col("ps"), true)).as("pr"))
-        .groupBy(col("pr.src").as("src"), col("pr.dst").as("dst"))
-        .agg(count(lit(1)).cast("double").as("w"))
-      val edges = pairsDf.repartition(spark.sparkContext.defaultParallelism,
-        col("src")).cache()
-      val ec = edges.count()
-      println(s"[benchextra] agg input edges=$ec")
-      val mx = edges.agg(max(greatest(col("src"), col("dst")))).head.getLong(0).toInt
-      val comm = Array.tabulate(mx + 1)(v => (v % 5000).toLong)
-      val csr = graft.leiden.CsrSweep.build(edges, mx + 1, srcComplete = true).cache()
-      csr.count()
-      def coarsen(threshold: Long): Unit = {
-        val c = graft.leiden.Aggregate.coarsenBlocks(spark, csr, comm, threshold)
-        println(s"[benchextra] agg rows=${c.rows} held=${c.held != null}")
-        org.apache.spark.sql.graft.PlanUtils.release(c.edges)
-      }
-      timed("agg: coarsenBlocks 1st")(coarsen(0L))
-      timed("agg: coarsenBlocks 2nd")(coarsen(0L))
-      timed("agg: coarsenBlocks to driver")(coarsen(1000000L))
-      csr.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-    }
     if (want("ngram_steps")) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       docs.cache().count()

@@ -171,17 +171,19 @@ object PlanDump {
       val n = 1 + edges.agg(max(greatest(col("src"), col("dst")))).head.getLong(0).toInt
       val comm = Array.tabulate(n)(v => (v % 64).toLong)
       write(dir, "g_leiden_after.txt",
-        ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes — no SQL " +
-          "plan: one RDD job over the pass's CSR blocks (Aggregate.coarsenBlocks) " +
-          "maps each row through the broadcast membership, sums per block, and " +
-          "shuffles the partial rows once into hash slices. The slices are " +
-          "persisted and locally checkpointed by that job; their lineage after " +
-          "it (RDD.toDebugString) is") -> {
-            val csr = graft.leiden.CsrSweep.build(edges, n, srcComplete = true).cache()
-            val c = graft.leiden.Aggregate.coarsenBlocks(spark, csr, comm, 0L)
-            val lineage = c.slices.toDebugString
-            org.apache.spark.sql.graft.PlanUtils.release(c.edges)
-            csr.unpersist()
+        ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes (local " +
+          "masters) — no SQL plan and no job: the driver coarsens the pass's " +
+          "pinned CSR blocks in-process (Aggregate.coarsenBlocks), mapping each " +
+          "row through the membership array, summing per block and merging the " +
+          "blocks' partials into hash slices. A coarse graph above the local " +
+          "tail's gate becomes the next pass's frame over the slices in one job " +
+          "that persists and locally checkpoints them (Aggregate.slicesFrame); " +
+          "that frame's lineage (RDD.toDebugString) is") -> {
+            val blocks = graft.leiden.CsrSweep.build(edges, n, srcComplete = true).collect()
+            val frame = graft.leiden.Aggregate.slicesFrame(spark,
+              graft.leiden.Aggregate.coarsenBlocks(blocks, comm, spark.sparkContext.defaultParallelism))
+            val lineage = frame.queryExecution.toRdd.toDebugString
+            org.apache.spark.sql.graft.PlanUtils.release(frame)
             lineage
           },
         ("g_leiden AFTER (2/3): leaf composition on a dense pass whose leaf is " +

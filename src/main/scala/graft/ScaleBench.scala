@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One scaling-measurement point, master-agnostic: measures both scaling
   * witnesses (compute-dense simhash throughput, shuffle-bound Leiden
   * superstep throughput) in whatever session `spark-submit` provides and
-  * prints ONE JSON line.
+  * prints ONE JSON line. Off a local master the Leiden witness times the
+  * Catalyst tier (`LocalMove`): the CSR tier scans driver-held blocks only.
   *
   * This is the executor-mode path for the north rule's N-vs-4N-executor
   * criterion: `Bench.main` submits this class twice via
@@ -45,72 +46,12 @@ object ScaleBench {
     val docs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "4000000").toLong
     val alu = Bench.hashChainThroughput(spark)
     val sh = Bench.simHashThroughput(spark, docs)
-    graft.leiden.CsrSweep.Timers.reset()
-    // task-skew witness for the kernel jobs: with per-stage (wall, task-time
-    // sum, max task) the line itself distinguishes "the hi point lost to a
-    // straggler executor" (max >> sum/tasks) from "all tasks slowed
-    // together" (bandwidth) — the two causes the hi attempts' spread keeps
-    // getting attributed to by eyeball
-    val skew = new java.util.concurrent.atomic.AtomicLong // max task ms, kernel stages
-    val taskSum = new java.util.concurrent.atomic.AtomicLong
-    val taskN = new java.util.concurrent.atomic.AtomicLong
-    val stageWall = new java.util.concurrent.atomic.AtomicLong
-    val kernelStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    // per-kernel-stage (taskSum, maxTask) for the stage-by-stage skew view:
-    // the 13 half-sweep stages include warmup + cold first rep, so the
-    // aggregate max/mean alone cannot say whether the MEASURED window
-    // straggled
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (java.util.concurrent.atomic.AtomicLong, java.util.concurrent.atomic.AtomicLong)]()
-    val stageLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-        if (e.stageInfo.name.contains("CsrSweep")) {
-          kernelStages.add(e.stageInfo.stageId)
-          perStage.put(e.stageInfo.stageId,
-            (new java.util.concurrent.atomic.AtomicLong, new java.util.concurrent.atomic.AtomicLong))
-          ()
-        }
-      }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null && kernelStages.contains(e.stageId)) {
-          taskSum.addAndGet(m.executorRunTime); taskN.incrementAndGet()
-          var cur = skew.get
-          while (m.executorRunTime > cur && !skew.compareAndSet(cur, m.executorRunTime))
-            cur = skew.get
-          val ps = perStage.get(e.stageId)
-          if (ps != null) {
-            ps._1.addAndGet(m.executorRunTime)
-            var c2 = ps._2.get
-            while (m.executorRunTime > c2 && !ps._2.compareAndSet(c2, m.executorRunTime))
-              c2 = ps._2.get
-          }
-        }
-      }
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        if (kernelStages.contains(si.stageId)) {
-          val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
-          stageWall.addAndGet(wall)
-          val ps = perStage.get(si.stageId)
-          if (ps != null)
-            stageLines.add(s"[$wall,${ps._1.get},${ps._2.get}]")
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val (eps, ec, secs) = Bench.leidenSuperstepThroughput(spark, verts, iters = 2)
-    spark.sparkContext.removeSparkListener(listener)
     val line =
       s"""{"alu_hashes_per_sec":${"%.0f".format(alu)},""" +
       s""""simhash_docs_per_sec":${"%.0f".format(sh)},"leiden_eps":${"%.0f".format(eps)},""" +
       s""""fixture_edges":$ec,"superstep_secs":${"%.3f".format(secs)},""" +
-      s""""parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""task_ms_sum":${taskSum.get},"task_ms_max":${skew.get},""" +
-      s""""tasks":${taskN.get},"stage_wall_ms":${stageWall.get},""" +
-      s""""kernel_stages_wall_sum_max":${stageLines.toArray.mkString("[", ",", "]")},""" +
-      s""""csr_timers":${graft.leiden.CsrSweep.Timers.json}}"""
+      s""""parallelism":${spark.sparkContext.defaultParallelism}}"""
     println("GRAFT_SCALE " + line)
     sys.env.get("SPARK_GRAFT_SCALE_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n")

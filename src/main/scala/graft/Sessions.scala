@@ -23,27 +23,31 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Kryo for RDD-level payloads (DataFrame shuffles ride Tungsten's own
-      // UnsafeRow path either way). The sweep kernels move primitive arrays
-      // through broadcasts (membership and community totals) and task
-      // results (packed moves + dq) every half-sweep; JavaSerializer writes
-      // long[]/double[] element-wise (~40 MB/s measured as ~40 ms of
-      // driver-serial bcast per half-sweep at 4x8 executors on the 128M-edge
-      // fixture, ScaleBench csr_timers), Kryo's bulk primitive-array path is
-      // a near-memcpy. spark.kryo.unsafe keeps it on the unsafe fast path.
+      // UnsafeRow path either way). Off a local master the driver ships
+      // primitive arrays to executors in Leiden's broadcast membership
+      // lookups (Aggregate.composeArray, Modularity.dense); on a local
+      // master the coarse slices Aggregate.slicesFrame caches spill
+      // through it.
+      // JavaSerializer writes long[]/double[] element-wise (~40 MB/s,
+      // measured as ~40 ms of driver-serial broadcast per half-sweep at 4x8
+      // executors on the 128M-edge fixture, BENCH.md round 5), Kryo's bulk
+      // primitive-array path is a near-memcpy. spark.kryo.unsafe keeps it
+      // on the unsafe fast path.
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.kryo.unsafe", "true")
-      // The sweep kernels collect per-task move lists that straddle the
-      // 1 MiB maxDirectResultSize default near the start of a pass
-      // (~16 B/move); an over-limit result is detoured through the
-      // BlockManager — an extra driver->executor fetch round-trip PER TASK
-      // per half-sweep. 16 MiB keeps the collect direct at the gated
-      // worst case (4M verts / 8 tasks x 16 B = 8 MiB) without the
-      // driver-memory exposure an unbounded direct path would mean on a
-      // 1000-executor cluster.
+      // Packed driver collects (Leiden's dense-gate vertex weights, the
+      // local tail's rows) return per-task results that straddle the
+      // 1 MiB maxDirectResultSize default (~16 B/vertex); an over-limit
+      // result is detoured through the BlockManager — an extra
+      // driver->executor fetch round-trip PER TASK. 16 MiB keeps the
+      // collect direct at the gated worst case (4M verts / 8 tasks x 16 B
+      // = 8 MiB) without the driver-memory exposure an unbounded direct
+      // path would mean on a 1000-executor cluster.
       .config("spark.task.maxDirectResultSize", (16L << 20).toString)
-    // The Leiden sweep broadcasts O(V) membership+totals every half-sweep;
-    // lz4-ing ~24 MB of near-incompressible doubles is a pure serial driver
-    // cost that only pays off on a real network. Disable it ONLY when the
+    // Off a local master Leiden's Catalyst tier broadcasts O(V) membership
+    // and community-total relations every half-sweep; lz4-ing ~24 MB of
+    // near-incompressible ids and doubles is a pure serial driver cost
+    // that only pays off on a real network. Disable it ONLY when the
     // master is local/local-cluster (this sandbox, unit tests, the bench's
     // loopback executors) — a real cluster deployment keeps Spark's
     // compressed default unless the submitter opts out explicitly.

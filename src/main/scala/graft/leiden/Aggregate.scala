@@ -1,8 +1,6 @@
 package graft.leiden
 
 import graft.graph.Packed
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -15,13 +13,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * weights; intra-community weight becomes the super-vertex self loop
   * (SELF=true during aggregation, `/root/reference/inc/leiden.hxx:600-601`).
   *
-  * Three forms, by where the pass membership lives:
+  * Two forms, by where the pass membership lives:
   *  - [[coarsen]]: a DataFrame-tier pass's membership frame, two membership
   *    joins and one hash aggregation;
-  *  - [[coarsenBlocks]]: a dense pass's driver array, one RDD job over the
-  *    pass's cached CSR blocks into hash slices of the coarse graph, whose
-  *    rows come back with the job when the local tail takes them;
-  *  - [[coarsenRows]]: a local-tail pass, one sort on the driver.
+  *  - [[coarsenBlocks]]: a dense or local-tail pass's driver array, one
+  *    in-process pass over the CSR blocks the driver holds, with no Spark
+  *    job, into hash slices of the coarse graph; [[slicesFrame]] makes the
+  *    next pass's frame of them when that graph stays above the tail gate.
   * The output shrinks geometrically per pass, so later passes run on
   * driver-sized data — the analog of the reference's DiGraph->CSR switch
   * (`/root/reference/inc/leiden.hxx:724-725`).
@@ -76,77 +74,68 @@ object Aggregate {
         lit(0.0).as("w")).distinct())
   }
 
-  /** A dense pass's coarse graph, from [[coarsenBlocks]]: its rows in
-    * `slices.getNumPartitions` disjoint hash slices of the packed
-    * `(src << 32) | dst` key, one (src int, dst int, w double) row per pair,
-    * ascending within a slice. `slices` is persisted at MEMORY_AND_DISK and
-    * locally checkpointed, so it never recomputes the passes before it.
-    *
-    * @param sliceRows each slice's exact row count
-    * @param held every row on the driver (the slices one after another), or
-    *             null
-    * @param edges the rows as a (src long, dst long, w double) frame over
-    *              `slices` (no job)
-    */
-  final class Coarse(val slices: RDD[Packed], val sliceRows: Array[Long], val held: Packed,
-                     val edges: DataFrame) {
-    def rows: Long = sliceRows.sum
-  }
-
   private val CoarseSchema = StructType(Seq(StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false), StructField("w", DoubleType, nullable = false)))
 
-  /** [[coarsen]] for a dense pass, in one Spark job over the pass's cached
-    * CSR blocks: the pass membership is a driver array indexed by pass
-    * vertex id (the CsrSweep state), broadcast once as `Int`s.
+  /** [[coarsen]] over CSR blocks the driver holds (a dense pass's pinned
+    * blocks, or the local tail's one block), in-process with no Spark job:
+    * `comm` is the pass membership, indexed by pass vertex id (the CsrSweep
+    * state).
     *
     * Each block maps its rows to packed `(comm(src) << 32) | comm(dst)` keys
-    * and sums duplicates by one sort ([[sumPairs]]), in CSR row order. Its
-    * partial rows are shuffled by key hash into P = defaultParallelism
-    * slices. A slice's reduce task sums each pair's partials in ascending
-    * block index, so the weights are the same doubles on every run over
-    * the same blocks; on integral weights they equal [[coarsen]]'s. The
-    * job returns every slice's row count, and the slice's rows too when it
-    * has at most ⌈threshold / P⌉ of them: the driver receives at most
-    * about `threshold` rows.
+    * and sums duplicates by one sort ([[sumPairs]]), in CSR row order, then
+    * splits its partial rows into `p` hash slices of the key; the blocks
+    * run in parallel. Each slice then sums each pair's partials in
+    * ascending block index, the slices in parallel. So the weights are the
+    * same doubles on every run over the same blocks, whatever the thread
+    * schedule, and on integral weights they equal [[coarsen]]'s. The local
+    * tail calls it with one block and one slice.
     *
-    * The slices are marked for `localCheckpoint` before the job, so the
-    * job materializes them at MEMORY_AND_DISK with the lineage cut: an
-    * evicted slice spills instead of recomputing every earlier pass, and
-    * the broadcast is destroyed once the job ends. The caller drops the
-    * slices with `PlanUtils.release(edges)`.
-    *
-    * @param threshold the local tail's gate in rows; 0 returns no rows
-    * @return `held` is set when the rows number at most `threshold` and
-    *         every slice came back; otherwise a caller that wants the rows
-    *         collects `edges` (one job over the persisted slices)
+    * @return the `p` slices in slice order, each one (src int, dst int,
+    *         w double) row per pair, ascending
     */
-  def coarsenBlocks(spark: SparkSession, csr: RDD[CsrSweep.CsrBlock], comm: Array[Long],
-                    threshold: Long): Coarse = {
-    val sc = csr.sparkContext
-    val p = sc.defaultParallelism
-    val bc = sc.broadcast(comm.map(_.toInt))
-    val partials = csr.mapPartitionsWithIndex { (b, blocks) =>
-      blocks.flatMap(blk => sliced(b, blockKeys(blk, bc.value), blockWeights(blk), p))
+  def coarsenBlocks(blocks: Array[CsrSweep.CsrBlock], comm: Array[Long], p: Int): Array[Packed] = {
+    val parts = new Array[Array[(Array[Long], Array[Double])]](blocks.length)
+    java.util.stream.IntStream.range(0, blocks.length).parallel().forEach { b =>
+      parts(b) = sliced(blockKeys(blocks(b), comm), blockWeights(blocks(b)), p)
     }
-    val slices = partials.partitionBy(new HashPartitioner(p)).mapPartitions { parts =>
-      val byBlock = parts.map(_._2).toArray.sortBy(_._1)
-      val (keys, ws, k) = sumKeys(concat(byBlock.map(_._2)), concat(byBlock.map(_._3)))
-      Iterator.single(unpack(keys, ws, k))
+    val out = new Array[Packed](p)
+    java.util.stream.IntStream.range(0, p).parallel().forEach { sl =>
+      val (keys, ws, k) = sumKeys(concat(parts.map(_(sl)._1)), concat(parts.map(_(sl)._2)))
+      // the slice's partials are dropped as it is merged, so the driver
+      // never holds every partial and every merged slice at once
+      parts.foreach(_(sl) = null)
+      out(sl) = unpack(keys, ws, k)
     }
-    slices.localCheckpoint()
-    val share = if (threshold > 0) (threshold + p - 1) / p else -1L
-    val got =
-      try slices.map(s => (s.size.toLong, if (s.size <= share) s else null)).collect()
-      finally bc.destroy()
-    val sliceRows = got.map(_._1)
-    val held =
-      if (threshold > 0 && sliceRows.sum <= threshold && got.forall(_._2 != null)) {
-        val ss = got.map(_._2)
-        Packed.of(ss.map(_.size).sum, concat(ss.map(_.ints(0))), concat(ss.map(_.ints(1))),
-          concat(ss.map(_.doubles(2))))
-      } else null
-    val unsafeRows = slices.mapPartitions { it =>
+    out
+  }
+
+  /** [[coarsenBlocks]]'s slices as the next pass's (src long, dst long,
+    * w double) frame, one partition per slice in slice order, after one
+    * job that persists them at MEMORY_AND_DISK with the lineage cut
+    * (`localCheckpoint`): an evicted slice spills instead of recomputing,
+    * and once the job ends no driver object holds the rows. A local master
+    * only: each task takes its slice object from the driver through
+    * `CsrSweep`'s same-JVM handoff, so no slice is serialized into a task
+    * and the cache holds the driver's arrays themselves. The caller drops
+    * the slices with `PlanUtils.release`.
+    */
+  def slicesFrame(spark: SparkSession, slices: Array[Packed]): DataFrame = {
+    val sc = spark.sparkContext
+    require(sc.isLocal, s"slicesFrame hands driver arrays to tasks and needs a local master, not ${sc.master}")
+    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[AnyRef](slices.length)
+    slices.indices.foreach(i => slots.set(i, slices(i)))
+    val persisted = CsrSweep.handingOff(slots) { key =>
+      val rdd = sc.parallelize(slices.indices, slices.length).map { i =>
+        val s = CsrSweep.handoffSlots(key)
+        if (s == null) throw new IllegalStateException(s"coarse slice $i: its handoff job has ended")
+        s.get(i).asInstanceOf[Packed]
+      }
+      rdd.localCheckpoint()
+      rdd.count()
+      rdd
+    }
+    val unsafeRows = persisted.mapPartitions { it =>
       val wr = new UnsafeRowWriter(3)
       it.flatMap { s =>
         val src = s.ints(0); val dst = s.ints(1); val w = s.doubles(2)
@@ -157,16 +146,15 @@ object Aggregate {
         }
       }
     }
-    new Coarse(slices, sliceRows, held,
-      org.apache.spark.sql.graft.PlanUtils.frameOf(spark, unsafeRows, CoarseSchema))
+    org.apache.spark.sql.graft.PlanUtils.frameOf(spark, unsafeRows, CoarseSchema)
   }
 
-  /** Block `b`'s partial coarse rows, one per pair of `keys` (weights
-    * summed in row order), as (slice, (b, keys, weights)) chunks, one per
-    * non-empty slice of `p`; a slice is a multiplicative hash of the key.
+  /** A block's partial coarse rows, one per pair of `rowKeys` (weights
+    * summed in row order), split into `p` (keys, weights) slices; a slice
+    * is a multiplicative hash of the key.
     */
-  private def sliced(b: Int, rowKeys: Array[Long], rowW: Array[Double], p: Int)
-      : Iterator[(Int, (Int, Array[Long], Array[Double]))] = {
+  private def sliced(rowKeys: Array[Long], rowW: Array[Double], p: Int)
+      : Array[(Array[Long], Array[Double])] = {
     val (keys, ws, k) = sumKeys(rowKeys, rowW)
     val slice = new Array[Int](k)
     val start = new Array[Int](p + 1)
@@ -182,22 +170,22 @@ object Aggregate {
     val sk = new Array[Long](k); val sw = new Array[Double](k)
     i = 0
     while (i < k) { val j = at(slice(i)); sk(j) = keys(i); sw(j) = ws(i); at(slice(i)) = j + 1; i += 1 }
-    (0 until p).iterator.filter(s => start(s + 1) > start(s)).map { s =>
-      (s, (b, java.util.Arrays.copyOfRange(sk, start(s), start(s + 1)),
-        java.util.Arrays.copyOfRange(sw, start(s), start(s + 1))))
+    Array.tabulate(p) { s =>
+      (java.util.Arrays.copyOfRange(sk, start(s), start(s + 1)),
+        java.util.Arrays.copyOfRange(sw, start(s), start(s + 1)))
     }
   }
 
   /** A block's rows as packed `(comm(src) << 32) | comm(dst)` keys, in CSR
     * row order; gap-packed unit blocks decode through `CsrSweep.decodeGaps`.
     */
-  private def blockKeys(blk: CsrSweep.CsrBlock, comm: Array[Int]): Array[Long] = {
+  private def blockKeys(blk: CsrSweep.CsrBlock, comm: Array[Long]): Array[Long] = {
     val srcs = blk.srcs; val off = blk.off
     val keys = new Array[Long](off(srcs.length))
     var buf = if (blk.dst == null) new Array[Int](1 << 10) else null
     var k = 0
     while (k < srcs.length) {
-      val cs = comm(srcs(k)).toLong << 32
+      val cs = comm(srcs(k)) << 32
       val e0 = off(k); val len = off(k + 1) - e0
       var i = 0
       if (blk.dst != null) {
@@ -222,15 +210,6 @@ object Aggregate {
     var off = 0
     parts.foreach { a => System.arraycopy(a, 0, out, off, a.length); off += a.length }
     out
-  }
-
-  /** [[coarsenBlocks]] for rows the driver holds (the local tail of
-    * `Leiden.detect`): `rows` are (src int, dst int, w double) and `comm`
-    * maps a vertex to its community. Exact, like the distributed coarsen.
-    */
-  def coarsenRows(rows: Packed, comm: Array[Long]): Packed = {
-    val s = rows.ints(0); val d = rows.ints(1)
-    sumPairs(Array.tabulate(rows.size)(i => (comm(s(i)) << 32) | comm(d(i))), rows.doubles(2))
   }
 
   /** Rows keyed by packed `(src << 32) | dst` longs of non-negative ints,

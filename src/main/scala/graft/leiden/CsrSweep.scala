@@ -1,8 +1,7 @@
 package graft.leiden
 
 import graft.graph.Packed
-import org.apache.spark.{SparkContext, TaskContext}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -12,11 +11,12 @@ import org.apache.spark.sql.functions.col
   * north-star design names explicitly ("edges are repartitioned into
   * sorted CSR-like per-partition blocks").
   *
-  * The dense tier of [[Leiden.detect]]: it runs every pass whose ids fit
-  * the dense gate (within the broadcast cap), and every pass of the local
-  * tail on one driver-held block; [[LocalMove]], the Catalyst DataFrame
-  * tier, runs the rest. It exists for one measured reason: a
-  * Catalyst half-sweep is full passes over the cached edge table
+  * The dense tier of [[Leiden.detect]]: on a local master it runs every
+  * pass whose ids fit the dense gate (within the broadcast cap), and on any
+  * master every pass of the local tail on one driver-held block;
+  * [[LocalMove]], the Catalyst DataFrame tier, runs the rest. It exists
+  * for one measured reason: a Catalyst half-sweep is full passes over the
+  * cached edge table
   * (gather-aggregate-argmax, then the frontier bit-OR), each paying the
   * columnar-cache decode per row, and at 8 cores those passes already
   * saturate one box's DRAM (BENCH.md roofline: 4x threads buy only ~1.5x
@@ -28,13 +28,15 @@ import org.apache.spark.sql.functions.col
   * per-src scratch structure L1-resident. The frontier update costs zero
   * extra passes — see the algebra below.
   *
-  * Where the scan runs follows the master, as the reference runs each
-  * sweep as one parallel loop over flat arrays in one process
-  * (`leidenMoveOmpW`, the reference's `inc/leiden.hxx:409-435`): on a
-  * local master the driver pins a pass's cached blocks once ([[pin]]) and
-  * every half-sweep scans them in-process, in parallel over blocks, with
-  * no Spark job; on any other master each half-sweep is one job over the
-  * cached block RDD ([[CsrState]]).
+  * The tier is driver-resident, as the reference runs each sweep as one
+  * parallel loop over flat arrays in one process (`leidenMoveOmpW`, the
+  * reference's `inc/leiden.hxx:409-435`): the driver holds the blocks,
+  * either a local master's blocks pinned once per pass ([[pin]]) or
+  * the local tail's one block ([[onDriver]]), and every half-sweep scans
+  * them in-process, in parallel over blocks, with no Spark job. Off a
+  * local master, where executor JVMs would hold the blocks, dense passes
+  * take the Catalyst tier instead, as the other dense kernels (PageRank,
+  * Triangles, Components, Bfs) do.
   *
   * Decision-for-decision parity with [[LocalMove.sweep]] / [[LocalMove.run]]
   * (same ΔQ expression evaluation order, the same singleton swap guard,
@@ -154,71 +156,20 @@ object CsrSweep {
   /** Cumulative per-component wall nanos of every [[halfSweep]] — the
     * sweep's serial driver sections are the Amdahl term of the N->4N
     * scaling witness, so they stay permanently instrumented (5 nanoTime
-    * reads per half-sweep; reset + read from BenchDiag's csr mode). A
-    * state whose blocks the driver holds (a local master, the local tail)
-    * scans in-process: it adds to `sweeps`, `job` and `kernelTask`, and
-    * its `bcast` and `deriveTask` stay 0.
+    * reads per half-sweep; reset + read from BenchDiag's csr mode).
     */
   object Timers {
-    val bcast = new java.util.concurrent.atomic.AtomicLong // payload broadcast (RDD blocks)
-    val job = new java.util.concurrent.atomic.AtomicLong   // the scan: kernel job incl. collect, or in-process
+    val job = new java.util.concurrent.atomic.AtomicLong   // the in-process scan
     val apply = new java.util.concurrent.atomic.AtomicLong // move apply + dq + frontier fold
-    val destroy = new java.util.concurrent.atomic.AtomicLong
     val sweeps = new java.util.concurrent.atomic.AtomicLong
-    // per-block scan time (tasks in the driver's JVM, or the in-process
-    // scan): summed ACROSS blocks, so divide by parallelism for wall
-    // attribution
+    // per-block scan time, summed ACROSS blocks, so divide by parallelism
+    // for wall attribution
     val kernelTask = new java.util.concurrent.atomic.AtomicLong
-    // the task's payload lookup (broadcast value; RDD blocks only); the
-    // "derive" key names predate the lookup and stay for the JSON readers
-    val deriveTask = new java.util.concurrent.atomic.AtomicLong
-    // the same two sums gathered through Spark accumulators by RDD-held
-    // blocks (a pinned state adds nothing to them), so they survive the
-    // executor-JVM boundary (local-cluster/spark-submit —
-    // where the 4x8 job-vs-kernel gap actually needs attributing).
-    // SCOPE (round-5 ADVICE): last-writer-wins across live CsrStates —
-    // exec_* covers only the MOST RECENTLY CONSTRUCTED state, while
-    // kernel_task_sum covers every state; with two states alive (e.g.
-    // g_leiden exact + lowmem, or per-level states) the two channels
-    // measure different scopes. Diag runs use a single state.
-    // Accumulator adds inside the kernel map are AT-LEAST-ONCE: retried or
-    // speculative tasks double-count, so anatomy conclusions from exec_*
-    // gate on retries==0 runs (the bench line publishes every attempt).
-    @volatile var taskAccs
-        : (org.apache.spark.util.LongAccumulator, org.apache.spark.util.LongAccumulator) = null
-    // exec_* baseline captured at reset() so json reports reset-relative
-    // deltas like every other field (round-5 ADVICE: they were lifetime-of-
-    // state sums). Keyed to the kernel accumulator identity: a state
-    // constructed AFTER the reset swaps in fresh zero accumulators, and the
-    // stale base must not be subtracted from them.
-    @volatile private var taskAccBase
-        : (org.apache.spark.util.LongAccumulator, Long, Long) = null
-    def reset(): Unit = {
-      bcast.set(0); job.set(0); apply.set(0); destroy.set(0); sweeps.set(0)
-      kernelTask.set(0); deriveTask.set(0)
-      val a = taskAccs
-      taskAccBase =
-        if (a == null) null
-        else (a._1, a._1.value.longValue, a._2.value.longValue)
-    }
-    def json: String = {
-      val (ek, ed) = {
-        val a = taskAccs
-        if (a == null) (0L, 0L)
-        else {
-          val b = taskAccBase
-          val (bk, bd) = if (b != null && (b._1 eq a._1)) (b._2, b._3) else (0L, 0L)
-          (a._1.value.longValue - bk, a._2.value.longValue - bd)
-        }
-      }
-      s"""{"half_sweeps":${sweeps.get},"bcast_secs":${"%.3f".format(bcast.get / 1e9)},""" +
+    def reset(): Unit = { job.set(0); apply.set(0); sweeps.set(0); kernelTask.set(0) }
+    def json: String =
+      s"""{"half_sweeps":${sweeps.get},""" +
       s""""job_secs":${"%.3f".format(job.get / 1e9)},"apply_secs":${"%.3f".format(apply.get / 1e9)},""" +
-      s""""destroy_secs":${"%.3f".format(destroy.get / 1e9)},""" +
-      s""""kernel_task_sum_secs":${"%.3f".format(kernelTask.get / 1e9)},""" +
-      s""""derive_task_sum_secs":${"%.3f".format(deriveTask.get / 1e9)},""" +
-      s""""exec_kernel_sum_secs":${"%.3f".format(ek / 1e9)},""" +
-      s""""exec_derive_sum_secs":${"%.3f".format(ed / 1e9)}}"""
-    }
+      s""""kernel_task_sum_secs":${"%.3f".format(kernelTask.get / 1e9)}}"""
   }
 
   /** One partition's edges, packed: `srcs` ascending distinct, CSR
@@ -328,8 +279,8 @@ object CsrSweep {
     */
   private[graft] var PackGaps: Boolean = true
 
-  /** Pack the edge cache into per-partition CSR blocks — one job per
-    * phase, cached deserialized by the caller. The per-block argmax is
+  /** Pack the edge cache into per-partition CSR blocks, one per
+    * partition, which [[init]] or [[singleton]] pins on the driver. The per-block argmax is
     * per-src-complete, so all edges of a src MUST land in one partition.
     *
     * Blocks are RANGE-partitioned by src with ~equal EDGES per block
@@ -498,76 +449,80 @@ object CsrSweep {
                         seedAlive: Array[Boolean], commI: Array[Int],
                         ctot: Array[Double], csize: Array[Int], sgl: Array[Long])
 
-  /** Same-JVM handoff of [[pin]]'s blocks: one slot per partition, under
-    * a key unique to the pin job. A task writes its partition's blocks into
-    * the slots it finds under the key; the driver removes the key when the
-    * job ends, whether it succeeded or threw, so a task that finishes after
-    * a failed job finds no slots and the map keeps nothing.
+  /** Same-JVM handoff between a local master's driver and the tasks of
+    * one job: one slot per partition, under a key unique to the job. [[pin]]'s
+    * tasks write their partition's blocks into the slots they find under
+    * the key; `Aggregate.slicesFrame`'s tasks read the coarse slice the
+    * driver left in theirs. The driver removes the key when the job ends,
+    * whether it succeeded or threw, so a task that runs after a failed job
+    * finds no slots and the map keeps nothing.
     */
   private val handoff = new java.util.concurrent.ConcurrentHashMap[
-    Long, java.util.concurrent.atomic.AtomicReferenceArray[Array[CsrBlock]]]()
-  private val pinKeys = new java.util.concurrent.atomic.AtomicLong
+    Long, java.util.concurrent.atomic.AtomicReferenceArray[AnyRef]]()
+  private val handoffKeys = new java.util.concurrent.atomic.AtomicLong
 
-  /** Open handoff keys; 0 whenever no [[pin]] job runs (test hook). */
+  /** Open handoff keys; 0 whenever no handoff job runs (test hook). */
   private[leiden] def handoffSize: Int = handoff.size
 
+  /** Runs `job` with `slots` open in [[handoff]] under a fresh key, which
+    * `job` passes to its tasks; the key is removed when `job` returns or
+    * throws.
+    */
+  private[leiden] def handingOff[T](
+      slots: java.util.concurrent.atomic.AtomicReferenceArray[AnyRef])(job: Long => T): T = {
+    val key = handoffKeys.incrementAndGet()
+    handoff.put(key, slots)
+    try job(key) finally handoff.remove(key)
+  }
+
+  /** A task's view of the slots under `key`: null once the job ended. */
+  private[leiden] def handoffSlots(key: Long): java.util.concurrent.atomic.AtomicReferenceArray[AnyRef] =
+    handoff.get(key)
+
   /** A local master's blocks of `csr`, as the driver holds them: one job
-    * over the RDD, which also materializes its cache, hands each
-    * partition's block objects to the driver through [[handoff]]. Tasks
-    * share the driver's JVM, so nothing is serialized and no block travels
-    * as a task result. Blocks come back in partition order with empty
-    * partitions skipped, the order `collect()` gives.
+    * over the RDD hands each partition's block objects to the driver
+    * through [[handoff]]. Tasks share the driver's JVM, so nothing is
+    * serialized and no block travels as a task result. Blocks come back in
+    * partition order with empty partitions skipped, the order `collect()`
+    * gives.
     */
   private[leiden] def pin(csr: RDD[CsrBlock]): Array[CsrBlock] = {
-    val key = pinKeys.incrementAndGet()
-    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[Array[CsrBlock]](
-      csr.getNumPartitions)
-    handoff.put(key, slots)
-    try {
+    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[AnyRef](csr.getNumPartitions)
+    handingOff(slots) { key =>
       csr.sparkContext.runJob(csr, (ctx: TaskContext, it: Iterator[CsrBlock]) => {
-        val bs = it.toArray
-        val s = handoff.get(key)
+        val bs: AnyRef = it.toArray
+        val s = handoffSlots(key)
         if (s != null) s.set(ctx.partitionId, bs)
       })
-      Array.tabulate(slots.length())(slots.get).flatten
-    } finally handoff.remove(key)
+      Array.tabulate(slots.length())(i => slots.get(i).asInstanceOf[Array[CsrBlock]]).flatten
+    }
   }
 
   /** Driver-held sweep state for this tier: membership + the folded
-    * frontier (scaladoc algebra). `vtot` broadcasts once per state
-    * lifetime (it never changes within a phase); `bound` once per run.
+    * frontier (scaladoc algebra) over the blocks the driver holds.
     *
     * Community totals live HERE, maintained incrementally by the apply
     * loop (O(moves) per half-sweep), whenever `vtot` is integral — then
     * every ±vt(s) update is an exact double operation (web graphs and
     * every coarsened pass of an integer-weight input qualify), so the
     * incremental totals are bit-identical to the ascending-vertex scratch
-    * rebuild they replace. The kernel receives them in the per-sweep
-    * payload instead of re-deriving O(V) totals behind a single-flight
-    * barrier that every task of every half-sweep had to wait out (the
-    * dominant serial Amdahl term of the N->4N scaling witness after the
-    * kernel itself was measured to scale core-linearly). Non-integral
-    * weights rebuild them from scratch, in ascending vertex order, before
-    * every half-sweep's scan ([[halfSweep]]).
+    * rebuild they replace, and the scan reads them instead of re-deriving
+    * O(V) totals every half-sweep. Non-integral weights rebuild them from
+    * scratch, in ascending vertex order, before every half-sweep's scan
+    * ([[halfSweep]]).
     *
-    * The blocks are a driver array (`Left`) or an RDD (`Right`), and that
-    * is the only place the two differ ([[halfSweep]]). The driver holds
-    * them on a local master, where [[init]] and [[singleton]] pin the
-    * cached blocks once ([[pin]]), and in the local tail of
-    * [[Leiden.detect]] ([[onDriver]]): each half-sweep scans them
-    * in-process, in parallel over blocks, against the live arrays, with no
-    * payload, no broadcast and no job. On any other master the blocks stay
-    * an RDD, scanned by one job per half-sweep that reads (commI, ctot,
-    * sgl) from one broadcast ([[scanRemote]]). [[close]] drops the blocks.
+    * The blocks are a local master's blocks, pinned once by
+    * [[init]] or [[singleton]] ([[pin]]), or the local tail's one block
+    * ([[onDriver]]). Each half-sweep scans them in-process, in parallel
+    * over blocks, against the live arrays, with no Spark job ([[scanHeld]]).
+    * [[close]] drops the blocks.
     */
-  final class CsrState(blocks0: Either[Array[CsrBlock], RDD[CsrBlock]], val n: Int,
+  final class CsrState(blocks0: Array[CsrBlock], val n: Int,
                        val vtot: Array[Double], val comm: Array[Long],
                        val seed: Array[Byte]) {
     private[this] var held = blocks0
     /** The blocks this state scans; null once closed. */
-    def blocks: Either[Array[CsrBlock], RDD[CsrBlock]] = held
-    /** The blocks' Spark context; null when the driver holds the blocks. */
-    private[CsrSweep] val sc: SparkContext = blocks0.fold(_ => null, _.sparkContext)
+    def blocks: Array[CsrBlock] = held
     val nBytes: Int = (n + 7) / 8
     val acc: Array[Array[Byte]] =
       Array(new Array[Byte](nBytes), new Array[Byte](nBytes))
@@ -577,24 +532,14 @@ object CsrSweep {
     // so CAS-OR races commute) instead of the serial dq walk.
     private[CsrSweep] val mvScratchL = new Array[Long]((n + 63) / 64)
     val seedAlive: Array[Boolean] = Array(true, true)
-    private[CsrSweep] val bcVtot: Broadcast[Array[Double]] =
-      if (sc == null) null else sc.broadcast(vtot)
-    // executor-task nanos (kernel scan / payload lookup), summed
-    // across all tasks of every half-sweep on this state; accumulators so
-    // the values cross the executor-JVM boundary (Timers.taskAccs)
-    private[CsrSweep] val accKernelNs =
-      if (sc == null) null else sc.longAccumulator("graft.csr.kernelNs")
-    private[CsrSweep] val accDeriveNs = // payload lookup (Timers.deriveTask)
-      if (sc == null) null else sc.longAccumulator("graft.csr.deriveNs")
-    if (sc != null) Timers.taskAccs = (accKernelNs, accDeriveNs)
     /** All weight mass integral => incremental totals are exact. */
     val integral: Boolean = {
       var i = 0; var ok = true
       while (ok && i < n) { ok = vtot(i) == math.rint(vtot(i)); i += 1 }
       ok
     }
-    // Int copy of `comm` (dense ids < n <= 4M): the per-sweep scan
-    // payload, updated by the same O(moves) apply — no O(V) rebuild/copy
+    // Int copy of `comm` (dense ids < n <= 4M): the membership the scan
+    // reads, updated by the same O(moves) apply — no O(V) rebuild/copy
     private[CsrSweep] val commI: Array[Int] = {
       val a = new Array[Int](n); var i = 0
       while (i < n) { a(i) = comm(i).toInt; i += 1 }
@@ -604,22 +549,14 @@ object CsrSweep {
     private[CsrSweep] val csize = new Array[Int](n)
     private[CsrSweep] val sgl = new Array[Long]((n + 63) / 64)
     rebuildTotals()
-    // the refinement bound of the phase [[run]] is running, or null; with
-    // RDD-held blocks also broadcast, once per phase
+    // the refinement bound of the phase [[run]] is running, or null
     private[CsrSweep] var bound: Array[Int] = null
-    private[CsrSweep] var bcBound: Broadcast[Array[Int]] = null
     /** Sets the refinement bound of the half-sweeps that follow (None: no
       * bound) until [[unbind]].
       */
-    private[leiden] def bind(boundArr: Option[Array[Long]]): Unit = {
-      unbind()
+    private[leiden] def bind(boundArr: Option[Array[Long]]): Unit =
       bound = boundArr.map(b => Array.tabulate(n)(b(_).toInt)).orNull
-      if (bound != null && sc != null) bcBound = sc.broadcast(bound)
-    }
-    private[leiden] def unbind(): Unit = {
-      if (bcBound != null) bcBound.destroy()
-      bound = null; bcBound = null
-    }
+    private[leiden] def unbind(): Unit = bound = null
     /** Scratch rebuild, ascending-vertex order (init / restore / reset). */
     private[CsrSweep] def rebuildTotals(): Unit = {
       java.util.Arrays.fill(ctot, 0.0)
@@ -633,11 +570,8 @@ object CsrSweep {
         i += 1
       }
     }
-    /** Releases the vtot broadcast and the block references; idempotent. */
-    def close(): Unit = if (held != null) {
-      held = null
-      if (bcVtot != null) bcVtot.destroy()
-    }
+    /** Drops the block references; idempotent. */
+    def close(): Unit = held = null
     def snapshot(): Snap =
       Snap(comm.clone(), acc(0).clone(), acc(1).clone(), seedAlive.clone(),
         commI.clone(), ctot.clone(), csize.clone(), sgl.clone())
@@ -651,8 +585,7 @@ object CsrSweep {
       Array.copy(s.csize, 0, csize, 0, n)
       Array.copy(s.sgl, 0, sgl, 0, sgl.length)
     }
-    /** Re-init to singletons for the refinement phase, reusing this
-      * state's vtot broadcast; returns the previous membership (the
+    /** Re-init to singletons for the refinement phase; returns the previous membership (the
       * refinement bound), like the DataFrame tier's singleton re-init
       * before its refine phase ([[Leiden.detect]]).
       */
@@ -669,25 +602,30 @@ object CsrSweep {
     }
   }
 
-  /** A state over cached blocks, after one job that materializes their
-    * cache: on a local master that job pins them on the driver ([[pin]]),
-    * elsewhere it counts them and the state keeps the RDD.
+  /** A state over the blocks of `csr`, after the one job that pins them
+    * on the driver ([[pin]]). Local masters only: elsewhere the blocks
+    * live in executor JVMs.
     */
   def init(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
            comm0: Array[Long], aff0: Array[Byte]): CsrState =
-    new CsrState(materialize(csr), n, vtot, comm0, aff0)
+    new CsrState(pinLocal(csr), n, vtot, comm0, aff0)
 
-  private def materialize(csr: RDD[CsrBlock]): Either[Array[CsrBlock], RDD[CsrBlock]] =
-    if (csr.sparkContext.isLocal) Left(pin(csr)) else { csr.count(); Right(csr) }
+  private def pinLocal(csr: RDD[CsrBlock]): Array[CsrBlock] = {
+    require(csr.sparkContext.isLocal, "CsrSweep scans driver-held blocks and needs a local " +
+      s"master, not ${csr.sparkContext.master}; Leiden.detect runs LocalMove there")
+    pin(csr)
+  }
 
   /** [[init]] over blocks the driver holds. */
   def onDriver(blocks: Array[CsrBlock], n: Int, vtot: Array[Double],
                comm0: Array[Long], aff0: Array[Byte]): CsrState =
-    new CsrState(Left(blocks), n, vtot, comm0, aff0)
+    new CsrState(blocks, n, vtot, comm0, aff0)
 
-  /** Identity membership + all-affected seed (singleton init). */
+  /** Identity membership + all-affected seed (singleton init); a local
+    * master only, as [[init]].
+    */
   def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double]): CsrState =
-    new CsrState(materialize(csr), n, vtot, Array.tabulate(n)(_.toLong),
+    new CsrState(pinLocal(csr), n, vtot, Array.tabulate(n)(_.toLong),
       Array.fill[Byte]((n + 7) / 8)(-1))
 
   @inline private def bit(b: Array[Byte], i: Int): Boolean =
@@ -713,10 +651,9 @@ object CsrSweep {
     * Non-moving sweeps leave the frontier state untouched, exactly like
     * [[LocalMove.sweep]] (an empty frontier or zero moves keeps the bits).
     *
-    * Every block runs [[scanBlock]]: the driver runs it in-process on
-    * driver-held blocks ([[scanHeld]]), executors on RDD-held ones
-    * ([[scanRemote]]). Either way the results arrive in block order, and
-    * the driver then applies the moves and folds dq and the frontier.
+    * The driver runs [[scanBlock]] on every block in-process
+    * ([[scanHeld]]); the results arrive in block order, and the driver then
+    * applies the moves and folds dq and the frontier.
     */
   def halfSweep(st: CsrState, m: Double, resolution: Double, parity: Int,
                 refineSingletons: Boolean = false,
@@ -730,19 +667,15 @@ object CsrSweep {
     val accL = st.acc(parity)
     // the apply maintains totals only when they stay exact (CsrState)
     if (!st.integral) st.rebuildTotals()
-    val out = st.blocks match {
-      case Left(held) =>
-        scanHeld(st, held, seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
-      case Right(csr) =>
-        scanRemote(st, csr, seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
-    }
+    val out = scanHeld(st, st.blocks, seedL, accL, m, resolution, parity,
+      refineSingletons, sketchSlots)
     applyMoves(st, out, parity)
   }
 
   /** The scan of driver-held blocks: [[scanBlock]] on each block against
     * the live state arrays, in parallel over blocks in the common pool the
     * apply uses. Timers: the scan's wall adds to `job` and each block's
-    * scan to `kernelTask`; `bcast` and `deriveTask` stay 0.
+    * scan to `kernelTask`.
     */
   private def scanHeld(st: CsrState, held: Array[CsrBlock], seedL: Array[Byte],
                        accL: Array[Byte], m: Double, resolution: Double, parity: Int,
@@ -758,48 +691,6 @@ object CsrSweep {
     }
     Timers.job.addAndGet(System.nanoTime() - t0)
     out
-  }
-
-  /** The scan of RDD-held blocks: one job, each task running [[scanBlock]]
-    * on its block against one broadcast of (commI, ctot, sgl).
-    */
-  private def scanRemote(st: CsrState, csr: RDD[CsrBlock], seedL: Array[Byte],
-                         accL: Array[Byte], m: Double, resolution: Double, parity: Int,
-                         refineSingletons: Boolean,
-                         sketchSlots: Int): Array[(Array[Long], Array[Double])] = {
-    val sc = st.sc
-    val tT0 = System.nanoTime()
-    // Broadcasting the live arrays is safe: TorrentBroadcast serializes
-    // at construction.
-    val bcState = sc.broadcast((st.commI, st.ctot, st.sgl))
-    val tT1 = System.nanoTime()
-    Timers.bcast.addAndGet(tT1 - tT0)
-    val bcVtot = st.bcVtot
-    val accK = st.accKernelNs
-    val accD = st.accDeriveNs
-    val bcB = st.bcBound
-    try {
-      val out = csr.map { blk =>
-        val tk0 = System.nanoTime()
-        val vt = bcVtot.value
-        val (comm, ct, sglL) = bcState.value
-        val tk1 = System.nanoTime()
-        Timers.deriveTask.addAndGet(tk1 - tk0)
-        accD.add(tk1 - tk0)
-        val r = scanBlock(blk, comm, ct, sglL, vt, if (bcB == null) null else bcB.value,
-          seedL, accL, m, resolution, parity, refineSingletons, sketchSlots)
-        val tkEnd = System.nanoTime()
-        Timers.kernelTask.addAndGet(tkEnd - tk1)
-        accK.add(tkEnd - tk1)
-        r
-      }.collect()
-      Timers.job.addAndGet(System.nanoTime() - tT1)
-      out
-    } finally {
-      val d0 = System.nanoTime()
-      bcState.destroy()
-      Timers.destroy.addAndGet(System.nanoTime() - d0)
-    }
   }
 
   /** One block's scan-and-decide: for each src of parity `par` on the

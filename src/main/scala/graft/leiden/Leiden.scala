@@ -34,20 +34,23 @@ import org.apache.spark.sql.graft.PlanUtils
   * membership is built from it once at the end. Otherwise it is a
   * checkpointed (id, comm) DataFrame composed by joins.
   *
-  * A dense pass packs its graph into cached CSR blocks (`csrbuild`). On a
-  * local master the job that materializes the cache also pins the blocks
-  * on the driver (`CsrSweep.init`), so its half-sweeps run no Spark job;
-  * on any other master each half-sweep is one job over the blocks. The
-  * pass then coarsens its cached CSR blocks in one Spark job
+  * The tier follows the master, as for the other dense kernels. On a
+  * local master a dense pass packs its graph into CSR blocks
+  * (`csrbuild`) in the one job that also pins them on the driver
+  * (`CsrSweep.init`): its half-sweeps run no Spark
+  * job, and it coarsens the pinned blocks in-process
   * (`Aggregate.coarsenBlocks`) into disjoint hash slices of the coarse
-  * graph, persisted and locally checkpointed; the job also returns the
-  * slices' rows when they fit the local tail's gate.
+  * graph. A coarse graph above the local tail's gate becomes the next
+  * pass's frame over those slices, persisted and locally checkpointed in
+  * one job (`Aggregate.slicesFrame`); one under the gate stays on the
+  * driver for the tail. On any other master every pass above the gate
+  * takes the Catalyst tier (`LocalMove`).
   *
   * Once a pass graph has at most `LeidenOptions.localSolveEdgeThreshold`
-  * rows, the remaining passes run the same steps on the driver: the CSR
-  * block scan in-process (`CsrSweep.onDriver`) and coarsening by one sort
-  * (`Aggregate.coarsenRows`). The rows arrive once: with the coarsen job's
-  * result after a dense pass, else by one collect.
+  * rows, the remaining passes run the same steps on the driver, on any
+  * master: the CSR block scan in-process (`CsrSweep.onDriver`) and the
+  * same in-process coarsen over the tail's one block. The rows arrive
+  * once: from the coarsen after a dense pass, else by one collect.
   *
   * With a snapshot directory, every pass ends in a durable snapshot (coarse
   * edges + composed leaf membership + metrics + per-partition lineage) via
@@ -126,9 +129,9 @@ object Leiden {
     var tail: Packed = null
     var tailBack: Array[Long] = null
     var tailLeaf: Array[Int] = null
-    // the pass graph's rows when its coarsen job already returned them to
-    // the driver (src int, dst int, w double), else null
-    var held: Packed = null
+    // the pass graph's rows when a dense pass's coarsen left them on the
+    // driver: its hash slices of (src int, dst int, w double) rows, else null
+    var held: Array[Packed] = null
     // the local tail's gate in rows, 0 = off. Snapshot-enabled runs stay
     // distributed: the per-pass durability contract (resume from the last
     // committed pass) outranks the tail's saving.
@@ -289,12 +292,13 @@ object Leiden {
     val firstPass = pass
 
     // Move the pass graph into the local tail (`tail` above): the rows its
-    // coarsen job returned, else one collect. Its ids are the endpoints
-    // plus, on a warm first pass, the seed labels.
+    // coarsen left on the driver, else one collect. Its ids are the
+    // endpoints plus, on a warm first pass, the seed labels.
     def enterTail(): Unit = {
       val (sA, dA, wA) =
         if (held == null) EdgeTable.collectPacked(edges)
-        else (held.ints(0).map(_.toLong), held.ints(1).map(_.toLong), held.doubles(2))
+        else (held.flatMap(_.ints(0).map(_.toLong)), held.flatMap(_.ints(1).map(_.toLong)),
+          held.flatMap(_.doubles(2)))
       held = null
       val r = sA.length
       val warm = pass == firstPass && !resumed &&
@@ -349,10 +353,10 @@ object Leiden {
 
     while (!done && pass < opts.maxPasses) {
       // Local tail: once the pass graph has at most `tailRows` rows, a
-      // pass's Spark jobs (the CSR pack, the coarsen, and on non-local
-      // masters one per half-sweep) are pure fixed cost, so the rows move
-      // to the driver once and every remaining pass runs the steps below
-      // on one driver-held CSR block, coarsening by one sort.
+      // pass's Spark jobs (the CSR pack and the coarse frame, or off local
+      // masters the Catalyst tier's jobs per half-sweep) are pure fixed
+      // cost, so the rows move to the driver once and every remaining pass
+      // runs the steps below on one driver-held CSR block.
       if (tail == null && tailRows > 0 &&
         (if (rows >= 0) rows else edges.count()) <= tailRows)
         timed("localtail") { enterTail() }
@@ -414,7 +418,9 @@ object Leiden {
         else 0
 
       // Dense tier (CsrSweep scaladoc): dense id space small enough for
-      // driver arrays → all O(V) state lives on the driver. A warm start
+      // driver arrays → all O(V) state lives on the driver. Above the tail
+      // it needs a local master, whose driver can hold the pass's blocks;
+      // the tail's one block is the driver's on any master. A warm start
       // whose community labels escape the dense id space falls through to
       // the DataFrame tier (it accepts arbitrary labels).
       val warmInit = pass == firstPass && !resumed &&
@@ -426,8 +432,10 @@ object Leiden {
       // `present` marks the pass's REAL vertex ids (the vtot rows) so the
       // post-pass community count can run on the driver — id-space holes
       // keep their singleton labels and must not count.
+      val denseGate =
+        fBits > 0 && (tail != null || (sc.isLocal && fBits <= LocalMove.CtBroadcastMax))
       val denseInit: Option[(Array[Double], Array[Long], Array[Byte], Array[Boolean])] =
-        if (fBits > 0 && (tail != null || fBits <= LocalMove.CtBroadcastMax)) timed("mark") {
+        if (denseGate) timed("mark") {
           val n = fBits
           val vt = new Array[Double](n)
           val present = new Array[Boolean](n)
@@ -495,28 +503,28 @@ object Leiden {
 
       // the dense tier returns the final membership as the DRIVER ARRAY itself
       // (denseComm): the pass tail below then composes and counts on the
-      // driver and coarsens the pass's CSR blocks (passCsr, cached until
-      // then) through the broadcast array — no per-pass materialize job, no
-      // compose join, no membership joins in the coarsen, no distinct-count
-      // job. The DataFrame tier keeps its refMemb DataFrame unchanged.
-      val (denseComm, refMembOpt, iters, lMoves, rMoves, passCsr) = denseInit match {
+      // driver and coarsens the pass's driver-held CSR blocks (passBlocks)
+      // in-process — no per-pass materialize job, no compose join, no
+      // membership joins in the coarsen, no distinct-count job. The
+      // DataFrame tier keeps its refMemb DataFrame unchanged.
+      val (denseComm, refMembOpt, iters, lMoves, rMoves, passBlocks) = denseInit match {
         case Some((vt, comm0, bits0, _)) =>
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
           // array pass per half-sweep, frontier folded into the same pass.
           // A tail pass holds its one block on the driver.
-          val (csr, st) =
-            if (tail != null) (null, CsrSweep.onDriver(
-              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0))
+          val st =
+            if (tail != null) CsrSweep.onDriver(
+              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0)
             else timed("csrbuild") {
               // pass-0 edges are the src-hash input cache: every edge of a
               // src already lives in one partition, so the pack skips the
               // range shuffle and its sampling pre-job (srcComplete contract
               // in CsrSweep.build). Coarsened passes keep the range-balanced
-              // path. init's one job materializes the cache here, so sweep
-              // timings are pure; on a local master it also pins the blocks.
-              val c = CsrSweep.build(edges, fBits,
-                srcComplete = edges eq inputEdges).cache()
-              (c, CsrSweep.init(c, fBits, vt, comm0, bits0))
+              // path. init's one job builds the blocks and pins them on the
+              // driver, so sweep timings are pure; nothing reads the RDD
+              // after it, so it is not cached.
+              CsrSweep.init(CsrSweep.build(edges, fBits, srcComplete = edges eq inputEdges),
+                fBits, vt, comm0, bits0)
             }
           // closed on failure too: a failed call keeps no pinned blocks
           try {
@@ -531,7 +539,7 @@ object Leiden {
                 refineSingletons = true, minMoves = minMoves,
                 sketchSlots = slots)
             }
-            (Some(st.comm), None, lIt + rIt, lMv, rMv, csr)
+            (Some(st.comm), None, lIt + rIt, lMv, rMv, st.blocks)
           } finally st.close()
 
         case None =>
@@ -624,21 +632,23 @@ object Leiden {
           // community) loses connectivity that synchronous supersteps —
           // unlike the reference's asynchronous CAS dynamics — cannot
           // recover. The scan keeps the caller's width (1 = Boyer-Moore).
-          // A tail pass coarsens its driver rows by one sort, always
-          // exactly: the sort holds no per-thread hash state to bound.
+          // A tail pass coarsens its one block in one slice, always
+          // exactly: the in-process sort holds no per-thread hash state to
+          // bound.
           if (tail != null) timed("aggregate") {
-            tail = Aggregate.coarsenRows(tail, denseComm.get)
+            tail = Aggregate.coarsenBlocks(passBlocks, denseComm.get, 1)(0)
           } else {
-            val (coarse, coarseCached, coarseRows) = timed("aggregate") {
+            val (coarse, coarseRows) = timed("aggregate") {
               denseComm match {
                 case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
-                  // one job over the pass's CSR blocks into persisted,
-                  // checkpointed slices; its row count is the next pass's
-                  // local-tail gate, and a graph under the gate comes back
-                  // with it (`held`), so the tail collects nothing
-                  val c = Aggregate.coarsenBlocks(spark, passCsr, arr, tailRows)
-                  held = c.held
-                  (c.edges, true, c.rows)
+                  // in-process over the pinned blocks; the row count is the
+                  // next pass's local-tail gate. A graph under the gate
+                  // stays on the driver for the tail (`held`), with no job;
+                  // a larger one becomes the next pass's persisted frame
+                  val slices = Aggregate.coarsenBlocks(passBlocks, arr, sc.defaultParallelism)
+                  val r = slices.map(_.size.toLong).sum
+                  if (tailRows > 0 && r <= tailRows) { held = slices; (null, r) }
+                  else (Aggregate.slicesFrame(spark, slices), r)
                 case _ =>
                   // sketch-aggregation with a dense-tier membership: build
                   // the (id, comm) rows straight from the driver arrays
@@ -651,7 +661,7 @@ object Leiden {
                     if (slots > 0 && opts.sketchAggregation)
                       Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
                     else Aggregate.coarsen(edges, rm))
-                  (c, false, -1L)
+                  (c, -1L)
               }
             }
             opts.snapshotDir.foreach { root =>
@@ -665,7 +675,9 @@ object Leiden {
               }
             }
             dropEdges()
-            edges = if (coarseCached) coarse else coarse.cache()
+            // a counted graph is the slices frame, persisted already, or
+            // null when it stayed on the driver for the tail
+            edges = if (coarseRows >= 0) coarse else coarse.cache()
             rows = coarseRows
           }
           gn = cn
@@ -673,7 +685,6 @@ object Leiden {
         }
       }
       refMembOpt.foreach(PlanUtils.release)
-      if (passCsr != null) passCsr.unpersist(blocking = false)
     }
     if (tail != null) timed("compose") {
       // the tail's leaf into the run's leaf, once

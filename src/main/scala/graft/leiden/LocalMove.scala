@@ -30,9 +30,6 @@ import org.apache.spark.sql.graft.{NativeColumns, PlanUtils}
   */
 object LocalMove {
 
-  /** Dev-only tracing of per-sweep cost (plan sizes, timings). */
-  @volatile var debug: Boolean = false
-
   /** `affBits` rides along only on the bitmap-frontier path (see
     * [[FrontierBits]]): the returned state's `aff` column and the bitmap
     * always agree bit-for-bit.
@@ -388,7 +385,6 @@ object LocalMove {
     }
     val nMoves = stats.getLong(0)
     val dqSum = stats.getDouble(1)
-    if (debug) System.err.println(s"[sweep] parity=$parity moves=$nMoves dq=$dqSum refine=$refineSingletons")
 
     if (nMoves == 0) { PlanUtils.release(best); return SweepResult(state, 0L, 0.0, affBits) }
 

@@ -51,15 +51,16 @@ case class LeidenOptions(
       */
     minMovedFraction: Double = 0.0,
     /** Once a pass's (coarsened) graph has at most this many edge rows,
-      * it is collected to the driver once and the remaining passes run
-      * there: the same dense-tier steps and block scan
+      * it moves to the driver once and the remaining passes run there, on
+      * any master: the same dense-tier steps and block scan
       * (`CsrSweep.scanBlock`), called in-process on one driver-held block,
-      * with coarsening by one sort (`Aggregate.coarsenRows`). Coarsening
-      * shrinks graphs geometrically, so the multi-level tail is a few
-      * thousand super-vertices for which a pass's Spark jobs (the CSR
-      * pack, the coarsen, and off local masters one per half-sweep) are
-      * pure fixed cost. 1M edge rows ≈ 24 MB on the driver —
-      * conservative next to broadcast-join thresholds, and the reference
+      * with the same in-process coarsen (`Aggregate.coarsenBlocks`).
+      * Coarsening shrinks graphs geometrically, so the multi-level tail is
+      * a few thousand super-vertices for which a pass's Spark jobs (the
+      * CSR pack and the coarse frame, or off local masters the Catalyst
+      * tier's jobs per half-sweep) are pure fixed cost. 1M edge rows ≈
+      * 24 MB on the driver — conservative next to broadcast-join
+      * thresholds, and the reference
       * solves 100M-edge graphs on one node. 0 disables (tests of the
       * distributed machinery use 0).
       */

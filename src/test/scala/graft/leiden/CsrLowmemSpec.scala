@@ -51,11 +51,12 @@ class CsrLowmemSpec extends SparkSpec {
     csr.unpersist(); edges.unpersist()
   }
 
-  test("pinned blocks scanned in-process equal the RDD scan, half-sweep by half-sweep") {
+  test("pinned blocks scanned in-process equal one driver block, half-sweep by half-sweep") {
     // CsrSweep.init pins the cached blocks on a local master; a state over
-    // the RDD itself scans them with one job and one broadcast per
-    // half-sweep. Both must take the same moves with the same dq bits in
-    // every half-sweep of the move and the refine phase.
+    // one driver block of the same rows (CsrSweep.onDriver, the local
+    // tail's layout) scans them in one piece. Both must take the same
+    // moves with the same dq bits in every half-sweep of the move and the
+    // refine phase.
     val n = 300
     val sc = spark.sparkContext
     assert(sc.isLocal)
@@ -76,6 +77,8 @@ class CsrLowmemSpec extends SparkSpec {
         yield (a.toLong, b.toLong, wf(a.toLong, b.toLong))
       val edges = EdgeTable.undirected(spark, es).repartition(4, col("src")).cache()
       val (m, vt) = vtArr(edges, n)
+      val one = CsrSweep.toBlock(graft.graph.Packed.collect(edges.select(col("src").cast("int"),
+        col("dst").cast("int"), col("w").cast("double"))), CsrSweep.PackGaps)
       for ((kind, csr) <- Seq(
           "hash" -> CsrSweep.build(edges, n, srcComplete = true).cache(),
           "range" -> CsrSweep.build(edges, n, parts = 4).cache())) {
@@ -87,20 +90,18 @@ class CsrLowmemSpec extends SparkSpec {
           val tag = s"$wName $kind slots=$slots"
           def start = (Array.tabulate(n)(_.toLong), Array.fill[Byte]((n + 7) / 8)(-1))
           val (c0, s0) = start
-          val viaRdd = new CsrSweep.CsrState(Right(csr), n, vt, c0, s0)
+          val single = CsrSweep.onDriver(Array(one), n, vt, c0, s0)
           val (c1, s1) = start
           val pinned = CsrSweep.init(csr, n, vt, c1, s1)
-          assert(viaRdd.blocks.isRight, tag)
-          assert(pinned.blocks.isLeft, tag)
           assert(CsrSweep.handoffSize === 0, tag)
-          val held = pinned.blocks.swap.toOption.get
-          assert(held.length === collected.length && held.indices.forall(i =>
+          val held = pinned.blocks
+          assert(held.length === collected.length && held.length > 1 && held.indices.forall(i =>
             same(held(i), collected(i))), s"$tag: pinned blocks vs collect()")
           // half-sweeps until two in a row move nothing
           def phase(name: String, refine: Boolean): Int = {
             var i = 0; var quiet = 0
             while (quiet < 2 && i < 80) {
-              val (ma, da) = CsrSweep.halfSweep(viaRdd, m, 1.0, i % 2, refine, slots)
+              val (ma, da) = CsrSweep.halfSweep(single, m, 1.0, i % 2, refine, slots)
               val (mb, db) = CsrSweep.halfSweep(pinned, m, 1.0, i % 2, refine, slots)
               assert(mb === ma, s"$tag $name sweep $i")
               assert(bits(db) === bits(da), s"$tag $name sweep $i: dq $db vs $da")
@@ -110,13 +111,13 @@ class CsrLowmemSpec extends SparkSpec {
             i
           }
           assert(phase("move", refine = false) > 4, s"$tag: the move phase must take several sweeps")
-          assert(pinned.comm.sameElements(viaRdd.comm), tag)
-          val bR = viaRdd.resetToSingletons(); val bP = pinned.resetToSingletons()
-          viaRdd.bind(Some(bR)); pinned.bind(Some(bP))
+          assert(pinned.comm.sameElements(single.comm), tag)
+          val bS = single.resetToSingletons(); val bP = pinned.resetToSingletons()
+          single.bind(Some(bS)); pinned.bind(Some(bP))
           try phase("refine", refine = true)
-          finally { viaRdd.unbind(); pinned.unbind() }
-          assert(pinned.comm.sameElements(viaRdd.comm), tag)
-          viaRdd.close(); pinned.close()
+          finally { single.unbind(); pinned.unbind() }
+          assert(pinned.comm.sameElements(single.comm), tag)
+          single.close(); pinned.close()
           assert(pinned.blocks == null, s"$tag: close drops the blocks")
         }
         csr.unpersist()

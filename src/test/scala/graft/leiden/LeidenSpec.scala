@@ -535,10 +535,10 @@ class LeidenSpec extends SparkSpec {
     assert(!byPhase.contains("compose"), byPhase.toString)
     assert(!byPhase.contains("finalcount"), byPhase.toString)
     assert(byPhase.get("modularity") === Some(1), byPhase.toString)
-    // the dense pass coarsens in one job, whose result carries the coarse
-    // rows into the tail (a second job only if a slice stayed behind)
-    assert(byPhase.get("aggregate") === Some(1), byPhase.toString)
-    assert(byPhase.getOrElse("localtail", 0) <= 1, byPhase.toString)
+    // the dense pass coarsens its pinned blocks in-process, and the coarse
+    // rows, under the gate, enter the tail from the driver: no job in either
+    assert(!byPhase.contains("aggregate"), byPhase.toString)
+    assert(!byPhase.contains("localtail"), byPhase.toString)
     // on a local master the dense pass's one csrbuild job also pins its
     // blocks on the driver, and every half-sweep scans them in-process
     assert(byPhase.get("csrbuild") === Some(1), byPhase.toString)
@@ -794,21 +794,16 @@ class LeidenSpec extends SparkSpec {
     val coarse = Aggregate.coarsen(edges, memb).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(coarse === Map((0L, 0L) -> 6.0, (1L, 1L) -> 6.0, (0L, 1L) -> 1.0, (1L, 0L) -> 1.0))
-    // the local tail's driver coarsen: the same rows, sorted by (src, dst)
+    // the local tail's driver coarsen, one block in one slice: the same
+    // rows, sorted by (src, dst)
     val rows = graft.graph.Packed.collect(edges.select(col("src").cast("int"),
       col("dst").cast("int"), col("w").cast("double")))
-    val driver = Aggregate.coarsenRows(rows, Array(0L, 0L, 0L, 1L, 1L, 1L))
+    val driver = Aggregate.coarsenBlocks(Array(CsrSweep.toBlock(rows, CsrSweep.PackGaps)),
+      Array(0L, 0L, 0L, 1L, 1L, 1L), 1)(0)
     assert(driver.ints(0).toSeq === Seq(0, 0, 1, 1) && driver.ints(1).toSeq === Seq(0, 1, 0, 1))
     assert(driver.ints(0).indices.map(i => ((driver.ints(0)(i).toLong, driver.ints(1)(i).toLong),
       driver.doubles(2)(i))).toMap === coarse)
   }
-
-  /** (src, dst) -> w of (src, dst, w) rows. */
-  def pairMap(rows: (Array[Long], Array[Long], Array[Double])): Map[(Long, Long), Double] =
-    rows._1.indices.map(i => (rows._1(i), rows._2(i)) -> rows._3(i)).toMap
-
-  def heldMap(p: graft.graph.Packed): Map[(Long, Long), Double] =
-    pairMap((p.ints(0).map(_.toLong), p.ints(1).map(_.toLong), p.doubles(2)))
 
   def bitsOf(m: Map[(Long, Long), Double]): Map[(Long, Long), Long] =
     m.map { case (k, w) => k -> java.lang.Double.doubleToRawLongBits(w) }
@@ -822,6 +817,7 @@ class LeidenSpec extends SparkSpec {
     val memb = comm.indices.map(v => (v.toLong, comm(v))).toDF("id", "comm")
     def withLoops(es: Seq[(Long, Long, Double)], w: Double) =
       es ++ (0 until n by 13).map(v => (v.toLong, v.toLong, w))
+    val p = spark.sparkContext.defaultParallelism
     for ((name, es, integral) <- Seq(
         ("unit", withLoops(blocks(n, 25, 61, (_, _) => 1.0), 1.0), true),
         ("weighted", withLoops(blocks(n, 25, 62, (a, b) => 1.0 + (a + b) % 3), 2.0), true),
@@ -832,53 +828,35 @@ class LeidenSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       assert(oracle.keys.exists { case (a, b) => a == b }, s"$name: fixture must keep self loops")
       for ((kind, csr) <- Seq(
-          "hash" -> CsrSweep.build(edges, n, srcComplete = true).cache(),
-          "range" -> CsrSweep.build(edges, n).cache())) {
+          "hash" -> CsrSweep.build(edges, n, srcComplete = true),
+          "range" -> CsrSweep.build(edges, n))) {
         val what = s"$name, $kind blocks"
         val blks = csr.collect()
         assert(blks.length > 1, what)
         assert(blks.forall(b => (b.dst == null) == (name == "unit")), s"$what: block layout")
-        def run(): Map[(Long, Long), Double] = {
-          val c = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
-          assert(c.held == null && c.rows === oracle.size.toLong, what)
-          val got = pairMap(EdgeTable.collectPacked(c.edges))
-          org.apache.spark.sql.graft.PlanUtils.release(c.edges)
-          got
-        }
-        val got = run()
-        assert(got.keySet === oracle.keySet, what)
-        if (integral) assert(bitsOf(got) === bitsOf(oracle), what)
-        else {
-          got.foreach { case (k, w) => assert(math.abs(w - oracle(k)) <= 1e-12, s"$what: $k") }
-          assert(bitsOf(run()) === bitsOf(got), s"$what: a second run over the same blocks")
-        }
-        if (kind == "hash" && name == "weighted") {
-          // the slice rule: every slice back (1 job); one slice over its
-          // share of a gate the total fits (a second job collects); the
-          // gate one row below the total (stays distributed)
-          val c0 = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
-          org.apache.spark.sql.graft.PlanUtils.release(c0.edges)
-          val p = c0.sliceRows.length.toLong
-          val (total, most) = (c0.rows, c0.sliceRows.max)
-          assert(p === spark.sparkContext.defaultParallelism.toLong, what)
-          assert((total + p - 1) / p < most, s"$what: fixture must leave a slice over its share")
-          for ((threshold, jobs, held) <- Seq((p * most, 1, true), (total, 2, false),
-              (total - 1, 1, false))) {
-            // the jobs of a hand-off to the local tail, as Leiden.detect
-            // makes it: the rows come back, else one collect if they fit
-            val (phases, c) = jobPhases {
-              val c = Aggregate.coarsenBlocks(spark, csr, comm, threshold)
-              if (c.held == null && c.rows <= threshold) EdgeTable.collectPacked(c.edges)
-              c
-            }
-            assert(phases.size === jobs, s"$what, threshold $threshold: $phases")
-            assert((c.held != null) === held, s"$what, threshold $threshold")
-            val rows = if (c.held != null) heldMap(c.held) else pairMap(EdgeTable.collectPacked(c.edges))
-            assert(bitsOf(rows) === bitsOf(oracle), s"$what, threshold $threshold")
-            org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+        // the slices' rows, one after another, sorted by (src, dst)
+        def run(slices: Int): Seq[(Int, Int, Long)] = {
+          val (phases, ss) = jobPhases(Aggregate.coarsenBlocks(blks, comm, slices))
+          assert(phases.isEmpty, s"$what, $slices slices: $phases")
+          assert(ss.length === slices, what)
+          ss.foreach { s =>
+            val keys = s.ints(0).indices.map(i => (s.ints(0)(i).toLong << 32) | s.ints(1)(i))
+            assert(keys === keys.sorted && keys.distinct.size === keys.size, s"$what: a slice's order")
           }
+          ss.flatMap(s => s.ints(0).indices.map(i =>
+            (s.ints(0)(i), s.ints(1)(i), java.lang.Double.doubleToRawLongBits(s.doubles(2)(i)))))
+            .toSeq.sortBy(r => (r._1, r._2))
         }
-        csr.unpersist()
+        val got = run(p)
+        val gotMap = got.map(r => (r._1.toLong, r._2.toLong) -> java.lang.Double.longBitsToDouble(r._3)).toMap
+        assert(got.size === oracle.size && gotMap.keySet === oracle.keySet, what)
+        if (integral) assert(bitsOf(gotMap) === bitsOf(oracle), what)
+        else {
+          gotMap.foreach { case (k, w) => assert(math.abs(w - oracle(k)) <= 1e-12, s"$what: $k") }
+          assert(run(p) === got, s"$what: a second run over the same blocks")
+        }
+        // the local tail's one slice, and an odd count, sum the same doubles
+        for (slices <- Seq(1, 3)) assert(run(slices) === got, s"$what, $slices slices")
       }
       edges.unpersist()
     }
@@ -889,23 +867,32 @@ class LeidenSpec extends SparkSpec {
     val edges = EdgeTable.undirected(spark, blocks(n, 20, 71, (_, _) => 1.0)).cache()
     val csr = CsrSweep.build(edges, n).cache()
     val comm = Array.tabulate(n)(v => (v / 20 * 20).toLong)
-    // the distributed coarsen (a local-tail gate of 0)
-    val c = Aggregate.coarsenBlocks(spark, csr, comm, 0L)
-    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[Int] =
-      r.id +: r.dependencies.flatMap(d => lineage(d.rdd))
-    val frameRdds = c.edges.queryExecution.analyzed.collectLeaves().collect {
+    // the frame of a coarse graph above the local tail's gate: one job
+    val slices =
+      Aggregate.coarsenBlocks(CsrSweep.pin(csr), comm, spark.sparkContext.defaultParallelism)
+    val rows = slices.map(_.size.toLong).sum
+    val (phases, frame) = jobPhases(Aggregate.slicesFrame(spark, slices))
+    assert(phases.size === 1, phases.toString)
+    assert(CsrSweep.handoffSize === 0, "the slices' handoff is closed with its job")
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val frameRdds = frame.queryExecution.analyzed.collectLeaves().collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
     assert(frameRdds.nonEmpty)
-    assert(c.slices.isCheckpointed)
-    assert(c.slices.getStorageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assert(!lineage(c.slices).contains(csr.id), c.slices.toDebugString)
-    frameRdds.foreach(r => assert(!lineage(r).contains(csr.id), r.toDebugString))
+    frameRdds.foreach { r =>
+      val held = lineage(r).filter(_.isCheckpointed)
+      assert(held.size === 1, r.toDebugString)
+      assert(held.head.getStorageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      assert(!lineage(r).exists(_.id == csr.id), r.toDebugString)
+    }
+    assert(frame.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ===
+      Seq(("src", "bigint", false), ("dst", "bigint", false), ("w", "double", false)))
     // the blocks gone, the coarse rows still read back without them
     csr.unpersist(blocking = true)
-    assert(c.edges.count() === c.rows)
-    assert(c.edges.agg(sum("w")).head.getDouble(0) === edges.agg(sum("w")).head.getDouble(0))
-    org.apache.spark.sql.graft.PlanUtils.release(c.edges)
+    assert(frame.count() === rows)
+    assert(frame.agg(sum("w")).head.getDouble(0) === edges.agg(sum("w")).head.getDouble(0))
+    org.apache.spark.sql.graft.PlanUtils.release(frame)
     edges.unpersist()
   }
 
