@@ -61,8 +61,6 @@ object Bench {
     */
   def leidenSuperstepThroughput(spark: SparkSession, nVerts: Long, iters: Int,
                                 reps: Int = 3,
-                                broadcastCtOverride: Option[Boolean] = None,
-                                membershipOverride: Option[Boolean] = None,
                                 degOverride: Int = 0): (Double, Long, Double) = {
     // src-partitioned main cache, exactly as Leiden.detect builds it.
     // SPARK_GRAFT_BENCH_DEG sets the fixture's out-degree (default 8 ⇒
@@ -99,12 +97,12 @@ object Bench {
     val edges = spark.read.parquet(fixDir.toString)
       .repartition(col("src")).cache()
     val e = edges.count()
-    val bcCt = broadcastCtOverride.getOrElse(nVerts <= LocalMove.CtBroadcastMax)
-    // membership broadcast ⇒ the measured half-sweeps run the production
-    // zero-candidate-exchange srcGather plan and need no dst twin at all;
-    // otherwise build the dst twin and measure the dstGather tier
-    val bcMd = membershipOverride.getOrElse(bcCt)
-    val byDst = if (bcMd) None else {
+    // community totals and membership broadcast ⇒ the measured half-sweeps
+    // run the production zero-candidate-exchange srcGather plan and need no
+    // dst twin at all; otherwise build the dst twin and measure the
+    // dstGather tier
+    val bcCt = nVerts <= LocalMove.CtBroadcastMax
+    val byDst = if (bcCt) None else {
       val edst = edges.repartition(col("dst")).cache()
       edst.count()
       Some(edst)
@@ -112,7 +110,7 @@ object Bench {
     val m = EdgeTable.totalWeight(edges) / 2
     val vtot = PlanUtils.checkpointTruncated(EdgeTable.vertexWeights(edges))
     var bestSecs = Double.MaxValue
-    if (bcMd && nVerts <= LocalMove.CtBroadcastMax && spark.sparkContext.isLocal) {
+    if (bcCt && spark.sparkContext.isLocal) {
       // the tier Leiden.detect runs on a local master's dense passes —
       // packed-CSR fused kernel (CsrSweep scaladoc): ONE primitive-array
       // pass per half-sweep, frontier folded in. singleton pins the blocks
@@ -143,13 +141,13 @@ object Bench {
     val init = vtot.select(col("id"), col("id").as("comm"), col("vtot"), lit(true).as("aff"))
     // frontier-bitmap tier on the membership-broadcast path: dense ids
     val fBits: Option[Array[Byte]] =
-      if (bcMd && nVerts <= LocalMove.FrontierBitsMax)
+      if (bcCt && nVerts <= LocalMove.FrontierBitsMax)
         Some(graft.leiden.FrontierBits.fromState(init, nVerts.toInt))
       else None
     // warmup half-sweep primes codegen + the edge caches; its materialized
     // result is the FIXED starting state of every repetition
     val warmR = LocalMove.sweep(edges, init, m, 1.0, 0, edgesByDst = byDst,
-      broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcMd,
+      broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcCt,
       affBits = fBits)
     val warm = warmR.state
     for (_ <- 1 to reps) {
@@ -158,8 +156,8 @@ object Bench {
       val t0 = System.nanoTime()
       var done = 0
       while (done < iters) {
-        val r1 = LocalMove.sweep(edges, state, m, 1.0, 1, edgesByDst = byDst, broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcMd, affBits = bits)
-        val r2 = LocalMove.sweep(edges, r1.state, m, 1.0, 0, edgesByDst = byDst, broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcMd, affBits = r1.affBits)
+        val r1 = LocalMove.sweep(edges, state, m, 1.0, 1, edgesByDst = byDst, broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcCt, affBits = bits)
+        val r2 = LocalMove.sweep(edges, r1.state, m, 1.0, 0, edgesByDst = byDst, broadcastCt = bcCt, vertexCountHint = nVerts, broadcastMembership = bcCt, affBits = r1.affBits)
         val (s1, s2) = (r1.state, r2.state)
         bits = r2.affBits
         if ((state ne warm) && (state ne s1) && (state ne s2)) PlanUtils.release(state)

@@ -173,12 +173,13 @@ object PlanDump {
       write(dir, "g_leiden_after.txt",
         ("g_leiden AFTER (1/3): per-pass coarsen on dense-tier passes (local " +
           "masters) — no SQL plan and no job: the driver coarsens the pass's " +
-          "pinned CSR blocks in-process (Aggregate.coarsenBlocks), mapping each " +
-          "row through the membership array, summing per block and merging the " +
-          "blocks' partials into hash slices. A coarse graph above the local " +
-          "tail's gate becomes the next pass's frame over the slices in one job " +
-          "that persists and locally checkpoints them (Aggregate.slicesFrame); " +
-          "that frame's lineage (RDD.toDebugString) is") -> {
+          "CSR blocks in-process (Aggregate.coarsenBlocks), mapping each row " +
+          "through the membership array, summing per block and merging the " +
+          "blocks' partials into src-hash slices, which stay on the driver as " +
+          "the next pass's rows, one CSR block per slice. Only a snapshot " +
+          "commit makes them a frame, in one job that persists and locally " +
+          "checkpoints them (Aggregate.slicesFrame); that frame's lineage " +
+          "(RDD.toDebugString) is") -> {
             val blocks = graft.leiden.CsrSweep.build(edges, n, srcComplete = true).collect()
             val frame = graft.leiden.Aggregate.slicesFrame(spark,
               graft.leiden.Aggregate.coarsenBlocks(blocks, comm, spark.sparkContext.defaultParallelism))
@@ -198,10 +199,15 @@ object PlanDump {
               org.apache.spark.sql.graft.NativeColumns.bcLookupLong(bcRef, col("comm")).as("comm"))
           },
         ("g_leiden AFTER (3/3): input shape — detect() caches the repartitioned " +
-          "input ONCE up front; totalWeight, vertices, leaf init, the tail gate " +
-          "and the final modularity all read this InMemoryTableScan instead of " +
-          "re-deriving the plan above") ->
-          explainStr(edges.agg(coalesce(sum("w"), lit(0.0)))))
+          "input ONCE up front, and on a local master the one job that builds " +
+          "the cache hands each partition's rows to the driver: the total " +
+          "weight, the row count, the id bounds, the vertex weights, pass 0's " +
+          "CSR blocks and the tail's rows come from them, and the final " +
+          "modularity from the last pass's blocks, with no further job. That " +
+          "job reads this InMemoryTableScan instead of re-deriving the plan " +
+          "above") ->
+          explainStr(edges.select(col("src").cast("long"), col("dst").cast("long"),
+            col("w").cast("double"))))
     }
 
     // ---- g_pagerank (local tail): cache-through-gate ---------------------

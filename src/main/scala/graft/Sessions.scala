@@ -25,8 +25,8 @@ object Sessions {
       // Kryo for RDD-level payloads (DataFrame shuffles ride Tungsten's own
       // UnsafeRow path either way). Off a local master the driver ships
       // primitive arrays to executors in Leiden's broadcast membership
-      // lookups (Aggregate.composeArray, Modularity.dense); on a local
-      // master the coarse slices Aggregate.slicesFrame caches spill
+      // lookup (Aggregate.composeArray); on a local master the coarse
+      // slices Aggregate.slicesFrame caches for a snapshot commit spill
       // through it.
       // JavaSerializer writes long[]/double[] element-wise (~40 MB/s,
       // measured as ~40 ms of driver-serial broadcast per half-sweep at 4x8

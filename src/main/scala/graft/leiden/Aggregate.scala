@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *    joins and one hash aggregation;
   *  - [[coarsenBlocks]]: a dense or local-tail pass's driver array, one
   *    in-process pass over the CSR blocks the driver holds, with no Spark
-  *    job, into hash slices of the coarse graph; [[slicesFrame]] makes the
-  *    next pass's frame of them when that graph stays above the tail gate.
+  *    job, into src-hash slices of the coarse graph: the next pass's rows,
+  *    one block per slice. [[slicesFrame]] makes a frame of them only for
+  *    a snapshot commit.
   * The output shrinks geometrically per pass, so later passes run on
   * driver-sized data — the analog of the reference's DiGraph->CSR switch
   * (`/root/reference/inc/leiden.hxx:724-725`).
@@ -77,21 +78,22 @@ object Aggregate {
   private val CoarseSchema = StructType(Seq(StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false), StructField("w", DoubleType, nullable = false)))
 
-  /** [[coarsen]] over CSR blocks the driver holds (a dense pass's pinned
-    * blocks, or the local tail's one block), in-process with no Spark job:
+  /** [[coarsen]] over CSR blocks the driver holds (a dense pass's blocks,
+    * or the local tail's one block), in-process with no Spark job:
     * `comm` is the pass membership, indexed by pass vertex id (the CsrSweep
     * state).
     *
     * Each block maps its rows to packed `(comm(src) << 32) | comm(dst)` keys
     * and sums duplicates by one sort ([[sumPairs]]), in CSR row order, then
-    * splits its partial rows into `p` hash slices of the key; the blocks
-    * run in parallel. Each slice then sums each pair's partials in
-    * ascending block index, the slices in parallel. So the weights are the
-    * same doubles on every run over the same blocks, whatever the thread
-    * schedule, and on integral weights they equal [[coarsen]]'s. The local
-    * tail calls it with one block and one slice.
+    * splits its partial rows into `p` slices by a hash of the coarse src;
+    * the blocks run in parallel. Each slice then sums each pair's partials
+    * in ascending block index, the slices in parallel. So the weights are
+    * the same doubles on every run over the same blocks, whatever the
+    * thread schedule, and on integral weights they equal [[coarsen]]'s.
+    * The local tail and `Modularity.ofBlocks` call it with one slice.
     *
-    * @return the `p` slices in slice order, each one (src int, dst int,
+    * @return the `p` slices in slice order, each src-complete (every row
+    *         of a coarse src in one slice), one (src int, dst int,
     *         w double) row per pair, ascending
     */
   def coarsenBlocks(blocks: Array[CsrSweep.CsrBlock], comm: Array[Long], p: Int): Array[Packed] = {
@@ -110,8 +112,8 @@ object Aggregate {
     out
   }
 
-  /** [[coarsenBlocks]]'s slices as the next pass's (src long, dst long,
-    * w double) frame, one partition per slice in slice order, after one
+  /** [[coarsenBlocks]]'s slices as a (src long, dst long, w double) frame
+    * for a snapshot commit, one partition per slice in slice order, after one
     * job that persists them at MEMORY_AND_DISK with the lineage cut
     * (`localCheckpoint`): an evicted slice spills instead of recomputing,
     * and once the job ends no driver object holds the rows. A local master
@@ -151,7 +153,8 @@ object Aggregate {
 
   /** A block's partial coarse rows, one per pair of `rowKeys` (weights
     * summed in row order), split into `p` (keys, weights) slices; a slice
-    * is a multiplicative hash of the key.
+    * is a multiplicative hash of the key's src, so every row of a coarse
+    * src lands in one slice.
     */
   private def sliced(rowKeys: Array[Long], rowW: Array[Double], p: Int)
       : Array[(Array[Long], Array[Double])] = {
@@ -160,7 +163,7 @@ object Aggregate {
     val start = new Array[Int](p + 1)
     var i = 0
     while (i < k) {
-      slice(i) = ((keys(i) * 0x9E3779B97F4A7C15L >>> 33) % p).toInt
+      slice(i) = (((keys(i) >>> 32) * 0x9E3779B97F4A7C15L >>> 33) % p).toInt
       start(slice(i) + 1) += 1
       i += 1
     }

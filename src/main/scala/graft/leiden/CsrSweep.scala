@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
   * sorted CSR-like per-partition blocks").
   *
   * The dense tier of [[Leiden.detect]]: on a local master it runs every
-  * pass whose ids fit the dense gate (within the broadcast cap), and on any
-  * master every pass of the local tail on one driver-held block;
+  * pass whose rows the driver holds (src ids within the dense gate's
+  * cap), and on any master every pass of the local tail on one block;
   * [[LocalMove]], the Catalyst DataFrame tier, runs the rest. It exists
   * for one measured reason: a Catalyst half-sweep is full passes over the
   * cached edge table
@@ -31,9 +31,11 @@ import org.apache.spark.sql.functions.col
   * The tier is driver-resident, as the reference runs each sweep as one
   * parallel loop over flat arrays in one process (`leidenMoveOmpW`, the
   * reference's `inc/leiden.hxx:409-435`): the driver holds the blocks,
-  * either a local master's blocks pinned once per pass ([[pin]]) or
-  * the local tail's one block ([[onDriver]]), and every half-sweep scans
-  * them in-process, in parallel over blocks, with no Spark job. Off a
+  * one per src-complete slice of the pass's rows ([[pack]]: a local
+  * master's input partitions, handed over by the job that reads them, or
+  * the previous pass's coarse slices) or the local tail's one block, and
+  * every half-sweep scans them in-process ([[onDriver]]), in parallel over
+  * blocks, with no Spark job. Off a
   * local master, where executor JVMs would hold the blocks, dense passes
   * take the Catalyst tier instead, as the other dense kernels (PageRank,
   * Triangles, Components, Bfs) do.
@@ -280,7 +282,7 @@ object CsrSweep {
   private[graft] var PackGaps: Boolean = true
 
   /** Pack the edge cache into per-partition CSR blocks, one per
-    * partition, which [[init]] or [[singleton]] pins on the driver. The per-block argmax is
+    * partition, which [[singleton]] pins on the driver. The per-block argmax is
     * per-src-complete, so all edges of a src MUST land in one partition.
     *
     * Blocks are RANGE-partitioned by src with ~equal EDGES per block
@@ -479,23 +481,36 @@ object CsrSweep {
   private[leiden] def handoffSlots(key: Long): java.util.concurrent.atomic.AtomicReferenceArray[AnyRef] =
     handoff.get(key)
 
-  /** A local master's blocks of `csr`, as the driver holds them: one job
-    * over the RDD hands each partition's block objects to the driver
+  /** A local master's elements of `rdd`, as the driver holds them: one
+    * job over the RDD hands each partition's element objects to the driver
     * through [[handoff]]. Tasks share the driver's JVM, so nothing is
-    * serialized and no block travels as a task result. Blocks come back in
-    * partition order with empty partitions skipped, the order `collect()`
-    * gives.
+    * serialized and no element travels as a task result. Elements come
+    * back in partition order, the order `collect()` gives. `Leiden.detect`
+    * pins its input partitions' rows this way; [[singleton]] pins blocks.
     */
-  private[leiden] def pin(csr: RDD[CsrBlock]): Array[CsrBlock] = {
-    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[AnyRef](csr.getNumPartitions)
+  private[graft] def pin[T: scala.reflect.ClassTag](rdd: RDD[T]): Array[T] = {
+    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[AnyRef](rdd.getNumPartitions)
     handingOff(slots) { key =>
-      csr.sparkContext.runJob(csr, (ctx: TaskContext, it: Iterator[CsrBlock]) => {
+      rdd.sparkContext.runJob(rdd, (ctx: TaskContext, it: Iterator[T]) => {
         val bs: AnyRef = it.toArray
         val s = handoffSlots(key)
         if (s != null) s.set(ctx.partitionId, bs)
       })
-      Array.tabulate(slots.length())(i => slots.get(i).asInstanceOf[Array[CsrBlock]]).flatten
+      Array.tabulate(slots.length())(i => slots.get(i).asInstanceOf[Array[T]]).flatten
     }
+  }
+
+  /** One block per non-empty slice of src-complete (src int, dst int,
+    * w double) rows ([[toBlock]]), packed in parallel on the driver, in
+    * slice order.
+    */
+  def pack(slices: Array[Packed]): Array[CsrBlock] = {
+    val rows = slices.filter(_.size > 0)
+    val gaps = PackGaps
+    val out = new Array[CsrBlock](rows.length)
+    java.util.stream.IntStream.range(0, rows.length).parallel()
+      .forEach(i => out(i) = toBlock(rows(i), gaps))
+    out
   }
 
   /** Driver-held sweep state for this tier: membership + the folded
@@ -511,9 +526,9 @@ object CsrSweep {
     * scratch, in ascending vertex order, before every half-sweep's scan
     * ([[halfSweep]]).
     *
-    * The blocks are a local master's blocks, pinned once by
-    * [[init]] or [[singleton]] ([[pin]]), or the local tail's one block
-    * ([[onDriver]]). Each half-sweep scans them in-process, in parallel
+    * The blocks are the driver's: [[pack]]ed from a pass's rows, the
+    * local tail's one block, or an RDD's blocks pinned by [[singleton]].
+    * Each half-sweep scans them in-process, in parallel
     * over blocks, against the live arrays, with no Spark job ([[scanHeld]]).
     * [[close]] drops the blocks.
     */
@@ -602,31 +617,24 @@ object CsrSweep {
     }
   }
 
-  /** A state over the blocks of `csr`, after the one job that pins them
-    * on the driver ([[pin]]). Local masters only: elsewhere the blocks
-    * live in executor JVMs.
+  /** A state over blocks the driver holds, from membership `comm0` with
+    * frontier seed `aff0`.
     */
-  def init(csr: RDD[CsrBlock], n: Int, vtot: Array[Double],
-           comm0: Array[Long], aff0: Array[Byte]): CsrState =
-    new CsrState(pinLocal(csr), n, vtot, comm0, aff0)
-
-  private def pinLocal(csr: RDD[CsrBlock]): Array[CsrBlock] = {
-    require(csr.sparkContext.isLocal, "CsrSweep scans driver-held blocks and needs a local " +
-      s"master, not ${csr.sparkContext.master}; Leiden.detect runs LocalMove there")
-    pin(csr)
-  }
-
-  /** [[init]] over blocks the driver holds. */
   def onDriver(blocks: Array[CsrBlock], n: Int, vtot: Array[Double],
                comm0: Array[Long], aff0: Array[Byte]): CsrState =
     new CsrState(blocks, n, vtot, comm0, aff0)
 
-  /** Identity membership + all-affected seed (singleton init); a local
-    * master only, as [[init]].
+  /** Identity membership + all-affected seed (singleton init) over the
+    * blocks of `csr`, after the one job that pins them on the driver
+    * ([[pin]]). Local masters only: elsewhere the blocks live in executor
+    * JVMs.
     */
-  def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double]): CsrState =
-    new CsrState(pinLocal(csr), n, vtot, Array.tabulate(n)(_.toLong),
+  def singleton(csr: RDD[CsrBlock], n: Int, vtot: Array[Double]): CsrState = {
+    require(csr.sparkContext.isLocal, "CsrSweep scans driver-held blocks and needs a local " +
+      s"master, not ${csr.sparkContext.master}; Leiden.detect runs LocalMove there")
+    new CsrState(pin(csr), n, vtot, Array.tabulate(n)(_.toLong),
       Array.fill[Byte]((n + 7) / 8)(-1))
+  }
 
   @inline private def bit(b: Array[Byte], i: Int): Boolean =
     (b(i >> 3) & (1 << (i & 7))) != 0

@@ -3,6 +3,7 @@ package graft.leiden
 import graft.graph.{EdgeTable, Packed}
 import graft.io.Snapshots
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.graft.PlanUtils
@@ -29,28 +30,35 @@ import org.apache.spark.sql.graft.PlanUtils
   * the pass-0 ids allow. When they fit the dense gate (0 <= id <
   * `LocalMove.CtBroadcastMax`) it is a driver array over the pass-0 id
   * space, as the reference keeps it (`/root/reference/inc/leiden.hxx:565-570`):
-  * passes compose it by indexing, the community count and the final
-  * modularity (`Modularity.dense`) read it on the driver, and the result's
-  * membership is built from it once at the end. Otherwise it is a
-  * checkpointed (id, comm) DataFrame composed by joins.
+  * passes compose it by indexing, the community count reads it on the
+  * driver, and the result's membership is built from it once at the end.
+  * Otherwise it is a checkpointed (id, comm) DataFrame composed by joins.
   *
   * The tier follows the master, as for the other dense kernels. On a
-  * local master a dense pass packs its graph into CSR blocks
-  * (`csrbuild`) in the one job that also pins them on the driver
-  * (`CsrSweep.init`): its half-sweeps run no Spark
-  * job, and it coarsens the pinned blocks in-process
-  * (`Aggregate.coarsenBlocks`) into disjoint hash slices of the coarse
-  * graph. A coarse graph above the local tail's gate becomes the next
-  * pass's frame over those slices, persisted and locally checkpointed in
-  * one job (`Aggregate.slicesFrame`); one under the gate stays on the
-  * driver for the tail. On any other master every pass above the gate
-  * takes the Catalyst tier (`LocalMove`).
+  * local master the one job that materializes the src-hash input cache
+  * also hands each partition's rows to the driver (`CsrSweep.pin`) when
+  * the src ids fit the dense gate, so the reference's read-once shape
+  * holds (`main.cxx`, `leiden.hxx:662-780`). The total weight, the bounds
+  * and the vertex weights come from those rows; a dense pass packs one
+  * CSR block per src-complete slice in-process (`CsrSweep.pack`), its
+  * half-sweeps run no Spark job, and it coarsens its blocks in-process
+  * (`Aggregate.coarsenBlocks`) into src-hash slices, the next pass's rows
+  * on the driver. A pass graph that is a frame (a resumed snapshot, a
+  * sketch-aggregated or a DataFrame-tier coarse graph) reaches the driver
+  * through the same job over its src-hash repartition. On any other
+  * master every pass above the local tail's gate takes the Catalyst tier
+  * (`LocalMove`).
   *
   * Once a pass graph has at most `LeidenOptions.localSolveEdgeThreshold`
   * rows, the remaining passes run the same steps on the driver, on any
   * master: the CSR block scan in-process (`CsrSweep.onDriver`) and the
   * same in-process coarsen over the tail's one block. The rows arrive
-  * once: from the coarsen after a dense pass, else by one collect.
+  * once: from the driver's rows on a local master, else by one collect.
+  *
+  * When the last pass ran on the driver over exactly coarsened graphs,
+  * the run's modularity comes from that pass's blocks and membership
+  * (`Modularity.ofBlocks`) with no job; otherwise from the input cache by
+  * join (`Modularity.modularity`).
   *
   * With a snapshot directory, every pass ends in a durable snapshot (coarse
   * edges + composed leaf membership + metrics + per-partition lineage) via
@@ -129,8 +137,10 @@ object Leiden {
     var tail: Packed = null
     var tailBack: Array[Long] = null
     var tailLeaf: Array[Int] = null
-    // the pass graph's rows when a dense pass's coarsen left them on the
-    // driver: its hash slices of (src int, dst int, w double) rows, else null
+    // The pass graph's rows on the driver, as src-complete slices of (src
+    // int, dst int, w double) rows, or null: a local master's src-hash
+    // partitions of a frame (`load`), or a dense pass's coarse slices.
+    // A dense pass above the tail runs on them (the dense gate).
     var held: Array[Packed] = null
     // the local tail's gate in rows, 0 = off. Snapshot-enabled runs stay
     // distributed: the per-pass durability contract (resume from the last
@@ -149,25 +159,18 @@ object Leiden {
         sc.setLocalProperty(PhaseProperty, outer)
       }
     }
+    val parts = sc.defaultParallelism
 
     // Cache the input ONCE, up front, hash-partitioned by src (every
     // half-sweep's gather join and the affected-neighbor join key on src).
-    // Every pre-pass aggregate (the totals job below, the pass-0 vertex
-    // weights, the local-tail collect) and the final modularity evaluation
-    // read THIS cache: with a derived input (the bench queries feed the
-    // copurchase self-join straight in) the old shape re-derived the input
-    // plan five to six times per detect() call — about half of g_leiden's
-    // sf0.1 wall. Weight sums are unaffected (integral-weight sums are
-    // exact in any order; detect's float tolerance covers the rest —
-    // LeidenSpec).
+    // With a derived input (the bench queries feed the copurchase self-join
+    // straight in) an uncached plan would be re-derived by every read.
     // Explicit partition count: an unpinned repartition(col) is an AQE
     // coalescing target — a small input could collapse to 1-2 cached
     // partitions, serializing every kernel sweep and the CSR pack. Pinning
-    // to defaultParallelism keeps one block per core (CsrSweep's measured
-    // best) and lets CsrSweep.build(srcComplete=true) pack straight from
-    // these cached partitions with no further exchange.
-    val inputEdges = edges0
-      .repartition(sc.defaultParallelism, col("src")).cache()
+    // to defaultParallelism keeps one src-complete partition per core
+    // (CsrSweep's measured best), which `load` hands to the driver as is.
+    val inputEdges = edges0.repartition(parts, col("src")).cache()
     var edges = inputEdges
     // drops the pass graph's cache or persisted slices; inputEdges stays
     // cached for the final modularity
@@ -175,14 +178,19 @@ object Leiden {
       edges.unpersist()
       PlanUtils.release(edges)
     }
-    // One job for the total weight, the row count (pass 0's local-tail
-    // gate) and the src id bounds (pass 0's dense gate).
-    val (twoM, rows0, minSrc, maxSrc) = timed("input") {
-      val r = edges.agg(coalesce(sum(col("w")), lit(0.0)), count(lit(1)),
-        min(col("src")).cast("long"), max(col("src")).cast("long")).head
-      (r.getDouble(0), r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2), if (r.isNullAt(3)) -1L else r.getLong(3))
+    // One job over a src-hash cache `df` (`inputParts`) materializes it and
+    // gives its (Σw, rows, min src, max src), Σw summed in partition row
+    // order with partitions ascending; on a local master its rows stay on
+    // the driver (`held`) when every src lies in the dense id space.
+    def load(df: DataFrame): (Double, Long, Long, Long) = {
+      val ps = inputParts(df, keep = sc.isLocal)
+      val full = ps.filter(_.rows > 0)
+      held = if (full.nonEmpty && ps.forall(_.data != null)) ps.map(_.data) else null
+      if (full.isEmpty) (0.0, 0L, 0L, -1L)
+      else (ps.foldLeft(0.0)(_ + _.w), full.map(_.rows).sum, full.map(_.lo).min, full.map(_.hi).max)
     }
+    // Σw, the row count (pass 0's tail gate) and the src bounds (its dense gate)
+    val (twoM, rows0, minSrc, maxSrc) = timed("input") { load(inputEdges) }
     val m = twoM / 2
     // detect's input contract is a SYMMETRIZED edge table (every caller
     // symmetrizes: scaladoc param, GraphStream applyOps(symmetric=true),
@@ -202,8 +210,7 @@ object Leiden {
     val n0: Int =
       if (minSrc >= 0 && maxSrc < LocalMove.CtBroadcastMax) (maxSrc + 1).toInt else 0
     // The leaf membership (object scaladoc), in one of two forms:
-    //  - `leafArr` over the pass-0 ids, masked by `present0`, with `vt0`
-    //    the pass-0 vertex weights (Modularity.dense's ctot). Only when
+    //  - `leafArr` over the pass-0 ids, masked by `present0`. Only when
     //    n0 > 0; the first pass fills it, dense or local tail. Its values
     //    are the current pass graph's vertex ids, all below n0 (during
     //    the local tail, the tail ids at entry).
@@ -211,7 +218,6 @@ object Leiden {
     //    builds it only if a pass takes the DataFrame tier.
     var leafArr: Array[Long] = null
     var present0: Array[Boolean] = null
-    var vt0: Array[Double] = null
     var leaf: DataFrame = null
     // rows of `leaf`: gates the final modularity's membership broadcast
     var leafCount = 0L
@@ -219,6 +225,25 @@ object Leiden {
     var gn = -1L
     // the pass graph's edge rows when a job already counted them, else -1
     var rows = rows0
+    // the last pass's blocks and membership when that pass ran on the
+    // driver and every coarse graph before it is exact, else null: the
+    // run's Q is theirs (Modularity.ofBlocks), else the input's by join
+    var lastPass: (Array[CsrSweep.CsrBlock], Array[Long]) = null
+    // whether a coarse graph so far is sketch-aggregated, its weights
+    // estimates; each snapshot records the opposite as "exact"
+    var lossy = false
+    // Makes `df` the pass graph: on a local master cached by src hash and
+    // read and counted by `load`, elsewhere cached as it is.
+    def adopt(df: DataFrame): Unit = {
+      dropEdges()
+      if (sc.isLocal) {
+        edges = df.repartition(parts, col("src")).cache()
+        rows = load(edges)._2
+      } else {
+        edges = df.cache()
+        rows = -1L
+      }
+    }
     val srcField = inputEdges.schema("src")
     def identityLeaf(): DataFrame = {
       val l = timed("input") {
@@ -256,44 +281,39 @@ object Leiden {
 
     // Resume from the latest committed pass snapshot, if any.
     for (root <- opts.snapshotDir; last <- Snapshots.committed(root, "leiden").lastOption) {
-      dropEdges()
-      edges = Snapshots.read(spark, root, "leiden", last, "edges").cache()
+      held = null
+      timed("input") { adopt(Snapshots.read(spark, root, "leiden", last, "edges")) }
       if (leaf != null) PlanUtils.release(leaf)
       leaf = Snapshots.read(spark, root, "leiden", last, "leaf")
       if (n0 > 0) {
         // a dense-range run reads the snapshot leaf back into the driver
-        // array, with the pass-0 vertex weights a fresh pass 0 collects
+        // array; its rows are exactly the pass-0 vertices
         val l = Packed.collect(leaf.select(col("id").cast("long"), col("comm").cast("long")))
         val (ids, comms) = (l.longs(0), l.longs(1))
         if (ids.forall(v => v >= 0 && v < n0) && comms.forall(c => c >= 0 && c < n0)) {
-          val vw = Packed.collect(EdgeTable.vertexWeights(inputEdges)
-            .select(col("id").cast("long"), col("vtot").cast("double")))
           leafArr = new Array[Long](n0)
           present0 = new Array[Boolean](n0)
-          vt0 = new Array[Double](n0)
-          ids.indices.foreach(i => leafArr(ids(i).toInt) = comms(i))
-          vw.longs(0).indices.foreach { i =>
-            val v = vw.longs(0)(i).toInt
-            present0(v) = true
-            vt0(v) = vw.doubles(1)(i)
-          }
+          ids.indices.foreach { i => leafArr(ids(i).toInt) = comms(i); present0(ids(i).toInt) = true }
           leaf = null
         } else leafCount = ids.length
       }
       pass = (last + 1).toInt
       tolerance = opts.tolerance / math.pow(opts.toleranceDrop, pass.toDouble)
-      gn = EdgeTable.vertices(edges).count()
-      rows = -1L
-      totalIters = Snapshots.manifestText(root, "leiden", last)
+      // rows on the driver give the count with the vertex weights
+      gn = if (held != null) -1L else EdgeTable.vertices(edges).count()
+      val manifest = Snapshots.manifestText(root, "leiden", last)
+      totalIters = manifest
         .split("\"iterations\":\"").lift(1).flatMap(_.takeWhile(_.isDigit).toIntOption)
         .getOrElse(0)
+      // the snapshot's coarse graph is exact only if its run recorded so
+      lossy = !manifest.contains("\"exact\":\"true\"")
       resumed = true
     }
     val firstPass = pass
 
-    // Move the pass graph into the local tail (`tail` above): the rows its
-    // coarsen left on the driver, else one collect. Its ids are the
-    // endpoints plus, on a warm first pass, the seed labels.
+    // Move the pass graph into the local tail (`tail` above): the rows the
+    // driver holds (`held`), else one collect. Its ids are the endpoints
+    // plus, on a warm first pass, the seed labels.
     def enterTail(): Unit = {
       val (sA, dA, wA) =
         if (held == null) EdgeTable.collectPacked(edges)
@@ -307,14 +327,13 @@ object Leiden {
       val labels = if (warm) warmComm.values.toArray else Array.emptyLongArray
       if (leafArr == null && leaf == null) {
         // the whole run is local: the leaf starts as the identity over the
-        // pass-0 ids, weighted from the collected rows. Seed labels outside
-        // them need the DataFrame leaf, as they do on a dense pass.
+        // pass-0 ids, the srcs of the rows. Seed labels outside them need
+        // the DataFrame leaf, as they do on a dense pass.
         if (labels.exists(c => c < 0 || c >= n0)) leaf = identityLeaf()
         else {
           leafArr = Array.tabulate(n0)(_.toLong)
           present0 = new Array[Boolean](n0)
-          vt0 = new Array[Double](n0)
-          for (i <- 0 until r) { present0(sA(i).toInt) = true; vt0(sA(i).toInt) += wA(i) }
+          for (i <- 0 until r) present0(sA(i).toInt) = true
         }
       }
       val ids = new Array[Long](2 * r + labels.length)
@@ -353,18 +372,17 @@ object Leiden {
 
     while (!done && pass < opts.maxPasses) {
       // Local tail: once the pass graph has at most `tailRows` rows, a
-      // pass's Spark jobs (the CSR pack and the coarse frame, or off local
-      // masters the Catalyst tier's jobs per half-sweep) are pure fixed
-      // cost, so the rows move to the driver once and every remaining pass
-      // runs the steps below on one driver-held CSR block.
+      // pass's Spark jobs (off local masters the Catalyst tier's jobs per
+      // half-sweep) are pure fixed cost, so the rows move to the driver
+      // once and every remaining pass runs the steps below on one
+      // driver-held CSR block.
       if (tail == null && tailRows > 0 &&
         (if (rows >= 0) rows else edges.count()) <= tailRows)
         timed("localtail") { enterTail() }
 
-      // lazy per-vertex weights: the dense tier consumes them as one packed
-      // collect and never pays the checkpoint job or the state0 joins —
-      // only the DataFrame tier materializes them, after the gate decides
-      val vtotLazy = if (tail == null) EdgeTable.vertexWeights(edges) else null
+      // lazy per-vertex weights of a frame pass graph: only the DataFrame
+      // tier materializes them, after the gate decides
+      val vtotLazy = if (edges != null) EdgeTable.vertexWeights(edges) else null
 
       // 1. local moving. C ≤ V = gn, so whenever the pass's vertex count
       // fits the cap (LocalMove.CtBroadcastMax) BOTH the community-totals
@@ -376,15 +394,14 @@ object Leiden {
       // and gather via the dstGather plan (LocalMove.sweep scaladoc).
       // gn < 0 only on pass 0 with n0 > 0, whose id bounds already cap V.
       val bcCt = gn < 0 || gn <= LocalMove.CtBroadcastMax
-      // Dense gate (also the FrontierBits gate): a dense-enough id space,
-      // checked against the pass's actual id bounds. gn <= the 4M cap
-      // bounds the row count, so the bounds come from one packed collect of
-      // the vtot rows, reused below for vt/present (order-independent
-      // per-id fills). A dense pass's coarse graph keeps ids below its n,
-      // so the gate holds for every pass after one; a DataFrame-tier pass
-      // passes its community labels on unchanged.
+      // The vertex weights and the id bounds (the FrontierBits gate): from
+      // the driver's rows in row order, else, when gn is within the 4M cap,
+      // one packed collect of the vtot rows (order-independent per-id
+      // fills below). A dense pass's coarse ids stay below its n.
       val (vtIds, vtVals): (Array[Long], Array[Double]) =
-        if (tail != null) timed("init") { rowWeights(tail) }
+        if (tail != null || held != null) timed("init") {
+          rowWeights(if (tail != null) Array(tail) else held)
+        }
         else if (bcCt) timed("init") {
           val p = Packed.collect(
             vtotLazy.select(col("id").cast("long"), col("vtot").cast("double")))
@@ -417,10 +434,10 @@ object Leiden {
           (maxId + 1).toInt
         else 0
 
-      // Dense tier (CsrSweep scaladoc): dense id space small enough for
-      // driver arrays → all O(V) state lives on the driver. Above the tail
-      // it needs a local master, whose driver can hold the pass's blocks;
-      // the tail's one block is the driver's on any master. A warm start
+      // Dense tier (CsrSweep scaladoc): the pass graph's rows are on the
+      // driver (`held` on a local master, whose src ids fit the dense id
+      // space, or the tail's on any master), so all O(V) state lives there
+      // too. A warm start
       // whose community labels escape the dense id space falls through to
       // the DataFrame tier (it accepts arbitrary labels).
       val warmInit = pass == firstPass && !resumed &&
@@ -432,8 +449,7 @@ object Leiden {
       // `present` marks the pass's REAL vertex ids (the vtot rows) so the
       // post-pass community count can run on the driver — id-space holes
       // keep their singleton labels and must not count.
-      val denseGate =
-        fBits > 0 && (tail != null || (sc.isLocal && fBits <= LocalMove.CtBroadcastMax))
+      val denseGate = fBits > 0 && (tail != null || held != null)
       val denseInit: Option[(Array[Double], Array[Long], Array[Byte], Array[Boolean])] =
         if (denseGate) timed("mark") {
           val n = fBits
@@ -501,6 +517,9 @@ object Leiden {
           } else singletonState(vtot)
         }
 
+      // a DataFrame-tier pass reads the frame: the driver's rows go
+      if (denseInit.isEmpty) held = null
+
       // the dense tier returns the final membership as the DRIVER ARRAY itself
       // (denseComm): the pass tail below then composes and counts on the
       // driver and coarsens the pass's driver-held CSR blocks (passBlocks)
@@ -510,23 +529,13 @@ object Leiden {
       val (denseComm, refMembOpt, iters, lMoves, rMoves, passBlocks) = denseInit match {
         case Some((vt, comm0, bits0, _)) =>
           // packed-CSR fused kernel (CsrSweep scaladoc): one primitive-
-          // array pass per half-sweep, frontier folded into the same pass.
-          // A tail pass holds its one block on the driver.
-          val st =
-            if (tail != null) CsrSweep.onDriver(
-              Array(CsrSweep.toBlock(tail, CsrSweep.PackGaps)), fBits, vt, comm0, bits0)
-            else timed("csrbuild") {
-              // pass-0 edges are the src-hash input cache: every edge of a
-              // src already lives in one partition, so the pack skips the
-              // range shuffle and its sampling pre-job (srcComplete contract
-              // in CsrSweep.build). Coarsened passes keep the range-balanced
-              // path. init's one job builds the blocks and pins them on the
-              // driver, so sweep timings are pure; nothing reads the RDD
-              // after it, so it is not cached.
-              CsrSweep.init(CsrSweep.build(edges, fBits, srcComplete = edges eq inputEdges),
-                fBits, vt, comm0, bits0)
-            }
-          // closed on failure too: a failed call keeps no pinned blocks
+          // array pass per half-sweep, frontier folded into the same pass,
+          // over one block per src-complete slice of the driver's rows (the
+          // tail's one slice), packed in parallel with no Spark job
+          val blocks = timed("csrbuild") { CsrSweep.pack(if (tail != null) Array(tail) else held) }
+          held = null
+          val st = CsrSweep.onDriver(blocks, fBits, vt, comm0, bits0)
+          // closed on failure too: a failed call keeps no blocks
           try {
             val (lIt, lMv) = timed(if (pass == firstPass) "firstpass" else "move") {
               CsrSweep.run(st, m, opts.resolution, tolerance,
@@ -539,7 +548,7 @@ object Leiden {
                 refineSingletons = true, minMoves = minMoves,
                 sketchSlots = slots)
             }
-            (Some(st.comm), None, lIt + rIt, lMv, rMv, st.blocks)
+            (Some(st.comm), None, lIt + rIt, lMv, rMv, blocks)
           } finally st.close()
 
         case None =>
@@ -578,7 +587,7 @@ object Leiden {
         if (leafArr != null) {
           leaf = leafFrame()
           leafCount = present0.count(identity)
-          leafArr = null; present0 = null; vt0 = null
+          leafArr = null; present0 = null
         } else if (leaf == null) leaf = identityLeaf()
       }
       timed("compose") {
@@ -592,8 +601,7 @@ object Leiden {
           case Some(arr) if leaf == null =>
             // pass 0 over a dense id space: the leaf is this pass's
             // membership (a copy: the leaf is composed in place)
-            val (vt, _, _, present) = denseInit.get
-            leafArr = arr.clone(); present0 = present; vt0 = vt
+            leafArr = arr.clone(); present0 = denseInit.get._4
           case Some(arr) =>
             val prevLeaf = leaf
             leaf = Aggregate.composeArray(leaf, arr) // checkpointed inside
@@ -638,52 +646,57 @@ object Leiden {
           if (tail != null) timed("aggregate") {
             tail = Aggregate.coarsenBlocks(passBlocks, denseComm.get, 1)(0)
           } else {
-            val (coarse, coarseRows) = timed("aggregate") {
-              denseComm match {
-                case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
-                  // in-process over the pinned blocks; the row count is the
-                  // next pass's local-tail gate. A graph under the gate
-                  // stays on the driver for the tail (`held`), with no job;
-                  // a larger one becomes the next pass's persisted frame
-                  val slices = Aggregate.coarsenBlocks(passBlocks, arr, sc.defaultParallelism)
-                  val r = slices.map(_.size.toLong).sum
-                  if (tailRows > 0 && r <= tailRows) { held = slices; (null, r) }
-                  else (Aggregate.slicesFrame(spark, slices), r)
-                case _ =>
-                  // sketch-aggregation with a dense-tier membership: build
-                  // the (id, comm) rows straight from the driver arrays
-                  // (vtot is already released at this point)
-                  val rm = refMembOpt.getOrElse {
-                    val (ids, comms) = presentRows(denseComm.get, denseInit.get._4)
-                    idComm(spark, ids, comms, math.max(4, sc.defaultParallelism))
-                  }
-                  val c = PlanUtils.checkpointTruncated(
-                    if (slots > 0 && opts.sketchAggregation)
-                      Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
-                    else Aggregate.coarsen(edges, rm))
-                  (c, -1L)
-              }
-            }
-            opts.snapshotDir.foreach { root =>
+            def commit(coarse: DataFrame): Unit = opts.snapshotDir.foreach { root =>
               timed("snapshot") {
                 Snapshots.commit(root, "leiden", (pass - 1).toLong,
                   if (pass >= 2) Some((pass - 2).toLong) else None,
                   Map("edges" -> coarse, "leaf" -> (if (leafArr != null) leafFrame() else leaf)),
                   Map("pass" -> (pass - 1).toString, "vertices" -> cn.toString,
                     "iterations" -> totalIters.toString,
-                    "tolerance" -> tolerance.toString))
+                    "tolerance" -> tolerance.toString, "exact" -> (!lossy).toString))
               }
             }
-            dropEdges()
-            // a counted graph is the slices frame, persisted already, or
-            // null when it stayed on the driver for the tail
-            edges = if (coarseRows >= 0) coarse else coarse.cache()
-            rows = coarseRows
+            denseComm match {
+              case Some(arr) if !(slots > 0 && opts.sketchAggregation) =>
+                // in-process over the pass's blocks into src-hash slices,
+                // the next pass's rows on the driver, with no job; their
+                // row count is the local tail's gate. A snapshot commits
+                // them as a frame, dropped once committed.
+                held = timed("aggregate") { Aggregate.coarsenBlocks(passBlocks, arr, parts) }
+                rows = held.map(_.size.toLong).sum
+                if (opts.snapshotDir.isDefined) {
+                  val f = timed("aggregate") { Aggregate.slicesFrame(spark, held) }
+                  commit(f)
+                  PlanUtils.release(f)
+                }
+                dropEdges()
+                edges = null
+              case _ =>
+                // a DataFrame-tier pass, or sketch aggregation over a frame
+                // pass graph: gn never grows, so no sketch pass follows an
+                // in-process coarsen. A dense membership becomes (id, comm)
+                // rows straight from the driver arrays.
+                val c = timed("aggregate") {
+                  val rm = refMembOpt.getOrElse {
+                    val (ids, comms) = presentRows(denseComm.get, denseInit.get._4)
+                    idComm(spark, ids, comms, math.max(4, parts))
+                  }
+                  PlanUtils.checkpointTruncated(
+                    if (slots > 0 && opts.sketchAggregation) {
+                      lossy = true
+                      Aggregate.coarsenSketch(edges, rm, math.max(slots, 8))
+                    } else Aggregate.coarsen(edges, rm))
+                }
+                commit(c)
+                timed("aggregate") { adopt(c) }
+            }
           }
           gn = cn
           tolerance /= opts.toleranceDrop
         }
       }
+      // the run's Q comes from its last pass when that ran on the driver
+      if (done && denseComm.isDefined && !lossy) lastPass = (passBlocks, denseComm.get)
       refMembOpt.foreach(PlanUtils.release)
     }
     if (tail != null) timed("compose") {
@@ -700,41 +713,96 @@ object Leiden {
       tail = null
     }
 
-    val (membership, communities, q) =
-      if (leafArr != null) {
-        val communities = timed("finalcount") { countLabels(leafArr, present0) }
-        // one scan job over the input cache; terms in ascending community id
-        val q = timed("modularity") {
-          Modularity.dense(inputEdges, leafArr, present0, vt0, m, opts.resolution)
-        }
-        (leafFrame(), communities, q)
-      } else {
-        val communities = timed("finalcount") { leaf.select("comm").distinct().count() }
-        val q = timed("modularity") {
-          // same rows as edges0 (a repartition), read from the cache built at
-          // detect() start instead of re-deriving the caller's input plan;
-          // broadcast the membership joins whenever V fits the broadcast gate
-          Modularity.modularity(inputEdges, leaf, m, opts.resolution,
-            broadcastMembership = leafCount <= LocalMove.CtBroadcastMax)
-        }
-        (leaf, communities, q)
-      }
+    val (membership, communities) =
+      if (leafArr != null) (leafFrame(), timed("finalcount") { countLabels(leafArr, present0) })
+      else (leaf, timed("finalcount") { leaf.select("comm").distinct().count() })
+    val q = timed("modularity") {
+      if (lastPass != null) Modularity.ofBlocks(lastPass._1, lastPass._2, m, opts.resolution)
+      // same rows as edges0 (a repartition), read from the cache built at
+      // detect() start instead of re-deriving the caller's input plan;
+      // broadcast the membership joins whenever V fits the broadcast gate
+      else Modularity.modularity(inputEdges, membership, m, opts.resolution,
+        broadcastMembership = leafArr != null || leafCount <= LocalMove.CtBroadcastMax)
+    }
     dropEdges()
     inputEdges.unpersist()
     phase = phase.updated("total", System.currentTimeMillis() - t0)
     LeidenResult(membership, totalIters, pass, q, communities, phase)
   }
 
-  /** (id, vtot) of rows sorted by src: each src once, ascending, its rows'
-    * weights summed in row order.
+  /** (id, vtot) of src-complete slices of (src int, dst int, w double)
+    * rows: each src once, ascending, its rows' weights summed in row order.
     */
-  private def rowWeights(rows: Packed): (Array[Long], Array[Double]) = {
-    val s = rows.ints(0); val w = rows.doubles(2)
-    val ids = s.distinct.map(_.toLong)
-    val vt = new Array[Double](ids.length)
-    var k = -1
-    for (i <- 0 until rows.size) { if (i == 0 || s(i) != s(i - 1)) k += 1; vt(k) += w(i) }
-    (ids, vt)
+  private def rowWeights(slices: Array[Packed]): (Array[Long], Array[Double]) = {
+    var n = 0
+    for (p <- slices) {
+      val s = p.ints(0)
+      var i = 0
+      while (i < p.size) { if (s(i) >= n) n = s(i) + 1; i += 1 }
+    }
+    val vt = new Array[Double](n)
+    val has = new Array[Boolean](n)
+    for (p <- slices) {
+      val s = p.ints(0); val w = p.doubles(2)
+      var i = 0
+      while (i < p.size) { vt(s(i)) += w(i); has(s(i)) = true; i += 1 }
+    }
+    val ids = Array.range(0, n).filter(has(_))
+    (ids.map(_.toLong), ids.map(vt(_)))
+  }
+
+  /** One partition's [[inputParts]] summary: Σw in row order, its row
+    * count, its src bounds (meaningless when `rows` is 0), and its rows as
+    * (src int, dst int, w double) when kept, else null.
+    */
+  private final case class InputPart(w: Double, rows: Long, lo: Long, hi: Long, data: Packed)
+
+  /** One [[InputPart]] per partition of `df`, in partition order, from one
+    * job that streams each partition (no Row per row). With `keep` (a local
+    * master) a partition's rows reach the driver ([[CsrSweep.pin]]) unless
+    * a src falls outside [0, `LocalMove.CtBroadcastMax`).
+    */
+  private def inputParts(df: DataFrame, keep: Boolean): Array[InputPart] = {
+    val max = LocalMove.CtBroadcastMax
+    val qe = df.select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("double"))
+      .queryExecution
+    // under a SQL execution id, as a Dataset action: without one the plan's
+    // stages ran ~2x as long (952,530-row fixture, 4 cores: 2.1 s vs 1.2 s)
+    SQLExecution.withNewExecutionId(qe, Some("leiden input")) {
+      val parts = qe.toRdd.mapPartitions { it =>
+        var w = 0.0; var k = 0L; var lo = Long.MaxValue; var hi = Long.MinValue
+        var kept = keep
+        var s = if (keep) new Array[Int](1 << 12) else null
+        var d = if (keep) new Array[Int](1 << 12) else null
+        var ws = if (keep) new Array[Double](1 << 12) else null
+        while (it.hasNext) {
+          val r = it.next()
+          val src = r.getLong(0); val wt = r.getDouble(2)
+          w += wt
+          if (src < lo) lo = src
+          if (src > hi) hi = src
+          // ids outside the dense id space, or more rows than one array holds
+          if (kept && (src < 0 || src >= max || k == Int.MaxValue - 8)) {
+            kept = false; s = null; d = null; ws = null
+          }
+          if (kept) {
+            val i = k.toInt
+            if (i == s.length) {
+              val c = math.min(2L * i, Int.MaxValue - 8L).toInt
+              s = java.util.Arrays.copyOf(s, c); d = java.util.Arrays.copyOf(d, c)
+              ws = java.util.Arrays.copyOf(ws, c)
+            }
+            s(i) = src.toInt; d(i) = r.getLong(1).toInt; ws(i) = wt
+          }
+          k += 1
+        }
+        val n = k.toInt
+        Iterator.single(InputPart(w, k, lo, hi, if (!kept) null else Packed.of(n,
+          java.util.Arrays.copyOf(s, n), java.util.Arrays.copyOf(d, n),
+          java.util.Arrays.copyOf(ws, n))))
+      }
+      if (keep) CsrSweep.pin(parts) else parts.collect()
+    }
   }
 
   /** Distinct labels of the present ids; every label is below `arr.length`. */

@@ -1,12 +1,14 @@
 package graft.leiden
 
-import graft.graph.Packed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Modularity evaluation, independent of the solver — the engine's oracle
   * for golden tests, mirroring `modularityByOmp`
-  * (`/root/reference/inc/properties.hxx:205-233`).
+  * (`/root/reference/inc/properties.hxx:205-233`): [[modularity]] joins a
+  * membership frame against an edge frame in Spark. [[ofBlocks]] reads
+  * CSR blocks the driver holds with no job; `Leiden.detect` uses it when
+  * its last pass ran on the driver, else the join.
   */
 object Modularity {
 
@@ -47,83 +49,36 @@ object Modularity {
     if (q.isNullAt(0)) 0.0 else q.getDouble(0)
   }
 
-  /** [[modularity]] of a membership held on the driver over a dense id
-    * space, as `Leiden.detect` keeps it: `comm(v)` is the community of id
-    * v where `present(v)`, every community id is below `comm.length`, and
-    * `vt(v)` is v's weighted out-degree. ctot is summed from `vt` on the
-    * driver; cin comes from ONE scan job over `edges` with the membership
-    * broadcast, each task folding its intra-community edges per community
-    * in partition order. The terms are the same expression as
-    * [[communityTerm]], summed in ascending community id, so Q does not
-    * depend on Spark's aggregation order: on integral weights, where cin
-    * and ctot are exact, it is a function of the membership alone.
+  /** [[modularity]] of a graph the driver holds as CSR blocks, under the
+    * membership `comm` indexed by the blocks' vertex ids, with no Spark
+    * job. `Leiden.detect` passes its last pass's blocks and membership:
+    * coarsening preserves every community's cin and ctot, so that is the
+    * input's Q under the run's leaf membership.
+    *
+    * The blocks coarsen into one slice by `comm`
+    * ([[Aggregate.coarsenBlocks]]), whose rows (c, d) come sorted. Then
+    * cin_c is the (c, c) row's weight and ctot_c the sum of c's rows, and
+    * the terms, the same expression as [[communityTerm]], are summed in
+    * ascending c. So Q does not depend on Spark's aggregation order: on
+    * integral weights, where cin and ctot are exact, it is a function of
+    * the membership and its community ids alone.
     */
-  def dense(edges: DataFrame, comm: Array[Long], present: Array[Boolean], vt: Array[Double],
-            m: Double, resolution: Double = 1.0): Double = {
-    val n = comm.length
-    val lab = new Array[Int](n) // community per id, -1 for an id-space hole
-    var v = 0
-    while (v < n) {
-      if (present(v)) {
-        val c = comm(v)
-        require(c >= 0 && c < n, s"community $c of vertex $v is outside [0, $n)")
-        lab(v) = c.toInt
-      } else lab(v) = -1
-      v += 1
-    }
-    val sc = edges.sparkSession.sparkContext
-    val bc = sc.broadcast(lab)
-    val partials = try {
-      Packed.blocks(edges.select(col("src").cast("int"), col("dst").cast("int"),
-          col("w").cast("double")))
-        .map { b =>
-          val lab = bc.value
-          val ss = b.ints(0); val dd = b.ints(1); val ww = b.doubles(2)
-          // intra-community edges as (community, row) keys: one sort
-          // groups them by community, rows kept in partition order
-          val key = new Array[Long](b.size)
-          var k = 0
-          var i = 0
-          while (i < b.size) {
-            val c = lab(ss(i)); val d = dd(i)
-            if (c >= 0 && d >= 0 && d < lab.length && lab(d) == c) {
-              key(k) = (c.toLong << 32) | i.toLong
-              k += 1
-            }
-            i += 1
-          }
-          java.util.Arrays.sort(key, 0, k)
-          val cs = new Array[Int](k); val sums = new Array[Double](k)
-          var g = -1
-          i = 0
-          while (i < k) {
-            val c = (key(i) >>> 32).toInt
-            if (g < 0 || cs(g) != c) { g += 1; cs(g) = c }
-            sums(g) += ww((key(i) & 0xFFFFFFFFL).toInt)
-            i += 1
-          }
-          (java.util.Arrays.copyOf(cs, g + 1), java.util.Arrays.copyOf(sums, g + 1))
-        }
-        .collect()
-    } finally bc.destroy()
-    val cin = new Array[Double](n)
-    partials.foreach { case (cs, sums) =>
-      var i = 0
-      while (i < cs.length) { cin(cs(i)) += sums(i); i += 1 }
-    }
-    val ctot = new Array[Double](n)
-    val has = new Array[Boolean](n)
-    v = 0
-    while (v < n) {
-      if (present(v)) { val c = lab(v); ctot(c) += vt(v); has(c) = true }
-      v += 1
-    }
+  def ofBlocks(blocks: Array[CsrSweep.CsrBlock], comm: Array[Long], m: Double,
+               resolution: Double = 1.0): Double = {
+    val rows = Aggregate.coarsenBlocks(blocks, comm, 1)(0)
+    val src = rows.ints(0); val dst = rows.ints(1); val w = rows.doubles(2)
     val twoM = 2 * m
     var q = 0.0
-    var c = 0
-    while (c < n) {
-      if (has(c)) q += cin(c) / twoM - resolution * math.pow(ctot(c) / twoM, 2.0)
-      c += 1
+    var i = 0
+    while (i < rows.size) {
+      val c = src(i)
+      var cin = 0.0; var ctot = 0.0
+      while (i < rows.size && src(i) == c) {
+        if (dst(i) == c) cin = w(i)
+        ctot += w(i)
+        i += 1
+      }
+      q += cin / twoM - resolution * math.pow(ctot / twoM, 2.0)
     }
     q
   }

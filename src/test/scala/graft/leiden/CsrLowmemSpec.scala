@@ -52,7 +52,7 @@ class CsrLowmemSpec extends SparkSpec {
   }
 
   test("pinned blocks scanned in-process equal one driver block, half-sweep by half-sweep") {
-    // CsrSweep.init pins the cached blocks on a local master; a state over
+    // CsrSweep.pin pins the cached blocks on a local master; a state over
     // one driver block of the same rows (CsrSweep.onDriver, the local
     // tail's layout) scans them in one piece. Both must take the same
     // moves with the same dq bits in every half-sweep of the move and the
@@ -92,7 +92,7 @@ class CsrLowmemSpec extends SparkSpec {
           val (c0, s0) = start
           val single = CsrSweep.onDriver(Array(one), n, vt, c0, s0)
           val (c1, s1) = start
-          val pinned = CsrSweep.init(csr, n, vt, c1, s1)
+          val pinned = CsrSweep.onDriver(CsrSweep.pin(csr), n, vt, c1, s1)
           assert(CsrSweep.handoffSize === 0, tag)
           val held = pinned.blocks
           assert(held.length === collected.length && held.length > 1 && held.indices.forall(i =>
@@ -129,8 +129,8 @@ class CsrLowmemSpec extends SparkSpec {
       if (p == 1) throw new IllegalStateException("pin test: partition 1 fails")
       CsrSweep.CsrBlock(Array(p), Array(0, 0), Array.emptyIntArray, null)
     }
-    intercept[org.apache.spark.SparkException](CsrSweep.init(failing, 4, Array.fill(4)(1.0),
-      Array.tabulate(4)(_.toLong), Array.fill[Byte](1)(-1)))
+    intercept[org.apache.spark.SparkException](CsrSweep.onDriver(CsrSweep.pin(failing), 4,
+      Array.fill(4)(1.0), Array.tabulate(4)(_.toLong), Array.fill[Byte](1)(-1)))
     assert(CsrSweep.handoffSize === 0, "after a failed pin")
   }
 
@@ -171,7 +171,8 @@ class CsrLowmemSpec extends SparkSpec {
     for (k <- Seq(1, 2); parity <- 0 to 1) {
       // blocked non-singleton start (same discipline as the other parity specs)
       val comm0 = Array.tabulate(n)(i => (i % 16).toLong)
-      val st = CsrSweep.init(csr, n, vt, comm0.clone(), Array.fill[Byte]((n + 7) / 8)(-1))
+      val st = CsrSweep.onDriver(CsrSweep.pin(csr), n, vt, comm0.clone(),
+        Array.fill[Byte]((n + 7) / 8)(-1))
       val (mv, _) = CsrSweep.halfSweep(st, m, 1.0, parity, sketchSlots = k)
 
       // sequential twin over the frozen pre-sweep state

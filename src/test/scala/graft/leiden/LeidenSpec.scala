@@ -258,7 +258,7 @@ class LeidenSpec extends SparkSpec {
     for (parity <- 0 to 1) {
       val legacy = LocalMove.sweep(edges, st0, m, 1.0, parity)
       val comm0 = (0 until 400).map(i => (i % 16).toLong).toArray
-      val st = CsrSweep.init(csr, 400, vt, comm0, Array.fill[Byte](50)(-1))
+      val st = CsrSweep.onDriver(CsrSweep.pin(csr), 400, vt, comm0, Array.fill[Byte](50)(-1))
       val (mvC, _) = CsrSweep.halfSweep(st, m, 1.0, parity)
       assert(mvC === legacy.moves, s"parity=$parity")
       val legacyM = memb(legacy.state)
@@ -534,14 +534,17 @@ class LeidenSpec extends SparkSpec {
     assert(!byPhase.contains(null), s"untagged jobs: $byPhase")
     assert(!byPhase.contains("compose"), byPhase.toString)
     assert(!byPhase.contains("finalcount"), byPhase.toString)
-    assert(byPhase.get("modularity") === Some(1), byPhase.toString)
-    // the dense pass coarsens its pinned blocks in-process, and the coarse
+    // Q comes from the last pass's blocks on the driver: no scan job
+    assert(!byPhase.contains("modularity"), byPhase.toString)
+    // the dense pass coarsens its blocks in-process, and the coarse
     // rows, under the gate, enter the tail from the driver: no job in either
     assert(!byPhase.contains("aggregate"), byPhase.toString)
     assert(!byPhase.contains("localtail"), byPhase.toString)
-    // on a local master the dense pass's one csrbuild job also pins its
-    // blocks on the driver, and every half-sweep scans them in-process
-    assert(byPhase.get("csrbuild") === Some(1), byPhase.toString)
+    // on a local master the input job hands pass 0's rows to the driver:
+    // the vertex weights, the blocks and every half-sweep need no job, so
+    // every job is the input's (its shuffle stage and the cache build)
+    assert(byPhase.keySet === Set("input"), byPhase.toString)
+    assert(!byPhase.contains("init") && !byPhase.contains("csrbuild"), byPhase.toString)
     assert(!byPhase.contains("firstpass") && !byPhase.contains("move") &&
       !byPhase.contains("refine"), byPhase.toString)
     edges.unpersist()
@@ -555,11 +558,43 @@ class LeidenSpec extends SparkSpec {
       Leiden.detect(EdgeTable.undirected(spark, es), LeidenOptions(localSolveEdgeThreshold = 0)))
     finally assert(sc.getLocalProperty(Leiden.PhaseProperty) === "caller")
     sc.setLocalProperty(Leiden.PhaseProperty, null)
-    // the first pass's half-sweeps run no job on a local master: its
-    // csrbuild job carries the tag, and the phase is still timed
-    assert(phases.contains("csrbuild"), phases.toString)
+    // the first pass's half-sweeps run no job on a local master: the
+    // input job carries the tag, and the phase is still timed
+    assert(phases.contains("input"), phases.toString)
     assert(r.phaseMillis.contains("firstpass"), r.phaseMillis.toString)
-    assert(phases.contains("modularity"), phases.toString)
+  }
+
+  test("a threshold-0 multi-pass dense run runs no job after input except the caller's collect") {
+    val es = blocks(300, 25, 44, (a, b) => 1.0 + (a + b) % 3)
+    val edges = EdgeTable.undirected(spark, es).cache()
+    edges.count()
+    val (phases, r) = jobPhases(Leiden.detect(edges, LeidenOptions(localSolveEdgeThreshold = 0)))
+    assert(r.passes > 1 && r.phaseMillis.contains("csrbuild") && r.phaseMillis.contains("aggregate"),
+      s"fixture must coarsen on dense passes: ${r.phaseMillis}")
+    assert(phases.nonEmpty && phases.forall(_ == "input"), phases.toString)
+    val (collectPhases, rows) = jobPhases(r.membership.collect())
+    assert(collectPhases.size === 1 && rows.length === 300, collectPhases.toString)
+    assert(CsrSweep.handoffSize === 0)
+    edges.unpersist()
+  }
+
+  test("a shifted-id input keeps no rows on the driver and gives the same partition") {
+    // ids above the dense id space: no input task keeps its rows, and
+    // every pass takes the Catalyst tier as before
+    val es = blocks(200, 25, 45, (_, _) => 1.0)
+    val shift = LocalMove.CtBroadcastMax
+    val opts = LeidenOptions(localSolveEdgeThreshold = 0)
+    val plain = Leiden.detect(EdgeTable.undirected(spark, es), opts)
+    val shifted = Leiden.detect(EdgeTable.undirected(spark,
+      es.map { case (a, b, w) => (a + shift, b + shift, w) }), opts)
+    assert(CsrSweep.handoffSize === 0)
+    assert(!shifted.phaseMillis.contains("csrbuild"), shifted.phaseMillis.toString)
+    def partition(memb: org.apache.spark.sql.DataFrame, by: Long): Set[Set[Long]] =
+      memb.collect().groupBy(_.getLong(1)).values.map(_.map(_.getLong(0) - by).toSet).toSet
+    assert(partition(shifted.membership, shift) === partition(plain.membership, 0L))
+    assert(shifted.passes === plain.passes && shifted.iterations === plain.iterations)
+    assert(math.abs(shifted.modularity - plain.modularity) < 1e-12,
+      s"${shifted.modularity} vs ${plain.modularity}")
   }
 
   test("srcComplete hash blocks fold dq bit-for-bit as range blocks on NON-DYADIC weights") {
@@ -843,6 +878,9 @@ class LeidenSpec extends SparkSpec {
             val keys = s.ints(0).indices.map(i => (s.ints(0)(i).toLong << 32) | s.ints(1)(i))
             assert(keys === keys.sorted && keys.distinct.size === keys.size, s"$what: a slice's order")
           }
+          // src-hash slices: every row of a coarse src lies in one slice
+          val srcs = ss.map(_.ints(0).toSet)
+          assert(srcs.flatten.toSet.size === srcs.map(_.size).sum, s"$what, $slices slices: a src in two slices")
           ss.flatMap(s => s.ints(0).indices.map(i =>
             (s.ints(0)(i), s.ints(1)(i), java.lang.Double.doubleToRawLongBits(s.doubles(2)(i)))))
             .toSeq.sortBy(r => (r._1, r._2))
@@ -867,7 +905,7 @@ class LeidenSpec extends SparkSpec {
     val edges = EdgeTable.undirected(spark, blocks(n, 20, 71, (_, _) => 1.0)).cache()
     val csr = CsrSweep.build(edges, n).cache()
     val comm = Array.tabulate(n)(v => (v / 20 * 20).toLong)
-    // the frame of a coarse graph above the local tail's gate: one job
+    // the frame a snapshot commit writes: one job
     val slices =
       Aggregate.coarsenBlocks(CsrSweep.pin(csr), comm, spark.sparkContext.defaultParallelism)
     val rows = slices.map(_.size.toLong).sum

@@ -56,30 +56,39 @@ class ModularitySpec extends SparkSpec {
   }
 
   test("driver-array modularity equals the join oracle, with holes and non-dyadic weights") {
-    val rnd = new scala.util.Random(5)
-    val es = Seq.newBuilder[(Long, Long, Double)]
     // ids 0..199 on even ids only: odd ids are id-space holes
-    for (a <- 0 until 100; b <- a + 1 until 100)
-      if (rnd.nextDouble() < (if (a / 20 == b / 20) 0.3 else 0.02))
-        es += ((2L * a, 2L * b, 0.1 + (a * 7 + b) % 5 * 0.3))
-    val edges = EdgeTable.undirected(spark, es.result()).cache()
-    val m = EdgeTable.totalWeight(edges) / 2
-    val n = 199
-    val present = new Array[Boolean](n)
-    val vt = new Array[Double](n)
-    EdgeTable.vertexWeights(edges).collect().foreach { r =>
-      present(r.getLong(0).toInt) = true; vt(r.getLong(0).toInt) = r.getDouble(1) }
-    // communities: blocks of 40 ids labelled by a member id; holes carry junk
-    val comm = Array.tabulate(n)(v => if (present(v)) (v / 40 * 40).toLong else 9999L)
-    val spark2 = spark
-    import spark2.implicits._
-    val memb = (0 until n).filter(present).map(v => (v.toLong, comm(v))).toDF("id", "comm")
-    for (res <- Seq(1.0, 0.5)) {
-      val oracle = Modularity.modularity(edges, memb, m, res)
-      val q = Modularity.dense(edges, comm, present, vt, m, res)
-      assert(math.abs(q - oracle) < 1e-12, s"res=$res: $q vs $oracle")
-      assert(Modularity.dense(edges, comm, present, vt, m, res) === q, "repeatable")
+    def graph(w: (Int, Int) => Double): Seq[(Long, Long, Double)] = {
+      val rnd = new scala.util.Random(5)
+      val es = Seq.newBuilder[(Long, Long, Double)]
+      for (a <- 0 until 100; b <- a + 1 until 100)
+        if (rnd.nextDouble() < (if (a / 20 == b / 20) 0.3 else 0.02))
+          es += ((2L * a, 2L * b, w(a, b)))
+      es.result()
     }
-    edges.unpersist()
+    for ((name, es, integral) <- Seq(
+        ("integral", graph((a, b) => 1.0 + (a * 7 + b) % 3), true),
+        ("non-dyadic", graph((a, b) => 0.1 + (a * 7 + b) % 5 * 0.3), false))) {
+      val edges = EdgeTable.undirected(spark, es).cache()
+      val m = EdgeTable.totalWeight(edges) / 2
+      val n = 199
+      val present = new Array[Boolean](n)
+      EdgeTable.vertexWeights(edges).collect().foreach(r => present(r.getLong(0).toInt) = true)
+      // communities: blocks of 40 ids labelled by a member id; holes carry junk
+      val comm = Array.tabulate(n)(v => if (present(v)) (v / 40 * 40).toLong else 9999L)
+      val spark2 = spark
+      import spark2.implicits._
+      val memb = (0 until n).filter(present).map(v => (v.toLong, comm(v))).toDF("id", "comm")
+      val blocks = CsrSweep.pin(CsrSweep.build(edges, n))
+      assert(blocks.length > 1, name)
+      for (res <- Seq(1.0, 0.5)) {
+        val oracle = Modularity.modularity(edges, memb, m, res)
+        val q = Modularity.ofBlocks(blocks, comm, m, res)
+        if (integral) assert(java.lang.Double.doubleToRawLongBits(q) ===
+          java.lang.Double.doubleToRawLongBits(oracle), s"$name, res=$res: $q vs $oracle")
+        else assert(math.abs(q - oracle) < 1e-12, s"$name, res=$res: $q vs $oracle")
+        assert(Modularity.ofBlocks(blocks, comm, m, res) === q, s"$name: repeatable")
+      }
+      edges.unpersist()
+    }
   }
 }

@@ -97,6 +97,31 @@ class SketchSpec extends SparkSpec {
       s"lossy=${lossy.modularity} exact=${exact.modularity}")
   }
 
+  test("a run resumed from a sketch-aggregated snapshot takes Q from the input, not the estimated graph") {
+    val rnd = new scala.util.Random(42)
+    val k = 12; val mSize = 12
+    val es = Seq.newBuilder[(Long, Long, Double)]
+    for (a <- 0 until k * mSize; b <- a + 1 until k * mSize) {
+      val p = if ((a / mSize) == (b / mSize)) 0.7 else 0.01
+      if (rnd.nextDouble() < p) es += ((a.toLong, b.toLong, 1.0))
+    }
+    val edges = EdgeTable.undirected(spark, es.result()).cache()
+    val dir = java.nio.file.Files.createTempDirectory("resume-lossy").toString
+    // pass 0 coarsens through the evicting sketch and commits its snapshot
+    Leiden.detect(edges, LeidenOptions(sketchSlots = 8, sketchExactCutoff = 0,
+      sketchAggregation = true, maxPasses = 2, snapshotDir = Some(dir), localSolveEdgeThreshold = 0))
+    val ids = graft.io.Snapshots.committed(dir, "leiden")
+    assert(ids.nonEmpty)
+    assert(graft.io.Snapshots.manifestText(dir, "leiden", ids.head).contains("\"exact\":\"false\""))
+    // the exact remainder runs its last pass on the driver over the
+    // estimated coarse graph: its Q must still be the input's
+    val resumed = Leiden.detect(edges, LeidenOptions(snapshotDir = Some(dir),
+      localSolveEdgeThreshold = 0))
+    val oracle = Modularity.modularity(edges, resumed.membership, EdgeTable.totalWeight(edges) / 2)
+    assert(math.abs(resumed.modularity - oracle) < 1e-12, s"${resumed.modularity} vs $oracle")
+    edges.unpersist()
+  }
+
   test("hub-heavy graph: low-mem (exact aggregation default) holds quality where " +
     "sketch aggregation collapses it") {
     // Preferential-attachment-style web graph: hub vertices see thousands of
